@@ -54,15 +54,15 @@ object Frames {
     * checkpointed route — its blocks are freed by the ContextCleaner). */
   def release(df: DataFrame): Unit = df.unpersist()
 
-  /** Row count past which the save-time measurement jobs (recall-curve
-    * ground truth, DepthHint code ranking) switch to query-chunked
-    * fan-out, and the curve's held-out sample widens — one constant so
-    * the three call sites cannot drift apart. */
+  /** Row count past which the curve's held-out sample widens
+    * (IvfFlatIndex.curveSampleQueries) and the DepthHint code ranking
+    * switches to query-chunked fan-out — one constant so the call sites
+    * cannot drift apart. */
   private[graft] val CurveScaleRows = 1000000L
 
   /** Run `job` over a small (qid, ...) query frame in deterministic
-    * qid-sorted chunks and fold the results — the shared shape of the
-    * save-time measurement fan-outs: per-query results are independent,
+    * qid-sorted chunks and fold the results — the shape of the save-time
+    * measurement fan-out: per-query results are independent,
     * so the combined result is identical to one job over the whole frame
     * while no single stage holds the full q×n scan. */
   private[graft] def chunkedByQid[A](q: DataFrame, chunk: Int)(

@@ -17,6 +17,10 @@ import graft.expr.{CentroidOps, CentroidSet, PqCodebooks, PqOps}
   * probed list set is known at plan time, so unprobed partitions of a
   * saved index are pruned statically.
   *
+  * `probesOf`: each query's probe count, by qid — one count for a plain
+  * search; the save-time curve sweep searches its sample once per probe
+  * point in a single pass (CurveTruth.candidateCoverage).
+  *
   * `bufK`: per-partition buffer size. k suffices when every id appears in
   * at most one probed list (IVF-PQ); spilled layouts (ScaNN SOAR: ≤ 2
   * copies per id) pass 2k — a partition's top-2k WITH duplicates always
@@ -27,8 +31,8 @@ private[index] object AdcKernel {
   /** (qid, _nid, dist) ADC candidates: parts·|Q|·bufK rows into the
     * caller's dedup/top-k epilogue. */
   def pairs(lists: DataFrame, q: DataFrame, cs: CentroidSet, cb: PqCodebooks,
-      nProbes: Int, bufK: Int, codesCol: String): DataFrame =
-    pairsWith(lists, q, cs, nProbes, bufK, codesCol, cb.nCenters)(
+      probesOf: Long => Int, bufK: Int, codesCol: String): DataFrame =
+    pairsWith(lists, q, cs, probesOf, bufK, codesCol, cb.nCenters)(
       (lid, qv) => PqOps.lut(cb, CentroidOps.residual(cs, qv, lid)).toDoubleArray())
 
   /** Same kernel with a caller-supplied per-(list, RAW query vector) LUT —
@@ -40,7 +44,7 @@ private[index] object AdcKernel {
     * the per-partition buffers (false for InnerProduct: larger dot =
     * closer, is_min_close distance.hpp:72-85). */
   def pairsWith(lists: DataFrame, q: DataFrame, cs: CentroidSet,
-      nProbes: Int, bufK: Int, codesCol: String, nCenters: Int,
+      probesOf: Long => Int, bufK: Int, codesCol: String, nCenters: Int,
       minClose: Boolean = true)(
       lutFor: (Int, org.apache.spark.sql.catalyst.util.ArrayData) => Array[Double]): DataFrame = {
     val spark = lists.sparkSession
@@ -49,13 +53,17 @@ private[index] object AdcKernel {
     // per-query probes via the same coarse select_k as the expression route
     val byList = new java.util.HashMap[Int,
       scala.collection.mutable.ArrayBuffer[(Int, Array[Double])]]()
-    qArr.zipWithIndex.foreach { case ((_, qvec), qi) =>
+    // one table per distinct (list, query vector): the curve sweep submits
+    // each sample query once per probe point, and the copies share tables
+    val luts = new java.util.HashMap[(Int, Seq[Float]), Array[Double]]()
+    qArr.zipWithIndex.foreach { case ((qid, qvec), qi) =>
       val qad = new GenericArrayData(qvec)
-      val probed = CentroidOps.nearest(cs, qad, nProbes)
+      val probed = CentroidOps.nearest(cs, qad, probesOf(qid))
       var p = 0
       while (p < probed.numElements()) {
         val lid = probed.getStruct(p, 2).getInt(0)
-        val lut = lutFor(lid, qad)
+        val lut = luts.computeIfAbsent(
+          (lid, scala.collection.immutable.ArraySeq.unsafeWrapArray(qvec)), _ => lutFor(lid, qad))
         var b = byList.get(lid)
         if (b == null) {
           b = new scala.collection.mutable.ArrayBuffer[(Int, Array[Double])]()

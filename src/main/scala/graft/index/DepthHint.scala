@@ -3,7 +3,6 @@ package graft.index
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Metric
-import graft.ops.BruteForceKnn
 
 /** Measured reorder-depth calibration for the PQ-coded layouts — the
   * displacement analog of the per-index recall curve: at build time (the
@@ -17,8 +16,12 @@ import graft.ops.BruteForceKnn
   * planner keeps the legacy heuristic as a floor
   * (ResolveKnnJoin.compressedDepth).
   *
-  * Cost: one exact brute pass (nQ queries) + one full-probe code scan at
-  * build — O(build)'s own order, never paid at search time. Disable with
+  * Cost: one full-probe code ranking of the sample at build — never paid
+  * at search time. The exact ground truth is the lineage's shared one
+  * (IvfFlatIndex.heldOutTruth: the first 32 queries of the curve sample,
+  * one exact pass per corpus and metric), so the layout's own curve and a
+  * sibling layout over the same base reuse it. The hint's value is
+  * unchanged by the sharing. Disable with
   * `spark.graft.index.depthHint.enabled=false`.
   */
 private[graft] object DepthHint {
@@ -27,52 +30,42 @@ private[graft] object DepthHint {
     * some true neighbor never surfaced in the top-`cap` code ranking
     * (the honest "needs at least the cap" answer). None on an empty
     * sample. `search` is the layout's own (queries, depth, nProbes) =>
-    * ranked frame. */
+    * ranked frame; `truth` the lineage's held-out ground truth, of which
+    * the first `nQueries` queries are measured. */
   def measure(search: (DataFrame, Int, Int) => DataFrame, nLists: Int,
-      dataset: DataFrame, metric: Metric, idCol: String, vecCol: String,
-      k: Int = 10, nQueries: Int = 32, cap: Int = 4096,
-      seed: Long = 42, nRowsHint: Option[Long] = None): Option[(Int, Int)] = {
-    val q = dataset
-      .orderBy(xxhash64(col(idCol), lit(seed)), col(idCol)).limit(nQueries)
-      .select(col(idCol).cast("long").as("qid"), col(vecCol).as("qvec"))
-      .transform(graft.core.Frames.materialize(_))
-    try {
-      if (q.isEmpty) None
-      else {
-        // the sample queries ARE corpus rows: hold the query's own row
-        // out of the ground truth (a self-match is a trivially-ranked
-        // code hit and would shrink the measured displacement); the code
-        // ranking keeps its raw self-inclusive ranks — at most one rank
-        // high, i.e. conservative in the safe (wider-depth) direction
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("qid")).orderBy(col("rank"))
-        val exact = BruteForceKnn
-          .knnJoin(dataset, q, k + 1, metric, idCol, vecCol)
-          .filter(col("nbr_id") =!= col("qid"))
-          .withColumn("_rk", row_number().over(w)).filter(col("_rk") <= k)
-          .select(col("qid"), col("nbr_id")).localCheckpoint()
-        // the full-probe top-`cap` code ranking is the measurement's one
-        // heavy job (per-partition heaps of nQ·cap candidates over the
-        // whole corpus); at curve-scale corpora split it into query
-        // chunks so no single stage holds the full nQ×n scan — hits are
-        // per-query, so (sum of matches, max of worst ranks) over the
-        // chunks is identical to the single-job aggregate
-        def hitAgg(qs: DataFrame): (Long, Int) = {
-          val hit = search(qs, cap, nLists).select(col("qid"), col("nbr_id"), col("rank"))
-            .join(exact, Seq("qid", "nbr_id"))
-            .agg(count(lit(1)).as("n"),
-              coalesce(max(col("rank")), lit(0)).as("worst")).head()
-          (hit.getLong(0), hit.getAs[Int]("worst"))
-        }
-        val bigCorpus = nRowsHint.exists(_ >= graft.core.Frames.CurveScaleRows)
-        val (nHit, worst) =
-          if (!bigCorpus) hitAgg(q)
-          else graft.core.Frames.chunkedByQid(q, chunk = 8)(hitAgg)(
-            (a, b) => (a._1 + b._1, math.max(a._2, b._2)))
-        val disp = if (nHit < exact.count()) cap else worst
-        Some((k, disp))
+      truth: => CurveTruth, nRows: Long, k: Int = 10, nQueries: Int = 32,
+      cap: Int = 4096): Option[(Int, Int)] = {
+    val t = truth.take(nQueries)
+    if (t.nQueries == 0) None
+    else {
+      val spark = SparkSession.active
+      // the truth holds the query's own row out (a self-match is a
+      // trivially-ranked code hit and would shrink the measured
+      // displacement); the code ranking keeps its raw self-inclusive
+      // ranks — at most one rank high, i.e. conservative in the safe
+      // (wider-depth) direction
+      val exact = t.truthFrame(spark)
+      // the full-probe top-`cap` code ranking is the measurement's one
+      // heavy job (per-partition heaps of nQ·cap candidates over the
+      // whole corpus); at curve-scale corpora split it into query
+      // chunks so no single stage holds the full nQ×n scan — hits are
+      // per-query, so (sum of matches, max of worst ranks) over the
+      // chunks is identical to the single-job aggregate
+      def hitAgg(qs: DataFrame): (Long, Int) = {
+        val hit = search(qs, cap, nLists).select(col("qid"), col("nbr_id"), col("rank"))
+          .join(exact, Seq("qid", "nbr_id"))
+          .agg(count(lit(1)).as("n"),
+            coalesce(max(col("rank")), lit(0)).as("worst")).head()
+        (hit.getLong(0), hit.getAs[Int]("worst"))
       }
-    } finally q.unpersist()
+      val q = t.queryFrame(spark)
+      val (nHit, worst) =
+        if (nRows < graft.core.Frames.CurveScaleRows) hitAgg(q)
+        else graft.core.Frames.chunkedByQid(q, chunk = 8)(hitAgg)(
+          (a, b) => (a._1 + b._1, math.max(a._2, b._2)))
+      val disp = if (nHit < t.pairs) cap else worst
+      Some((k, disp))
+    }
   }
 
   def save(spark: SparkSession, path: String, hint: (Int, Int)): Unit = {

@@ -337,7 +337,7 @@ object Hnsw {
               .coalesce(1).write.mode("overwrite").parquet(s"$path/ef_curve")
         }
       case None =>
-        if (spark.conf.get("spark.graft.index.recallCurve.enabled", "true").toBoolean)
+        if (IvfFlatIndex.recallCurveEnabled(spark))
           idx.measureSource.flatMap(d => measureEfCurve(idx, d, "id", "vec"))
             .foreach { case (cv, k, nQ) =>
               // shared curve schema (IvfFlatIndex.loadCurve); n_queries·k

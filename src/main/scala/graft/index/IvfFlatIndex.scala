@@ -67,6 +67,11 @@ class IvfFlatIndex(
     BruteForceKnn.topKPerQuery(pairs, k, metric)
   }
 
+  /** Exact top-k of (qid, qvec) queries: the fused kernel probing every
+    * list. */
+  private[index] def fullProbeSearch(q: DataFrame, k: Int): DataFrame =
+    searchLocal(q, k, centroids.k)
+
   /** Broadcast-queries kernel: probe selection runs driver-side over the
     * (always in-memory) centroid set, then one mapPartitions over the list
     * rows with an inverted (list_id -> probing queries) index. */
@@ -201,8 +206,25 @@ class IvfFlatIndex(
     IvfFlatIndex.saveCentroids(spark, path, centroids, metric)
     val nRows = lists.count()
     IvfFlatIndex.saveMeta(spark, path, nRows)
-    if (spark.conf.get("spark.graft.index.recallCurve.enabled", "true").toBoolean)
+    if (IvfFlatIndex.recallCurveEnabled(spark))
       IvfFlatIndex.saveRecallCurve(spark, path, this, nRows)
+  }
+
+  // held-out ground truths measured over THESE lists, per (metric, sample
+  // size, k) — see CurveTruth; lives and dies with this object
+  @transient private[this] lazy val truths =
+    scala.collection.concurrent.TrieMap.empty[(Metric, Int, Int), CurveTruth]
+
+  /** The held-out exact ground truth of this index's corpus under `m`,
+    * sized for an `nRows`-row corpus (IvfFlatIndex.curveSampleQueries
+    * queries, k = min(10, nRows − 1)): computed on first use, then shared
+    * by every calibration that asks for the same metric — this layout's
+    * curve, the DepthHint and curve of a compressed layout built over it
+    * (its `base`), and any sibling built over the same base. */
+  private[graft] def heldOutTruth(m: Metric, nRows: Long): CurveTruth = {
+    val nQ = IvfFlatIndex.curveSampleQueries(nRows)
+    val k = math.min(10L, nRows - 1).toInt
+    truths.getOrElseUpdate((m, nQ, k), CurveTruth.scan(this, m, nQ, k))
   }
 }
 
@@ -315,20 +337,6 @@ object IvfFlatIndex {
     graft.sources.SidecarIO.readHead(spark, s"$path/meta")
       .flatMap(_.get("n_rows")).map(graft.sources.SidecarIO.asLong)
 
-  /** Measure and persist THIS index's probe/recall relation: a seeded
-    * held-out query sample (rows of the index itself), exact top-k over
-    * the full lists as ground truth, searched at doubling probe points up
-    * to nLists. One extra full scan at build time (the ground truth) —
-    * the price of the reference's per-config recall floors
-    * (ann_ivf_flat.cuh:102) — against never shipping a recall target
-    * calibrated on someone else's dataset. Disable with
-    * `spark.graft.index.recallCurve.enabled=false`. */
-  /** The sample queries are rows OF the corpus, so every measurement
-    * HOLDS THE QUERY'S OWN ROW OUT: a self-match is a guaranteed hit in
-    * its home list at any probe count, and counting it would inflate
-    * each recall point by up to 1/k — the auto-probe inversion would
-    * then undershoot the user's target on real out-of-sample queries.
-    * Both sides search top-(k+1), drop self, keep k. */
   /** Held-out sample size for the measured curve sidecars, scaled with
     * the corpus: 32 queries (±0.02-grade noise at k=10) are enough only
     * while the 0.95 decision point is cheap to be wrong about; past 1M
@@ -340,73 +348,68 @@ object IvfFlatIndex {
   private[graft] def curveSampleQueries(nRows: Long): Int =
     if (nRows >= graft.core.Frames.CurveScaleRows) 128 else 32
 
-  private[graft] def saveRecallCurve(spark: SparkSession, path: String,
-      idx: IvfFlatIndex, nRows: Long, nQueries: Int = 0, k: Int = 10,
-      seed: Long = 42): Unit =
-    saveMeasuredCurve(spark, path, idx.lists.select(col("id"), col("vec")),
-      idx.metric, idx.centroids.k, (q, kk, p) => idx.search(q, kk, p),
-      nRows, nQueries, k, seed)
+  /** The one reader of `spark.graft.index.recallCurve.enabled` (default
+    * true) — every layout's save-time curve measurement consults it. */
+  private[graft] def recallCurveEnabled(spark: SparkSession): Boolean =
+    spark.conf.get("spark.graft.index.recallCurve.enabled", "true").toBoolean
 
-  /** Shared probe/recall measurement + sidecar writer for ANY layout that
-    * can search its corpus at a probe count: seeded held-out queries
-    * (rows OF the corpus, self-row excluded on both sides), exact brute
-    * ground truth under `metric`, doubling probe points up to `nLists`
-    * with early-stop at saturation (scanning more lists only grows the
-    * candidate set, so recall is monotone in the probe count and the
-    * half-/all-lists sweeps each cost close to a full scan). The
-    * compressed layouts pass their refine-composed search so the curve
-    * measures what the PLANNER actually serves at that probe count. */
+  /** IVF-Flat (and tiered-base) curve: no search at all — the hit count at
+    * each probe point follows from where the true neighbours' lists rank
+    * in each query's centroid order (CurveTruth.listCoverage). */
+  private[graft] def saveRecallCurve(spark: SparkSession, path: String,
+      idx: IvfFlatIndex, nRows: Long): Unit =
+    saveMeasuredCurve(spark, path, idx.heldOutTruth(idx.metric, nRows), idx.centroids.k)(
+      (truth, points) => truth.listCoverage(idx.centroids, points))
+
+  /** Compressed-layout curve: the refine-composed search the planner
+    * serves — `kernel` candidates at `depth`, exact re-rank against the
+    * raw corpus — run once over the sample replicated per probe point
+    * (CurveTruth.candidateCoverage). */
+  private[index] def saveCompressedCurve(spark: SparkSession, path: String,
+      src: CurveSource, metric: Metric, nLists: Int, nRows: Long, depth: Int)(
+      kernel: (DataFrame, Int, Long => Int) => DataFrame): Unit =
+    saveMeasuredCurve(spark, path, src.coarse.heldOutTruth(metric, nRows), nLists)(
+      _.candidateCoverage(spark, _) { (q, k, probesOf) =>
+        graft.ops.Refine.refine(
+          kernel(q, depth, probesOf).select(col("qid"), col("nbr_id").as("id")),
+          src.corpus, q, k, metric, broadcastCandidates = true)
+      })
+
+  /** Measure and persist a layout's probe/recall relation — the
+    * per-config recall floors of the reference (ann_ivf_flat.cuh:102),
+    * against never shipping a recall target calibrated on someone else's
+    * dataset. The sample queries are rows OF the corpus with their own row
+    * held out of the truth (CurveTruth). Probe points double up to
+    * `nLists`; the sidecar keeps them up to the first one that reaches
+    * recall 1.0 (scanning more lists only grows the candidate set, so
+    * recall is monotone in the probe count). `hits` returns the matched
+    * (query, true neighbour) count at every point at once: IVF-Flat counts
+    * them from list ranks, a compressed layout from one pass of its
+    * refine-composed search (saveCompressedCurve) — so the curve still
+    * measures what the PLANNER serves at each probe count.
+    *
+    * Cost: the ground truth — one exact pass per corpus and metric, shared
+    * through `IvfFlatIndex.heldOutTruth` by every layout and DepthHint of
+    * the lineage — plus at most one search pass per compressed layout. The
+    * counts equal those of searching the sample at each probe count
+    * (CurveMeasureSuite pins it), so the sidecar rows (probes, recall, k,
+    * n_queries) hold the same values. Disable with
+    * `spark.graft.index.recallCurve.enabled=false`. */
   private[graft] def saveMeasuredCurve(spark: SparkSession, path: String,
-      corpus: DataFrame, metric: Metric, nLists: Int,
-      search: (DataFrame, Int, Int) => DataFrame,
-      nRows: Long, nQueries: Int = 0, k: Int = 10,
-      seed: Long = 42, child: String = "recall_curve"): Unit = {
-    import org.apache.spark.sql.functions.{row_number, xxhash64, lit => flit}
-    val kk = math.min(k.toLong, nRows - 1).toInt
-    if (kk < 1) return // a 1-row corpus has no non-self neighbors to measure
-    val nQTarget = if (nQueries > 0) nQueries else curveSampleQueries(nRows)
-    val q = corpus
-      .orderBy(xxhash64(col("id"), flit(seed)), col("id")).limit(nQTarget)
-      .select(col("id").as("qid"), col("vec").as("qvec"))
-      .transform(graft.core.Frames.materialize(_))
-    try {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("qid")).orderBy(col("rank"))
-      def dropSelf(res: org.apache.spark.sql.DataFrame) = res
-        .filter(col("nbr_id") =!= col("qid"))
-        .withColumn("_rk", row_number().over(w)).filter(col("_rk") <= kk)
-        .select(col("qid"), col("nbr_id"))
-      // the exact ground truth is the sweep's single most expensive job
-      // (the sweep points are probe-pruned searches); at curve-scale
-      // corpora split it into query chunks so no one stage holds the
-      // whole q×n brute scan — per-query results are independent, so the
-      // union is row-identical to the single-job form and the measured
-      // curve (and its sidecar) is bit-identical
-      val exact =
-        if (nRows < graft.core.Frames.CurveScaleRows)
-          dropSelf(BruteForceKnn.knnJoin(corpus, q, kk + 1, metric))
-            .localCheckpoint()
-        else graft.core.Frames.chunkedByQid(q, chunk = 32)(qc =>
-          dropSelf(BruteForceKnn.knnJoin(corpus, qc, kk + 1, metric))
-            .localCheckpoint())(_ unionByName _)
-      val nQ = q.count()
-      val denom = math.max(1L, exact.count())
-      val points = Iterator.iterate(1)(_ * 2).takeWhile(_ < nLists).toSeq :+ nLists
-      val curve = scala.collection.mutable.ArrayBuffer.empty[(Int, Double)]
-      val it = points.iterator
-      var saturated = false
-      while (it.hasNext && !saturated) {
-        val p = it.next()
-        val approx = dropSelf(search(q, kk + 1, p))
-        val recall = graft.core.Recall.matched(approx, exact).toDouble / denom
-        curve += ((p, recall))
-        saturated = recall >= 1.0
-      }
-      import spark.implicits._
-      curve.toSeq.toDF("probes", "recall")
-        .withColumn("k", flit(kk)).withColumn("n_queries", flit(nQ))
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/$child")
-    } finally q.unpersist()
+      truth: => CurveTruth, nLists: Int)(
+      hits: (CurveTruth, Seq[Int]) => Seq[Long]): Unit = {
+    val t = truth
+    if (t.k < 1) return // a 1-row corpus has no non-self neighbors to measure
+    val points = Iterator.iterate(1)(_ * 2).takeWhile(_ < nLists).toSeq :+ nLists
+    val denom = math.max(1L, t.pairs)
+    val recalls = hits(t, points).map(_.toDouble / denom)
+    val saturated = recalls.indexWhere(_ >= 1.0)
+    val curve = points.zip(recalls)
+      .take(if (saturated < 0) points.size else saturated + 1)
+    import spark.implicits._
+    curve.toDF("probes", "recall")
+      .withColumn("k", lit(t.k)).withColumn("n_queries", lit(t.nQueries.toLong))
+      .coalesce(1).write.mode("overwrite").parquet(s"$path/recall_curve")
   }
 
   /** The measured curve, sanitized for inversion: probe-sorted with a

@@ -37,14 +37,18 @@ class IvfPqIndex(
     // (measured k, worst ADC displacement of a true top-k neighbor) —
     // build-time calibration of the reorder depth (see DepthHint)
     val depthHint: Option[(Int, Int)] = None,
-    // lazy handle to the raw (id, vec) corpus, set by build() so save()
-    // can measure THIS layout's probe/recall curve (the saved layout
-    // stores only codes; refine needs the raw vectors) — the Hnsw
-    // measureSource pattern; None on loaded layouts
-    val measureSource: Option[DataFrame] = None) extends Serializable {
+    // what save() measures THIS layout's probe/recall curve from (the
+    // saved layout stores only codes; refine needs the raw vectors) — the
+    // coarse index memoizes the held-out truth DepthHint already used;
+    // None on loaded layouts
+    val measureSource: Option[CurveSource] = None) extends Serializable {
 
   private def residualCol(vec: Column, listId: Column): Column =
     B.column(CentroidResidual(B.expression(vec), B.expression(listId), centroids))
+
+  // IP and cosine builds share the larger-is-closer IP estimator
+  private def ipLike = metric == Metric.InnerProduct || metric == Metric.Cosine
+  private def scoreMetric = if (ipLike) Metric.InnerProduct else Metric.L2
 
   /** ADC search: (qid, nbr_id, rank, dist). For L2-family builds dist is
     * the ADC-approximated squared L2 over residual codes; for an
@@ -57,30 +61,16 @@ class IvfPqIndex(
     * dist is the estimated q̂·x̂, larger-is-closer. */
   def search(queries: DataFrame, k: Int, nProbes: Int,
       qidCol: String = "qid", qvecCol: String = "qvec"): DataFrame = {
-    val cos = metric == Metric.Cosine
-    val ipLike = metric == Metric.InnerProduct || cos
-    val scoreMetric = if (ipLike) Metric.InnerProduct else Metric.L2
     // Fused ADC kernel (AdcKernel doc): one pass over the streaming coded
-    // lists when the query side fits in memory; bufK = k because each id
-    // lives in exactly one list. Identical rows to the join route.
+    // lists when the query side fits in memory. Identical rows to the
+    // join route.
     val spark = queries.sparkSession
-    val qShaped = queries
-      .select(col(qidCol).cast("long").as("qid"), col(qvecCol).as("qvec"))
-      .transform(df => if (cos)
-        df.withColumn("qvec", IvfFlatIndex.unitNormCol(col("qvec"))) else df)
+    val qShaped = IvfPqIndex.shapeQueries(queries, metric, qidCol, qvecCol)
     val q = qShaped.transform(graft.core.Frames.materialize(_))
     if (graft.graphops.LocalKernel.enabled(spark) &&
         graft.graphops.LocalKernel.within(q,
           graft.graphops.LocalKernel.maxVectors(spark))) {
-      val (cb, cs) = (codebooks, centroids)
-      try return BruteForceKnn.topKPerQuery(
-        if (ipLike)
-          AdcKernel.pairsWith(lists, q, centroids, nProbes, k, "pq_codes",
-            codebooks.nCenters, minClose = false)(
-            (lid, qv) => graft.expr.PqOps.lutIp(cb, cs, qv, lid).toDoubleArray())
-        else
-          AdcKernel.pairs(lists, q, centroids, codebooks, nProbes, k, "pq_codes"),
-        k, scoreMetric)
+      try return kernelSearch(q, k, _ => nProbes)
       finally q.unpersist()
     }
     q.unpersist()
@@ -110,6 +100,21 @@ class IvfPqIndex(
       .select(col("qid"), col("id").as("_nid"),
         ProductQuantizer.adcCol(col("_lut"), col("pq_codes"), codebooks).as("dist"))
     BruteForceKnn.topKPerQuery(pairs, k, scoreMetric)
+  }
+
+  /** The fused-kernel search over shaped (qid, qvec) queries, each probing
+    * `probesOf(qid)` lists; bufK = k because each id lives in exactly one
+    * list. */
+  private def kernelSearch(q: DataFrame, k: Int, probesOf: Long => Int): DataFrame = {
+    val (cb, cs) = (codebooks, centroids)
+    BruteForceKnn.topKPerQuery(
+      if (ipLike)
+        AdcKernel.pairsWith(lists, q, centroids, probesOf, k, "pq_codes",
+          codebooks.nCenters, minClose = false)(
+          (lid, qv) => graft.expr.PqOps.lutIp(cb, cs, qv, lid).toDoubleArray())
+      else
+        AdcKernel.pairs(lists, q, centroids, codebooks, probesOf, k, "pq_codes"),
+      k, scoreMetric)
   }
 
   /** ADC search over `kCoarse` candidates + exact re-rank to top-k against
@@ -143,13 +148,10 @@ class IvfPqIndex(
     // measured probe/recall curve of the PLANNER-SERVED composition (ADC
     // candidates at the calibrated depth + exact refine) — without it,
     // auto-probe mode over a saved PQ layout inverts the fixture curve
-    if (spark.conf.get("spark.graft.index.recallCurve.enabled", "true").toBoolean)
-      measureSource.foreach { src =>
-        val depth = graft.plans.ResolveKnnJoin.compressedDepth(10, depthHint)
-        IvfFlatIndex.saveMeasuredCurve(spark, path, src, metric, centroids.k,
-          (q, kk, p) => searchWithRefine(q, src, kk, p, depth,
-            broadcastCandidates = true), nRows)
-      }
+    if (IvfFlatIndex.recallCurveEnabled(spark))
+      measureSource.foreach(IvfFlatIndex.saveCompressedCurve(spark, path, _, metric,
+        centroids.k, nRows, graft.plans.ResolveKnnJoin.compressedDepth(10, depthHint))(
+        (q, depth, probesOf) => kernelSearch(IvfPqIndex.shapeQueries(q, metric), depth, probesOf)))
   }
 }
 
@@ -170,11 +172,15 @@ class IvfPqClusterIndex(
     val metric: Metric,
     // build-time reorder-depth calibration — see DepthHint
     val depthHint: Option[(Int, Int)] = None,
-    // raw-corpus handle for save-time curve measurement (IvfPqIndex doc)
-    val measureSource: Option[DataFrame] = None) extends Serializable {
+    // save-time curve measurement source (IvfPqIndex doc)
+    val measureSource: Option[CurveSource] = None) extends Serializable {
 
   private def residualCol(vec: Column, listId: Column): Column =
     B.column(CentroidResidual(B.expression(vec), B.expression(listId), centroids))
+
+  // IP and cosine builds share the larger-is-closer IP estimator
+  private def ipLike = metric == Metric.InnerProduct || metric == Metric.Cosine
+  private def scoreMetric = if (ipLike) Metric.InnerProduct else Metric.L2
 
   /** Same metric contract as IvfPqIndex.search: L2-family builds rank by
     * per-list residual-L2 ADC; InnerProduct builds by the per-list IP LUT
@@ -183,30 +189,15 @@ class IvfPqClusterIndex(
     * query. */
   def search(queries: DataFrame, k: Int, nProbes: Int,
       qidCol: String = "qid", qvecCol: String = "qvec"): DataFrame = {
-    val cos = metric == Metric.Cosine
-    val ipLike = metric == Metric.InnerProduct || cos
-    val scoreMetric = if (ipLike) Metric.InnerProduct else Metric.L2
-    // Fused ADC kernel (AdcKernel), per-list LUTs: same gate and same
-    // bufK = k economics as the per-subspace index (each id lives in
-    // exactly one list).
+    // Fused ADC kernel (AdcKernel), per-list LUTs: same gate as the
+    // per-subspace index.
     val spark = queries.sparkSession
-    val qShaped = queries
-      .select(col(qidCol).cast("long").as("qid"), col(qvecCol).as("qvec"))
-      .transform(df => if (cos)
-        df.withColumn("qvec", IvfFlatIndex.unitNormCol(col("qvec"))) else df)
+    val qShaped = IvfPqIndex.shapeQueries(queries, metric, qidCol, qvecCol)
     val q = qShaped.persist(StorageLevel.MEMORY_AND_DISK)
     if (graft.graphops.LocalKernel.enabled(spark) &&
         graft.graphops.LocalKernel.within(q,
           graft.graphops.LocalKernel.maxVectors(spark))) {
-      val ccb = codebooks
-      val cs = centroids
-      try return BruteForceKnn.topKPerQuery(
-        AdcKernel.pairsWith(lists, q, centroids, nProbes, k, "pq_codes",
-          ccb.nCenters, minClose = !ipLike)(
-          if (ipLike) (lid, qv) => graft.expr.PqClusterOps.lutIp(ccb, cs, lid, qv).toDoubleArray()
-          else (lid, qv) => graft.expr.PqClusterOps.lut(ccb, lid,
-            graft.expr.CentroidOps.residual(cs, qv, lid)).toDoubleArray()),
-        k, scoreMetric)
+      try return kernelSearch(q, k, _ => nProbes)
       finally q.unpersist()
     }
     q.unpersist()
@@ -230,6 +221,21 @@ class IvfPqClusterIndex(
         ProductQuantizer.adcCol(col("_lut"), col("pq_codes"),
           codebooks.nCenters).as("dist"))
     BruteForceKnn.topKPerQuery(pairs, k, scoreMetric)
+  }
+
+  /** Fused-kernel search over shaped queries with per-query probe counts;
+    * bufK = k economics as the per-subspace index (each id lives in
+    * exactly one list). */
+  private def kernelSearch(q: DataFrame, k: Int, probesOf: Long => Int): DataFrame = {
+    val ccb = codebooks
+    val cs = centroids
+    BruteForceKnn.topKPerQuery(
+      AdcKernel.pairsWith(lists, q, centroids, probesOf, k, "pq_codes",
+        ccb.nCenters, minClose = !ipLike)(
+        if (ipLike) (lid, qv) => graft.expr.PqClusterOps.lutIp(ccb, cs, lid, qv).toDoubleArray()
+        else (lid, qv) => graft.expr.PqClusterOps.lut(ccb, lid,
+          graft.expr.CentroidOps.residual(cs, qv, lid)).toDoubleArray()),
+      k, scoreMetric)
   }
 
   def searchWithRefine(queries: DataFrame, dataset: DataFrame, k: Int, nProbes: Int,
@@ -256,13 +262,10 @@ class IvfPqClusterIndex(
     val nRows = lists.count()
     IvfFlatIndex.saveMeta(spark, path, nRows)
     depthHint.foreach(DepthHint.save(spark, path, _))
-    if (spark.conf.get("spark.graft.index.recallCurve.enabled", "true").toBoolean)
-      measureSource.foreach { src =>
-        val depth = graft.plans.ResolveKnnJoin.compressedDepth(10, depthHint)
-        IvfFlatIndex.saveMeasuredCurve(spark, path, src, metric, centroids.k,
-          (q, kk, p) => searchWithRefine(q, src, kk, p, depth,
-            broadcastCandidates = true), nRows)
-      }
+    if (IvfFlatIndex.recallCurveEnabled(spark))
+      measureSource.foreach(IvfFlatIndex.saveCompressedCurve(spark, path, _, metric,
+        centroids.k, nRows, graft.plans.ResolveKnnJoin.compressedDepth(10, depthHint))(
+        (q, depth, probesOf) => kernelSearch(IvfPqIndex.shapeQueries(q, metric), depth, probesOf)))
   }
 }
 
@@ -379,6 +382,13 @@ object IvfPqIndex {
       dataset.withColumn(vecCol, IvfFlatIndex.unitNormCol(col(vecCol)))
     else dataset
 
+  /** The (qid long, qvec) query side of the PQ-coded searches; a Cosine
+    * build normalizes the queries symmetrically with its stored rows. */
+  private[index] def shapeQueries(queries: DataFrame, metric: Metric,
+      qidCol: String = "qid", qvecCol: String = "qvec"): DataFrame =
+    normalizedFor(queries.select(col(qidCol).cast("long").as("qid"),
+      col(qvecCol).as("qvec")), metric, "qvec")
+
   /** Coarse-clustering metric for a build metric — the reference's
     * `coarse_clustering_metric` (ivf_pq_build.cuh:70-76): InnerProduct
     * CLUSTERS under L2 (max-dot Lloyd degenerates toward large-norm
@@ -425,18 +435,19 @@ object IvfPqIndex {
       .select(col("list_id"), col("id"), encoded.as("pq_codes"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val pcs = probeView(ivf.centroids, params.metric)
-    val src = Some(ds.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec")))
+    val src = Some(new CurveSource(ivf,
+      ds.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))))
     val idx = new IvfPqIndex(pcs, cb, lists, params.metric, measureSource = src)
     // reorder-depth calibration while the raw dataset is still at hand
-    // (the saved layout stores only codes) — see DepthHint; measured over
-    // `ds` so a cosine build's ground truth ranks the same normalized
-    // rows the lists store
-    if (DepthHint.enabled(dataset.sparkSession) && DepthHint.routableMetric(params.metric))
+    // (the saved layout stores only codes) — see DepthHint; the truth is
+    // measured over the coarse lists, i.e. `ds`, so a cosine build's
+    // ground truth ranks the same normalized rows the lists store
+    if (DepthHint.enabled(dataset.sparkSession) && DepthHint.routableMetric(params.metric)) {
+      val nRows = lists.count()
       new IvfPqIndex(pcs, cb, lists, params.metric,
         DepthHint.measure(idx.search(_, _, _), pcs.k,
-          ds, params.metric, idCol, vecCol,
-            nRowsHint = Some(lists.count())), measureSource = src)
-    else idx
+          ivf.heldOutTruth(params.metric, nRows), nRows), measureSource = src)
+    } else idx
   }
 
   /** PER_CLUSTER build: one codebook per list, trained on the list's own
@@ -581,13 +592,13 @@ object IvfPqIndex {
         .persist(StorageLevel.MEMORY_AND_DISK)
       val nListRows = lists.count() // materialize before the residual input unpersists
       val pcs = probeView(ivf.centroids, params.metric)
-      val src = Some(ds.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec")))
+      val src = Some(new CurveSource(ivf,
+        ds.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))))
       val idx = new IvfPqClusterIndex(pcs, ccb, lists, params.metric, measureSource = src)
       if (DepthHint.enabled(dataset.sparkSession) && DepthHint.routableMetric(params.metric))
         new IvfPqClusterIndex(pcs, ccb, lists, params.metric,
           DepthHint.measure(idx.search(_, _, _), pcs.k,
-            ds, params.metric, idCol, vecCol,
-            nRowsHint = Some(nListRows)), measureSource = src)
+            ivf.heldOutTruth(params.metric, nListRows), nListRows), measureSource = src)
       else idx
     } finally withRes.unpersist()
   }

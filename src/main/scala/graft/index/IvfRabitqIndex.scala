@@ -34,8 +34,8 @@ class IvfRabitqIndex(
     val rotation: ProjectionMatrix,
     val lists: DataFrame, // (list_id, id, code arr<bigint>, norm2 dbl, sum_abs dbl [, mags arr<tinyint>, mscale dbl])
     val bitsPerDim: Int,
-    // raw-corpus handle for save-time curve measurement (IvfPqIndex doc)
-    val measureSource: Option[DataFrame] = None) extends Serializable {
+    // save-time curve measurement source (IvfPqIndex doc)
+    val measureSource: Option[CurveSource] = None) extends Serializable {
 
   import IvfRabitqIndex._
 
@@ -51,7 +51,7 @@ class IvfRabitqIndex(
     if (graft.graphops.LocalKernel.enabled(sparkS) &&
         graft.graphops.LocalKernel.within(q,
           graft.graphops.LocalKernel.maxVectors(sparkS))) {
-      try return searchLocal(q, kCoarse, nProbes)
+      try return searchLocal(q, kCoarse, _ => nProbes)
       finally q.unpersist()
     }
     q.unpersist()
@@ -86,7 +86,9 @@ class IvfRabitqIndex(
     BruteForceKnn.topKPerQuery(pairs, kCoarse, Metric.L2)
   }
 
-  private def searchLocal(q: DataFrame, kCoarse: Int, nProbes: Int): DataFrame = {
+  /** The fused kernel over (qid, qvec) queries, each probing
+    * `probesOf(qid)` lists. */
+  private def searchLocal(q: DataFrame, kCoarse: Int, probesOf: Long => Int): DataFrame = {
     val spark = q.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -96,9 +98,9 @@ class IvfRabitqIndex(
     // per probed list: (query slot, rotated residual, Σqr, Σqr²)
     val byList = new java.util.HashMap[Int,
       scala.collection.mutable.ArrayBuffer[(Int, GenericArrayData, Double, Double)]]()
-    qArr.zipWithIndex.foreach { case ((_, qvec), qi) =>
+    qArr.zipWithIndex.foreach { case ((qid, qvec), qi) =>
       val qad = new GenericArrayData(qvec)
-      val probed = CentroidOps.nearest(cs, qad, nProbes)
+      val probed = CentroidOps.nearest(cs, qad, probesOf(qid))
       var p = 0
       while (p < probed.numElements()) {
         val lid = probed.getStruct(p, 2).getInt(0)
@@ -236,13 +238,9 @@ class IvfRabitqIndex(
     IvfFlatIndex.saveMeta(spark, path, nRows)
     // measured probe/recall curve of the planner-served composition
     // (sign-code estimates at the heuristic depth + exact refine)
-    if (spark.conf.get("spark.graft.index.recallCurve.enabled", "true").toBoolean)
-      measureSource.foreach { src =>
-        val depth = graft.plans.ResolveKnnJoin.compressedDepth(10, None)
-        IvfFlatIndex.saveMeasuredCurve(spark, path, src, graft.core.Metric.L2,
-          centroids.k, (q, kk, p) => searchWithRefine(q, src, kk, p, depth,
-            broadcastCandidates = true), nRows)
-      }
+    if (IvfFlatIndex.recallCurveEnabled(spark))
+      measureSource.foreach(IvfFlatIndex.saveCompressedCurve(spark, path, _, Metric.L2,
+        centroids.k, nRows, graft.plans.ResolveKnnJoin.compressedDepth(10, None))(searchLocal))
   }
 }
 
@@ -341,6 +339,7 @@ object IvfRabitqIndex {
       }
     new IvfRabitqIndex(ivf.centroids, p,
       coded.persist(StorageLevel.MEMORY_AND_DISK), params.bitsPerDim,
-      Some(dataset.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))))
+      Some(new CurveSource(ivf,
+        dataset.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec")))))
   }
 }

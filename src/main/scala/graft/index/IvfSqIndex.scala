@@ -21,8 +21,8 @@ class IvfSqIndex(
     val sq: ScalarQuantizer.Model,
     val lists: DataFrame, // (list_id int, id long, codes array<tinyint>)
     val metric: Metric,
-    // raw-corpus handle for save-time curve measurement (IvfPqIndex doc)
-    val measureSource: Option[DataFrame] = None) extends Serializable {
+    // save-time curve measurement source (IvfPqIndex doc)
+    val measureSource: Option[CurveSource] = None) extends Serializable {
 
   def search(queries: DataFrame, k: Int, nProbes: Int,
       qidCol: String = "qid", qvecCol: String = "qvec"): DataFrame = {
@@ -35,7 +35,7 @@ class IvfSqIndex(
     if (graft.graphops.LocalKernel.enabled(sparkS) &&
         graft.graphops.LocalKernel.within(q,
           graft.graphops.LocalKernel.maxVectors(sparkS))) {
-      try return searchLocal(q, k, nProbes)
+      try return searchLocal(q, k, _ => nProbes)
       finally q.unpersist()
     }
     q.unpersist()
@@ -52,15 +52,17 @@ class IvfSqIndex(
     BruteForceKnn.topKPerQuery(pairs, k, metric)
   }
 
-  private def searchLocal(q: DataFrame, k: Int, nProbes: Int): DataFrame = {
+  /** The fused kernel over (qid, qvec) queries, each probing
+    * `probesOf(qid)` lists. */
+  private def searchLocal(q: DataFrame, k: Int, probesOf: Long => Int): DataFrame = {
     val spark = q.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.catalyst.util.GenericArrayData
     val qArr = q.as[(Long, Array[Float])].collect()
     val cs = centroids
     val byList = new java.util.HashMap[Int, scala.collection.mutable.ArrayBuffer[Int]]()
-    qArr.zipWithIndex.foreach { case ((_, qvec), qi) =>
-      val probed = graft.expr.CentroidOps.nearest(cs, new GenericArrayData(qvec), nProbes)
+    qArr.zipWithIndex.foreach { case ((qid, qvec), qi) =>
+      val probed = graft.expr.CentroidOps.nearest(cs, new GenericArrayData(qvec), probesOf(qid))
       var p = 0
       while (p < probed.numElements()) {
         val lid = probed.getStruct(p, 2).getInt(0)
@@ -148,13 +150,9 @@ class IvfSqIndex(
     IvfFlatIndex.saveMeta(spark, path, nRows)
     // measured probe/recall curve of the planner-served composition
     // (decoded-int8 candidates at the heuristic depth + exact refine)
-    if (spark.conf.get("spark.graft.index.recallCurve.enabled", "true").toBoolean)
-      measureSource.foreach { src =>
-        val depth = graft.plans.ResolveKnnJoin.compressedDepth(10, None)
-        IvfFlatIndex.saveMeasuredCurve(spark, path, src, metric, centroids.k,
-          (q, kk, p) => searchWithRefine(q, src, kk, p, depth,
-            broadcastCandidates = true), nRows)
-      }
+    if (IvfFlatIndex.recallCurveEnabled(spark))
+      measureSource.foreach(IvfFlatIndex.saveCompressedCurve(spark, path, _, metric,
+        centroids.k, nRows, graft.plans.ResolveKnnJoin.compressedDepth(10, None))(searchLocal))
   }
 }
 
@@ -179,7 +177,7 @@ object IvfSqIndex {
       .select(col("list_id"), col("id"),
         ScalarQuantizer.transformCol(col("vec"), sq).as("codes"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    new IvfSqIndex(ivf.centroids, sq, lists, params.metric,
-      Some(dataset.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))))
+    new IvfSqIndex(ivf.centroids, sq, lists, params.metric, Some(new CurveSource(ivf,
+      dataset.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec")))))
   }
 }

@@ -32,11 +32,20 @@ class ScannIndex(
     val metric: Metric,
     // build-time reorder-depth calibration — see DepthHint
     val depthHint: Option[(Int, Int)] = None,
-    // raw-corpus handle for save-time curve measurement (IvfPqIndex doc)
-    val measureSource: Option[DataFrame] = None) extends Serializable {
+    // save-time curve measurement source (IvfPqIndex doc)
+    val measureSource: Option[CurveSource] = None) extends Serializable {
 
   private def residualCol(vec: Column, listId: Column): Column =
     B.column(CentroidResidual(B.expression(vec), B.expression(listId), centroids))
+
+  // IP and cosine builds share the larger-is-closer IP estimator
+  private def ipLike = metric == Metric.InnerProduct || metric == Metric.Cosine
+  private def scoreMetric = if (ipLike) Metric.InnerProduct else Metric.L2
+
+  // better of the two SOAR copies' estimates: smaller L2, larger dot
+  private def dedup(pairs: DataFrame): DataFrame = pairs
+    .groupBy(col("qid"), col("_nid"))
+    .agg((if (ipLike) max(col("dist")) else min(col("dist"))).as("dist"))
 
   /** ADC search over primary+spill lists, deduped per (query, id). An
     * InnerProduct build (ScaNN's native regime — anisotropic quantization
@@ -46,34 +55,14 @@ class ScannIndex(
     * IP estimator over the normalized query. */
   def search(queries: DataFrame, k: Int, nProbes: Int,
       qidCol: String = "qid", qvecCol: String = "qvec"): DataFrame = {
-    val cos = metric == Metric.Cosine
-    val ipLike = metric == Metric.InnerProduct || cos
-    val scoreMetric = if (ipLike) Metric.InnerProduct else Metric.L2
-    // better of the two SOAR copies' estimates: smaller L2, larger dot
-    def dedup(pairs: DataFrame): DataFrame = pairs
-      .groupBy(col("qid"), col("_nid"))
-      .agg((if (ipLike) max(col("dist")) else min(col("dist"))).as("dist"))
-    // Fused ADC kernel (AdcKernel doc): bufK = 2k because SOAR stores ≤ 2
-    // copies per id, then the same (qid, id) dedup as the join route.
+    // Fused ADC kernel (AdcKernel doc) when the query side fits in memory.
     val spark = queries.sparkSession
-    val qShaped = queries
-      .select(col(qidCol).cast("long").as("qid"), col(qvecCol).as("qvec"))
-      .transform(df => if (cos)
-        df.withColumn("qvec", IvfFlatIndex.unitNormCol(col("qvec"))) else df)
+    val qShaped = IvfPqIndex.shapeQueries(queries, metric, qidCol, qvecCol)
     val q = qShaped.transform(graft.core.Frames.materialize(_))
     if (graft.graphops.LocalKernel.enabled(spark) &&
         graft.graphops.LocalKernel.within(q,
           graft.graphops.LocalKernel.maxVectors(spark))) {
-      val (cb, cs) = (codebooks, centroids)
-      try return BruteForceKnn.topKPerQuery(
-        dedup(
-          if (ipLike)
-            AdcKernel.pairsWith(lists, q, centroids, nProbes, 2 * k, "pq_codes",
-              codebooks.nCenters, minClose = false)(
-              (lid, qv) => graft.expr.PqOps.lutIp(cb, cs, qv, lid).toDoubleArray())
-          else
-            AdcKernel.pairs(lists, q, centroids, codebooks, nProbes, 2 * k, "pq_codes")),
-        k, scoreMetric)
+      try return kernelSearch(q, k, _ => nProbes)
       finally q.unpersist()
     }
     q.unpersist()
@@ -95,6 +84,22 @@ class ScannIndex(
       .select(col("qid"), col("id").as("_nid"),
         ProductQuantizer.adcCol(col("_lut"), col("pq_codes"), codebooks).as("dist")))
     BruteForceKnn.topKPerQuery(pairs, k, scoreMetric)
+  }
+
+  /** Fused-kernel search over shaped queries with per-query probe counts:
+    * bufK = 2k because SOAR stores ≤ 2 copies per id, then the same
+    * (qid, id) dedup as the join route. */
+  private def kernelSearch(q: DataFrame, k: Int, probesOf: Long => Int): DataFrame = {
+    val (cb, cs) = (codebooks, centroids)
+    BruteForceKnn.topKPerQuery(
+      dedup(
+        if (ipLike)
+          AdcKernel.pairsWith(lists, q, centroids, probesOf, 2 * k, "pq_codes",
+            codebooks.nCenters, minClose = false)(
+            (lid, qv) => graft.expr.PqOps.lutIp(cb, cs, qv, lid).toDoubleArray())
+        else
+          AdcKernel.pairs(lists, q, centroids, codebooks, probesOf, 2 * k, "pq_codes")),
+      k, scoreMetric)
   }
 
   /** ScaNN reordering: exact re-rank of the ADC top-kCoarse. */
@@ -126,13 +131,10 @@ class ScannIndex(
     depthHint.foreach(DepthHint.save(spark, path, _))
     // measured probe/recall curve of the planner-served composition
     // (IvfPqIndex.save doc)
-    if (spark.conf.get("spark.graft.index.recallCurve.enabled", "true").toBoolean)
-      measureSource.foreach { src =>
-        val depth = graft.plans.ResolveKnnJoin.compressedDepth(10, depthHint)
-        IvfFlatIndex.saveMeasuredCurve(spark, path, src, metric, centroids.k,
-          (q, kk, p) => searchWithRefine(q, src, kk, p, depth,
-            broadcastCandidates = true), nRows)
-      }
+    if (IvfFlatIndex.recallCurveEnabled(spark))
+      measureSource.foreach(IvfFlatIndex.saveCompressedCurve(spark, path, _, metric,
+        centroids.k, nRows, graft.plans.ResolveKnnJoin.compressedDepth(10, depthHint))(
+        (q, depth, probesOf) => kernelSearch(IvfPqIndex.shapeQueries(q, metric), depth, probesOf)))
   }
 }
 
@@ -264,17 +266,25 @@ object ScannIndex {
       .select(col("list_id"), col("id"), encoded.as("pq_codes"))
       .repartition(col("list_id"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // SOAR stores every id twice, so this over-counts the population 2x —
-    // harmless for the big-corpus chunking gate it hints
-    val nListRows = lists.count() // materialize before releasing the shared frame
+    // SOAR stores every id twice: the population is half the list rows
+    val nRows = lists.count() / 2 // materialize before releasing the shared frame
     graft.core.Frames.release(d)
-    val src = Some(ds.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec")))
+    // the held-out truth's source: a shared base as is (its memo may hold
+    // the truth already); otherwise an uncached view of the same cells
+    // over `ds` — the build never reads its own coarse lists, so caching
+    // them only for the measurement would pin a copy of the corpus
+    val truthSource = base.getOrElse {
+      ivf.lists.unpersist()
+      new IvfFlatIndex(ivf.centroids, IvfFlatIndex.assign(ds, ivf.centroids, idCol, vecCol),
+        ivf.metric)
+    }
+    val src = Some(new CurveSource(truthSource,
+      ds.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))))
     val idx = new ScannIndex(cs, cb, lists, params.metric, measureSource = src)
     if (DepthHint.enabled(dataset.sparkSession) && DepthHint.routableMetric(params.metric))
       new ScannIndex(cs, cb, lists, params.metric,
         DepthHint.measure(idx.search(_, _, _), cs.k,
-          ds, params.metric, idCol, vecCol,
-          nRowsHint = Some(nListRows)), measureSource = src)
+          truthSource.heldOutTruth(params.metric, nRows), nRows), measureSource = src)
     else idx
   }
 }
