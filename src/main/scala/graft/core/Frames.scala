@@ -2,6 +2,7 @@ package graft.core
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{AttributeSet, Expression}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, PartitioningCollection}
 import org.apache.spark.storage.StorageLevel
 
@@ -39,16 +40,26 @@ object Frames {
     !refs.subsetOf(AttributeSet(plan.output))
   }
 
-  /** Materialize for repeated reads. The healthy path is a plain
-    * `persist` (lazy, lineage kept — the right at-scale posture: a lost
-    * executor recomputes from lineage). When the plan carries stale
-    * partitioning metadata the cache manager would crash on reuse, so the
-    * frame is materialized as a `localCheckpoint` instead — a LogicalRDD
-    * is referenced verbatim downstream and never goes through cache-plan
+  /** True when the optimized plan is a driver-held `LocalRelation` (a
+    * `Seq(...).toDF` frame, and any projection or filter of one): its rows
+    * already sit on the driver, and reading them runs no job. */
+  def isLocal(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+
+  /** Materialize for repeated reads. A local-relation frame is returned
+    * unchanged: re-reading it is free, so a persist would only add a job
+    * to fill the cache. The healthy path is a plain `persist` (lazy,
+    * lineage kept — the right at-scale posture: a lost executor
+    * recomputes from lineage). When the plan carries stale partitioning
+    * metadata the cache manager would crash on reuse, so the frame is
+    * materialized as a `localCheckpoint` instead — a LogicalRDD is
+    * referenced verbatim downstream and never goes through cache-plan
     * substitution. */
   def materialize(df: DataFrame,
       level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame =
-    if (staleMetadata(df)) df.localCheckpoint() else df.persist(level)
+    if (isLocal(df)) df
+    else if (staleMetadata(df)) df.localCheckpoint()
+    else df.persist(level)
 
   /** Release a frame obtained from `materialize` (no-op for the
     * checkpointed route — its blocks are freed by the ContextCleaner). */

@@ -301,12 +301,16 @@ object CentroidOps {
     new GenericArrayData(rows)
   }
 
-  def residual(cs: CentroidSet, vec: ArrayData, listId: Int): ArrayData = {
+  def residual(cs: CentroidSet, vec: ArrayData, listId: Int): ArrayData =
+    new GenericArrayData(residualRaw(cs, vec.toFloatArray(), listId))
+
+  /** [[residual]] over a primitive vector — the fused kernels' form. */
+  def residualRaw(cs: CentroidSet, v: Array[Float], listId: Int): Array[Float] = {
     val off = listId * cs.dim
     val out = new Array[Float](cs.dim)
     var i = 0
-    while (i < cs.dim) { out(i) = vec.getFloat(i) - cs.flat(off + i); i += 1 }
-    new GenericArrayData(out)
+    while (i < cs.dim) { out(i) = v(i) - cs.flat(off + i); i += 1 }
+    out
   }
 
   private def distTo(cs: CentroidSet, v: Array[Float], c: Int): Double = {

@@ -1,6 +1,7 @@
 package graft.expr
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression,
+  UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -71,8 +72,13 @@ object PqOps {
   /** Per-query ADC lookup table: squared-L2 from each query subvector to
     * each center — flat array of pqDim*nCenters doubles
     * (ivf_pq_compute_similarity.cuh LUT precompute). */
-  def lut(cb: PqCodebooks, qvec: ArrayData): ArrayData = {
-    val q = qvec.toFloatArray()
+  def lut(cb: PqCodebooks, qvec: ArrayData): ArrayData =
+    UnsafeArrayData.fromPrimitiveArray(lutRaw(cb, qvec.toFloatArray()))
+
+  /** [[lut]] over a primitive query — what the fused kernels call; the
+    * expression form wraps this result once (GenericArrayData's double[]
+    * constructor would box every entry). */
+  def lutRaw(cb: PqCodebooks, q: Array[Float]): Array[Double] = {
     val books = cb.books
     val out = new Array[Double](cb.pqDim * cb.nCenters)
     var s = 0
@@ -91,7 +97,7 @@ object PqOps {
       }
       s += 1
     }
-    new GenericArrayData(out)
+    out
   }
 
   /** Inner-product ADC lookup table (ivf_pq.hpp:47-205 builds over the
@@ -101,8 +107,11 @@ object PqOps {
     * an equal share (+q·c/pqDim), so the SAME code-indexed sum (PqAdc /
     * the fused kernel loop) yields the full estimated dot product —
     * larger is closer (is_min_close(InnerProduct) = false). */
-  def lutIp(cb: PqCodebooks, cs: CentroidSet, qvec: ArrayData, listId: Int): ArrayData = {
-    val q = qvec.toFloatArray()
+  def lutIp(cb: PqCodebooks, cs: CentroidSet, qvec: ArrayData, listId: Int): ArrayData =
+    UnsafeArrayData.fromPrimitiveArray(lutIpRaw(cb, cs, qvec.toFloatArray(), listId))
+
+  /** [[lutIp]] over a primitive query (see [[lutRaw]]). */
+  def lutIpRaw(cb: PqCodebooks, cs: CentroidSet, q: Array[Float], listId: Int): Array[Double] = {
     val books = cb.books
     val cBase = listId * cs.dim
     var qc = 0.0
@@ -126,7 +135,7 @@ object PqOps {
       }
       s += 1
     }
-    new GenericArrayData(out)
+    out
   }
 
   /** Score-aware (anisotropic) residual encoding for MIPS builds — the
@@ -384,8 +393,11 @@ object PqClusterOps {
   /** Per-(query, probed list) ADC LUT: same pqDim x nCenters layout as
     * PqOps.lut, every subspace row computed against the list's one
     * codebook — PqAdc consumes it unchanged. */
-  def lut(ccb: ClusterCodebooks, listId: Int, qvec: ArrayData): ArrayData = {
-    val q = qvec.toFloatArray()
+  def lut(ccb: ClusterCodebooks, listId: Int, qvec: ArrayData): ArrayData =
+    UnsafeArrayData.fromPrimitiveArray(lutRaw(ccb, listId, qvec.toFloatArray()))
+
+  /** [[lut]] over a primitive query (see PqOps.lutRaw). */
+  def lutRaw(ccb: ClusterCodebooks, listId: Int, q: Array[Float]): Array[Double] = {
     val flat = ccb.flat
     val out = new Array[Double](ccb.pqDim * ccb.nCenters)
     val base = listId * ccb.nCenters * ccb.subLen
@@ -405,7 +417,7 @@ object PqClusterOps {
       }
       s += 1
     }
-    new GenericArrayData(out)
+    out
   }
 
   /** PER_CLUSTER twin of PqOps.encodeAniso: the same score-aware
@@ -430,11 +442,16 @@ object PqClusterOps {
     * the per-(query, list) constant q·c_list, so the shared code-indexed
     * ADC sum yields the full estimated dot product (larger is closer). */
   def lutIp(ccb: ClusterCodebooks, cs: CentroidSet, listId: Int,
-      qvec: ArrayData): ArrayData = {
+      qvec: ArrayData): ArrayData =
+    UnsafeArrayData.fromPrimitiveArray(lutIpRaw(ccb, cs, listId, qvec.toFloatArray()))
+
+  /** [[lutIp]] over a primitive query (see PqOps.lutRaw). */
+  def lutIpRaw(ccb: ClusterCodebooks, cs: CentroidSet, listId: Int,
+      q: Array[Float]): Array[Double] = {
     val cBase = listId * cs.dim
     var qc = 0.0
     var j0 = 0
-    while (j0 < cs.dim) { qc += qvec.getFloat(j0).toDouble * cs.flat(cBase + j0); j0 += 1 }
+    while (j0 < cs.dim) { qc += q(j0).toDouble * cs.flat(cBase + j0); j0 += 1 }
     val share = qc / ccb.pqDim
     val base = listId * ccb.nCenters * ccb.subLen
     val out = new Array[Double](ccb.pqDim * ccb.nCenters)
@@ -445,7 +462,7 @@ object PqClusterOps {
         val off = base + c * ccb.subLen
         var d = 0.0; var j = 0
         while (j < ccb.subLen) {
-          d += qvec.getFloat(s * ccb.subLen + j).toDouble * ccb.flat(off + j)
+          d += q(s * ccb.subLen + j).toDouble * ccb.flat(off + j)
           j += 1
         }
         out(s * ccb.nCenters + c) = d + share
@@ -453,7 +470,7 @@ object PqClusterOps {
       }
       s += 1
     }
-    new GenericArrayData(out)
+    out
   }
 }
 

@@ -111,7 +111,7 @@ class IvfPqIndex(
       if (ipLike)
         AdcKernel.pairsWith(lists, q, centroids, probesOf, k, "pq_codes",
           codebooks.nCenters, minClose = false)(
-          (lid, qv) => graft.expr.PqOps.lutIp(cb, cs, qv, lid).toDoubleArray())
+          (lid, qv) => graft.expr.PqOps.lutIpRaw(cb, cs, qv, lid))
       else
         AdcKernel.pairs(lists, q, centroids, codebooks, probesOf, k, "pq_codes"),
       k, scoreMetric)
@@ -193,7 +193,7 @@ class IvfPqClusterIndex(
     // per-subspace index.
     val spark = queries.sparkSession
     val qShaped = IvfPqIndex.shapeQueries(queries, metric, qidCol, qvecCol)
-    val q = qShaped.persist(StorageLevel.MEMORY_AND_DISK)
+    val q = qShaped.transform(graft.core.Frames.materialize(_))
     if (graft.graphops.LocalKernel.enabled(spark) &&
         graft.graphops.LocalKernel.within(q,
           graft.graphops.LocalKernel.maxVectors(spark))) {
@@ -232,9 +232,9 @@ class IvfPqClusterIndex(
     BruteForceKnn.topKPerQuery(
       AdcKernel.pairsWith(lists, q, centroids, probesOf, k, "pq_codes",
         ccb.nCenters, minClose = !ipLike)(
-        if (ipLike) (lid, qv) => graft.expr.PqClusterOps.lutIp(ccb, cs, lid, qv).toDoubleArray()
-        else (lid, qv) => graft.expr.PqClusterOps.lut(ccb, lid,
-          graft.expr.CentroidOps.residual(cs, qv, lid)).toDoubleArray()),
+        if (ipLike) (lid, qv) => graft.expr.PqClusterOps.lutIpRaw(ccb, cs, lid, qv)
+        else (lid, qv) => graft.expr.PqClusterOps.lutRaw(ccb, lid,
+          graft.expr.CentroidOps.residualRaw(cs, qv, lid))),
       k, scoreMetric)
   }
 

@@ -96,7 +96,7 @@ class ScannIndex(
         if (ipLike)
           AdcKernel.pairsWith(lists, q, centroids, probesOf, 2 * k, "pq_codes",
             codebooks.nCenters, minClose = false)(
-            (lid, qv) => graft.expr.PqOps.lutIp(cb, cs, qv, lid).toDoubleArray())
+            (lid, qv) => graft.expr.PqOps.lutIpRaw(cb, cs, qv, lid))
         else
           AdcKernel.pairs(lists, q, centroids, codebooks, probesOf, 2 * k, "pq_codes")),
       k, scoreMetric)

@@ -63,8 +63,13 @@ case class KnnJoinPlan(
   * — after ANY change under the registered path (append, delete, rewrite)
   * re-register with a rebuilt index. The exact-distance routes answer
   * from the index alone (the reference's own serving semantics: a stale
-  * index serves stale rows until rebuilt), and the planner's memoized
-  * statistics are only dropped by register/unregister. */
+  * index serves stale rows until rebuilt). The planner's memos are only
+  * dropped by register/unregister (and `invalidateStats()`): row probes
+  * and counts, filter-rate statistics, the `meta`/`recall_curve`/
+  * `depth_meta` sidecar reads, layout classification, live-version
+  * resolution, and the loaded layouts themselves (per session) — so a
+  * layout re-saved over a registered index path is served only after
+  * `register` is called again. */
 object GraftIndexCatalog {
   case class Entry(indexPath: String, nProbes: Int, kCoarse: Int)
   private val byPath = scala.collection.concurrent.TrieMap.empty[String, Vector[Entry]]
@@ -158,6 +163,30 @@ object GraftIndexCatalog {
     sidecarDepthMemo.getOrElseUpdate(normalize(indexPath), read)
   }
 
+  /** Memoized loaded layouts (each layout's `load`: centroids, codebooks
+    * and `depth_meta` through SidecarIO, plus the schema inference of the
+    * list table), keyed by index path and layout class — one load per
+    * registration, not one per rewrite. Same clear-on-register discipline
+    * as the sidecar memos, and `invalidateStats()` drops them too. A
+    * loaded layout holds frames bound to the session that read it, so an
+    * entry is served only to that session; another session loads its
+    * own. Tiered layouts are never memoized: `TieredIngest.append` changes
+    * their delta under a live registration. */
+  private val loadedMemo =
+    scala.collection.concurrent.TrieMap.empty[(String, String), (SparkSession, AnyRef)]
+  private[graft] def cachedLoad[T <: AnyRef](spark: SparkSession, indexPath: String)(
+      load: => T)(implicit tag: scala.reflect.ClassTag[T]): T = {
+    if (loadedMemo.size >= probeCacheCap) loadedMemo.clear()
+    val key = (normalize(indexPath), tag.runtimeClass.getName)
+    loadedMemo.get(key) match {
+      case Some((owner, layout)) if owner eq spark => layout.asInstanceOf[T]
+      case _ =>
+        val layout = load
+        loadedMemo.put(key, (spark, layout))
+        layout
+    }
+  }
+
   // test hooks: pin that the sidecar path leaves the count memo untouched
   // and that filter-count memo keys carry content identity
   private[graft] def countMemoSize: Int = countOutcomes.size
@@ -172,6 +201,7 @@ object GraftIndexCatalog {
     sidecarDepthMemo.clear()
     layoutMemo.clear()
     resolvedMemo.clear()
+    loadedMemo.clear()
   }
 
   /** Memoized live-version resolution of a registered layout root
@@ -257,12 +287,12 @@ object GraftIndexCatalog {
     }
   }
 
-  /** Drop every memoized statistic/sidecar/layout read — for callers
-    * that changed a layout's on-disk contents UNDER a live registration
-    * (TieredIngest's in-place auto-compaction): without this, a
-    * still-registered path would keep serving the pre-compaction
-    * population, curve, and delta statistics until the next register
-    * call. The route markers (pure diagnostics bound to executed
+  /** Drop every memoized statistic/sidecar/layout read and loaded
+    * layout — for callers that changed a layout's on-disk contents UNDER
+    * a live registration (TieredIngest's in-place auto-compaction):
+    * without this, a still-registered path would keep serving the
+    * pre-compaction population, curve, and delta statistics until the
+    * next register call. The route markers (pure diagnostics bound to executed
     * frames) are deliberately kept. */
   private[graft] def invalidateStats(): Unit = clearProbeCache()
 }
@@ -719,10 +749,13 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
         * and whether those distances are EXACT (raw-vector layouts) or
         * code-space estimates (ADC / decoded int8). */
       def candidates(e: GraftIndexCatalog.Entry, layout: String,
-          base: LogicalPlan, depth: Int): Option[(DataFrame, Metric, Boolean)] =
+          base: LogicalPlan, depth: Int): Option[(DataFrame, Metric, Boolean)] = {
+        def loaded[T <: AnyRef: scala.reflect.ClassTag](
+            load: (SparkSession, String) => T): T =
+          GraftIndexCatalog.cachedLoad(spark, e.indexPath)(load(spark, e.indexPath))
         layout match {
           case "hnsw" =>
-            val idx = graft.index.Hnsw.load(spark, e.indexPath)
+            val idx = loaded(graft.index.Hnsw.load)
             if (!rankCompatible(idx.params.metric, metric)) None
             else {
               // pin the base-beam bound EXPLICITLY at the ef-tracking
@@ -739,7 +772,7 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
                 baseIterations = math.max(10, ef)), idx.params.metric, true))
             }
           case "ivf" =>
-            val idx = graft.index.IvfFlatIndex.load(spark, e.indexPath)
+            val idx = loaded(graft.index.IvfFlatIndex.load)
             if (!rankCompatible(idx.metric, metric)) None
             else Some((idx.search(queries, depth,
               resolveProbes(e, base, idx.centroids.k, depth)), idx.metric, true))
@@ -759,7 +792,7 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
             // quantization noise makes the dists estimates, not exact
             if (!compressedFloorReachable(e)) None
             else {
-              val idx = graft.index.IvfSqIndex.load(spark, e.indexPath)
+              val idx = loaded(graft.index.IvfSqIndex.load)
               if (!rankCompatible(idx.metric, metric)) None
               else Some((idx.search(queries, depth,
                 resolveProbes(e, base, idx.centroids.k, depth)), idx.metric, false))
@@ -767,21 +800,21 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
           case "ivf_pq" =>
             if (!compressedFloorReachable(e)) None
             else {
-              val idx = graft.index.IvfPqIndex.load(spark, e.indexPath)
+              val idx = loaded(graft.index.IvfPqIndex.load)
               compressedScoreMetric(idx.metric).map(m => (idx.search(queries, depth,
                 resolveProbes(e, base, idx.centroids.k, depth)), m, false))
             }
           case "ivf_pqcl" =>
             if (!compressedFloorReachable(e)) None
             else {
-              val idx = graft.index.IvfPqClusterIndex.load(spark, e.indexPath)
+              val idx = loaded(graft.index.IvfPqClusterIndex.load)
               compressedScoreMetric(idx.metric).map(m => (idx.search(queries, depth,
                 resolveProbes(e, base, idx.centroids.k, depth)), m, false))
             }
           case "scann" =>
             if (!compressedFloorReachable(e)) None
             else {
-              val idx = graft.index.ScannIndex.load(spark, e.indexPath)
+              val idx = loaded(graft.index.ScannIndex.load)
               compressedScoreMetric(idx.metric).map(m => (idx.search(queries, depth,
                 resolveProbes(e, base, idx.centroids.k, depth)), m, false))
             }
@@ -789,12 +822,13 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
             // RaBitQ estimates are L2-only by construction
             if (!compressedFloorReachable(e) || !l2Family(metric)) None
             else {
-              val idx = graft.index.IvfRabitqIndex.load(spark, e.indexPath)
+              val idx = loaded(graft.index.IvfRabitqIndex.load)
               Some((idx.search(queries, depth,
                 resolveProbes(e, base, idx.centroids.k, depth)), Metric.L2, false))
             }
           case _ => None
         }
+      }
 
       /** EXACT dist map to the node metric: identity, or sqrt of the same
         * accumulated double (bit-identical to recomputing L2Sqrt from the

@@ -257,6 +257,67 @@ class KnnJoinPlanSuite extends SparkFunSuite {
       "vec_id", "embedding").save(p))
   }
 
+  test("registered IVF-PQ layout: a repeat local-frame batch plans with no job; " +
+      "the loaded-layout memo follows register and the session") {
+    ensureRule()
+    import graft.index.IvfPqIndex
+    val dataPath = s"${SparkTestBase.sf0001}/embeddings.parquet"
+    val idxPath = java.nio.file.Files.createTempDirectory("knnpqmemo").toString
+    def build(nLists: Int, seed: Long) = IvfPqIndex.build(emb,
+      IvfPqIndex.Params(nLists = nLists, nIters = 5, pqDim = 8, pqBits = 8, seed = seed),
+      "vec_id", "embedding")
+    val qRows = queries.select(col("qid").cast("long"), col("qvec"))
+      .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq
+    def batch(s: org.apache.spark.sql.SparkSession) = {
+      import s.implicits._
+      KnnJoinPlan.knnJoin(s.read.parquet(dataPath), qRows.toDF("qid", "qvec"), 10, Metric.L2,
+        "vec_id", "embedding")
+    }
+    def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+      df.select(col("qid").cast("long"), col("nbr_id").cast("long")).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+    // the layout searched directly at the registration's probes and depth
+    def direct(idx: IvfPqIndex) = pairs(idx.searchWithRefine(queries, emb, 10, nProbes = 1,
+      kCoarse = 10, idCol = "vec_id", vecCol = "embedding"))
+    build(8, 42).save(idxPath)
+    graft.plans.GraftIndexCatalog.register(dataPath, idxPath, nProbes = 1, kCoarse = 10)
+    try withIndexGateOff {
+      val first = batch(spark)
+      first.queryExecution.executedPlan
+      assert(graft.plans.IndexRoute.routedThrough(first, idxPath))
+      val second = batch(spark)
+      val jobs = jobsDuring(second.queryExecution.executedPlan)
+      assert(jobs == 0, s"a repeat batch ran $jobs jobs at plan time")
+      val rowsA = pairs(second)
+      assert(rowsA == direct(IvfPqIndex.load(spark, idxPath)))
+
+      // a different layout saved over the same path: register serves it
+      val b = build(4, 7)
+      b.save(idxPath)
+      graft.plans.GraftIndexCatalog.register(dataPath, idxPath, nProbes = 1, kCoarse = 10)
+      val rowsB = pairs(batch(spark))
+      val fresh = IvfPqIndex.load(spark, idxPath)
+      assert(fresh.centroids.k == 4)
+      assert(rowsB == direct(fresh))
+      assert(rowsB != rowsA, "the two layouts must answer differently for this check")
+
+      // a second session plans with its own load, never the first's frames
+      val s2 = spark.newSession()
+      ResolveKnnJoin.ensureInstalled(s2)
+      s2.conf.set("spark.graft.knnJoin.minIndexRows", "0")
+      val rows2 = pairs(batch(s2))
+      assert(rows2 == rowsB)
+      // the batch left the memo holding s2's own load, and the next
+      // batch in the first session replaces it with its own
+      def memoOwner(s: org.apache.spark.sql.SparkSession) =
+        graft.plans.GraftIndexCatalog.cachedLoad[IvfPqIndex](s, idxPath)(
+          fail("no layout memoized for this session")).lists.sparkSession
+      assert(memoOwner(s2) eq s2)
+      assert(pairs(batch(spark)) == rowsB)
+      assert(memoOwner(spark) eq spark)
+    } finally graft.plans.GraftIndexCatalog.unregister(dataPath)
+  }
+
   test("registered IVF-SQ layout reroutes through decoded candidates + refine") {
     compressedRouteCase("sq", p => graft.index.IvfSqIndex.build(emb,
       graft.index.IvfFlatIndex.Params(nLists = 8, nIters = 5), idCol = "vec_id",

@@ -33,6 +33,19 @@ class LocalKernelSuite extends SparkFunSuite {
     val skew = spark.range(0, 500, 1, 1).toDF("id")
       .union(spark.range(0, 0, 1, 9).toDF("id"))
     assert(within(skew, 500) && !within(skew, 499))
+    // driver-held frames answer from the plan's static row bound: exact at
+    // the boundary, and no job
+    import spark.implicits._
+    for (n <- Seq(0, 1, 37)) {
+      val lr = (0 until n).map(_.toLong).toDF("id")
+      assert(graft.core.Frames.isLocal(lr))
+      val jobs = jobsDuring {
+        for (cap <- Seq(n - 1, n, n + 1))
+          assert(within(lr, cap) == (n <= cap), s"$n local rows vs cap $cap")
+        assert(within(lr.filter($"id" % 2 === 0).select(($"id" + 1).as("x")), n))
+      }
+      assert(jobs == 0, s"within on a $n-row local frame ran $jobs jobs")
+    }
   }
 
   private def bothRoutes(run: => DataFrame): (Array[String], Array[String]) = {
@@ -352,6 +365,63 @@ class LocalKernelSuite extends SparkFunSuite {
     }
     assert(local.length > 0)
     assert(local.sameElements(dist))
+  }
+
+  private lazy val embV = emb.select(col("id").as("vec_id"), col("vec").as("embedding"))
+
+  test("ADC kernels under IP and cosine: fused route == probe join, row for row") {
+    for (m <- Seq(Metric.InnerProduct, Metric.Cosine)) {
+      val pq = graft.index.IvfPqIndex.build(embV, graft.index.IvfPqIndex.Params(
+        nLists = 8, nIters = 5, pqDim = 8, pqBits = 6, metric = m), "vec_id", "embedding")
+      val pqcl = graft.index.IvfPqIndex.buildPerCluster(embV, graft.index.IvfPqIndex.Params(
+        nLists = 8, nIters = 5, pqDim = 8, pqBits = 5, metric = m), "vec_id", "embedding")
+      val scann = graft.index.ScannIndex.build(embV, graft.index.ScannIndex.Params(
+        nLeaves = 8, nIters = 5, pqBits = 6, metric = m), "vec_id", "embedding")
+      Seq[(String, DataFrame => DataFrame)](
+        "ivf-pq" -> (pq.search(_, 10, nProbes = 3)),
+        "ivf-pq PER_CLUSTER" -> (pqcl.search(_, 10, nProbes = 3)),
+        "scann" -> (scann.search(_, 10, nProbes = 4))).foreach { case (kind, search) =>
+        val (local, dist) = bothRoutes(search(queries))
+        assert(local.length > 0, s"$kind ${m.name}")
+        assert(local.sameElements(dist), s"$kind ${m.name}: kernel and join routes differ")
+      }
+    }
+  }
+
+  test("kernels over a driver-held query frame: job-free gate == join route, row for row") {
+    import spark.implicits._
+    val localQ = queries.as[(Long, Array[Float])].collect().toSeq.toDF("qid", "qvec")
+    assert(graft.core.Frames.isLocal(localQ))
+    val p = graft.index.IvfFlatIndex.Params(nLists = 8, nIters = 5)
+    val flat = graft.index.IvfFlatIndex.build(embV, p, "vec_id", "embedding")
+    val sq = graft.index.IvfSqIndex.build(embV, p, idCol = "vec_id", vecCol = "embedding",
+      base = Some(flat))
+    val rabitq = graft.index.IvfRabitqIndex.build(embV,
+      graft.index.IvfRabitqIndex.Params(nLists = 8, nIters = 5), "vec_id", "embedding")
+    val pqP = graft.index.IvfPqIndex.Params(nLists = 8, nIters = 5, pqDim = 8, pqBits = 6)
+    val pq = graft.index.IvfPqIndex.build(embV, pqP, "vec_id", "embedding")
+    val pqcl = graft.index.IvfPqIndex.buildPerCluster(embV, pqP.copy(pqBits = 5),
+      "vec_id", "embedding")
+    val scann = graft.index.ScannIndex.build(embV,
+      graft.index.ScannIndex.Params(nLeaves = 8, nIters = 5, pqBits = 6), "vec_id", "embedding")
+    Seq[(String, DataFrame => DataFrame)](
+      "ivf" -> (flat.search(_, 10, nProbes = 3)),
+      "ivf-sq" -> (sq.search(_, 10, nProbes = 3)),
+      "rabitq" -> (rabitq.search(_, 20, nProbes = 3)),
+      "ivf-pq" -> (pq.search(_, 10, nProbes = 3)),
+      "ivf-pq PER_CLUSTER" -> (pqcl.search(_, 10, nProbes = 3)),
+      "scann" -> (scann.search(_, 10, nProbes = 4))).foreach { case (kind, search) =>
+      // the gate and the query collect read the driver-held rows: building
+      // the kernel plan runs no job
+      val jobs = jobsDuring(search(localQ))
+      assert(jobs == 0, s"$kind: planning over a local query frame ran $jobs jobs")
+      val (local, dist) = bothRoutes(search(localQ))
+      assert(local.length > 0, kind)
+      assert(local.sameElements(dist), s"$kind: kernel over a local frame != join route")
+      // the parquet-backed frame of the same queries takes the probed gate
+      // and must give the same rows
+      assert(local.sameElements(bothRoutes(search(queries))._1), kind)
+    }
   }
 
   test("embedding near-dup: ball-cover-pruned route == all-pairs range join") {
