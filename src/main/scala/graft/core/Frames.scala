@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{AttributeSet, Expression}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, PartitioningCollection}
@@ -43,8 +44,14 @@ object Frames {
   /** True when the optimized plan is a driver-held `LocalRelation` (a
     * `Seq(...).toDF` frame, and any projection or filter of one): its rows
     * already sit on the driver, and reading them runs no job. */
-  def isLocal(df: DataFrame): Boolean =
-    df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+  def isLocal(df: DataFrame): Boolean = localRows(df).isDefined
+
+  /** The rows of a driver-held frame (`isLocal`); None for any other. */
+  def localRows(df: DataFrame): Option[Seq[InternalRow]] =
+    df.queryExecution.optimizedPlan match {
+      case r: LocalRelation => Some(r.data)
+      case _ => None
+    }
 
   /** Materialize for repeated reads. A local-relation frame is returned
     * unchanged: re-reading it is free, so a persist would only add a job

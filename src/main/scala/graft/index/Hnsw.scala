@@ -311,9 +311,10 @@ object Hnsw {
     idx.levels.write.mode("overwrite").parquet(s"$path/hnsw_levels")
     idx.edges.write.mode("overwrite").partitionBy("level").parquet(s"$path/hnsw_edges")
     import spark.implicits._
-    Seq((idx.maxLevel, idx.entryPoint, idx.params.m, idx.params.seed, idx.params.metric.name))
-      .toDF("max_level", "entry_point", "m", "seed", "metric")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/hnsw_meta")
+    graft.sources.SidecarIO.write(
+      Seq((idx.maxLevel, idx.entryPoint, idx.params.m, idx.params.seed, idx.params.metric.name))
+        .toDF("max_level", "entry_point", "m", "seed", "metric"),
+      s"$path/hnsw_meta")
     // population sidecar (one node per level-table row): the kNN-join
     // resolver's filtered-route rate math reads it instead of counting
     // the registered relation at rewrite time
@@ -329,12 +330,12 @@ object Hnsw {
         // point-estimate after the round trip
         idx.efCurveSample match {
           case Some((k, nQ)) =>
-            cv.map { case (p, r) => (p, r, k, nQ) }
-              .toDF("probes", "recall", "k", "n_queries")
-              .coalesce(1).write.mode("overwrite").parquet(s"$path/ef_curve")
+            graft.sources.SidecarIO.write(
+              cv.map { case (p, r) => (p, r, k, nQ) }
+                .toDF("probes", "recall", "k", "n_queries"),
+              s"$path/ef_curve")
           case None =>
-            cv.toDF("probes", "recall")
-              .coalesce(1).write.mode("overwrite").parquet(s"$path/ef_curve")
+            graft.sources.SidecarIO.write(cv.toDF("probes", "recall"), s"$path/ef_curve")
         }
       case None =>
         if (IvfFlatIndex.recallCurveEnabled(spark))
@@ -342,9 +343,10 @@ object Hnsw {
             .foreach { case (cv, k, nQ) =>
               // shared curve schema (IvfFlatIndex.loadCurve); n_queries·k
               // feeds the Wilson-bound inversion like the IVF recall_curve
-              cv.map { case (p, r) => (p, r, k, nQ) }
-                .toDF("probes", "recall", "k", "n_queries")
-                .coalesce(1).write.mode("overwrite").parquet(s"$path/ef_curve")
+              graft.sources.SidecarIO.write(
+                cv.map { case (p, r) => (p, r, k, nQ) }
+                  .toDF("probes", "recall", "k", "n_queries"),
+                s"$path/ef_curve")
             }
     }
   }

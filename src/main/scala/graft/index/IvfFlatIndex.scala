@@ -273,7 +273,7 @@ object IvfFlatIndex {
     // driver anyway — reading it through a Spark job bought nothing but a
     // plan/schedule round per index load (SidecarIO doc)
     import graft.sources.SidecarIO
-    val rows = SidecarIO.readRows(spark, s"$path/centroids")
+    val rows = SidecarIO.readState(spark, s"$path/centroids")
       .getOrElse(throw new IllegalStateException(s"no centroids at $path"))
     require(rows.nonEmpty, s"corrupt index: no centroid rows at $path/centroids")
     val dim = SidecarIO.asInt(rows.head("dim"))
@@ -289,16 +289,30 @@ object IvfFlatIndex {
   private[index] def saveCentroids(spark: SparkSession, path: String,
       centroids: CentroidSet, metric: Metric): Unit = {
     import spark.implicits._
-    centroids.centroids.zipWithIndex.toSeq
-      .map { case (v, i) => (i, v.toSeq, metric.name, centroids.dim) }
-      .toDF("list_id", "centroid", "metric", "dim")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
+    graft.sources.SidecarIO.write(
+      centroids.centroids.zipWithIndex.toSeq
+        .map { case (v, i) => (i, v.toSeq, metric.name, centroids.dim) }
+        .toDF("list_id", "centroid", "metric", "dim"),
+      s"$path/centroids")
   }
 
   def load(spark: SparkSession, path: String): IvfFlatIndex = {
     val (centroids, metric) = loadCentroids(spark, path)
-    new IvfFlatIndex(centroids, spark.read.parquet(s"$path/lists"), metric)
+    new IvfFlatIndex(centroids, readListTable(spark, s"$path/lists"), metric)
   }
+
+  /** A saved `partitionBy("list_id")` list table (lists, pq_lists,
+    * pqcl_lists, sq_lists, scann_lists, rabitq_lists), read with the
+    * schema its writer recorded in the first data file's footer plus the
+    * `list_id int` partition column — the schema inference would return,
+    * without the inference job every load used to run. A table whose
+    * footer carries no Spark schema is read with inference. */
+  private[graft] def readListTable(spark: SparkSession, dir: String): DataFrame =
+    graft.sources.SidecarIO.sparkSchema(spark, dir) match {
+      case Some(data) =>
+        spark.read.schema(data.add("list_id", "int")).parquet(dir)
+      case None => spark.read.parquet(dir)
+    }
 
   /** Unit-L2-normalized copy of a float-vector column (zero vectors pass
     * through unchanged). The cosine PQ builds store NORMALIZED vectors so
@@ -326,8 +340,7 @@ object IvfFlatIndex {
     * by every layout whose save has the lists at hand. */
   private[graft] def saveMeta(spark: SparkSession, path: String, nRows: Long): Unit = {
     import spark.implicits._
-    Seq(nRows).toDF("n_rows")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+    graft.sources.SidecarIO.write(Seq(nRows).toDF("n_rows"), s"$path/meta")
   }
 
   /** None when the layout predates the sidecar (legacy saves). */
@@ -407,9 +420,10 @@ object IvfFlatIndex {
     val curve = points.zip(recalls)
       .take(if (saturated < 0) points.size else saturated + 1)
     import spark.implicits._
-    curve.toDF("probes", "recall")
-      .withColumn("k", lit(t.k)).withColumn("n_queries", lit(t.nQueries.toLong))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/recall_curve")
+    graft.sources.SidecarIO.write(
+      curve.toDF("probes", "recall")
+        .withColumn("k", lit(t.k)).withColumn("n_queries", lit(t.nQueries.toLong)),
+      s"$path/recall_curve")
   }
 
   /** The measured curve, sanitized for inversion: probe-sorted with a

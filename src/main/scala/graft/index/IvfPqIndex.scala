@@ -137,11 +137,12 @@ class IvfPqIndex(
     val spark = lists.sparkSession
     IvfFlatIndex.saveCentroids(spark, path, centroids, metric)
     import spark.implicits._
-    (for (s <- 0 until codebooks.pqDim; c <- 0 until codebooks.nCenters)
-      yield (s, c, codebooks.center(s, c).toSeq,
-        codebooks.pqDim, codebooks.nCenters, codebooks.subLen))
-      .toDF("s", "c", "center", "pq_dim", "n_centers", "sub_len")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/codebooks")
+    graft.sources.SidecarIO.write(
+      (for (s <- 0 until codebooks.pqDim; c <- 0 until codebooks.nCenters)
+        yield (s, c, codebooks.center(s, c).toSeq,
+          codebooks.pqDim, codebooks.nCenters, codebooks.subLen))
+        .toDF("s", "c", "center", "pq_dim", "n_centers", "sub_len"),
+      s"$path/codebooks")
     val nRows = lists.count()
     IvfFlatIndex.saveMeta(spark, path, nRows)
     depthHint.foreach(DepthHint.save(spark, path, _))
@@ -254,11 +255,12 @@ class IvfPqClusterIndex(
     val spark = lists.sparkSession
     IvfFlatIndex.saveCentroids(spark, path, centroids, metric)
     import spark.implicits._
-    (for (l <- 0 until codebooks.nLists; c <- 0 until codebooks.nCenters)
-      yield (l, c, codebooks.center(l, c).toSeq,
-        codebooks.nLists, codebooks.nCenters, codebooks.subLen, codebooks.pqDim))
-      .toDF("l", "c", "center", "n_lists", "n_centers", "sub_len", "pq_dim")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/cluster_codebooks")
+    graft.sources.SidecarIO.write(
+      (for (l <- 0 until codebooks.nLists; c <- 0 until codebooks.nCenters)
+        yield (l, c, codebooks.center(l, c).toSeq,
+          codebooks.nLists, codebooks.nCenters, codebooks.subLen, codebooks.pqDim))
+        .toDF("l", "c", "center", "n_lists", "n_centers", "sub_len", "pq_dim"),
+      s"$path/cluster_codebooks")
     val nRows = lists.count()
     IvfFlatIndex.saveMeta(spark, path, nRows)
     depthHint.foreach(DepthHint.save(spark, path, _))
@@ -275,7 +277,7 @@ object IvfPqClusterIndex {
     // driver-side read (r17): collected to the driver anyway (SidecarIO
     // doc); (l, c) columns carry positions, file order irrelevant
     import graft.sources.SidecarIO
-    val cb = SidecarIO.readRows(spark, s"$path/cluster_codebooks")
+    val cb = SidecarIO.readState(spark, s"$path/cluster_codebooks")
       .getOrElse(throw new IllegalStateException(s"no cluster_codebooks at $path"))
     require(cb.nonEmpty, s"corrupt index: no codebook rows at $path/cluster_codebooks")
     val head = cb.head
@@ -291,7 +293,7 @@ object IvfPqClusterIndex {
     }
     new IvfPqClusterIndex(centroids,
       ClusterCodebooks(flat, nLists, nCenters, subLen, pqDim),
-      spark.read.parquet(s"$path/pqcl_lists"), metric, DepthHint.load(spark, path))
+      IvfFlatIndex.readListTable(spark, s"$path/pqcl_lists"), metric, DepthHint.load(spark, path))
   }
 }
 
@@ -354,7 +356,7 @@ object IvfPqIndex {
     // like the centroids (r17, SidecarIO doc); positions come from the
     // (s, c) columns, so file order is irrelevant
     import graft.sources.SidecarIO
-    val cb = SidecarIO.readRows(spark, s"$path/codebooks")
+    val cb = SidecarIO.readState(spark, s"$path/codebooks")
       .getOrElse(throw new IllegalStateException(s"no codebooks at $path"))
     require(cb.nonEmpty, s"corrupt index: no codebook rows at $path/codebooks")
     val head = cb.head
@@ -368,7 +370,7 @@ object IvfPqIndex {
         subLen)
     }
     new IvfPqIndex(centroids, PqCodebooks(books, pqDim, nCenters, subLen),
-      spark.read.parquet(s"$path/pq_lists"), metric, DepthHint.load(spark, path))
+      IvfFlatIndex.readListTable(spark, s"$path/pq_lists"), metric, DepthHint.load(spark, path))
   }
 
   /** A Cosine build unit-normalizes the dataset first (cosine = IP over

@@ -230,10 +230,11 @@ class IvfRabitqIndex(
     val spark = lists.sparkSession
     IvfFlatIndex.saveCentroids(spark, path, centroids, Metric.L2)
     import spark.implicits._
-    rotation.flat.grouped(rotation.cols).zipWithIndex.toSeq
-      .map { case (row, i) => (i, row.toSeq, bitsPerDim) }
-      .toDF("r", "row", "bits_per_dim")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/rotation")
+    graft.sources.SidecarIO.write(
+      rotation.flat.grouped(rotation.cols).zipWithIndex.toSeq
+        .map { case (row, i) => (i, row.toSeq, bitsPerDim) }
+        .toDF("r", "row", "bits_per_dim"),
+      s"$path/rotation")
     val nRows = lists.count()
     IvfFlatIndex.saveMeta(spark, path, nRows)
     // measured probe/recall curve of the planner-served composition
@@ -287,7 +288,7 @@ object IvfRabitqIndex {
     // the Spark job bought nothing (SidecarIO doc); the `r` column carries
     // row positions, so file order is irrelevant
     import graft.sources.SidecarIO
-    val rot = SidecarIO.readRows(spark, s"$path/rotation")
+    val rot = SidecarIO.readState(spark, s"$path/rotation")
       .getOrElse(throw new IllegalStateException(s"no rotation at $path"))
     val dim = rot.length
     val flat = new Array[Double](dim * dim)
@@ -296,7 +297,7 @@ object IvfRabitqIndex {
       System.arraycopy(v, 0, flat, SidecarIO.asInt(r("r")) * dim, dim)
     }
     new IvfRabitqIndex(centroids, ProjectionMatrix(flat, dim, dim, Array.emptyDoubleArray),
-      spark.read.parquet(s"$path/rabitq_lists"),
+      IvfFlatIndex.readListTable(spark, s"$path/rabitq_lists"),
       SidecarIO.asInt(rot.head("bits_per_dim")))
   }
 

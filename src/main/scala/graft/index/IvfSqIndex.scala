@@ -144,8 +144,8 @@ class IvfSqIndex(
     val spark = lists.sparkSession
     IvfFlatIndex.saveCentroids(spark, path, centroids, metric)
     import spark.implicits._
-    Seq((sq.lo, sq.hi)).toDF("lo", "hi")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/sq_model")
+    graft.sources.SidecarIO.write(Seq((sq.lo, sq.hi)).toDF("lo", "hi"),
+      s"$path/sq_model")
     val nRows = lists.count()
     IvfFlatIndex.saveMeta(spark, path, nRows)
     // measured probe/recall curve of the planner-served composition
@@ -165,7 +165,7 @@ object IvfSqIndex {
     new IvfSqIndex(centroids,
       ScalarQuantizer.Model(graft.sources.SidecarIO.asDouble(m("lo")),
         graft.sources.SidecarIO.asDouble(m("hi"))),
-      spark.read.parquet(s"$path/sq_lists"), metric)
+      IvfFlatIndex.readListTable(spark, s"$path/sq_lists"), metric)
   }
 
   def build(dataset: DataFrame, params: IvfFlatIndex.Params, quantile: Double = 0.99,

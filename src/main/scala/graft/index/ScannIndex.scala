@@ -121,11 +121,12 @@ class ScannIndex(
     val spark = lists.sparkSession
     IvfFlatIndex.saveCentroids(spark, path, centroids, metric)
     import spark.implicits._
-    (for (s <- 0 until codebooks.pqDim; c <- 0 until codebooks.nCenters)
-      yield (s, c, codebooks.center(s, c).toSeq,
-        codebooks.pqDim, codebooks.nCenters, codebooks.subLen))
-      .toDF("s", "c", "center", "pq_dim", "n_centers", "sub_len")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/codebooks")
+    graft.sources.SidecarIO.write(
+      (for (s <- 0 until codebooks.pqDim; c <- 0 until codebooks.nCenters)
+        yield (s, c, codebooks.center(s, c).toSeq,
+          codebooks.pqDim, codebooks.nCenters, codebooks.subLen))
+        .toDF("s", "c", "center", "pq_dim", "n_centers", "sub_len"),
+      s"$path/codebooks")
     val nRows = lists.count() / 2 // SOAR stores every id twice
     IvfFlatIndex.saveMeta(spark, path, nRows)
     depthHint.foreach(DepthHint.save(spark, path, _))
@@ -145,7 +146,7 @@ object ScannIndex {
     // the Spark job bought nothing (SidecarIO doc); (s, c) columns carry
     // the positions, so file order is irrelevant
     import graft.sources.SidecarIO
-    val cb = SidecarIO.readRows(spark, s"$path/codebooks")
+    val cb = SidecarIO.readState(spark, s"$path/codebooks")
       .getOrElse(throw new IllegalStateException(s"no codebooks at $path"))
     require(cb.nonEmpty, s"corrupt index: no codebook rows at $path/codebooks")
     val head = cb.head
@@ -159,7 +160,7 @@ object ScannIndex {
         subLen)
     }
     new ScannIndex(centroids, PqCodebooks(books, pqDim, nCenters, subLen),
-      spark.read.parquet(s"$path/scann_lists"), metric, DepthHint.load(spark, path))
+      IvfFlatIndex.readListTable(spark, s"$path/scann_lists"), metric, DepthHint.load(spark, path))
   }
 
 

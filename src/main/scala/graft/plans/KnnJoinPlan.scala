@@ -105,10 +105,13 @@ object GraftIndexCatalog {
     p.stripPrefix("file:").stripSuffix("/")
 
   /** Memoized outcomes of the bounded row-count probe, keyed by
-    * (scan paths, threshold). A registered path's population is stable for
-    * the life of the registration (new data means a stale index anyway),
-    * so the probe job runs once per path — not on every re-optimization
-    * of every query over it. Cleared when any registration changes.
+    * (scan paths, threshold). The `minIndexRows` gate reads the registered
+    * layouts' population sidecar (`meta`) first, so the probe runs only
+    * for legacy layouts saved without one. A registered path's population
+    * is stable for the life of the registration (new data means a stale
+    * index anyway), so the probe job runs once per path — not on every
+    * re-optimization of every query over it. Cleared when any
+    * registration changes.
     *
     * CONTRACT: appending files under an already-registered path without
     * re-registering keeps the memoized small/large verdict (and, worse, a
@@ -941,18 +944,28 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
       // pipeline (one scan stage) beats any index route (centroid join +
       // pruned list join + exact refine join), so a registered index is
       // bypassed. Row count comes from the logical plan's stats when the
-      // catalog knows it; otherwise a bounded incremental probe that
-      // stops at the threshold — never a full count of the data side.
-      // minIndexRows <= 0 disables the gate (always trust registration).
+      // catalog knows it, else from the population sidecar (`meta`) of
+      // the registered (live-resolved) layouts — the same memoized read
+      // `baseRows` uses; the layout's population IS the relation's by the
+      // registration contract. Only layouts without `meta` (legacy saves)
+      // leave a bounded incremental probe that stops at the threshold —
+      // never a full count of the data side. minIndexRows <= 0 disables
+      // the gate (always trust registration).
       val minIndexRows =
         spark.conf.get("spark.graft.knnJoin.minIndexRows", "100000").toLong
-      def bigEnoughForIndex(base: LogicalPlan): Boolean =
+      def bigEnoughForIndex(base: LogicalPlan,
+          es: Seq[GraftIndexCatalog.Entry]): Boolean =
         minIndexRows <= 0 ||
-          base.stats.rowCount.map(_ >= BigInt(minIndexRows)).getOrElse(
-            GraftIndexCatalog.cachedProbe(scanPaths(base), minIndexRows) {
-              !graft.graphops.LocalKernel.within(
-                B.ofRows(spark, base).select(col(kj.idCol)), minIndexRows - 1)
-            })
+          base.stats.rowCount.map(_ >= BigInt(minIndexRows))
+            .orElse(es.iterator.flatMap(e =>
+              GraftIndexCatalog.cachedSidecarRows(e.indexPath) {
+                graft.index.IvfFlatIndex.loadMeta(spark, e.indexPath)
+              }).nextOption().map(_ >= minIndexRows))
+            .getOrElse(
+              GraftIndexCatalog.cachedProbe(scanPaths(base), minIndexRows) {
+                !graft.graphops.LocalKernel.within(
+                  B.ofRows(spark, base).select(col(kj.idCol)), minIndexRows - 1)
+              })
 
       /** Expected per-query read cost of routing through `e`, in RAW-ROW
         * units — the cost model behind multi-layout selection (the
@@ -1069,7 +1082,7 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
         * that priced above brute, never reorders survivors. */
       def entriesFor(base: LogicalPlan): Seq[(GraftIndexCatalog.Entry, String)] = {
         val es0 = GraftIndexCatalog.lookupAll(scanPaths(base))
-        if (es0.isEmpty || !bigEnoughForIndex(base)) Seq.empty
+        if (es0.isEmpty) Seq.empty
         else {
           // registrations name the layout ROOT; an in-place-compacted
           // tiered layout's current content lives in its highest committed
@@ -1102,7 +1115,9 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
               }
             if (live == e.indexPath) e else e.copy(indexPath = live)
           }
-          val typed = es.flatMap(e => layoutOf(e.indexPath).map(l => (e, l)))
+          val typed =
+            if (!bigEnoughForIndex(base, es)) Seq.empty
+            else es.flatMap(e => layoutOf(e.indexPath).map(l => (e, l)))
           val ordered =
             if (typed.size <= 1) typed
             else typed.sortBy { case (e, l) => (layoutCost(e, l, base), e.indexPath) }

@@ -4,27 +4,40 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.types._
 
-/** DRIVER-SIDE reads of the engine's tiny parquet sidecars (meta,
-  * recall_curve, depth_meta, ef_curve, hnsw_meta, tiered_meta, one-row
-  * stats of centroids/codebooks/rotation).
+/** DRIVER-SIDE reads and writes of the engine's tiny parquet sidecars
+  * (meta, recall_curve, depth_meta, ef_curve, hnsw_meta, tiered_meta,
+  * delta_commits) and of the layout state the driver holds anyway
+  * (centroids, codebooks, cluster codebooks, rotation, sq_model).
   *
-  * Why not `spark.read.parquet(...).head()`: every such call is a full
-  * Spark JOB — plan + schedule + one task + result fetch, ~50-100 ms of
-  * pure fixed cost — to read a row the driver could read in ~1 ms. The
-  * kNN-join resolver consults up to a dozen sidecars per planning pass
-  * (population, curves, depth hints, cost-model stats), so on the r17
-  * job-count profile the cost-choice gates ran 58-86 one-task jobs each,
-  * nearly all sidecar reads. Plan-time metadata must not cost cluster
-  * jobs — the reference's plan factory reads index headers in-process
-  * for the same reason (search_plan.cuh). parquet-mr's Group reader
-  * (shipped with Spark) reads the files in-process with zero Spark
-  * involvement.
+  * Why not `spark.read.parquet(...).head()` or
+  * `df.coalesce(1).write.parquet(...)`: every such call is a full Spark
+  * JOB — plan + schedule + one task + result fetch, ~50-100 ms of pure
+  * fixed cost — to move a row the driver could read or write in ~1 ms.
+  * The kNN-join resolver consults up to a dozen sidecars per planning pass
+  * (population, curves, depth hints, cost-model stats), and every layout
+  * save and tiered-ingest append rewrites several of them, so on the r17
+  * job-count profile the cost-choice gates ran 58-86 one-task jobs each
+  * and a 500-row tiered append ran 7 jobs, nearly all sidecar traffic.
+  * Metadata must not cost cluster jobs — the reference's plan factory
+  * reads index headers in-process for the same reason (search_plan.cuh).
+  * Reads go through parquet-mr's Group reader (shipped with Spark), writes
+  * through Spark's own parquet writer (`ParquetFileFormat.prepareWrite`),
+  * both in-process with zero Spark jobs — so a sidecar written here has
+  * the footer, schema and rows a Spark write would have produced.
   *
-  * Scope guard: sidecars only. `readRows` hard-caps rows read and is for
-  * directories KNOWN small (row counts bounded by probe-curve points /
-  * one-row metas); data-bearing directories keep the distributed path. */
+  * Scope guard: sidecars and driver-held layout state only.
+  *   - `write` accepts only a driver-held frame (`Frames.isLocal`: its
+  *     rows already sit on the driver); data keeps Spark's distributed
+  *     writer.
+  *   - `readRows` hard-caps the rows read and is for directories KNOWN
+  *     small (row counts bounded by probe-curve points / one-row metas);
+  *     `readState` reads every row, for the layout state a loader holds
+  *     in memory regardless of its size. Data-bearing directories keep
+  *     the distributed path. */
 object SidecarIO {
 
   private def dataFiles(spark: SparkSession, dir: String): Option[Seq[Path]] = {
@@ -51,11 +64,11 @@ object SidecarIO {
 
   /** Read up to `maxRows` rows of a small parquet directory in-process.
     * Each row is fieldName -> value for the TOP-LEVEL PRIMITIVE fields
-    * (Int/Long/Float/Double/Boolean/String); nested groups (lists,
-    * structs) are skipped — no plan-time sidecar needs them. A NULL field
-    * is absent from its row's map. Throws if the directory holds more
-    * than `maxRows` rows — that is a misuse (a data directory), not a
-    * bigger sidecar. None when the path is missing. */
+    * (Int/Long/Float/Double/Boolean/String) and lists of primitives;
+    * other nested groups (structs, maps) are skipped — no sidecar needs
+    * them. A NULL field is absent from its row's map. Throws if the
+    * directory holds more than `maxRows` rows — that is a misuse (a data
+    * directory), not a bigger sidecar. None when the path is missing. */
   def readRows(spark: SparkSession, dir: String,
       maxRows: Int = 65536): Option[Seq[Map[String, Any]]] =
     dataFiles(spark, dir).map { files =>
@@ -80,6 +93,14 @@ object SidecarIO {
       }
       out.result()
     }
+
+  /** Every row of a directory holding a layout's DRIVER-HELD state
+    * (centroids, codebooks, cluster codebooks, rotation) — `readRows`
+    * without the cap. That state is nLists or nLists·2^pqBits rows, which
+    * passes the sidecar cap at ordinary sizes (1024 lists × 256 centers),
+    * and the loader holds all of it in memory whatever its size. */
+  def readState(spark: SparkSession, dir: String): Option[Seq[Map[String, Any]]] =
+    readRows(spark, dir, Int.MaxValue)
 
   /** First row of a sidecar (files in name order) — the `head()` analog.
     * Stops after one row; later files are never opened. */
@@ -154,6 +175,99 @@ object SidecarIO {
       i += 1
     }
     b.result()
+  }
+
+  private def footer(spark: SparkSession, f: Path) = {
+    val r = ParquetFileReader.open(
+      HadoopInputFile.fromPath(f, spark.sessionState.newHadoopConf()))
+    try r.getFooter.getFileMetaData finally r.close()
+  }
+
+  /** The first data file under `dir` in name order, descending into
+    * subdirectories (partition directories, batch directories) when the
+    * directory itself holds none. */
+  private def firstDataFile(spark: SparkSession, dir: String): Option[Path] = {
+    val p = new Path(dir)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    def visible(s: org.apache.hadoop.fs.FileStatus) =
+      !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith(".")
+    def first(d: Path): Option[Path] = {
+      val (files, dirs) = fs.listStatus(d).toSeq.filter(visible).sortBy(_.getPath.getName)
+        .partition(_.isFile)
+      files.find(_.getLen > 0).map(_.getPath)
+        .orElse(dirs.iterator.flatMap(s => first(s.getPath)).nextOption())
+    }
+    if (!fs.exists(p)) None
+    else if (fs.getFileStatus(p).isFile) Some(p)
+    else first(p)
+  }
+
+  /** The Spark schema a Spark writer recorded in the footer of the first
+    * data file under `dir` (its row-metadata key) — what schema inference
+    * would return, read on the driver instead of by an inference job.
+    * None when the path has no data file or the file was not written by
+    * Spark. */
+  def sparkSchema(spark: SparkSession, dir: String): Option[StructType] =
+    firstDataFile(spark, dir).flatMap { f =>
+      Option(footer(spark, f).getKeyValueMetaData.get(
+        org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
+          .SPARK_METADATA_KEY))
+    }.map(DataType.fromJson(_).asInstanceOf[StructType])
+
+  /** A small sidecar as a driver-held frame: the Spark schema its writer
+    * recorded and every row (`readRows`'s cap applies). Feeding it to
+    * `write` copies the sidecar verbatim with no job. For the field types
+    * sidecars use (int, long, float, double, boolean, string, arrays of
+    * those), whose `readRows` values are already Spark's external types.
+    * None when the path is missing. */
+  def readLocal(spark: SparkSession, dir: String): Option[DataFrame] =
+    readRows(spark, dir).map { rows =>
+      val schema = sparkSchema(spark, dir).getOrElse(throw new IllegalStateException(
+        s"SidecarIO.readLocal($dir): no Spark schema in the footer"))
+      spark.createDataFrame(
+        java.util.Arrays.asList(rows.map(r => Row.fromSeq(schema.fieldNames.toSeq
+          .map(r.getOrElse(_, null)))): _*),
+        schema)
+    }
+
+  /** Overwrite `dir` with the rows of a DRIVER-HELD frame, in-process and
+    * with no Spark job: Spark's own parquet writer (`prepareWrite`, then
+    * one `OutputWriter`) writes a single part file under a `_`-prefixed
+    * name — invisible to readers — which is renamed into place before the
+    * `_SUCCESS` marker, so Spark and `SidecarIO` read back the schema,
+    * rows and footer metadata a `coalesce(1).write.parquet` would have
+    * left. An empty frame writes one file holding only the schema, as
+    * Spark does. A frame that is not driver-held is refused: its rows
+    * would have to be computed by a job, and data keeps Spark's writer. */
+  def write(df: DataFrame, dir: String): Unit = {
+    val rel = df.queryExecution.optimizedPlan match {
+      case r: LocalRelation => r
+      case other => throw new IllegalArgumentException(
+        s"SidecarIO.write($dir): not a driver-held frame (${other.nodeName}) — " +
+          "write data with Spark's writer")
+    }
+    val spark = df.sparkSession
+    val schema = rel.schema
+    val job = org.apache.hadoop.mapreduce.Job.getInstance(spark.sessionState.newHadoopConf())
+    val factory = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
+      .prepareWrite(spark, job, Map.empty, schema)
+    import org.apache.hadoop.mapreduce.{JobID, TaskAttemptID, TaskID, TaskType}
+    val attempt = new TaskAttemptID(
+      new TaskID(new JobID("graft-sidecar", 0), TaskType.MAP, 0), 0)
+    val ctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
+      job.getConfiguration, attempt)
+    val out = new Path(dir)
+    val fs = out.getFileSystem(job.getConfiguration)
+    fs.delete(out, true)
+    fs.mkdirs(out)
+    val name = s"part-00000-${java.util.UUID.randomUUID}-c000${factory.getFileExtension(ctx)}"
+    val staged = new Path(out, "_" + name)
+    val writer = factory.newInstance(staged.toString, schema, ctx)
+    try rel.data.foreach(writer.write)
+    finally writer.close()
+    if (!fs.rename(staged, new Path(out, name)))
+      throw new java.io.IOException(s"SidecarIO.write($dir): rename of $staged failed")
+    fs.create(new Path(out, "_SUCCESS"), true).close()
   }
 
   /** A list field coerced to Array[Float] (loader convenience). */

@@ -151,7 +151,12 @@ object StreamPipeline {
       case c => sentinelValues(c).cast(raw.schema(c).dataType).as(c)
     } ++ (if (sentinelMarker) Seq(lit(true).as("sentinel")) else Nil)
     val sentTmp = tempDir("direct_sent")
-    spark.range(1).select(sentCols: _*).coalesce(1).write.mode("overwrite").parquet(sentTmp)
+    // one driver-held row (literal columns over a one-row local frame):
+    // written in-process, no job
+    graft.sources.SidecarIO.write(
+      spark.createDataFrame(java.util.List.of(org.apache.spark.sql.Row(0L)),
+        org.apache.spark.sql.types.StructType.fromDDL("_row long")).select(sentCols: _*),
+      sentTmp)
     val fields = rawCols.map(c => raw.schema(c)) ++
       (if (sentinelMarker)
         Seq(org.apache.spark.sql.types.StructField("sentinel",
@@ -508,10 +513,11 @@ object StreamPipeline {
     // (≤ trunc(maxTs) + 1h) for ANY caller-supplied delay; the sentinel's
     // own window ends past that watermark, so append mode never emits it
     val sentTmp = tempDir("winagg_sent")
-    Seq((new java.sql.Timestamp(maxTs.getTime + delayMs + 2L * 3600 * 1000),
-        null.asInstanceOf[String], 0.0))
-      .toDF("ts", "event_type", "value")
-      .coalesce(1).write.mode("overwrite").parquet(sentTmp)
+    graft.sources.SidecarIO.write(
+      Seq((new java.sql.Timestamp(maxTs.getTime + delayMs + 2L * 3600 * 1000),
+          null.asInstanceOf[String], 0.0))
+        .toDF("ts", "event_type", "value"),
+      sentTmp)
     stageParts(spark, sentTmp, stage, "z-sentinel", mtimeBase + (nData + 1) * 1000L)
 
     val reader = spark.readStream.schema(batch.schema)
@@ -626,10 +632,11 @@ object StreamPipeline {
     // sentinel gap+delay+1h out: final watermark = sentTs − delay =
     // maxTs + gap + 1h, past every real session's timeout (≤ maxTs + gap)
     // for ANY caller-supplied gap/delay combination
-    Seq((new java.sql.Timestamp(maxTs.getTime + gapMs + intervalMs(delay) + 3600 * 1000L),
-        0L, true))
-      .toDF("ts", "user_id", "sentinel")
-      .coalesce(1).write.mode("overwrite").parquet(sentTmp)
+    graft.sources.SidecarIO.write(
+      Seq((new java.sql.Timestamp(maxTs.getTime + gapMs + intervalMs(delay) + 3600 * 1000L),
+          0L, true))
+        .toDF("ts", "user_id", "sentinel"),
+      sentTmp)
     stageParts(spark, sentTmp, stage, "z-sentinel", mtimeBase + (nData + 1) * 1000L)
 
     val reader = spark.readStream.schema(batch.schema)

@@ -1,8 +1,9 @@
 package graft.stream
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import graft.core.Metric
+import graft.core.{Frames, Metric}
+import graft.sources.SidecarIO
 import graft.index.IvfFlatIndex
 import graft.ops.{BruteForceKnn, Refine}
 
@@ -56,7 +57,7 @@ class TieredIndex private (
     * returns an empty-delta index. */
   def compact(): TieredIndex =
     new TieredIndex(base.extend(delta, "id", "vec"),
-      delta.filter(lit(false)), minAnnRows, metric)
+      delta.filter(lit(false)), minAnnRows, metric, knownDeltaRows = Some(0L))
 
   /** Compact automatically once the delta tier crosses minAnnRows. */
   def maybeCompact(): TieredIndex =
@@ -72,21 +73,27 @@ class TieredIndex private (
   def save(path: String): Unit = {
     val spark = delta.sparkSession
     base.save(s"$path/tiered_base")
-    delta.select(col("id").cast("long"), col("vec"))
-      .write.mode("overwrite").parquet(s"$path/delta")
+    // the population is counted only when nothing knows it: a compacted
+    // or freshly-loaded layout carries it, a driver-held delta holds its
+    // rows on the driver
+    val out = delta.select(col("id").cast("long"), col("vec"))
+    val deltaRows = knownDeltaRows
+      .orElse(Frames.localRows(delta).map(_.size.toLong))
+      .getOrElse(delta.count())
+    if (deltaRows == 0L)
+      SidecarIO.write(
+        spark.createDataFrame(java.util.Collections.emptyList[Row](), out.schema),
+        s"$path/delta")
+    else out.write.mode("overwrite").parquet(s"$path/delta")
     import spark.implicits._
-    val deltaRows = delta.count()
-    Seq((minAnnRows, metric.name, deltaRows))
-      .toDF("min_ann_rows", "metric", "delta_rows")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/tiered_meta")
+    SidecarIO.write(Seq((minAnnRows, metric.name, deltaRows))
+      .toDF("min_ann_rows", "metric", "delta_rows"), s"$path/tiered_meta")
     val baseRows = IvfFlatIndex.loadMeta(spark, s"$path/tiered_base").getOrElse(0L)
     IvfFlatIndex.saveMeta(spark, path, baseRows + deltaRows)
     // copy the base tier's curve sidecar verbatim (all columns — the
     // n_queries/k sample size feeds the planner's Wilson-bound inversion)
-    val baseCurve = new org.apache.hadoop.fs.Path(s"$path/tiered_base", "recall_curve")
-    if (baseCurve.getFileSystem(spark.sessionState.newHadoopConf()).exists(baseCurve))
-      spark.read.parquet(baseCurve.toString)
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/recall_curve")
+    SidecarIO.readLocal(spark, s"$path/tiered_base/recall_curve")
+      .foreach(SidecarIO.write(_, s"$path/recall_curve"))
   }
 }
 
@@ -127,9 +134,14 @@ object TieredIndex {
     * direct appends wrote at the delta root, so the read must recurse —
     * `recursiveFileLookup` picks up both shapes in one listing. */
   private[stream] def readDelta(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame =
-    spark.read.option("recursiveFileLookup", "true").parquet(s"$path/delta")
+      path: String): DataFrame = {
+    // the schema the writer recorded in a footer, not an inference job
+    // per load (IvfFlatIndex.readListTable); inference when no footer has it
+    val reader = spark.read.option("recursiveFileLookup", "true")
+    SidecarIO.sparkSchema(spark, s"$path/delta").fold(reader)(reader.schema)
+      .parquet(s"$path/delta")
       .select(col("id").cast("long").as("id"), col("vec"))
+  }
 
   /** Version-directory layout of an in-place-compacted tiered index: the
     * root holds `v_NNNNNN` subdirectories, each a COMPLETE layout, and

@@ -70,10 +70,12 @@ import graft.index.IvfFlatIndex
   * per-layout lock.
   *
   * 100 TB posture: each append is one partitioned parquet write of the
-  * micro-batch plus three one-row sidecar rewrites — no shuffle, no index
-  * rebuild, no read of the base tier, and the delta-population refresh is
-  * INCREMENTAL (previous ledger sum + this batch's count), never a
-  * re-count of the whole delta directory. The ledger itself holds one
+  * micro-batch — its only Spark job — plus three one-row sidecar rewrites
+  * that the driver writes in-process (SidecarIO.write) — no shuffle, no
+  * index rebuild, no read of the base tier, and the delta-population
+  * refresh is INCREMENTAL (previous ledger sum + this batch's count, read
+  * from the footers of the files just written), never a re-count of the
+  * whole delta directory. The ledger itself holds one
   * row per SCOPE (not per batch), so a year-long one-batch-per-10s
   * ingest still reads and rewrites a handful of rows per micro-batch —
   * O(scopes), not O(batches-ever). Compaction bounds the delta's
@@ -203,7 +205,8 @@ object TieredIngest {
           Map(BaseScope -> ScopeState(-1L, metaDeltaRows(spark, indexPath)))
       }
 
-  /** Staged-rename one-row parquet write: the staged content is fully
+  /** Staged-rename one-row parquet write (driver-side, no job — the rows
+    * are driver-held; SidecarIO.write): the staged content is fully
     * written first, then the OLD content is renamed aside and the staged
     * directory renamed in — a crash leaves old content, new content, or
     * (inside the two-rename window) the `.old` directory that
@@ -215,7 +218,7 @@ object TieredIngest {
     val targetP = new org.apache.hadoop.fs.Path(target)
     val stagedP = new org.apache.hadoop.fs.Path(target + ".staged")
     val oldP = new org.apache.hadoop.fs.Path(target + ".old")
-    df.coalesce(1).write.mode("overwrite").parquet(stagedP.toString)
+    graft.sources.SidecarIO.write(df, stagedP.toString)
     fs.delete(oldP, true)
     if (fs.exists(targetP))
       require(fs.rename(targetP, oldP), s"sidecar swap failed at $target")
@@ -412,7 +415,8 @@ object TieredIngest {
             // partial write of this very directory
             val dir = batchDir(live, sc, batchId)
             shaped.write.mode("overwrite").parquet(dir)
-            val n = spark.read.parquet(dir).count()
+            // footer record counts of the files just written — no job
+            val n = graft.sources.SidecarIO.rowCount(spark, dir).getOrElse(0L)
             val grown = ledger + (sc -> ScopeState(batchId, state.cumRows + n))
             writeLedger(spark, live, grown)
             writeSidecars(spark, live, grown.values.map(_.cumRows).sum)

@@ -87,6 +87,30 @@ class IvfPqSuite extends SparkFunSuite {
     assert(key(loaded.search(queries, 5, 4)) == key(clIndex.search(queries, 5, 4)))
   }
 
+  test("PER_CLUSTER: a layout past 65,536 codebook rows saves and reloads") {
+    // 257 lists × 2^8 centers = 65,792 cluster_codebooks rows: driver-held
+    // layout state, read back in full (not under the sidecar row cap)
+    val rnd = new scala.util.Random(7)
+    val data = spark.createDataFrame(java.util.Arrays.asList(
+      (0 until 3000).map(i => org.apache.spark.sql.Row(i.toLong,
+        Array.fill(4)(rnd.nextGaussian().toFloat).toSeq)): _*),
+      org.apache.spark.sql.types.StructType.fromDDL("id long, vec array<float>"))
+    val dir = java.nio.file.Files.createTempDirectory("ivfpqcl257").toString
+    spark.conf.set("spark.graft.index.recallCurve.enabled", "false")
+    try {
+      val built = IvfPqIndex.buildPerCluster(data,
+        IvfPqIndex.Params(nLists = 257, nIters = 2, pqDim = 2, pqBits = 8))
+      built.save(dir)
+      assert(graft.sources.SidecarIO.rowCount(spark, s"$dir/cluster_codebooks")
+        .contains(257L * 256))
+      val loaded = graft.index.IvfPqClusterIndex.load(spark, dir)
+      assert(loaded.codebooks.copy(flat = Array.emptyFloatArray) ==
+        built.codebooks.copy(flat = Array.emptyFloatArray))
+      assert(loaded.codebooks.flat.sameElements(built.codebooks.flat))
+      assert(loaded.centroids.flat.sameElements(built.centroids.flat))
+    } finally spark.conf.unset("spark.graft.index.recallCurve.enabled")
+  }
+
   test("PER_CLUSTER: refine recovers recall like the per-subspace mode") {
     val got = clIndex.searchWithRefine(queries, emb, 10, nProbes = 8, kCoarse = 60,
       idCol = "vec_id", vecCol = "embedding")

@@ -655,4 +655,53 @@ class SparseTieredSuite extends SparkFunSuite {
       ("2026-01-01 06:00:00.0", 8.0, 1L)).sorted
     assert(got.toSeq == want, s"got ${got.toSeq}")
   }
+
+  test("tiered ingest writes its sidecars on the driver: 1 job per append, <= 8 per compaction") {
+    // the append's only Spark job is the micro-batch's data write; the
+    // ledger, tiered_meta and meta rewrites, the batch's row count (parquet
+    // footers) and, on compaction, the sidecars of the new version are all
+    // driver-side. The sidecar VALUES are pinned to what the job-based
+    // writers produced before.
+    val dir = java.nio.file.Files.createTempDirectory("tiered_jobs").toString
+    TieredIndex.build(emb.filter(col("vec_id") < 400),
+      IvfFlatIndex.Params(nLists = 8, nIters = 5), minAnnRows = 30,
+      idCol = "vec_id", vecCol = "embedding").save(dir)
+    // driver-held micro-batches, the shape a streaming source hands over
+    def micro(lo: Int, hi: Int) = spark.createDataFrame(
+      java.util.Arrays.asList(emb.filter(col("vec_id") >= lo && col("vec_id") < hi)
+        .select(col("vec_id"), col("embedding")).collect(): _*),
+      emb.select(col("vec_id"), col("embedding")).schema)
+    val (m0, m1) = (micro(400, 420), micro(420, 450))
+    val appendJobs = jobsDuring(graft.stream.TieredIngest.append(m0, dir,
+      "vec_id", "embedding", batchId = 0L, scope = "jobs"))
+    val compactJobs = jobsDuring(graft.stream.TieredIngest.append(m1, dir,
+      "vec_id", "embedding", batchId = 1L, scope = "jobs"))
+    val live = TieredIndex.resolveLive(spark, dir)
+    assert(live != dir, "the second append must compact")
+    def rows(child: String) =
+      graft.sources.SidecarIO.readRows(spark, s"$live/$child").get.toSet
+    assert(rows("tiered_meta") ==
+      Set(Map("min_ann_rows" -> 30L, "metric" -> "l2", "delta_rows" -> 0L)))
+    assert(rows("meta") == Set(Map("n_rows" -> 450L)))
+    assert(rows("delta_commits") == Set(
+      Map("scope" -> "", "max_batch_id" -> -1L, "cum_rows" -> 0L),
+      Map("scope" -> "jobs", "max_batch_id" -> 1L, "cum_rows" -> 0L)))
+    assert(rows("recall_curve") == PinnedCurve)
+    assert(rows("recall_curve") == rows("tiered_base/recall_curve"))
+    def schema(child: String) = spark.read.parquet(s"$live/$child").schema.simpleString
+    assert(schema("delta") == "struct<id:bigint,vec:array<float>>")
+    assert(schema("tiered_meta") == "struct<min_ann_rows:bigint,metric:string,delta_rows:bigint>")
+    assert(schema("recall_curve") == "struct<probes:int,recall:double,k:int,n_queries:bigint>")
+    assert(appendJobs == 1, s"append ran $appendJobs jobs")
+    assert(compactJobs <= 8, s"compacting append ran $compactJobs jobs")
+    // loading the compacted layout infers no schema
+    var loaded: TieredIndex = null
+    assert(jobsDuring { loaded = TieredIndex.load(spark, dir) } == 0)
+    assert(loaded.base.lists.count() == 450L && loaded.delta.count() == 0L)
+  }
+
+  private val PinnedCurve: Set[Map[String, Any]] = Seq(
+    1 -> 0.384375, 2 -> 0.56875, 4 -> 0.79375, 8 -> 1.0).map { case (p, r) =>
+      Map[String, Any]("probes" -> p, "recall" -> r, "k" -> 10, "n_queries" -> 32L)
+    }.toSet
 }
