@@ -60,11 +60,16 @@ object LocalKernel {
     * never worse than a full count(), but the full win needs a
     * shuffle-free (scanned/checkpointed) input, which is what the gated
     * call sites pass. */
-  def within(df: org.apache.spark.sql.DataFrame, cap: Long): Boolean = {
+  def within(df: org.apache.spark.sql.DataFrame, cap: Long): Boolean =
+    within(df.queryExecution, cap)
+
+  /** `within` for a plan's QueryExecution (a caller inside the optimizer
+    * holds a plan, not a DataFrame). */
+  def within(qe: org.apache.spark.sql.execution.QueryExecution, cap: Long): Boolean = {
     // a huge configured cap must still be honored (the arithmetic below is
     // Long throughout); only a negative cap is an automatic "over"
     if (cap < 0) return false
-    df.queryExecution.optimizedPlan.maxRows.exists(_ <= cap) || countUpTo(df, cap) <= cap
+    qe.optimizedPlan.maxRows.exists(_ <= cap) || countUpTo(qe, cap) <= cap
   }
 
   /** min-work row count: the incremental partition probe behind `within`,
@@ -72,14 +77,17 @@ object LocalKernel {
     * exact row count when it is <= cap, and some value > cap (not the
     * exact count) as soon as cap is exceeded — work is bounded by the cap,
     * never by the operand's size. */
-  def countUpTo(df: org.apache.spark.sql.DataFrame, cap: Long): Long = {
+  def countUpTo(df: org.apache.spark.sql.DataFrame, cap: Long): Long =
+    countUpTo(df.queryExecution, cap)
+
+  private def countUpTo(qe: org.apache.spark.sql.execution.QueryExecution, cap: Long): Long = {
     // a driver-held frame knows its exact size: no job
-    df.queryExecution.optimizedPlan match {
+    qe.optimizedPlan match {
       case l: LocalRelation => return l.data.length.toLong
       case _ => ()
     }
-    val rdd = df.queryExecution.toRdd
-    val sc = df.sparkSession.sparkContext
+    val rdd = qe.toRdd
+    val sc = qe.sparkSession.sparkContext
     val nParts = rdd.partitions.length
     var seen = 0L
     var scanned = 0

@@ -72,82 +72,18 @@ class IvfFlatIndex(
   private[index] def fullProbeSearch(q: DataFrame, k: Int): DataFrame =
     searchLocal(q, k, centroids.k)
 
+  /** The fused scan over this layout's raw vectors (FlatScan) — the
+    * kernel of `searchLocal` and of the planner's IvfSearchExec. */
+  private[graft] def listScan: ListScan = FlatScan(metric)
+
   /** Broadcast-queries kernel: probe selection runs driver-side over the
-    * (always in-memory) centroid set, then one mapPartitions over the list
-    * rows with an inverted (list_id -> probing queries) index. */
-  private def searchLocal(q: DataFrame, k: Int, nProbes: Int): DataFrame = {
-    val spark = q.sparkSession
-    import spark.implicits._
-    val qArr = q.as[(Long, Array[Float])].collect()
-    val cs = centroids
-    val distFn = graft.core.Distance.fn(metric)
-    val minClose = graft.core.Metric.isMinClose(metric)
-    // per-query probe set via the same (dist, list_id) coarse select_k the
-    // expression route uses
-    val byList = new java.util.HashMap[Int, scala.collection.mutable.ArrayBuffer[Int]]()
-    qArr.zipWithIndex.foreach { case ((_, qvec), qi) =>
-      val buf = graft.core.TopKBuf(nProbes, minClose,
-        new Array[Double](nProbes), new Array[Long](nProbes), 0)
-      var l = 0
-      while (l < cs.k) {
-        buf.insert(distFn(qvec, cs.centroid(l)), l.toLong)
-        l += 1
-      }
-      (0 until buf.size).foreach { j =>
-        val lid = buf.ids(j).toInt
-        var b = byList.get(lid)
-        if (b == null) { b = new scala.collection.mutable.ArrayBuffer[Int](); byList.put(lid, b) }
-        b += qi
-      }
-    }
-    val probeIdx = new java.util.HashMap[Int, Array[Int]](byList.size * 2)
-    byList.forEach((l, b) => probeIdx.put(l, b.toArray))
-    val bcQ = spark.sparkContext.broadcast(qArr)
-    val bcProbes = spark.sparkContext.broadcast(probeIdx)
-    val kk = k
-    val met = metric
-    // static partition pruning: the probed list set is known at plan time,
-    // so unprobed list partitions of a saved index are never READ (the
-    // kernel twin of the join route's dynamic partition pruning)
-    val probedLids = {
-      val b = scala.collection.mutable.ArrayBuffer[Int]()
-      probeIdx.forEach((l, _) => b += l)
-      b.toSeq
-    }
-    val pairs = lists
-      .filter(col("list_id").isInCollection(probedLids))
-      .select(col("list_id").cast("int"), col("id").cast("long"), col("vec"))
-      .as[(Int, Long, Array[Float])]
-      .mapPartitions { rows =>
-        val qs = bcQ.value; val pi = bcProbes.value
-        val fn = graft.core.Distance.fn(met)
-        val mc = graft.core.Metric.isMinClose(met)
-        val bufs = new java.util.HashMap[Int, graft.core.TopKBuf]()
-        rows.foreach { case (lid, nid, nvec) =>
-          val probing = pi.get(lid)
-          if (probing != null) {
-            var t = 0
-            while (t < probing.length) {
-              val qi = probing(t)
-              var buf = bufs.get(qi)
-              if (buf == null) {
-                buf = graft.core.TopKBuf(kk, mc, new Array[Double](kk), new Array[Long](kk), 0)
-                bufs.put(qi, buf)
-              }
-              buf.insert(fn(qs(qi)._2, nvec), nid)
-              t += 1
-            }
-          }
-        }
-        val out = new scala.collection.mutable.ArrayBuffer[(Long, Long, Double)]()
-        bufs.forEach { (qi, buf) =>
-          (0 until buf.size).foreach(j => out += ((qs(qi)._1, buf.ids(j), buf.dists(j))))
-        }
-        out.iterator
-      }
-      .toDF("qid", "_nid", "dist")
-    BruteForceKnn.topKPerQuery(pairs, k, metric)
-  }
+    * (always in-memory) centroid set, then one pass over the probed list
+    * rows with an inverted (list_id -> probing queries) index. Static
+    * partition pruning: the probed list set is known before the scan, so
+    * unprobed list partitions of a saved index are never READ (the kernel
+    * twin of the join route's dynamic partition pruning). */
+  private def searchLocal(q: DataFrame, k: Int, nProbes: Int): DataFrame =
+    BruteForceKnn.topKPerQuery(listScan.pairs(lists, centroids, q, _ => nProbes, k), k, metric)
 
   /** Pre-filtered view of the index (`cuvs::neighbors::filtering` on the
     * IVF path): the predicate applies to the list rows (id/vec), so it
@@ -201,10 +137,9 @@ class IvfFlatIndex(
     * THIS index's geometry instead of a fixture constant — the
     * per-config floor discipline of ann_ivf_flat.cuh:102. */
   def save(path: String): Unit = {
-    lists.write.mode("overwrite").partitionBy("list_id").parquet(s"$path/lists")
+    val nRows = IvfFlatIndex.writeLists(lists, s"$path/lists")
     val spark = lists.sparkSession
     IvfFlatIndex.saveCentroids(spark, path, centroids, metric)
-    val nRows = lists.count()
     IvfFlatIndex.saveMeta(spark, path, nRows)
     if (IvfFlatIndex.recallCurveEnabled(spark))
       IvfFlatIndex.saveRecallCurve(spark, path, this, nRows)
@@ -299,6 +234,22 @@ object IvfFlatIndex {
   def load(spark: SparkSession, path: String): IvfFlatIndex = {
     val (centroids, metric) = loadCentroids(spark, path)
     new IvfFlatIndex(centroids, readListTable(spark, s"$path/lists"), metric)
+  }
+
+  /** Write a layout's list table partitioned by `list_id` (DPP / static
+    * pruning at search time) and return its row count, counted by the
+    * write's own job (an observed metric) — no count job. Should the
+    * metric not arrive, the footers of the files just written are summed
+    * instead: one footer per (writing task, list), read serially on the
+    * driver, so at a 1024-list layout that walk costs more than a count. */
+  private[graft] def writeLists(lists: DataFrame, dir: String): Long = {
+    val written = org.apache.spark.sql.Observation()
+    lists.observe(written, count(lit(1)).as("rows"))
+      .write.mode("overwrite").partitionBy("list_id").parquet(dir)
+    scala.util.Try(scala.concurrent.Await.result(written.future,
+        scala.concurrent.duration.Duration(60, "s")).getLong(0))
+      .getOrElse(graft.sources.SidecarIO.rowCount(lists.sparkSession, dir)
+        .getOrElse(throw new IllegalStateException(s"no list table written at $dir")))
   }
 
   /** A saved `partitionBy("list_id")` list table (lists, pq_lists,

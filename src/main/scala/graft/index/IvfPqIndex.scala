@@ -61,7 +61,7 @@ class IvfPqIndex(
     * dist is the estimated q̂·x̂, larger-is-closer. */
   def search(queries: DataFrame, k: Int, nProbes: Int,
       qidCol: String = "qid", qvecCol: String = "qvec"): DataFrame = {
-    // Fused ADC kernel (AdcKernel doc): one pass over the streaming coded
+    // Fused ADC kernel (AdcScan doc): one pass over the streaming coded
     // lists when the query side fits in memory. Identical rows to the
     // join route.
     val spark = queries.sparkSession
@@ -102,20 +102,15 @@ class IvfPqIndex(
     BruteForceKnn.topKPerQuery(pairs, k, scoreMetric)
   }
 
+  /** The fused scan over this layout's codes (AdcScan) — the kernel of
+    * `kernelSearch` and of the planner's IvfSearchExec. */
+  private[graft] def listScan: ListScan = AdcScan.perSubspace(centroids, codebooks, ipLike)
+
   /** The fused-kernel search over shaped (qid, qvec) queries, each probing
     * `probesOf(qid)` lists; bufK = k because each id lives in exactly one
     * list. */
-  private def kernelSearch(q: DataFrame, k: Int, probesOf: Long => Int): DataFrame = {
-    val (cb, cs) = (codebooks, centroids)
-    BruteForceKnn.topKPerQuery(
-      if (ipLike)
-        AdcKernel.pairsWith(lists, q, centroids, probesOf, k, "pq_codes",
-          codebooks.nCenters, minClose = false)(
-          (lid, qv) => graft.expr.PqOps.lutIpRaw(cb, cs, qv, lid))
-      else
-        AdcKernel.pairs(lists, q, centroids, codebooks, probesOf, k, "pq_codes"),
-      k, scoreMetric)
-  }
+  private def kernelSearch(q: DataFrame, k: Int, probesOf: Long => Int): DataFrame =
+    BruteForceKnn.topKPerQuery(listScan.pairs(lists, centroids, q, probesOf, k), k, scoreMetric)
 
   /** ADC search over `kCoarse` candidates + exact re-rank to top-k against
     * the raw dataset — the recall-recovery composition. */
@@ -133,7 +128,7 @@ class IvfPqIndex(
     * the codebooks — the ivf_pq serialize surface (ivf_pq_serialize.cu
     * analog as Parquet tables). */
   def save(path: String): Unit = {
-    lists.write.mode("overwrite").partitionBy("list_id").parquet(s"$path/pq_lists")
+    val nRows = IvfFlatIndex.writeLists(lists, s"$path/pq_lists")
     val spark = lists.sparkSession
     IvfFlatIndex.saveCentroids(spark, path, centroids, metric)
     import spark.implicits._
@@ -143,7 +138,6 @@ class IvfPqIndex(
           codebooks.pqDim, codebooks.nCenters, codebooks.subLen))
         .toDF("s", "c", "center", "pq_dim", "n_centers", "sub_len"),
       s"$path/codebooks")
-    val nRows = lists.count()
     IvfFlatIndex.saveMeta(spark, path, nRows)
     depthHint.foreach(DepthHint.save(spark, path, _))
     // measured probe/recall curve of the PLANNER-SERVED composition (ADC
@@ -190,7 +184,7 @@ class IvfPqClusterIndex(
     * query. */
   def search(queries: DataFrame, k: Int, nProbes: Int,
       qidCol: String = "qid", qvecCol: String = "qvec"): DataFrame = {
-    // Fused ADC kernel (AdcKernel), per-list LUTs: same gate as the
+    // Fused ADC kernel (AdcScan), per-list LUTs: same gate as the
     // per-subspace index.
     val spark = queries.sparkSession
     val qShaped = IvfPqIndex.shapeQueries(queries, metric, qidCol, qvecCol)
@@ -230,13 +224,11 @@ class IvfPqClusterIndex(
   private def kernelSearch(q: DataFrame, k: Int, probesOf: Long => Int): DataFrame = {
     val ccb = codebooks
     val cs = centroids
-    BruteForceKnn.topKPerQuery(
-      AdcKernel.pairsWith(lists, q, centroids, probesOf, k, "pq_codes",
-        ccb.nCenters, minClose = !ipLike)(
-        if (ipLike) (lid, qv) => graft.expr.PqClusterOps.lutIpRaw(ccb, cs, lid, qv)
-        else (lid, qv) => graft.expr.PqClusterOps.lutRaw(ccb, lid,
-          graft.expr.CentroidOps.residualRaw(cs, qv, lid))),
-      k, scoreMetric)
+    val scan = AdcScan(ccb.nCenters, minClose = !ipLike,
+      if (ipLike) (lid, qv) => graft.expr.PqClusterOps.lutIpRaw(ccb, cs, lid, qv)
+      else (lid, qv) => graft.expr.PqClusterOps.lutRaw(ccb, lid,
+        graft.expr.CentroidOps.residualRaw(cs, qv, lid)))
+    BruteForceKnn.topKPerQuery(scan.pairs(lists, centroids, q, probesOf, k), k, scoreMetric)
   }
 
   def searchWithRefine(queries: DataFrame, dataset: DataFrame, k: Int, nProbes: Int,
@@ -251,7 +243,7 @@ class IvfPqClusterIndex(
 
   /** Persist: coded lists + centroid sidecar + per-list codebook table. */
   def save(path: String): Unit = {
-    lists.write.mode("overwrite").partitionBy("list_id").parquet(s"$path/pqcl_lists")
+    val nRows = IvfFlatIndex.writeLists(lists, s"$path/pqcl_lists")
     val spark = lists.sparkSession
     IvfFlatIndex.saveCentroids(spark, path, centroids, metric)
     import spark.implicits._
@@ -261,7 +253,6 @@ class IvfPqClusterIndex(
           codebooks.nLists, codebooks.nCenters, codebooks.subLen, codebooks.pqDim))
         .toDF("l", "c", "center", "n_lists", "n_centers", "sub_len", "pq_dim"),
       s"$path/cluster_codebooks")
-    val nRows = lists.count()
     IvfFlatIndex.saveMeta(spark, path, nRows)
     depthHint.foreach(DepthHint.save(spark, path, _))
     if (IvfFlatIndex.recallCurveEnabled(spark))

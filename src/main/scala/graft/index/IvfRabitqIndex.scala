@@ -42,7 +42,7 @@ class IvfRabitqIndex(
   /** Top-kCoarse per query by estimated L2 — the in-list ADC pass. */
   def search(queries: DataFrame, kCoarse: Int, nProbes: Int,
       qidCol: String = "qid", qvecCol: String = "qvec"): DataFrame = {
-    // Fused estimator kernel (AdcKernel pattern): rotated residual queries
+    // Fused estimator kernel (AdcScan pattern): rotated residual queries
     // + their scalar stats precomputed with the same JVM ops the codegen
     // expressions call; the coded lists stream once. Identical rows.
     val sparkS = queries.sparkSession
@@ -226,7 +226,7 @@ class IvfRabitqIndex(
   /** Persist: coded lists (partitioned for DPP), centroid sidecar, and the
     * rotation matrix — the ivf_rabitq serialize surface as Parquet. */
   def save(path: String): Unit = {
-    lists.write.mode("overwrite").partitionBy("list_id").parquet(s"$path/rabitq_lists")
+    val nRows = IvfFlatIndex.writeLists(lists, s"$path/rabitq_lists")
     val spark = lists.sparkSession
     IvfFlatIndex.saveCentroids(spark, path, centroids, Metric.L2)
     import spark.implicits._
@@ -235,7 +235,6 @@ class IvfRabitqIndex(
         .map { case (row, i) => (i, row.toSeq, bitsPerDim) }
         .toDF("r", "row", "bits_per_dim"),
       s"$path/rotation")
-    val nRows = lists.count()
     IvfFlatIndex.saveMeta(spark, path, nRows)
     // measured probe/recall curve of the planner-served composition
     // (sign-code estimates at the heuristic depth + exact refine)

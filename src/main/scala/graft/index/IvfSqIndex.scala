@@ -140,13 +140,12 @@ class IvfSqIndex(
   /** Persist: int8 lists (partitioned for DPP), centroid sidecar, and the
     * (lo, hi) quantizer model — the ivf_sq serialize surface as Parquet. */
   def save(path: String): Unit = {
-    lists.write.mode("overwrite").partitionBy("list_id").parquet(s"$path/sq_lists")
+    val nRows = IvfFlatIndex.writeLists(lists, s"$path/sq_lists")
     val spark = lists.sparkSession
     IvfFlatIndex.saveCentroids(spark, path, centroids, metric)
     import spark.implicits._
     graft.sources.SidecarIO.write(Seq((sq.lo, sq.hi)).toDF("lo", "hi"),
       s"$path/sq_model")
-    val nRows = lists.count()
     IvfFlatIndex.saveMeta(spark, path, nRows)
     // measured probe/recall curve of the planner-served composition
     // (decoded-int8 candidates at the heuristic depth + exact refine)

@@ -55,7 +55,7 @@ class ScannIndex(
     * IP estimator over the normalized query. */
   def search(queries: DataFrame, k: Int, nProbes: Int,
       qidCol: String = "qid", qvecCol: String = "qvec"): DataFrame = {
-    // Fused ADC kernel (AdcKernel doc) when the query side fits in memory.
+    // Fused ADC kernel (AdcScan doc) when the query side fits in memory.
     val spark = queries.sparkSession
     val qShaped = IvfPqIndex.shapeQueries(queries, metric, qidCol, qvecCol)
     val q = qShaped.transform(graft.core.Frames.materialize(_))
@@ -87,20 +87,14 @@ class ScannIndex(
   }
 
   /** Fused-kernel search over shaped queries with per-query probe counts:
-    * bufK = 2k because SOAR stores ≤ 2 copies per id, then the same
-    * (qid, id) dedup as the join route. */
-  private def kernelSearch(q: DataFrame, k: Int, probesOf: Long => Int): DataFrame = {
-    val (cb, cs) = (codebooks, centroids)
+    * bufK = 2k because SOAR stores ≤ 2 copies per id — a partition's
+    * top-2k WITH duplicates always holds the best copy of every id in its
+    * dedup-min top-k — then the same (qid, id) dedup as the join route. */
+  private def kernelSearch(q: DataFrame, k: Int, probesOf: Long => Int): DataFrame =
     BruteForceKnn.topKPerQuery(
-      dedup(
-        if (ipLike)
-          AdcKernel.pairsWith(lists, q, centroids, probesOf, 2 * k, "pq_codes",
-            codebooks.nCenters, minClose = false)(
-            (lid, qv) => graft.expr.PqOps.lutIpRaw(cb, cs, qv, lid))
-        else
-          AdcKernel.pairs(lists, q, centroids, codebooks, probesOf, 2 * k, "pq_codes")),
+      dedup(AdcScan.perSubspace(centroids, codebooks, ipLike)
+        .pairs(lists, centroids, q, probesOf, 2 * k)),
       k, scoreMetric)
-  }
 
   /** ScaNN reordering: exact re-rank of the ADC top-kCoarse. */
   def searchWithRefine(queries: DataFrame, dataset: DataFrame, k: Int, nProbes: Int,
@@ -117,7 +111,8 @@ class ScannIndex(
     * sidecar, and the residual-PQ codebooks — the scann serialize surface
     * as Parquet (same codebook table shape as IvfPqIndex). */
   def save(path: String): Unit = {
-    lists.write.mode("overwrite").partitionBy("list_id").parquet(s"$path/scann_lists")
+    // SOAR stores every id twice
+    val nRows = IvfFlatIndex.writeLists(lists, s"$path/scann_lists") / 2
     val spark = lists.sparkSession
     IvfFlatIndex.saveCentroids(spark, path, centroids, metric)
     import spark.implicits._
@@ -127,7 +122,6 @@ class ScannIndex(
           codebooks.pqDim, codebooks.nCenters, codebooks.subLen))
         .toDF("s", "c", "center", "pq_dim", "n_centers", "sub_len"),
       s"$path/codebooks")
-    val nRows = lists.count() / 2 // SOAR stores every id twice
     IvfFlatIndex.saveMeta(spark, path, nRows)
     depthHint.foreach(DepthHint.save(spark, path, _))
     // measured probe/recall curve of the planner-served composition

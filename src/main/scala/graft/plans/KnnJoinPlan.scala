@@ -1,11 +1,13 @@
 package graft.plans
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Alias, NamedExpression}
-import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Alias, Cast,
+  In, Literal, NamedExpression, UnsafeProjection}
+import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, Filter, LocalRelation, LogicalPlan,
+  Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.functions.{col, count, lit, pmod, sqrt, when, xxhash64}
-import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, IntegerType, LongType}
 import org.apache.spark.sql.graft.{bridge => B}
 import graft.core.Metric
 import graft.ops.BruteForceKnn
@@ -300,20 +302,27 @@ object GraftIndexCatalog {
   private[graft] def invalidateStats(): Unit = clearProbeCache()
 }
 
-/** Lowers KnnJoinPlan into a physical route chosen by the planner:
-  * a registered IVF layout on the data relation -> probe-pruned index
-  * search + exact refine; otherwise the brute-force partial-top-k
-  * pipeline. */
+/** Lowers KnnJoinPlan into a route chosen by the planner: a registered
+  * IVF-Flat or IVF-PQ layout on the unfiltered data relation, with a query
+  * side the LocalKernel gates admit (vectors, and queries·depth candidate
+  * entries) -> an IndexedKnnJoin node that
+  * GraftStrategy plans as one IvfSearchExec (probe-pruned scan + finish);
+  * the other layouts, filtered shapes and over-cap query sides -> the
+  * probe-pruned DataFrame routes + exact refine; otherwise the brute-force
+  * partial-top-k pipeline. */
 object ResolveKnnJoin {
-  /** Install the lowering rule on a live session if absent — the runtime
-    * analog of GraftExtensions' injectOptimizerRule, shared by every
-    * entry point that plans a KnnJoinPlan outside an extensions-configured
+  /** Install the lowering rule and the IndexedKnnJoin planning strategy on
+    * a live session if absent — the runtime analog of GraftExtensions'
+    * injectOptimizerRule/injectPlannerStrategy, shared by every entry
+    * point that plans a KnnJoinPlan outside an extensions-configured
     * session (a planned-but-never-lowered node dies with Spark's opaque
     * "No plan for" assertion at execution). A GraftExtensions-configured
-    * session already runs the rule via the optimizer's extended rules —
-    * detected so register()/query paths don't stack a second full-tree
-    * pass onto every query for the session's lifetime. */
+    * session already runs both via the optimizer's extended rules and the
+    * planner's extra strategies — detected so register()/query paths don't
+    * stack a second full-tree pass onto every query for the session's
+    * lifetime. */
   def ensureInstalled(spark: SparkSession): Unit = {
+    ensureStrategy(spark)
     // narrow catch: only the expected "not a classic optimizer" failures
     // (cast/linkage on a connect/foreign session) mean "can't introspect";
     // anything else should surface, not silently duplicate the rule
@@ -332,6 +341,25 @@ object ResolveKnnJoin {
         spark.experimental.extraOptimizations =
           spark.experimental.extraOptimizations :+ ResolveKnnJoin(spark)
     }
+  }
+
+  /** The strategy half of ensureInstalled. The rule also calls it when it
+    * emits an IndexedKnnJoin, so a session that added only the rule (to
+    * `experimental.extraOptimizations` by hand) still plans the node. */
+  private[plans] def ensureStrategy(spark: SparkSession): Unit = {
+    val injected =
+      try org.apache.spark.sql.graft.bridge.planner(spark)
+        .extraPlanningStrategies.contains(GraftStrategy)
+      catch {
+        case _: ClassCastException | _: LinkageError | _: UnsupportedOperationException =>
+          false
+      }
+    if (!injected && !spark.experimental.extraStrategies.contains(GraftStrategy))
+      spark.experimental.synchronized {
+        if (!spark.experimental.extraStrategies.contains(GraftStrategy))
+          spark.experimental.extraStrategies =
+            GraftStrategy +: spark.experimental.extraStrategies
+      }
   }
 
   /** Layouts already warned about a missing `recall_curve` sidecar —
@@ -581,8 +609,9 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
       // routed rewrite of the same node would leave a stale earned bit
       val nodeIds = kj.output.map(_.exprId.id)
       GraftIndexCatalog.recordRoute(nodeIds, None)
-      val data = B.ofRows(spark, kj.left)
-      val queries = B.ofRows(spark, kj.right)
+      // the DataFrame routes' inputs; the IvfSearchExec route builds none
+      lazy val data = B.ofRows(spark, kj.left)
+      lazy val queries = B.ofRows(spark, kj.right)
         .select(col(kj.qidCol).as("qid"), col(kj.qvecCol).as("qvec"))
       // `udf:<name>` = a session-registered scalar function as the metric
       // (distance.hpp:66 CustomUDF=101, JIT'd in the reference; here the
@@ -592,18 +621,21 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
         Option(kj.metricName).filter(_.startsWith("udf:")).map(_.stripPrefix("udf:"))
       lazy val metric = Metric.fromName(kj.metricName)
       def coarseK(e: GraftIndexCatalog.Entry, compressed: Boolean): Int =
-        if (e.kCoarse > 0) e.kCoarse
+        depthOf(e, compressed)._1
+      /** coarseK with where it came from, for explain. */
+      def depthOf(e: GraftIndexCatalog.Entry, compressed: Boolean): (Int, String) =
+        if (e.kCoarse > 0) (e.kCoarse, "registered depth")
         // the compressed-code estimators (ADC / decoded int8) rank with
         // quantization noise, so their default reorder depth carries more
         // margin (the reference's refine recall-recovery discipline) —
         // calibrated by the layout's measured displacement sidecar when
         // one exists (ResolveKnnJoin.compressedDepth)
         else if (compressed)
-          ResolveKnnJoin.compressedDepth(kj.k,
+          (ResolveKnnJoin.compressedDepth(kj.k,
             GraftIndexCatalog.cachedSidecarDepth(e.indexPath) {
               graft.index.DepthHint.load(spark, e.indexPath)
-            })
-        else math.max(2 * kj.k, kj.k + 10)
+            }), "measured depth")
+        else (math.max(2 * kj.k, kj.k + 10), "2k depth")
 
       /** Registered-population row count: the layout's `meta` sidecar by
         * preference (the build already knew n; no plan-time job at all),
@@ -625,14 +657,18 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
         * legacy fraction semantics for sessions that pinned it. */
       def resolveProbes(e: GraftIndexCatalog.Entry, base: LogicalPlan,
           nLists: Int, depth: Int): Int =
-        if (e.nProbes > 0) e.nProbes
+        probesOf(e, base, nLists, depth)._1
+      /** resolveProbes with where the count came from, for explain. */
+      def probesOf(e: GraftIndexCatalog.Entry, base: LogicalPlan,
+          nLists: Int, depth: Int): (Int, String) =
+        if (e.nProbes > 0) (e.nProbes, "registered probes")
         else {
           val n = math.max(baseRows(e, base), 1L)
           val coverK = math.ceil(3.0 * depth * nLists / n.toDouble).toInt
           spark.conf.getOption("spark.graft.knnJoin.autoProbeFraction") match {
             case Some(frac) =>
               val fracProbes = math.max(1, math.ceil(nLists * frac.toDouble).toInt)
-              math.min(nLists, math.max(coverK, fracProbes))
+              (math.min(nLists, math.max(coverK, fracProbes)), "autoProbeFraction probes")
             case None =>
               val target =
                 spark.conf.get("spark.graft.knnJoin.targetRecall", "0.95").toDouble
@@ -645,9 +681,9 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
                   "recall_curve sidecar (pre-r13 save); auto mode probes EVERY list " +
                   "(exact but unpruned) — re-save the index to restore calibrated " +
                   "probe selection (docs/MIGRATION.md)")
-              ResolveKnnJoin.autoProbes(target, nLists, n, depth,
+              (ResolveKnnJoin.autoProbes(target, nLists, n, depth,
                 curve.map(_._1).getOrElse(Seq.empty),
-                nSamples = curve.flatMap(_._2))
+                nSamples = curve.flatMap(_._2)), "recall_curve probes")
           }
         }
 
@@ -745,14 +781,27 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
           Some(Metric.L2)
         else None
 
+      /** The inputs IvfSearchExec scans a layout with: its list table,
+        * centroids and list kernel, the probe count, and whether queries
+        * are unit-normalized before scanning (a cosine build stored
+        * unit-normalized rows; refine ranks the raw vectors). */
+      final case class ScanInputs(lists: DataFrame, cs: graft.expr.CentroidSet,
+          scan: graft.index.ListScan, probes: Int, probeReason: String, normalize: Boolean)
+
+      /** A layout's candidate generation at one reorder depth, decided:
+        * the metric its `dist` column is computed in, whether those
+        * distances are EXACT (raw-vector layouts) or code-space estimates
+        * (ADC / decoded int8), the DataFrame lowering, and — for the
+        * layouts IvfSearchExec runs (IVF-Flat, per-subspace IVF-PQ) — the
+        * scan inputs. */
+      final case class Cand(metric: Metric, exact: Boolean, frame: () => DataFrame,
+          scan: Option[ScanInputs] = None)
+
       /** Candidate generation per layout at reorder depth `depth`,
         * searched over the FULL registered population (`base`), or None
-        * when the layout/metric pairing is unroutable. Returns the
-        * candidate frame, the metric its `dist` column is computed in,
-        * and whether those distances are EXACT (raw-vector layouts) or
-        * code-space estimates (ADC / decoded int8). */
+        * when the layout/metric pairing is unroutable. */
       def candidates(e: GraftIndexCatalog.Entry, layout: String,
-          base: LogicalPlan, depth: Int): Option[(DataFrame, Metric, Boolean)] = {
+          base: LogicalPlan, depth: Int): Option[Cand] = {
         def loaded[T <: AnyRef: scala.reflect.ClassTag](
             load: (SparkSession, String) => T): T =
           GraftIndexCatalog.cachedLoad(spark, e.indexPath)(load(spark, e.indexPath))
@@ -770,15 +819,19 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
               // while the beam still improves
               val ef0 = math.max(40, depth)
               val ef = hnswEf(e, ef0)
-              Some((graft.index.Hnsw.search(idx, B.ofRows(spark, base), queries,
-                depth, ef = ef, kj.idCol, kj.vecCol,
-                baseIterations = math.max(10, ef)), idx.params.metric, true))
+              Some(Cand(idx.params.metric, exact = true, () =>
+                graft.index.Hnsw.search(idx, B.ofRows(spark, base), queries,
+                  depth, ef = ef, kj.idCol, kj.vecCol, baseIterations = math.max(10, ef))))
             }
           case "ivf" =>
             val idx = loaded(graft.index.IvfFlatIndex.load)
             if (!rankCompatible(idx.metric, metric)) None
-            else Some((idx.search(queries, depth,
-              resolveProbes(e, base, idx.centroids.k, depth)), idx.metric, true))
+            else {
+              val (probes, why) = probesOf(e, base, idx.centroids.k, depth)
+              Some(Cand(idx.metric, exact = true, () => idx.search(queries, depth, probes),
+                Some(ScanInputs(idx.lists, idx.centroids, idx.listScan, probes, why,
+                  normalize = false))))
+            }
           case "tiered" =>
             // the streaming-ingest lifecycle layout (tiered_index.hpp:
             // 59-136): candidates = probe-pruned ANN-tier search ∪ exact
@@ -788,8 +841,8 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
             // covers the pair: base + delta must equal the relation.
             val idx = graft.stream.TieredIndex.load(spark, e.indexPath)
             if (!rankCompatible(idx.metric, metric)) None
-            else Some((idx.search(queries, depth,
-              resolveProbes(e, base, idx.base.centroids.k, depth)), idx.metric, true))
+            else Some(Cand(idx.metric, exact = true, () => idx.search(queries, depth,
+              resolveProbes(e, base, idx.base.centroids.k, depth))))
           case "ivf_sq" =>
             // decoded int8 scored under the index's own metric —
             // quantization noise makes the dists estimates, not exact
@@ -797,37 +850,41 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
             else {
               val idx = loaded(graft.index.IvfSqIndex.load)
               if (!rankCompatible(idx.metric, metric)) None
-              else Some((idx.search(queries, depth,
-                resolveProbes(e, base, idx.centroids.k, depth)), idx.metric, false))
+              else Some(Cand(idx.metric, exact = false, () => idx.search(queries, depth,
+                resolveProbes(e, base, idx.centroids.k, depth))))
             }
           case "ivf_pq" =>
             if (!compressedFloorReachable(e)) None
             else {
               val idx = loaded(graft.index.IvfPqIndex.load)
-              compressedScoreMetric(idx.metric).map(m => (idx.search(queries, depth,
-                resolveProbes(e, base, idx.centroids.k, depth)), m, false))
+              compressedScoreMetric(idx.metric).map { m =>
+                val (probes, why) = probesOf(e, base, idx.centroids.k, depth)
+                Cand(m, exact = false, () => idx.search(queries, depth, probes),
+                  Some(ScanInputs(idx.lists, idx.centroids, idx.listScan, probes, why,
+                    normalize = idx.metric == Metric.Cosine)))
+              }
             }
           case "ivf_pqcl" =>
             if (!compressedFloorReachable(e)) None
             else {
               val idx = loaded(graft.index.IvfPqClusterIndex.load)
-              compressedScoreMetric(idx.metric).map(m => (idx.search(queries, depth,
-                resolveProbes(e, base, idx.centroids.k, depth)), m, false))
+              compressedScoreMetric(idx.metric).map(m => Cand(m, exact = false, () =>
+                idx.search(queries, depth, resolveProbes(e, base, idx.centroids.k, depth))))
             }
           case "scann" =>
             if (!compressedFloorReachable(e)) None
             else {
               val idx = loaded(graft.index.ScannIndex.load)
-              compressedScoreMetric(idx.metric).map(m => (idx.search(queries, depth,
-                resolveProbes(e, base, idx.centroids.k, depth)), m, false))
+              compressedScoreMetric(idx.metric).map(m => Cand(m, exact = false, () =>
+                idx.search(queries, depth, resolveProbes(e, base, idx.centroids.k, depth))))
             }
           case "rabitq" =>
             // RaBitQ estimates are L2-only by construction
             if (!compressedFloorReachable(e) || !l2Family(metric)) None
             else {
               val idx = loaded(graft.index.IvfRabitqIndex.load)
-              Some((idx.search(queries, depth,
-                resolveProbes(e, base, idx.centroids.k, depth)), Metric.L2, false))
+              Some(Cand(Metric.L2, exact = false, () => idx.search(queries, depth,
+                resolveProbes(e, base, idx.centroids.k, depth))))
             }
           case _ => None
         }
@@ -837,12 +894,11 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
         * accumulated double (bit-identical to recomputing L2Sqrt from the
         * vectors — Distance.l2sqrt IS sqrt of the l2 sum). The reverse
         * (squaring an already-rounded sqrt) is NOT exact (~1 ulp double
-        * rounding), so that combination keeps the refine path; None =
-        * no exact map. */
-      def toNodeDist(from: Metric): Option[Column => Column] =
-        if (from == metric) Some(identity)
-        else if (from == Metric.L2 && metric == Metric.L2Sqrt)
-          Some((c: Column) => sqrt(c))
+        * rounding), so that combination keeps the refine path.
+        * Some(true) = sqrt, Some(false) = identity, None = no exact map. */
+      def nodeDistSqrt(from: Metric): Option[Boolean] =
+        if (from == metric) Some(false)
+        else if (from == Metric.L2 && metric == Metric.L2Sqrt) Some(true)
         else None
 
       /** What stands between the index's candidates and the node's
@@ -855,6 +911,14 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
       case class IdFilter(filterSide: LogicalPlan, key: Attribute,
           anti: Boolean) extends Post
       case object ViaData extends Post
+
+      /** One layout's route, decided: the final reorder depth, the
+        * candidate generation at that depth, the finish — Some(sqrt?) =
+        * direct (the candidate dists map exactly to the node metric, with
+        * or without a sqrt), None = exact refine — and where the depth came
+        * from. Both lowerings (`lowerFrame`, `lowerIndexed`) take it as is. */
+      final case class Route(e: GraftIndexCatalog.Entry, layout: String, depth: Int,
+          depthReason: String, cand: Cand, direct: Option[Boolean])
 
       /** Index route = candidates over the full population, then the
         * cheapest sound finish:
@@ -871,72 +935,183 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
         * `widen` turns the layout's base reorder depth into (final depth,
         * small-id-filter?) — identity for full population, the
         * filtering_rate analog for filtered shapes, None = brute. */
-      def routeFor(e: GraftIndexCatalog.Entry, layout: String, base: LogicalPlan,
-          widen: Int => Option[(Int, Boolean)], post: Post): Option[DataFrame] = {
-          val compressed =
-            layout == "ivf_pq" || layout == "ivf_pqcl" || layout == "scann" ||
-              layout == "rabitq" || layout == "ivf_sq"
-          widen(coarseK(e, compressed)).flatMap { case (depth, smallIdFilter) =>
-            candidates(e, layout, base, depth).map { case (cand, candMetric, exact) =>
-              GraftIndexCatalog.recordRoute(nodeIds, Some((layout, e.indexPath)))
-              // the broadcast post-filter re-joins on ids cast to long, so
-              // the id key type must make that cast lossless — a string
-              // or fractional id would change the user's typed equality
-              def integral(t: org.apache.spark.sql.types.DataType): Boolean = t match {
-                case org.apache.spark.sql.types.LongType |
-                     org.apache.spark.sql.types.IntegerType |
-                     org.apache.spark.sql.types.ShortType |
-                     org.apache.spark.sql.types.ByteType => true
-                case _ => false
-              }
-              // direct finish answers from the index ALONE (no refine join
-              // against the live relation), so a stale index serves
-              // deleted/rewritten rows the refine inner-join used to mask.
-              // The registration contract already forbids stale indexes
-              // (GraftIndexCatalog doc), but existing registrations that
-              // leaned on that masking can pin the old refine behavior
-              // with this conf (docs/MIGRATION.md).
-              val distMap =
-                if (exact && spark.conf.get(
-                    "spark.graft.knnJoin.directFinish.enabled", "true").toBoolean)
-                  toNodeDist(candMetric)
-                else None
-              val directFinish = distMap.isDefined && (post match {
-                case NoFilter => true
-                case f: IdFilter =>
-                  smallIdFilter && integral(f.key.dataType)
-                case ViaData => false
-              })
-              if (directFinish) {
-                val scored = cand.select(col("qid"),
-                  col("nbr_id").cast("long").as("id"),
-                  distMap.get(col("dist")).as("dist"))
-                val allowed = post match {
-                  case IdFilter(fs, key, anti) =>
-                    val ids = B.ofRows(spark, fs)
-                      .select(B.column(key).cast("long").as("id"))
-                    scored.join(org.apache.spark.sql.functions.broadcast(ids),
-                      Seq("id"), if (anti) "left_anti" else "left_semi")
-                  case _ => scored
-                }
-                BruteForceKnn.knnFromDistances(allowed, kj.k,
-                  minClose = Metric.isMinClose(metric))
-              } else {
-                // pin the refine join's build side: candidates are
-                // q·depth·16 B — within the same broadcast budget class
-                // as the query side every route already broadcasts when
-                // the depth is moderate; past the per-query byte budget
-                // (e.g. a displacement-capped depth 4096) leave the
-                // strategy to Catalyst/AQE rather than risk the driver
-                val bcastCand = depth.toLong * 16L <= spark.conf.get(
-                  "spark.graft.refine.maxBroadcastBytesPerQuery", "8192").toLong
-                graft.ops.Refine.refine(cand.select(col("qid"), col("nbr_id").as("id")),
-                  data, queries, kj.k, metric, kj.idCol, kj.vecCol,
-                  broadcastCandidates = bcastCand)
-              }
+      def decide(e: GraftIndexCatalog.Entry, layout: String, base: LogicalPlan,
+          widen: Int => Option[(Int, Boolean)], post: Post): Option[Route] = {
+        val compressed =
+          layout == "ivf_pq" || layout == "ivf_pqcl" || layout == "scann" ||
+            layout == "rabitq" || layout == "ivf_sq"
+        val (depth0, depthReason) = depthOf(e, compressed)
+        widen(depth0).flatMap { case (depth, smallIdFilter) =>
+          candidates(e, layout, base, depth).map { cand =>
+            // the broadcast post-filter re-joins on ids cast to long, so
+            // the id key type must make that cast lossless — a string
+            // or fractional id would change the user's typed equality
+            def integral(t: org.apache.spark.sql.types.DataType): Boolean = t match {
+              case org.apache.spark.sql.types.LongType |
+                   org.apache.spark.sql.types.IntegerType |
+                   org.apache.spark.sql.types.ShortType |
+                   org.apache.spark.sql.types.ByteType => true
+              case _ => false
             }
+            // direct finish answers from the index ALONE (no refine join
+            // against the live relation), so a stale index serves
+            // deleted/rewritten rows the refine inner-join used to mask.
+            // The registration contract already forbids stale indexes
+            // (GraftIndexCatalog doc), but existing registrations that
+            // leaned on that masking can pin the old refine behavior
+            // with this conf (docs/MIGRATION.md).
+            val directEnabled =
+              spark.conf.get("spark.graft.knnJoin.directFinish.enabled", "true").toBoolean
+            val postAllows = post match {
+              case NoFilter => true
+              case f: IdFilter => smallIdFilter && integral(f.key.dataType)
+              case ViaData => false
+            }
+            val direct =
+              if (cand.exact && directEnabled && postAllows) nodeDistSqrt(cand.metric)
+              else None
+            Route(e, layout, depth, depthReason, cand, direct)
           }
         }
+      }
+
+      /** The DataFrame lowering of a route: the candidate frame, then the
+        * select_k epilogue (direct) or the exact refine join. */
+      def lowerFrame(r: Route, post: Post): DataFrame = {
+        GraftIndexCatalog.recordRoute(nodeIds, Some((r.layout, r.e.indexPath)))
+        val cand = r.cand.frame()
+        r.direct match {
+          case Some(sq) =>
+            val scored = cand.select(col("qid"),
+              col("nbr_id").cast("long").as("id"),
+              (if (sq) sqrt(col("dist")) else col("dist")).as("dist"))
+            val allowed = post match {
+              case IdFilter(fs, key, anti) =>
+                val ids = B.ofRows(spark, fs)
+                  .select(B.column(key).cast("long").as("id"))
+                scored.join(org.apache.spark.sql.functions.broadcast(ids),
+                  Seq("id"), if (anti) "left_anti" else "left_semi")
+              case _ => scored
+            }
+            BruteForceKnn.knnFromDistances(allowed, kj.k,
+              minClose = Metric.isMinClose(metric))
+          case None =>
+            // pin the refine join's build side: candidates are
+            // q·depth·16 B — within the same broadcast budget class
+            // as the query side every route already broadcasts when
+            // the depth is moderate; past the per-query byte budget
+            // (e.g. a displacement-capped depth 4096) leave the
+            // strategy to Catalyst/AQE rather than risk the driver
+            val bcastCand = r.depth.toLong * 16L <= spark.conf.get(
+              "spark.graft.refine.maxBroadcastBytesPerQuery", "8192").toLong
+            graft.ops.Refine.refine(cand.select(col("qid"), col("nbr_id").as("id")),
+              data, queries, kj.k, metric, kj.idCol, kj.vecCol,
+              broadcastCandidates = bcastCand)
+        }
+      }
+
+      /** The query side as a driver-held (qid long, qvec array<float>)
+        * relation of at most `cap` rows, when the LocalKernel gate admits
+        * it — IvfSearchExec's input, materialized as the kernel route
+        * did: a driver-built frame is read as is (no job), any other is
+        * counted up to `cap` and collected, once per node. Rows with a
+        * null qid are dropped, as the join route's inner join on qid drops
+        * them. None sends the node to the DataFrame routes: the gate is
+        * off, the side holds more than `cap` rows, or a query vector is
+        * null or holds a null. */
+      var held: Option[LocalRelation] = None
+      var heldRefusedAt = Long.MaxValue // the smallest cap known to refuse
+      def heldQueries(cap: Long): Option[LocalRelation] = held match {
+        case Some(l) => Some(l).filter(_.data.size <= cap)
+        case None if cap >= heldRefusedAt || !graft.graphops.LocalKernel.enabled(spark) => None
+        case None =>
+          val resolver = org.apache.spark.sql.internal.SQLConf.get.resolver
+          def attr(name: String) = kj.right.output.find(a => resolver(a.name, name))
+          val got = for {
+            qidA <- attr(kj.qidCol)
+            qvecA <- attr(kj.qvecCol)
+            rel <- {
+              val proj = Seq(Alias(Cast(qidA, LongType), "qid")(),
+                Alias(Cast(qvecA, ArrayType(FloatType)), "qvec")())
+              kj.right match {
+                case l: LocalRelation if l.data.size <= cap =>
+                  val p = UnsafeProjection.create(proj, l.output)
+                  Some(LocalRelation(proj.map(_.toAttribute), l.data.map(r => p(r).copy())))
+                case _: LocalRelation => None
+                case other =>
+                  val qe = B.executePlan(spark, Project(proj, other))
+                  qe.optimizedPlan match {
+                    case l: LocalRelation => Some(l).filter(_.data.size <= cap)
+                    case _ if graft.graphops.LocalKernel.within(qe, cap) =>
+                      Some(LocalRelation(qe.optimizedPlan.output, B.collect(qe).toSeq))
+                    case _ => None
+                  }
+              }
+            }
+          } yield rel
+          def complete(r: org.apache.spark.sql.catalyst.InternalRow): Boolean =
+            !r.isNullAt(1) && {
+              val v = r.getArray(1)
+              (0 until v.numElements()).forall(!v.isNullAt(_))
+            }
+          got.map(l => l.copy(data = l.data.filterNot(_.isNullAt(0)))) match {
+            case Some(l) if l.data.forall(complete) => held = Some(l)
+            case Some(_) => heldRefusedAt = Long.MinValue
+            case None => heldRefusedAt = cap
+          }
+          held
+      }
+
+      /** A route that IvfSearchExec runs: its scan inputs, and the query
+        * side held on the driver within both LocalKernel budgets — at most
+        * `maxVectors` query vectors, and at most `maxEdges` candidate
+        * entries (queries·depth), the entries the operator collects and
+        * the refine finish broadcasts. Past either the node keeps the
+        * DataFrame route, whose candidates stay distributed. */
+      def indexedInputs(r: Route): Option[(ScanInputs, LocalRelation)] =
+        r.cand.scan.flatMap { si =>
+          val cap = math.min(graft.graphops.LocalKernel.maxVectors(spark),
+            graft.graphops.LocalKernel.maxEdges(spark) / math.max(1, r.depth))
+          heldQueries(cap).map((si, _))
+        }
+
+      /** The resolved IndexedKnnJoin of a route: the probed batch built
+        * on the driver from the held queries, the list relation pruned to
+        * the probed lists, the data child for the refine finish. */
+      def lowerIndexed(r: Route, si: ScanInputs, held: LocalRelation): LogicalPlan = {
+        GraftIndexCatalog.recordRoute(nodeIds, Some((r.layout, r.e.indexPath)))
+        val vecs = held.data.map { row =>
+          val v = row.getArray(1)
+          (if (si.normalize) graft.expr.VectorNormOps.unitNorm(v) else v).toFloatArray()
+        }.toArray
+        val batch = si.scan.batch(si.cs, vecs, _ => si.probes)
+        val rel = B.planOf(si.lists) match {
+          case m: org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation =>
+            m.newInstance()
+          case p => p
+        }
+        def listAttr(name: String) = rel.output.find(_.name == name).getOrElse(
+          throw new IllegalStateException(s"list table at ${r.e.indexPath} has no $name"))
+        val lid = listAttr("list_id")
+        val listPlan = Project(Seq(
+            Alias(Cast(lid, IntegerType), "list_id")(),
+            Alias(Cast(listAttr("id"), LongType), "id")(),
+            Alias(Cast(listAttr(si.scan.payload), si.scan.payloadType), si.scan.payload)()),
+          Filter(In(Cast(lid, IntegerType), batch.probedLists.sorted.map(Literal(_))), rel))
+        val (fin, dataPlan) = r.direct match {
+          case Some(sq) => (DirectFinish(sq, Metric.isMinClose(metric)), None)
+          case None =>
+            // present: columnsTraceToScan found both by these names
+            def dataAttr(name: String) = kj.left.output.find(_.name == name).get
+            (RefineFinish(metric), Some(Project(Seq(
+              Alias(Cast(dataAttr(kj.idCol), LongType), "id")(),
+              Alias(Cast(dataAttr(kj.vecCol), ArrayType(FloatType)), "vec")()), kj.left)))
+        }
+        ResolveKnnJoin.ensureStrategy(spark)
+        IndexedKnnJoin(IvfSearch(r.layout, r.e.indexPath, si.scan, batch, si.cs.k, si.probes,
+          r.depth, kj.k, fin, s"${si.probeReason}, ${r.depthReason}"), listPlan, dataPlan,
+          held, kj.output)
+      }
 
       // Plan-time statistics gate — the search_plan.cuh:113-133 analog:
       // the route is a cost decision on relation statistics, not just
@@ -1262,7 +1437,8 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
       // must never kill the query it is optimizing.
       def columnsTraceToScan(plan: LogicalPlan): Boolean =
         scanAttr(plan, kj.idCol).isDefined && scanAttr(plan, kj.vecCol).isDefined
-      val viaIndex: Option[DataFrame] =
+      // Left = the resolved IvfSearchExec node; Right = a DataFrame route
+      val viaIndex: Option[Either[LogicalPlan, DataFrame]] =
         try {
           if (udfMetric.isDefined) None
           else if (indexEligible(kj.left)) {
@@ -1271,7 +1447,12 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
             // route wins (an unroutable cheaper layout — e.g. a metric
             // mismatch — falls through to the next)
             else entriesFor(kj.left).view.flatMap { case (e, layout) =>
-              routeFor(e, layout, kj.left, d => Some((d, false)), NoFilter)
+              decide(e, layout, kj.left, d => Some((d, false)), NoFilter).map { r =>
+                indexedInputs(r) match {
+                  case Some((si, held)) => Left(lowerIndexed(r, si, held))
+                  case None => Right(lowerFrame(r, NoFilter))
+                }
+              }
             }.headOption
           } else if (filteredRouteEnabled)
             filteredShape(kj.left)
@@ -1321,9 +1502,10 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
                             rate * math.max(baseRows(e, shape.base), 1L)
                         if (keep) Some((d, small)) else None
                     }
-                  routeFor(e, layout, shape.base, widen, post)
+                  decide(e, layout, shape.base, widen, post).map(lowerFrame(_, post))
                 }.headOption
               }
+              .map(Right(_))
           else None
         } catch {
           case scala.util.control.NonFatal(e) =>
@@ -1359,48 +1541,52 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
       def shape(df: DataFrame): LogicalPlan =
         B.optimizedPlanOf(df.select(col("qid").cast("long"), col("nbr_id").cast("long"),
           col("rank"), col("dist")))
-      val rewritten = udfMetric.map(udfPipeline).orElse(viaIndex)
-      val newPlan =
-        try shape(rewritten.getOrElse(brute()))
-        catch {
-          // Spark's InMemoryRelation canonicalization crashes when a
-          // CACHED child with physical ordering/partitioning metadata
-          // (range/sorted sources) is duplicated by the analyzer's
-          // DeduplicateRelations — newInstance re-ids the output but not
-          // the stale metadata, and the index routes' refine join is
-          // exactly such a duplication. The brute pipeline uses each
-          // child once (no re-instancing), so it lowers cleanly — fall
-          // back to it (exact rows) instead of surfacing an opaque
-          // "key not found: id#N" at the caller. A UDF metric is
-          // excluded: the enum-metric brute pipeline would silently
-          // compute a DIFFERENT metric than the one requested (and its
-          // own single-use-per-child pipeline doesn't hit the bug).
-          case e: NoSuchElementException if rewritten.isDefined && udfMetric.isEmpty =>
-            logWarning("knn_join: index route hit Spark's cached-relation " +
-              "canonicalization limitation (stale partitioning metadata on a " +
-              "cached ordered-source frame); using the exact brute route. " +
-              s"Uncache or re-materialize the input to restore the route. ($e)")
-            GraftIndexCatalog.recordRoute(nodeIds, None)
-            shape(brute())
+      viaIndex.flatMap(_.left.toOption).getOrElse {
+        val rewritten = udfMetric.map(udfPipeline).orElse(viaIndex.flatMap(_.toOption))
+        val newPlan =
+          try shape(rewritten.getOrElse(brute()))
+          catch {
+            // Spark's InMemoryRelation canonicalization crashes when a
+            // CACHED child with physical ordering/partitioning metadata
+            // (range/sorted sources) is duplicated by the analyzer's
+            // DeduplicateRelations — newInstance re-ids the output but not
+            // the stale metadata, and the index routes' refine join is
+            // exactly such a duplication. The brute pipeline uses each
+            // child once (no re-instancing), so it lowers cleanly — fall
+            // back to it (exact rows) instead of surfacing an opaque
+            // "key not found: id#N" at the caller. A UDF metric is
+            // excluded: the enum-metric brute pipeline would silently
+            // compute a DIFFERENT metric than the one requested (and its
+            // own single-use-per-child pipeline doesn't hit the bug).
+            case e: NoSuchElementException if rewritten.isDefined && udfMetric.isEmpty =>
+              logWarning("knn_join: index route hit Spark's cached-relation " +
+                "canonicalization limitation (stale partitioning metadata on a " +
+                "cached ordered-source frame); using the exact brute route. " +
+                s"Uncache or re-materialize the input to restore the route. ($e)")
+              GraftIndexCatalog.recordRoute(nodeIds, None)
+              shape(brute())
+          }
+        // graft the rewrite under the node's declared exprIds
+        val aliased: Seq[NamedExpression] = newPlan.output.zip(kj.output).map {
+          case (produced, declared) =>
+            Alias(produced, declared.name)(exprId = declared.exprId)
         }
-      // graft the rewrite under the node's declared exprIds
-      val aliased: Seq[NamedExpression] = newPlan.output.zip(kj.output).map {
-        case (produced, declared) =>
-          Alias(produced, declared.name)(exprId = declared.exprId)
+        Project(aliased, newPlan)
       }
-      Project(aliased, newPlan)
   }
 }
 
 /** `SparkSessionExtensions` installer:
   * `.config("spark.sql.extensions", "graft.plans.GraftExtensions")` —
-  * installs the kNN-join lowering rule, the SQL distance functions
+  * installs the kNN-join lowering rule and the strategy that plans its
+  * IndexedKnnJoin nodes, the SQL distance functions
   * (`vector_distance` + fixed-metric shorthands, native expressions), and
   * the `knn_join` table-valued function (plans this file's logical node
   * from pure SQL). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(session => ResolveKnnJoin(session))
+    ext.injectPlannerStrategy(_ => GraftStrategy)
     graft.functions.SqlFunctions.descriptions.foreach(ext.injectFunction)
     ext.injectTableFunction(graft.functions.SqlFunctions.knnJoinTable)
     ext.injectTableFunction(graft.functions.SqlFunctions.knnJoinFilteredTable)

@@ -40,21 +40,29 @@ import org.apache.spark.sql.types._
   *     the distributed path. */
 object SidecarIO {
 
-  private def dataFiles(spark: SparkSession, dir: String): Option[Seq[Path]] = {
+  /** The visible data files of `dir` in path order; `recursive` also
+    * walks its subdirectories (the `list_id=N` partitions of a list table). */
+  private def dataFiles(spark: SparkSession, dir: String,
+      recursive: Boolean = false): Option[Seq[Path]] = {
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    def visible(s: org.apache.hadoop.fs.FileStatus) =
+      !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith(".")
+    def walk(d: Path): Iterator[Path] = fs.listStatus(d).iterator.filter(visible).flatMap { s =>
+      if (s.isFile) Iterator(s.getPath).filter(_ => s.getLen > 0)
+      else if (recursive) walk(s.getPath)
+      else Iterator.empty
+    }
     if (!fs.exists(p)) None
     else if (fs.getFileStatus(p).isFile) Some(Seq(p))
-    else Some(fs.listStatus(p).iterator
-      .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
-        !s.getPath.getName.startsWith(".") && s.getLen > 0)
-      .map(_.getPath).toSeq.sortBy(_.getName))
+    else Some(walk(p).toSeq.sortBy(_.toString))
   }
 
-  /** Footer-only total row count — reads parquet metadata, zero data
-    * pages, zero jobs. None when the path is missing. */
+  /** Footer-only total row count of the parquet files under `dir`,
+    * partition subdirectories included — reads parquet metadata, zero
+    * data pages, zero jobs. None when the path is missing. */
   def rowCount(spark: SparkSession, dir: String): Option[Long] =
-    dataFiles(spark, dir).map { files =>
+    dataFiles(spark, dir, recursive = true).map { files =>
       val conf = spark.sessionState.newHadoopConf()
       files.iterator.map { f =>
         val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))

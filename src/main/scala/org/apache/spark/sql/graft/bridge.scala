@@ -28,6 +28,24 @@ object bridge {
   def optimizedPlanOf(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution.optimizedPlan
 
+  /** The QueryExecution of `plan` in `spark` — the plan-level handle a
+    * DataFrame wraps, for callers inside the optimizer that only need the
+    * optimized plan or the rows. */
+  def executePlan(spark: org.apache.spark.sql.SparkSession,
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): org.apache.spark.sql.execution.QueryExecution =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.executePlan(plan)
+
+  /** Every row of `qe`, collected under its own SQL execution id as a
+    * Dataset action would. */
+  def collect(qe: org.apache.spark.sql.execution.QueryExecution): Array[org.apache.spark.sql.catalyst.InternalRow] =
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe)(qe.executedPlan.executeCollect())
+
+  /** The session's physical planner (sessionState is private[sql]) — lets
+    * the library check for an extensions-injected strategy before adding
+    * a runtime copy to experimental.extraStrategies. */
+  def planner(spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.execution.SparkPlanner =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.planner
+
   /** The session's SQL function registry (sessionState is private[sql]) —
     * lets the library register native expressions as SQL functions at
     * runtime, the same registry `spark.sql.extensions` feeds at startup. */
