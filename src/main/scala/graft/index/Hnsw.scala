@@ -358,8 +358,8 @@ object Hnsw {
       .getOrElse(throw new IllegalStateException(s"no hnsw_meta at $path"))
     val curveKN = IvfFlatIndex.loadCurveKN(spark, path, "ef_curve")
     Index(
-      spark.read.parquet(s"$path/hnsw_levels"),
-      spark.read.parquet(s"$path/hnsw_edges"),
+      SidecarIO.readTable(spark, s"$path/hnsw_levels"),
+      SidecarIO.readTable(spark, s"$path/hnsw_edges", Some("level")),
       SidecarIO.asInt(meta("max_level")), SidecarIO.asLong(meta("entry_point")),
       Params(SidecarIO.asInt(meta("m")), SidecarIO.asLong(meta("seed")),
         Metric.fromName(meta("metric").asInstanceOf[String])),

@@ -254,16 +254,10 @@ object IvfFlatIndex {
 
   /** A saved `partitionBy("list_id")` list table (lists, pq_lists,
     * pqcl_lists, sq_lists, scann_lists, rabitq_lists), read with the
-    * schema its writer recorded in the first data file's footer plus the
-    * `list_id int` partition column — the schema inference would return,
-    * without the inference job every load used to run. A table whose
-    * footer carries no Spark schema is read with inference. */
+    * schema its footers recorded (`SidecarIO.readTable`), not the
+    * inference job every load used to run. */
   private[graft] def readListTable(spark: SparkSession, dir: String): DataFrame =
-    graft.sources.SidecarIO.sparkSchema(spark, dir) match {
-      case Some(data) =>
-        spark.read.schema(data.add("list_id", "int")).parquet(dir)
-      case None => spark.read.parquet(dir)
-    }
+    graft.sources.SidecarIO.readTable(spark, dir, Some("list_id"))
 
   /** Unit-L2-normalized copy of a float-vector column (zero vectors pass
     * through unchanged). The cosine PQ builds store NORMALIZED vectors so

@@ -23,6 +23,14 @@ private[graft] final class ScanBatch(
     probing.forEach((l, _) => b += l)
     b.toSeq
   }
+
+  /** This batch with list `lid` also probed by every position — the
+    * tiered route's delta tier, scanned exactly for every query. */
+  def probingAll(lid: Int): ScanBatch = {
+    val all = new java.util.HashMap[Int, Array[Int]](probing)
+    all.put(lid, Array.range(0, size))
+    new ScanBatch(vecs, slot, all)
+  }
 }
 
 /** The per-task kernel of the probe-pruned IVF searches (ivfflat_interleaved_scan
@@ -136,19 +144,24 @@ private[graft] final case class FlatScan(metric: Metric) extends ListScan {
     }))
   }
 
+  /** A row with a null vector scores nothing, as the refine scan skips
+    * it; a row whose dimension is not its query's fails the scan. */
   def scan(rows: Iterator[InternalRow], batch: ScanBatch, bufK: Int): Array[TopKBuf] = {
     val fn = graft.core.Distance.fn(metric)
     val bufs = new Array[TopKBuf](batch.size)
     rows.foreach { row =>
       val probing = batch.probing.get(row.getInt(0))
-      if (probing != null) {
+      if (probing != null && !row.isNullAt(2)) {
         val nid = row.getLong(1)
         val nvec = row.getArray(2).toFloatArray()
         var t = 0
         while (t < probing.length) {
           val qi = probing(t)
+          val q = batch.vecs(batch.slot(qi))
+          if (q.length != nvec.length) throw new IllegalArgumentException(
+            s"list row $nid has dimension ${nvec.length}, the query ${q.length}")
           if (bufs(qi) == null) bufs(qi) = newBuf(bufK)
-          bufs(qi).insert(fn(batch.vecs(batch.slot(qi)), nvec), nid)
+          bufs(qi).insert(fn(q, nvec), nid)
           t += 1
         }
       }

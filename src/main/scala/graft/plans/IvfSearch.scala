@@ -23,23 +23,27 @@ private[graft] final case class RefineFinish(metric: Metric) extends Finish
 /** What ResolveKnnJoin decided for one index-routed kNN node: the layout
   * and its live path, the list scan, the probed batch (each query
   * position's probed lists, computed once on the driver), the probe count,
-  * the reorder depth, the finish, and why. */
+  * the reorder depth, the finish, and why. A tiered layout also records
+  * its delta tier's row count: a non-empty delta is scanned as list
+  * `nLists`, which the batch has every query probe. */
 private[graft] final case class IvfSearch(layout: String, indexPath: String,
     scan: ListScan, batch: ScanBatch, nLists: Int, probes: Int, depth: Int, k: Int,
-    finish: Finish, reason: String) {
+    finish: Finish, reason: String, deltaRows: Option[Long] = None) {
   def describe: String = {
     val fin = finish match {
       case DirectFinish(sqrt, _) => if (sqrt) "direct(sqrt)" else "direct"
       case RefineFinish(m) => s"refine(${m.name})"
     }
     s"$layout $indexPath, probes=$probes/$nLists, depth=$depth, k=$k, $fin, " +
-      s"queries=${batch.size} [$reason]"
+      s"queries=${batch.size}${deltaRows.fold("")(n => s", delta=$n rows")} [$reason]"
   }
 }
 
 /** The resolved form of an index-routed KnnJoinPlan: the decision plus the
   * three inputs the search reads — the layout's list relation under a
-  * `list_id IN (probed)` filter, projected to (list_id, id, payload); the
+  * `list_id IN (probed)` filter, projected to (list_id, id, payload), and
+  * for a tiered layout with a non-empty delta, unioned with the delta
+  * projected to the same columns under list id `nLists`; the
   * data child as (id, vec), present only for the refine finish; and the
   * driver-held (qid, qvec) query relation. Its output is the node's
   * declared attributes. GraftStrategy plans it as one IvfSearchExec. */

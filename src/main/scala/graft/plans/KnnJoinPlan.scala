@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession, SparkSessionExtens
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Alias, Cast,
   In, Literal, NamedExpression, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, Filter, LocalRelation, LogicalPlan,
-  Project}
+  Project, Union}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.functions.{col, count, lit, pmod, sqrt, when, xxhash64}
 import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, IntegerType, LongType}
@@ -175,8 +175,11 @@ object GraftIndexCatalog {
     * as the sidecar memos, and `invalidateStats()` drops them too. A
     * loaded layout holds frames bound to the session that read it, so an
     * entry is served only to that session; another session loads its
-    * own. Tiered layouts are never memoized: `TieredIngest.append` changes
-    * their delta under a live registration. */
+    * own. Of a tiered layout only the base tier is memoized, under
+    * `<live>/tiered_base`: a committed version never changes (compaction
+    * writes a new version directory and calls `invalidateStats()`), while
+    * `TieredIngest.append` changes the delta under a live registration,
+    * so the delta is read on every rewrite. */
   private val loadedMemo =
     scala.collection.concurrent.TrieMap.empty[(String, String), (SparkSession, AnyRef)]
   private[graft] def cachedLoad[T <: AnyRef](spark: SparkSession, indexPath: String)(
@@ -303,7 +306,7 @@ object GraftIndexCatalog {
 }
 
 /** Lowers KnnJoinPlan into a route chosen by the planner: a registered
-  * IVF-Flat or IVF-PQ layout on the unfiltered data relation, with a query
+  * IVF-Flat, IVF-PQ or tiered layout on the unfiltered data relation, with a query
   * side the LocalKernel gates admit (vectors, and queries·depth candidate
   * entries) -> an IndexedKnnJoin node that
   * GraftStrategy plans as one IvfSearchExec (probe-pruned scan + finish);
@@ -782,18 +785,20 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
         else None
 
       /** The inputs IvfSearchExec scans a layout with: its list table,
-        * centroids and list kernel, the probe count, and whether queries
-        * are unit-normalized before scanning (a cosine build stored
-        * unit-normalized rows; refine ranks the raw vectors). */
+        * centroids and list kernel, the probe count, whether queries are
+        * unit-normalized before scanning (a cosine build stored
+        * unit-normalized rows; refine ranks the raw vectors), and a tiered
+        * layout's delta tier with its row count. */
       final case class ScanInputs(lists: DataFrame, cs: graft.expr.CentroidSet,
-          scan: graft.index.ListScan, probes: Int, probeReason: String, normalize: Boolean)
+          scan: graft.index.ListScan, probes: Int, probeReason: String, normalize: Boolean,
+          delta: Option[(DataFrame, Long)] = None)
 
       /** A layout's candidate generation at one reorder depth, decided:
         * the metric its `dist` column is computed in, whether those
         * distances are EXACT (raw-vector layouts) or code-space estimates
         * (ADC / decoded int8), the DataFrame lowering, and — for the
-        * layouts IvfSearchExec runs (IVF-Flat, per-subspace IVF-PQ) — the
-        * scan inputs. */
+        * layouts IvfSearchExec runs (IVF-Flat, per-subspace IVF-PQ,
+        * tiered) — the scan inputs. */
       final case class Cand(metric: Metric, exact: Boolean, frame: () => DataFrame,
           scan: Option[ScanInputs] = None)
 
@@ -839,10 +844,22 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
             // tiers carry EXACT raw-vector distances, so the route
             // finishes directly like IVF-Flat. The registration contract
             // covers the pair: base + delta must equal the relation.
-            val idx = graft.stream.TieredIndex.load(spark, e.indexPath)
+            // e.indexPath is the live version directory (entriesFor): its
+            // base tier is memoized, its delta read on every rewrite.
+            val basePath = s"${e.indexPath}/tiered_base"
+            val idx = graft.stream.TieredIndex.loadLive(spark, e.indexPath,
+              GraftIndexCatalog.cachedLoad(spark, basePath)(
+                graft.index.IvfFlatIndex.load(spark, basePath)))
             if (!rankCompatible(idx.metric, metric)) None
-            else Some(Cand(idx.metric, exact = true, () => idx.search(queries, depth,
-              resolveProbes(e, base, idx.base.centroids.k, depth))))
+            else {
+              val (probes, why) = probesOf(e, base, idx.base.centroids.k, depth)
+              // a legacy save without a recorded delta count keeps the
+              // DataFrame route, which probes the delta with a job
+              Some(Cand(idx.metric, exact = true, () => idx.search(queries, depth, probes),
+                idx.knownDeltaRows.map(n => ScanInputs(idx.base.lists, idx.base.centroids,
+                  idx.base.listScan, probes, why, normalize = false,
+                  delta = Some((idx.delta, n))))))
+            }
           case "ivf_sq" =>
             // decoded int8 scored under the index's own metric —
             // quantization noise makes the dists estimates, not exact
@@ -1077,14 +1094,16 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
 
       /** The resolved IndexedKnnJoin of a route: the probed batch built
         * on the driver from the held queries, the list relation pruned to
-        * the probed lists, the data child for the refine finish. */
+        * the probed lists — for a tiered layout with a non-empty delta,
+        * unioned with the delta as list `nLists`, which every query
+        * probes — and the data child for the refine finish. */
       def lowerIndexed(r: Route, si: ScanInputs, held: LocalRelation): LogicalPlan = {
         GraftIndexCatalog.recordRoute(nodeIds, Some((r.layout, r.e.indexPath)))
         val vecs = held.data.map { row =>
           val v = row.getArray(1)
           (if (si.normalize) graft.expr.VectorNormOps.unitNorm(v) else v).toFloatArray()
         }.toArray
-        val batch = si.scan.batch(si.cs, vecs, _ => si.probes)
+        val probed = si.scan.batch(si.cs, vecs, _ => si.probes)
         val rel = B.planOf(si.lists) match {
           case m: org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation =>
             m.newInstance()
@@ -1097,7 +1116,19 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
             Alias(Cast(lid, IntegerType), "list_id")(),
             Alias(Cast(listAttr("id"), LongType), "id")(),
             Alias(Cast(listAttr(si.scan.payload), si.scan.payloadType), si.scan.payload)()),
-          Filter(In(Cast(lid, IntegerType), batch.probedLists.sorted.map(Literal(_))), rel))
+          Filter(In(Cast(lid, IntegerType), probed.probedLists.sorted.map(Literal(_))), rel))
+        val (lists, batch) = si.delta match {
+          case Some((delta, n)) if n > 0 =>
+            val d = B.planOf(delta)
+            def deltaAttr(name: String) = d.output.find(_.name == name).getOrElse(
+              throw new IllegalStateException(s"delta tier at ${r.e.indexPath} has no $name"))
+            (Union(listPlan, Project(Seq(
+                Alias(Literal(si.cs.k), "list_id")(),
+                Alias(Cast(deltaAttr("id"), LongType), "id")(),
+                Alias(Cast(deltaAttr("vec"), si.scan.payloadType), si.scan.payload)()), d)),
+              probed.probingAll(si.cs.k))
+          case _ => (listPlan, probed)
+        }
         val (fin, dataPlan) = r.direct match {
           case Some(sq) => (DirectFinish(sq, Metric.isMinClose(metric)), None)
           case None =>
@@ -1109,8 +1140,8 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
         }
         ResolveKnnJoin.ensureStrategy(spark)
         IndexedKnnJoin(IvfSearch(r.layout, r.e.indexPath, si.scan, batch, si.cs.k, si.probes,
-          r.depth, kj.k, fin, s"${si.probeReason}, ${r.depthReason}"), listPlan, dataPlan,
-          held, kj.output)
+          r.depth, kj.k, fin, s"${si.probeReason}, ${r.depthReason}", si.delta.map(_._2)),
+          lists, dataPlan, held, kj.output)
       }
 
       // Plan-time statistics gate — the search_plan.cuh:113-133 analog:

@@ -222,6 +222,20 @@ object SidecarIO {
           .SPARK_METADATA_KEY))
     }.map(DataType.fromJson(_).asInstanceOf[StructType])
 
+  /** The parquet table at `dir` read with the schema its writer recorded
+    * in a footer (`sparkSchema`), plus the int column of a table
+    * partitioned by `partition` — the schema inference would return,
+    * without its job. By inference when no footer has it. For list
+    * tables, graph tables and the tiered delta, not only sidecars: only
+    * the schema is read on the driver. */
+  def readTable(spark: SparkSession, dir: String, partition: Option[String] = None,
+      options: Map[String, String] = Map.empty): DataFrame = {
+    val reader = spark.read.options(options)
+    sparkSchema(spark, dir)
+      .fold(reader)(s => reader.schema(partition.fold(s)(s.add(_, IntegerType))))
+      .parquet(dir)
+  }
+
   /** A small sidecar as a driver-held frame: the Spark schema its writer
     * recorded and every row (`readRows`'s cap applies). Feeding it to
     * `write` copies the sidecar verbatim with no job. For the field types

@@ -13,6 +13,13 @@ import graft.ops.{BruteForceKnn, Refine}
   * search with an exact scan of the (small) delta, and `compact` folds the
   * delta into the ANN tier once it crosses `minAnnRows`.
   *
+  * The kNN-join planner's route over a saved tiered layout does not call
+  * `search`: it scans the delta as one more list, probed by every query,
+  * in the IVF-Flat list kernel (`graft.index.FlatScan` under
+  * `graft.plans.IvfSearchExec`), so a batch scans both tiers in one job.
+  * `search` remains the library API and the planner's route for filtered
+  * shapes and query sides past the local-kernel budget.
+  *
   * This is the Delta-table pattern of SURVEY.md §1.1/§2.7: base = the big
   * immutable partitioned table, delta = the streaming append target
   * (Structured Streaming foreachBatch calls `extend` per micro-batch —
@@ -28,16 +35,23 @@ class TieredIndex private (
     // constructs the search at REWRITE time, and delta.isEmpty there
     // would run a Spark job inside the optimizer per re-optimization;
     // None (live extend() chains) falls back to the isEmpty probe
-    private val knownDeltaRows: Option[Long] = None) extends Serializable {
+    private[graft] val knownDeltaRows: Option[Long] = None) extends Serializable {
 
   /** Union of ANN-tier search (nProbes pruning) and exact delta scan,
-    * re-merged per query — knn_merge_parts across tiers. */
+    * re-merged per query — knn_merge_parts across tiers. A delta row with
+    * a null vector is skipped and one of another dimension than the
+    * index fails the search, as in the planner's list-kernel route. */
   def search(queries: DataFrame, k: Int, nProbes: Int,
       qidCol: String = "qid", qvecCol: String = "qvec"): DataFrame = {
     val fromBase = base.search(queries, k, nProbes, qidCol, qvecCol)
     if (knownDeltaRows.map(_ == 0L).getOrElse(delta.isEmpty)) fromBase
     else {
-      val fromDelta = BruteForceKnn.knnJoin(delta, queries, k, metric,
+      val dim = base.centroids.dim
+      val checked = delta.filter(col("vec").isNotNull).select(col("id"),
+        when(size(col("vec")) === dim, col("vec")).otherwise(raise_error(
+          concat(lit("delta row "), col("id").cast("string"), lit(" has dimension "),
+            size(col("vec")).cast("string"), lit(s", the index $dim")))).as("vec"))
+      val fromDelta = BruteForceKnn.knnJoin(checked, queries, k, metric,
         "id", "vec", qidCol, qvecCol)
       Refine.mergeParts(k, metric, fromBase, fromDelta)
     }
@@ -117,9 +131,15 @@ object TieredIndex {
     * indirection is resolved exactly once, here and in the planner's
     * registration lookup, never inside the readers below. */
   private[stream] def loadLive(spark: org.apache.spark.sql.SparkSession,
-      live: String): TieredIndex = {
+      live: String): TieredIndex =
+    loadLive(spark, live, IvfFlatIndex.load(spark, s"$live/tiered_base"))
+
+  /** `loadLive` over an already loaded ANN tier — the planner's memoized
+    * load of `<live>/tiered_base`, which never changes once committed;
+    * `tiered_meta` and the delta are read here, on every call. */
+  private[graft] def loadLive(spark: org.apache.spark.sql.SparkSession,
+      live: String, base: IvfFlatIndex): TieredIndex = {
     val meta = TieredIngest.readOneRowSidecar(spark, s"$live/tiered_meta")
-    val base = IvfFlatIndex.load(spark, s"$live/tiered_base")
     // legacy saves predate the delta_rows column — fall back to the probe
     val deltaRows = meta.get("delta_rows").map(graft.sources.SidecarIO.asLong)
     new TieredIndex(base, readDelta(spark, live),
@@ -136,10 +156,7 @@ object TieredIndex {
   private[stream] def readDelta(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame = {
     // the schema the writer recorded in a footer, not an inference job
-    // per load (IvfFlatIndex.readListTable); inference when no footer has it
-    val reader = spark.read.option("recursiveFileLookup", "true")
-    SidecarIO.sparkSchema(spark, s"$path/delta").fold(reader)(reader.schema)
-      .parquet(s"$path/delta")
+    SidecarIO.readTable(spark, s"$path/delta", options = Map("recursiveFileLookup" -> "true"))
       .select(col("id").cast("long").as("id"), col("vec"))
   }
 

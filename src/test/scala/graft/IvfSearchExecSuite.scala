@@ -7,9 +7,10 @@ import graft.core.Metric
 import graft.index.{IvfFlatIndex, IvfPqIndex}
 import graft.ops.BruteForceKnn
 import graft.plans.{GraftExtensions, GraftIndexCatalog, GraftStrategy, IndexRoute, IvfSearchExec,
-  KnnJoinPlan}
+  KnnJoinPlan, RefineFinish}
+import graft.stream.{TieredIndex, TieredIngest}
 
-/** The IVF-Flat / IVF-PQ kNN-join route as one physical operator
+/** The IVF-Flat / IVF-PQ / tiered kNN-join route as one physical operator
   * (IvfSearchExec): the rows it returns are those of the public search
   * APIs run through their probe-join route (the local kernel off, so the
   * oracle shares no scan code with the operator) and of brute force at
@@ -321,5 +322,155 @@ class IvfSearchExecSuite extends SparkFunSuite {
       assert(exec(df).isDefined, s"${df.queryExecution.executedPlan}")
       assert(sorted(df) == expected)
     } finally GraftIndexCatalog.unregister(dataPath)
+  }
+
+  // ------------------------------------------------------------------ tiered
+
+  private lazy val baseRows = emb.filter(col("vec_id") % 5 =!= 0)
+  private lazy val deltaRows = emb.filter(col("vec_id") % 5 === 0)
+
+  /** A saved tiered layout: an IVF-Flat base built over `base`, then
+    * `delta`, when given, appended through TieredIngest. */
+  private def tiered(tag: String, base: DataFrame, delta: Option[DataFrame] = None,
+      m: Metric = Metric.L2): String = {
+    val p = tmp(tag)
+    TieredIndex.build(base, IvfFlatIndex.Params(nLists = 8, nIters = 5, metric = m),
+      idCol = "vec_id", vecCol = "embedding").save(p)
+    delta.foreach(TieredIngest.append(_, p, "vec_id", "embedding"))
+    p
+  }
+
+  private def node(q: DataFrame, m: Metric = Metric.L2): DataFrame =
+    KnnJoinPlan.knnJoin(emb, q, 10, m, "vec_id", "embedding")
+
+  private def explained(df: DataFrame): String =
+    df.queryExecution.explainString(org.apache.spark.sql.execution.SimpleMode)
+
+  test("tiered: the rows of TieredIndex.search with a direct finish, and of brute force at " +
+      "full probes, for L2-, IP- and cosine-built bases; explain shows the delta") {
+    val q = localQ(qRows)
+    for (m <- Seq(Metric.L2, Metric.InnerProduct, Metric.Cosine)) {
+      val p = tiered(s"t${m.name}", baseRows, Some(deltaRows), m)
+      val idx = TieredIndex.load(spark, p)
+      val finishes: Seq[(Metric, Column => Column, String)] =
+        if (m == Metric.L2) Seq((m, identity, "direct,"), (Metric.L2Sqrt, sqrt, "direct(sqrt)"))
+        else Seq((m, identity, "direct,"))
+      withRegistered(dataPath, (p, 2, 30)) {
+        for ((nm, dist, shown) <- finishes) {
+          val df = node(q, nm)
+          val e = exec(df).getOrElse(fail(s"no IvfSearchExec:\n${df.queryExecution.executedPlan}"))
+          assert(e.search.layout == "tiered" && e.search.deltaRows.contains(100L))
+          for (part <- Seq("IvfSearchExec tiered", "probes=2/8", "depth=30", shown,
+              "delta=100 rows"))
+            assert(explained(df).contains(part), s"explain lacks '$part':\n${explained(df)}")
+          assert(sorted(df) == joinRoute(BruteForceKnn.knnFromDistances(idx.search(q, 30, 2)
+            .select(col("qid"), col("nbr_id").as("id"), dist(col("dist")).as("dist")), 10,
+            Metric.isMinClose(m))), s"${m.name} base, ${nm.name} node")
+        }
+      }
+      withRegistered(dataPath, (p, 8, 30)) {
+        assert(routed(emb, q, 10, m) == joinRoute(BruteForceKnn.knnJoin(emb, q, 10, m,
+          "vec_id", "embedding")), m.name)
+      }
+    }
+  }
+
+  test("tiered: a version-directory layout registered by its root takes the operator; a " +
+      "repeat batch plans with no job and collects in one; an append is seen unregistered") {
+    val p = tiered("versions", baseRows)
+    TieredIndex.compactInPlace(spark, p)
+    val live = TieredIndex.resolveLive(spark, p)
+    assert(live != p, "compaction must commit a version directory")
+    val q = localQ(qRows)
+    def brute(data: DataFrame) =
+      joinRoute(BruteForceKnn.knnJoin(data, q, 10, Metric.L2, "vec_id", "embedding"))
+    withRegistered(dataPath, (p, 8, 30)) {
+      // an empty delta adds no child to the list scan
+      val empty = node(q)
+      val e0 = exec(empty).getOrElse(fail(s"${empty.queryExecution.executedPlan}"))
+      assert(e0.search.deltaRows.contains(0L) && e0.search.indexPath == live)
+      assert(e0.lists.collect { case u: org.apache.spark.sql.execution.UnionExec => u }.isEmpty)
+      assert(sorted(empty) == brute(baseRows))
+      // appended under the live registration: the next rewrite scans it
+      TieredIngest.append(deltaRows, p, "vec_id", "embedding")
+      node(q).collect()
+      val df = node(q)
+      assert(jobsDuring(df.queryExecution.executedPlan) == 0)
+      assert(jobsDuring(df.collect()) == 1)
+      val e = exec(df).getOrElse(fail(s"${df.queryExecution.executedPlan}"))
+      assert(e.search.deltaRows.contains(100L) && e.search.indexPath == live)
+      assert(explained(df).contains(s"IvfSearchExec tiered $live"))
+      assert(IndexRoute.routedThrough(df, p))
+      assert(sorted(df) == brute(emb))
+    }
+  }
+
+  test("tiered: queries·depth past the entry budget keeps the DataFrame route, and " +
+      "directFinish off takes the refine finish, with the same rows") {
+    val p = tiered("fallbacks", baseRows, Some(deltaRows))
+    val q = localQ(qRows)
+    withRegistered(dataPath, (p, 2, 30)) {
+      val expected = routed(emb, q, 10, Metric.L2)
+      withConf("spark.graft.localKernel.maxEdges" -> (qRows.size.toLong * 30 - 1).toString) {
+        val df = node(q)
+        assert(exec(df).isEmpty, s"over budget, yet:\n${df.queryExecution.executedPlan}")
+        assert(IndexRoute.routedThrough(df, p))
+        assert(sorted(df) == expected)
+      }
+      withConf("spark.graft.knnJoin.directFinish.enabled" -> "false") {
+        val df = node(q)
+        assert(exec(df).exists(_.search.finish == RefineFinish(Metric.L2)),
+          s"${df.queryExecution.executedPlan}")
+        assert(sorted(df) == expected)
+      }
+    }
+  }
+
+  test("tiered edge inputs: the operator and the DataFrame route give the same rows, or " +
+      "both fail with the delta row's dimension") {
+    val s = spark
+    import s.implicits._
+    val q = localQ(qRows)
+    val v0 = qRows.head._2
+    val sameBase = emb.filter(col("vec_id") % 5 === 1)
+    val cases: Seq[(String, Option[DataFrame])] = Seq(
+      "empty delta" -> None,
+      "a null vector" -> Some(Seq[(Long, Array[Float])]((100000L, null), (100001L, v0))
+        .toDF("vec_id", "embedding")),
+      "ids in both tiers" -> Some(sameBase.select(col("vec_id"), col("embedding"))
+        .unionByName(Seq((1L, v0)).toDF("vec_id", "embedding"))),
+      "ties across the tiers" -> Some(sameBase.select((col("vec_id") + 100000).as("vec_id"),
+        col("embedding"))))
+    for ((name, delta) <- cases) {
+      val p = tiered(name.replace(' ', '_'), baseRows, delta)
+      withRegistered(dataPath, (p, 2, 30)) {
+        val df = node(q)
+        assert(exec(df).isDefined, s"$name: ${df.queryExecution.executedPlan}")
+        val viaFrame = withConf("spark.graft.localKernel.enabled" -> "false") {
+          val f = node(q)
+          assert(exec(f).isEmpty && IndexRoute.routedThrough(f, p), name)
+          sorted(f)
+        }
+        assert(sorted(df) == viaFrame, name)
+      }
+    }
+    // a delta row of another dimension than the index
+    val p = tiered("wrongdim", baseRows,
+      Some(Seq((100000L, v0.take(63))).toDF("vec_id", "embedding")))
+    def failure(df: => DataFrame): String = {
+      val e = intercept[Exception](df.collect())
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+        .mkString(" / ")
+    }
+    withRegistered(dataPath, (p, 2, 30)) {
+      val viaExec = failure {
+        val df = node(q)
+        assert(exec(df).isDefined)
+        df
+      }
+      val viaFrame = withConf("spark.graft.localKernel.enabled" -> "false")(failure(node(q)))
+      for (msg <- Seq(viaExec, viaFrame))
+        assert(msg.contains("100000 has dimension 63"), msg)
+    }
   }
 }

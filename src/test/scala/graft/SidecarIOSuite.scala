@@ -103,4 +103,23 @@ class SidecarIOSuite extends SparkFunSuite {
     assert(loaded.lists.count() == emb.count())
     assert(loaded.lists.exceptAll(inferred).isEmpty)
   }
+
+  test("a saved HNSW layout loads with no job and the schemas inference gives") {
+    val e = spark.read.parquet(s"${SparkTestBase.sf0001}/embeddings.parquet")
+      .select(col("vec_id").as("id"), col("embedding").as("vec"))
+    val dir = tmp("hnsw")
+    val idx = graft.index.Hnsw.fromGraph(
+      graft.graphops.AllNeighbors.exact(e, 8, graft.core.Metric.L2, "id", "vec"), e,
+      graft.index.Hnsw.Params(m = 8), "id", "vec")
+    spark.conf.set("spark.graft.index.recallCurve.enabled", "false")
+    try graft.index.Hnsw.save(idx, dir)
+    finally spark.conf.unset("spark.graft.index.recallCurve.enabled")
+    var loaded: graft.index.Hnsw.Index = null
+    assert(jobsDuring { loaded = graft.index.Hnsw.load(spark, dir) } == 0)
+    for ((got, table) <- Seq(loaded.levels -> "hnsw_levels", loaded.edges -> "hnsw_edges")) {
+      val inferred = spark.read.parquet(s"$dir/$table")
+      assert(got.schema == inferred.schema, table)
+      assert(got.exceptAll(inferred).isEmpty && inferred.exceptAll(got).isEmpty, table)
+    }
+  }
 }
