@@ -136,13 +136,19 @@ class IvfFlatIndex(
     * probe/recall curve (`recall_curve`) so auto-probe selection inverts
     * THIS index's geometry instead of a fixture constant — the
     * per-config floor discipline of ann_ivf_flat.cuh:102. */
-  def save(path: String): Unit = {
-    val nRows = IvfFlatIndex.writeLists(lists, s"$path/lists")
+  def save(path: String): Unit = save(path, s"$path/lists")
+
+  /** `save` with the list table written to `listsDir` instead of
+    * `<path>/lists` (a tiered layout keeps its base tier's lists in the
+    * layout's list store); returns the rows written. */
+  private[graft] def save(path: String, listsDir: String): Long = {
+    val nRows = IvfFlatIndex.writeLists(lists, listsDir)
     val spark = lists.sparkSession
     IvfFlatIndex.saveCentroids(spark, path, centroids, metric)
     IvfFlatIndex.saveMeta(spark, path, nRows)
     if (IvfFlatIndex.recallCurveEnabled(spark))
       IvfFlatIndex.saveRecallCurve(spark, path, this, nRows)
+    nRows
   }
 
   // held-out ground truths measured over THESE lists, per (metric, sample
@@ -178,7 +184,7 @@ object IvfFlatIndex {
       trainFraction: Double = 0.5, seed: Long = 42, metric: Metric = Metric.L2,
       balanced: Boolean = false, trainsetCap: Long = 0)
 
-  private[index] def assign(df: DataFrame, centroids: CentroidSet,
+  private[graft] def assign(df: DataFrame, centroids: CentroidSet,
       idCol: String, vecCol: String): DataFrame = {
     val (cl, _) = KMeans.assignCols(centroids, col(vecCol))
     df.select(cl.as("list_id"), col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
@@ -231,9 +237,16 @@ object IvfFlatIndex {
       s"$path/centroids")
   }
 
-  def load(spark: SparkSession, path: String): IvfFlatIndex = {
+  def load(spark: SparkSession, path: String): IvfFlatIndex =
+    load(spark, path, Seq(s"$path/lists"))
+
+  /** The layout at `path` with its list table read from `listDirs`, one
+    * relation over all of them (a tiered layout's base tier: the list
+    * store directories its `list_dirs` sidecar names). */
+  private[graft] def load(spark: SparkSession, path: String,
+      listDirs: Seq[String]): IvfFlatIndex = {
     val (centroids, metric) = loadCentroids(spark, path)
-    new IvfFlatIndex(centroids, readListTable(spark, s"$path/lists"), metric)
+    new IvfFlatIndex(centroids, readListTable(spark, listDirs: _*), metric)
   }
 
   /** Write a layout's list table partitioned by `list_id` (DPP / static
@@ -255,9 +268,11 @@ object IvfFlatIndex {
   /** A saved `partitionBy("list_id")` list table (lists, pq_lists,
     * pqcl_lists, sq_lists, scann_lists, rabitq_lists), read with the
     * schema its footers recorded (`SidecarIO.readTable`), not the
-    * inference job every load used to run. */
-  private[graft] def readListTable(spark: SparkSession, dir: String): DataFrame =
-    graft.sources.SidecarIO.readTable(spark, dir, Some("list_id"))
+    * inference job every load used to run. Several directories (a tiered
+    * base tier's list store) read as one relation, `list_id` discovered
+    * under each. */
+  private[graft] def readListTable(spark: SparkSession, dirs: String*): DataFrame =
+    graft.sources.SidecarIO.readTables(spark, dirs, Some("list_id"))
 
   /** Unit-L2-normalized copy of a float-vector column (zero vectors pass
     * through unchanged). The cosine PQ builds store NORMALIZED vectors so

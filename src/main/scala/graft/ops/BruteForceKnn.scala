@@ -39,7 +39,9 @@ object BruteForceKnn {
     * pre-rounded float data if bit-exact double semantics matter. */
   private[graft] def asFloatVec(c: Column): Column = c.cast("array<float>")
 
-  /** Returns (qid, nbr_id, rank, dist), rank 1..k best-first. */
+  /** Returns (qid, nbr_id, rank, dist), rank 1..k best-first. A data row
+    * whose dimension is not its query's fails the search with its id and
+    * dimension, on both routes, as the index list scans do. */
   def knnJoin(dataset: DataFrame, queries: DataFrame, k: Int,
       metric: Metric = Metric.L2Sqrt,
       idCol: String = "id", vecCol: String = "vec",
@@ -126,6 +128,8 @@ object BruteForceKnn {
           rows.foreach { case (nid, nvec) =>
             var i = 0
             while (i < qs.length) {
+              if (qs(i)._2.length != nvec.length) throw new IllegalArgumentException(
+                s"data row $nid has dimension ${nvec.length}, the query ${qs(i)._2.length}")
               if (l2Fast) {
                 val raw = bufs(i).bound
                 val bnd = if (sqrtOut && !raw.isInfinity) Math.nextUp(Math.nextUp(raw * raw)) else raw
@@ -149,9 +153,15 @@ object BruteForceKnn {
           if (qArr != null && qArr.length <= maxV)
             qArr.toSeq.toDF("qid", "_qvec")
           else q
+        val nvec = col("_nvec")
+        val qdim = size(col("_qvec"))
+        val checked = when(nvec.isNull || col("_qvec").isNull || size(nvec) === qdim, nvec)
+          .otherwise(raise_error(concat(lit("data row "), col("_nid").cast("string"),
+            lit(" has dimension "), size(nvec).cast("string"), lit(", the query "),
+            qdim.cast("string"))))
         d.crossJoin(broadcast(qDf))
           .select(col("qid"), col("_nid"),
-            vector_distance(metric, col("_qvec"), col("_nvec")).as("dist"))
+            vector_distance(metric, col("_qvec"), checked).as("dist"))
       }
     topKPerQuery(pairs, k, metric)
   }

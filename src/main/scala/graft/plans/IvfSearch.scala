@@ -24,18 +24,22 @@ private[graft] final case class RefineFinish(metric: Metric) extends Finish
   * and its live path, the list scan, the probed batch (each query
   * position's probed lists, computed once on the driver), the probe count,
   * the reorder depth, the finish, and why. A tiered layout also records
-  * its delta tier's row count: a non-empty delta is scanned as list
-  * `nLists`, which the batch has every query probe. */
+  * its delta tier's row count — a non-empty delta is scanned as list
+  * `nLists`, which the batch has every query probe — and its base tier's
+  * shape: the list-store directories it reads and the population its
+  * recall curve was measured at. */
 private[graft] final case class IvfSearch(layout: String, indexPath: String,
     scan: ListScan, batch: ScanBatch, nLists: Int, probes: Int, depth: Int, k: Int,
-    finish: Finish, reason: String, deltaRows: Option[Long] = None) {
+    finish: Finish, reason: String, deltaRows: Option[Long] = None,
+    baseShape: Option[graft.stream.TieredIndex.BaseShape] = None) {
   def describe: String = {
     val fin = finish match {
       case DirectFinish(sqrt, _) => if (sqrt) "direct(sqrt)" else "direct"
       case RefineFinish(m) => s"refine(${m.name})"
     }
     s"$layout $indexPath, probes=$probes/$nLists, depth=$depth, k=$k, $fin, " +
-      s"queries=${batch.size}${deltaRows.fold("")(n => s", delta=$n rows")} [$reason]"
+      s"queries=${batch.size}${deltaRows.fold("")(n => s", delta=$n rows")}" +
+      s"${baseShape.fold("")(b => s", dirs=${b.dirs}, curve@${b.curveRows}")} [$reason]"
   }
 }
 

@@ -788,10 +788,11 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
         * centroids and list kernel, the probe count, whether queries are
         * unit-normalized before scanning (a cosine build stored
         * unit-normalized rows; refine ranks the raw vectors), and a tiered
-        * layout's delta tier with its row count. */
+        * layout's delta tier with its row count and its base tier's shape. */
       final case class ScanInputs(lists: DataFrame, cs: graft.expr.CentroidSet,
           scan: graft.index.ListScan, probes: Int, probeReason: String, normalize: Boolean,
-          delta: Option[(DataFrame, Long)] = None)
+          delta: Option[(DataFrame, Long)] = None,
+          baseShape: Option[graft.stream.TieredIndex.BaseShape] = None)
 
       /** A layout's candidate generation at one reorder depth, decided:
         * the metric its `dist` column is computed in, whether those
@@ -846,10 +847,9 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
             // covers the pair: base + delta must equal the relation.
             // e.indexPath is the live version directory (entriesFor): its
             // base tier is memoized, its delta read on every rewrite.
-            val basePath = s"${e.indexPath}/tiered_base"
             val idx = graft.stream.TieredIndex.loadLive(spark, e.indexPath,
-              GraftIndexCatalog.cachedLoad(spark, basePath)(
-                graft.index.IvfFlatIndex.load(spark, basePath)))
+              GraftIndexCatalog.cachedLoad(spark, s"${e.indexPath}/tiered_base")(
+                graft.stream.TieredIndex.loadBase(spark, e.indexPath)))
             if (!rankCompatible(idx.metric, metric)) None
             else {
               val (probes, why) = probesOf(e, base, idx.base.centroids.k, depth)
@@ -858,7 +858,7 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
               Some(Cand(idx.metric, exact = true, () => idx.search(queries, depth, probes),
                 idx.knownDeltaRows.map(n => ScanInputs(idx.base.lists, idx.base.centroids,
                   idx.base.listScan, probes, why, normalize = false,
-                  delta = Some((idx.delta, n))))))
+                  delta = Some((idx.delta, n)), baseShape = idx.saved))))
             }
           case "ivf_sq" =>
             // decoded int8 scored under the index's own metric —
@@ -1104,10 +1104,12 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
           (if (si.normalize) graft.expr.VectorNormOps.unitNorm(v) else v).toFloatArray()
         }.toArray
         val probed = si.scan.batch(si.cs, vecs, _ => si.probes)
-        val rel = B.planOf(si.lists) match {
+        // fresh attribute ids per scan; a tiered base tier read from several
+        // list-store directories is a Union of scans, whose output follows
+        // its children's
+        val rel = B.planOf(si.lists).transformUp {
           case m: org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation =>
             m.newInstance()
-          case p => p
         }
         def listAttr(name: String) = rel.output.find(_.name == name).getOrElse(
           throw new IllegalStateException(s"list table at ${r.e.indexPath} has no $name"))
@@ -1140,7 +1142,8 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
         }
         ResolveKnnJoin.ensureStrategy(spark)
         IndexedKnnJoin(IvfSearch(r.layout, r.e.indexPath, si.scan, batch, si.cs.k, si.probes,
-          r.depth, kj.k, fin, s"${si.probeReason}, ${r.depthReason}", si.delta.map(_._2)),
+          r.depth, kj.k, fin, s"${si.probeReason}, ${r.depthReason}", si.delta.map(_._2),
+          si.baseShape),
           lists, dataPlan, held, kj.output)
       }
 

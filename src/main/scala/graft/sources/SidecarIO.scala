@@ -229,11 +229,21 @@ object SidecarIO {
     * tables, graph tables and the tiered delta, not only sidecars: only
     * the schema is read on the driver. */
   def readTable(spark: SparkSession, dir: String, partition: Option[String] = None,
+      options: Map[String, String] = Map.empty): DataFrame =
+    readTables(spark, Seq(dir), partition, options)
+
+  /** `readTable` over several directories of one table: the union of one
+    * relation per directory, each read with the schema of the first
+    * footer found in `dirs` order. Spark discovers a partition column
+    * only under a common base path, and sibling directories like
+    * `g_000000/list_id=3` and `g_000001/list_id=3` have none, so one
+    * multi-path relation fails with conflicting directory structures. */
+  def readTables(spark: SparkSession, dirs: Seq[String], partition: Option[String] = None,
       options: Map[String, String] = Map.empty): DataFrame = {
     val reader = spark.read.options(options)
-    sparkSchema(spark, dir)
+    val schemed = dirs.iterator.flatMap(sparkSchema(spark, _)).nextOption()
       .fold(reader)(s => reader.schema(partition.fold(s)(s.add(_, IntegerType))))
-      .parquet(dir)
+    dirs.map(schemed.parquet).reduce(_ union _)
   }
 
   /** A small sidecar as a driver-held frame: the Spark schema its writer

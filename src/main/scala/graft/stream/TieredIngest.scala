@@ -9,7 +9,7 @@ import graft.index.IvfFlatIndex
 /** Streaming append INTO a saved tiered layout — the full streaming-ingest
   * story of `cuvs::neighbors::tiered_index` (tiered_index.hpp:59-67:
   * "extend adds to the incremental [brute-force] index"; the ANN tier is
-  * only rebuilt by compaction): a `foreachBatch` sink lands each
+  * only grown by compaction): a `foreachBatch` sink lands each
   * micro-batch in the layout's delta-tier parquet and refreshes the
   * planner sidecars (`tiered_meta.delta_rows` + the combined-population
   * `meta`), so re-registering the layout routes kNN joins over the
@@ -434,12 +434,11 @@ object TieredIngest {
     * compaction trigger needs no extra sidecar read. */
   private def writeSidecars(spark: SparkSession, indexPath: String,
       deltaRows: Long): (Long, Long) = {
-    import spark.implicits._
     val meta = readOneRowSidecar(spark, s"$indexPath/tiered_meta")
     val minAnnRows = graft.sources.SidecarIO.asLong(meta("min_ann_rows"))
     atomicOneRowWrite(
-      Seq((minAnnRows, meta("metric").asInstanceOf[String], deltaRows))
-        .toDF("min_ann_rows", "metric", "delta_rows"),
+      TieredIndex.metaFrame(spark, minAnnRows, meta("metric").asInstanceOf[String], deltaRows,
+        meta.get("curve_rows").map(graft.sources.SidecarIO.asLong)),
       s"$indexPath/tiered_meta")
     val baseRows = IvfFlatIndex.loadMeta(spark, s"$indexPath/tiered_base").getOrElse(0L)
     IvfFlatIndex.saveMeta(spark, indexPath, baseRows + deltaRows)
@@ -470,12 +469,12 @@ object TieredIngest {
 
   /** The reference's `create_ann_index_on_extend` trigger: once the delta
     * crosses `min_ann_rows`, fold it into the ANN tier in place (the
-    * compacted save re-measures the recall curve and resets delta_rows to
-    * 0). The committed batch keys survive compaction as a ZEROED ledger
-    * written into the new version directory BEFORE its commit marker — a
-    * post-compaction redelivery of an already-folded batch must still be
-    * recognized and skipped, or the replay would duplicate rows the ANN
-    * tier now owns. */
+    * fold writes the delta's rows into the lists they land in and resets
+    * delta_rows to 0). The committed batch keys survive compaction as a
+    * ZEROED ledger written into the new version directory BEFORE its
+    * commit marker — a post-compaction redelivery of an already-folded
+    * batch must still be recognized and skipped, or the replay would
+    * duplicate rows the ANN tier now owns. */
   private def maybeCompact(spark: SparkSession, root: String, live: String,
       deltaRows: Long, minAnnRows: Long): Unit =
     if (deltaRows >= minAnnRows &&

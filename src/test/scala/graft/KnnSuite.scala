@@ -30,6 +30,27 @@ class KnnSuite extends SparkFunSuite {
     assert(collectKnn(a) == collectKnn(w))
   }
 
+  test("a data row of another dimension than the query fails both routes with its dimension") {
+    val s = spark
+    import s.implicits._
+    val v = Array.fill(64)(0.5f)
+    val q = Seq((1L, v)).toDF("qid", "qvec")
+    for (lk <- Seq("true", "false"); dim <- Seq(63, 65)) {
+      val data = Seq((0L, v), (7L, Array.fill(dim)(0.5f))).toDF("id", "vec")
+      spark.conf.set("spark.graft.localKernel.enabled", lk)
+      spark.conf.set("spark.graft.bruteforce.fusedMinPairs", "0")
+      val msg = try {
+        val e = intercept[Exception](BruteForceKnn.knnJoin(data, q, 2, Metric.L2).collect())
+        Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+          .mkString(" / ")
+      } finally {
+        spark.conf.unset("spark.graft.localKernel.enabled")
+        spark.conf.unset("spark.graft.bruteforce.fusedMinPairs")
+      }
+      assert(msg.contains(s"data row 7 has dimension $dim, the query 64"), s"localKernel=$lk: $msg")
+    }
+  }
+
   test("self is rank 1 under L2") {
     val res = BruteForceKnn.knnJoin(emb, queries, 3, Metric.L2Sqrt, "vec_id", "embedding")
       .filter(col("rank") === 1).collect()

@@ -656,16 +656,18 @@ class SparseTieredSuite extends SparkFunSuite {
     assert(got.toSeq == want, s"got ${got.toSeq}")
   }
 
-  test("tiered ingest writes its sidecars on the driver: 1 job per append, <= 8 per compaction") {
+  test("tiered ingest writes its sidecars on the driver: 1 job per append, <= 3 per compaction") {
     // the append's only Spark job is the micro-batch's data write; the
     // ledger, tiered_meta and meta rewrites, the batch's row count (parquet
     // footers) and, on compaction, the sidecars of the new version are all
     // driver-side. The sidecar VALUES are pinned to what the job-based
     // writers produced before.
     val dir = java.nio.file.Files.createTempDirectory("tiered_jobs").toString
-    TieredIndex.build(emb.filter(col("vec_id") < 400),
+    val built = TieredIndex.build(emb.filter(col("vec_id") < 400),
       IvfFlatIndex.Params(nLists = 8, nIters = 5), minAnnRows = 30,
-      idCol = "vec_id", vecCol = "embedding").save(dir)
+      idCol = "vec_id", vecCol = "embedding")
+    built.save(dir)
+    val savedCurve = graft.sources.SidecarIO.readRows(spark, s"$dir/recall_curve").get.toSet
     // driver-held micro-batches, the shape a streaming source hands over
     def micro(lo: Int, hi: Int) = spark.createDataFrame(
       java.util.Arrays.asList(emb.filter(col("vec_id") >= lo && col("vec_id") < hi)
@@ -680,24 +682,42 @@ class SparseTieredSuite extends SparkFunSuite {
     assert(live != dir, "the second append must compact")
     def rows(child: String) =
       graft.sources.SidecarIO.readRows(spark, s"$live/$child").get.toSet
-    assert(rows("tiered_meta") ==
-      Set(Map("min_ann_rows" -> 30L, "metric" -> "l2", "delta_rows" -> 0L)))
+    // the fold's 50 rows are 12.5% of the 400 the curve was measured on:
+    // the curve is copied, and curve_rows keeps the population it measured
+    assert(rows("tiered_meta") == Set(Map("min_ann_rows" -> 30L, "metric" -> "l2",
+      "delta_rows" -> 0L, "curve_rows" -> 400L)))
     assert(rows("meta") == Set(Map("n_rows" -> 450L)))
     assert(rows("delta_commits") == Set(
       Map("scope" -> "", "max_batch_id" -> -1L, "cum_rows" -> 0L),
       Map("scope" -> "jobs", "max_batch_id" -> 1L, "cum_rows" -> 0L)))
-    assert(rows("recall_curve") == PinnedCurve)
+    assert(rows("recall_curve") == savedCurve)
     assert(rows("recall_curve") == rows("tiered_base/recall_curve"))
     def schema(child: String) = spark.read.parquet(s"$live/$child").schema.simpleString
     assert(schema("delta") == "struct<id:bigint,vec:array<float>>")
-    assert(schema("tiered_meta") == "struct<min_ann_rows:bigint,metric:string,delta_rows:bigint>")
+    assert(schema("tiered_meta") ==
+      "struct<min_ann_rows:bigint,metric:string,delta_rows:bigint,curve_rows:bigint>")
     assert(schema("recall_curve") == "struct<probes:int,recall:double,k:int,n_queries:bigint>")
     assert(appendJobs == 1, s"append ran $appendJobs jobs")
-    assert(compactJobs <= 8, s"compacting append ran $compactJobs jobs")
+    assert(compactJobs <= 3, s"compacting append ran $compactJobs jobs")
     // loading the compacted layout infers no schema
     var loaded: TieredIndex = null
     assert(jobsDuring { loaded = TieredIndex.load(spark, dir) } == 0)
     assert(loaded.base.lists.count() == 450L && loaded.delta.count() == 0L)
+    // the same fold re-measures when the saved curve is older: recorded at
+    // 300 rows, 150 folded rows reach half of it, and the re-measured curve
+    // over the 450 rows is the pinned one
+    val older = java.nio.file.Files.createTempDirectory("tiered_jobs_remeasure").toString
+    built.save(older)
+    graft.sources.SidecarIO.write(TieredIndex.metaFrame(spark, 30L, "l2", 0L, Some(300L)),
+      s"$older/tiered_meta")
+    graft.stream.TieredIngest.append(micro(400, 450), older, "vec_id", "embedding",
+      batchId = 0L, scope = "jobs")
+    val remeasured = TieredIndex.resolveLive(spark, older)
+    assert(remeasured != older, "the append must compact")
+    assert(graft.sources.SidecarIO.readRows(spark, s"$remeasured/recall_curve").get.toSet ==
+      PinnedCurve)
+    assert(graft.sources.SidecarIO.readHead(spark, s"$remeasured/tiered_meta").get
+      .apply("curve_rows") == 450L)
   }
 
   private val PinnedCurve: Set[Map[String, Any]] = Seq(
