@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Metric
+import graft.core.{GraftConf, Metric}
 import graft.functions.vector_distance
 import graft.ops.{BruteForceKnn, PairwiseDistance, Refine}
 
@@ -547,18 +547,9 @@ object SparkEntry {
     * result (localCheckpoint) before this returns. */
   private def withRegisteredIndex[T](spark: SparkSession, dataPath: String,
       idxPath: String, nProbes: Int, kCoarse: Int)(body: => T): T = {
-    val gateKey = "spark.graft.knnJoin.minIndexRows"
-    val prior = spark.conf.getOption(gateKey)
     graft.plans.GraftIndexCatalog.register(dataPath, idxPath, nProbes, kCoarse)
-    spark.conf.set(gateKey, "0")
-    try body
-    finally {
-      graft.plans.GraftIndexCatalog.unregister(dataPath)
-      prior match {
-        case Some(v) => spark.conf.set(gateKey, v)
-        case None => spark.conf.unset(gateKey)
-      }
-    }
+    try GraftConf.KnnJoinMinIndexRows.withValue(spark, 0L)(body)
+    finally graft.plans.GraftIndexCatalog.unregister(dataPath)
   }
 
   private def knnJoinIndexedQuery(spark: SparkSession, dir: String): DataFrame = {
@@ -1099,10 +1090,7 @@ object SparkEntry {
         "vec_id", "embedding", base = Some(ivfIndex(spark, dir))) }.save(p)
     }
     val n = emb.count().toInt
-    val gateKey = "spark.graft.knnJoin.minIndexRows"
-    val prior = spark.conf.getOption(gateKey)
-    spark.conf.set(gateKey, "0")
-    try {
+    GraftConf.KnnJoinMinIndexRows.withValue(spark, 0L) {
       // The winner must be the same in BOTH registration orders, but only
       // the FIRST order's join is executed: routedThrough forces the
       // optimizer (the cost decision and its route marker), not the jobs,
@@ -1139,9 +1127,6 @@ object SparkEntry {
         .withColumn("flat_routed", lit(runs(0)._2 && runs(1)._2))
         .withColumn("order_independent",
           lit(runs(0)._2 && runs(1)._2 && matchesExact))
-    } finally prior match {
-      case Some(v) => spark.conf.set(gateKey, v)
-      case None => spark.conf.unset(gateKey)
     }
   }
 
@@ -1178,10 +1163,7 @@ object SparkEntry {
         "vec_id", "embedding", base = Some(ivfIndex(spark, dir))) }.save(p)
     }
     val kCoarse = math.max(200L, emb.count() / 3).toInt
-    val gateKey = "spark.graft.knnJoin.minIndexRows"
-    val prior = spark.conf.getOption(gateKey)
-    spark.conf.set(gateKey, "0")
-    try {
+    GraftConf.KnnJoinMinIndexRows.withValue(spark, 0L) {
       // Same one-execution discipline as knn_join_cost_choice: the second
       // registration order is a planning pass (route decision + marker),
       // and the executed rows are pinned against the session's memoized
@@ -1214,9 +1196,6 @@ object SparkEntry {
         .withColumn("pq_routed", lit(runs(0)._2 && runs(1)._2))
         .withColumn("order_independent",
           lit(runs(0)._2 && runs(1)._2 && matchesExact))
-    } finally prior match {
-      case Some(v) => spark.conf.set(gateKey, v)
-      case None => spark.conf.unset(gateKey)
     }
   }
 
@@ -1255,19 +1234,15 @@ object SparkEntry {
         graft.index.IvfPqIndex.Params(nLists = 16, nIters = 10, pqDim = 8, pqBits = 8),
         "vec_id", "embedding", base = Some(ivfIndex(spark, dir))) }.save(p)
     }
-    val tKey = "spark.graft.knnJoin.targetRecall"
-    val priorTarget = spark.conf.getOption(tKey)
-    spark.conf.set(tKey, "0.999")
-    try withRegisteredIndex(spark, dataPath, idxPath, nProbes = 0, kCoarse = 0) {
-      val out = graft.plans.KnnJoinPlan.knnJoin(emb,
-        embQueries(spark, dir), 10, Metric.L2, "vec_id", "embedding")
-      val refused = !graft.plans.IndexRoute.routedThrough(out, idxPath)
-      out.select(col("qid"), col("nbr_id"), col("rank"), round(col("dist"), 4).as("dist"))
-        .withColumn("route_refused", lit(refused))
-        .localCheckpoint()
-    } finally priorTarget match {
-      case Some(v) => spark.conf.set(tKey, v)
-      case None => spark.conf.unset(tKey)
+    GraftConf.KnnJoinTargetRecall.withValue(spark, 0.999) {
+      withRegisteredIndex(spark, dataPath, idxPath, nProbes = 0, kCoarse = 0) {
+        val out = graft.plans.KnnJoinPlan.knnJoin(emb,
+          embQueries(spark, dir), 10, Metric.L2, "vec_id", "embedding")
+        val refused = !graft.plans.IndexRoute.routedThrough(out, idxPath)
+        out.select(col("qid"), col("nbr_id"), col("rank"), round(col("dist"), 4).as("dist"))
+          .withColumn("route_refused", lit(refused))
+          .localCheckpoint()
+      }
     }
   }
 
@@ -1292,19 +1267,15 @@ object SparkEntry {
     val dataPath = s"$dir/embeddings.parquet"
     val emb = table(spark, dir, "embeddings")
     val idxPath = savedIndexDir(spark, s"ivfSaved:$dir")(ivfIndex(spark, dir).save)
-    val tKey = "spark.graft.knnJoin.targetRecall"
-    val priorTarget = spark.conf.getOption(tKey)
-    spark.conf.set(tKey, "1.0")
-    try withRegisteredIndex(spark, dataPath, idxPath, nProbes = 0, kCoarse = 0) {
-      val out = graft.plans.KnnJoinPlan.knnJoin(emb,
-        embQueries(spark, dir), 10, Metric.L2, "vec_id", "embedding")
-      val declined = !graft.plans.IndexRoute.routedThrough(out, idxPath)
-      out.select(col("qid"), col("nbr_id"), col("rank"), round(col("dist"), 4).as("dist"))
-        .withColumn("brute_served", lit(declined))
-        .localCheckpoint()
-    } finally priorTarget match {
-      case Some(v) => spark.conf.set(tKey, v)
-      case None => spark.conf.unset(tKey)
+    GraftConf.KnnJoinTargetRecall.withValue(spark, 1.0) {
+      withRegisteredIndex(spark, dataPath, idxPath, nProbes = 0, kCoarse = 0) {
+        val out = graft.plans.KnnJoinPlan.knnJoin(emb,
+          embQueries(spark, dir), 10, Metric.L2, "vec_id", "embedding")
+        val declined = !graft.plans.IndexRoute.routedThrough(out, idxPath)
+        out.select(col("qid"), col("nbr_id"), col("rank"), round(col("dist"), 4).as("dist"))
+          .withColumn("brute_served", lit(declined))
+          .localCheckpoint()
+      }
     }
   }
 

@@ -151,7 +151,7 @@ object TextQueries {
     * definition of the hash family, used verbatim by the pairs oracle and
     * the end-to-end pipeline oracle so they cannot drift apart. Must stay
     * bit-identical to Dedup.minhashLshPairs — including the hot-bucket cap
-    * (`keep` drops band buckets larger than DefaultLshBucketCap docs,
+    * (`keep` drops band buckets larger than the `lsh.bucketCap` default,
     * exactly as the Spark side does at its default conf). */
   private val minhashCandidateCtes: String = {
     val P = 2147483647L
@@ -165,7 +165,7 @@ object TextQueries {
        |sig AS (SELECT id, $sigCols FROM hh GROUP BY id),
        |bands AS ($bandSelects),
        |bok AS (SELECT band, bkey FROM bands GROUP BY band, bkey
-       |  HAVING count(*) <= ${Dedup.DefaultLshBucketCap}),
+       |  HAVING count(*) <= ${graft.core.GraftConf.LshBucketCap.default}),
        |keep AS (SELECT b.* FROM bands b JOIN bok USING (band, bkey)),
        |cand AS (SELECT DISTINCT x.id AS ca, y.id AS cb FROM keep x
        |  JOIN keep y ON x.band = y.band AND x.bkey = y.bkey AND x.id < y.id)""".stripMargin

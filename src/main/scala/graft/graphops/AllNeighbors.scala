@@ -64,8 +64,7 @@ object AllNeighbors {
     // tiling the reference's batched GEMM applies inside a cluster.
     val spark = df.sparkSession
     import spark.implicits._
-    val blockRows = spark.conf.getOption("spark.graft.allNeighbors.blockRows")
-      .map(_.toInt).getOrElse(8192)
+    val blockRows = graft.core.GraftConf.AllNeighborsBlockRows.get(spark)
     // the histogram job doubles as assigned's cache materialization
     val nBlocksOf: Map[Int, Int] = assigned.groupBy("cell").count().collect()
       .map(r => r.getInt(0) ->

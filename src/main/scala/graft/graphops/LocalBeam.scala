@@ -6,7 +6,7 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-import graft.core.{Distance, Metric}
+import graft.core.{Distance, GraftConf, Metric}
 
 /** Size gate for the single-pass in-memory kernel routes.
   *
@@ -24,14 +24,11 @@ import graft.core.{Distance, Metric}
   * runs unchanged.
   */
 object LocalKernel {
-  def enabled(spark: SparkSession): Boolean =
-    spark.conf.get("spark.graft.localKernel.enabled", "true").toBoolean
+  def enabled(spark: SparkSession): Boolean = GraftConf.LocalKernelEnabled.get(spark)
   /** Max edges the broadcast route may collect (~16 B/edge → 64 MB). */
-  def maxEdges(spark: SparkSession): Long =
-    spark.conf.get("spark.graft.localKernel.maxEdges", "4000000").toLong
+  def maxEdges(spark: SparkSession): Long = GraftConf.LocalKernelMaxEdges.get(spark)
   /** Max vectors the broadcast route may collect (~4·dim B/vec). */
-  def maxVectors(spark: SparkSession): Long =
-    spark.conf.get("spark.graft.localKernel.maxVectors", "400000").toLong
+  def maxVectors(spark: SparkSession): Long = GraftConf.LocalKernelMaxVectors.get(spark)
 
   /** True iff `df` holds at most `cap` rows. The gate only ever needs
     * "within the cap?", never an exact size.

@@ -83,7 +83,7 @@ private[graft] object DepthHint {
     }
 
   def enabled(spark: SparkSession): Boolean =
-    spark.conf.get("spark.graft.index.depthHint.enabled", "true").toBoolean
+    graft.core.GraftConf.IndexDepthHint.get(spark)
 
   /** Only metrics the kNN-join planner can route through a compressed
     * layout (compressedScoreMetric) can ever consume the hint — measuring

@@ -51,23 +51,17 @@ object Hnsw {
 
   /** Max members at which an upper level is built as the EXACT M-NN
     * self-join; larger levels use the cell-bounded approximate
-    * AllNeighbors build. A build-semantics knob, deliberately separate
+    * AllNeighbors build. A build-semantics constant, deliberately separate
     * from the LocalKernel broadcast caps. */
-  def exactLevelCap(spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.get("spark.graft.hnsw.exactLevelCap", "400000").toLong
+  val ExactLevelCap = 400000L
 
   /** Route taken by the most recent [[search]] call ON THIS THREAD
-    * ("local" | "hybrid" | "loop"). Race-free under concurrent searches,
-    * unlike the session-conf mirror (kept for smoke/notebook visibility)
-    * which interleaves when two threads search one session. */
+    * ("local" | "hybrid" | "loop"); race-free under concurrent searches. */
   def lastSearchRoute: Option[String] = Option(lastRouteTl.get)
 
   private val lastRouteTl = new ThreadLocal[String]
 
-  private def markRoute(spark: org.apache.spark.sql.SparkSession, route: String): Unit = {
-    lastRouteTl.set(route)
-    spark.conf.set("spark.graft.hnsw.lastSearchRoute", route)
-  }
+  private def markRoute(route: String): Unit = lastRouteTl.set(route)
 
   /** Default broadcast budget for the hybrid descent's upper-layer collect,
     * derived from the driver heap actually present rather than a literal:
@@ -81,8 +75,7 @@ object Hnsw {
     * hybrid is never narrower than it — which also means a sub-GiB driver
     * is held to the floor, not to the smaller heap-derived figure; lower
     * `spark.graft.localKernel.*` too on drivers that small. A 48 GiB
-    * driver gets ~60M edges. Override:
-    * spark.graft.hnsw.hybridMaxUpper{Ids,Edges}. */
+    * driver gets ~60M edges. */
   private def hybridDefaultCaps(spark: org.apache.spark.sql.SparkSession,
       dim: Int): (Long, Long) = {
     val budget = Runtime.getRuntime.maxMemory / 8
@@ -245,14 +238,14 @@ object Hnsw {
       val mk = math.min(params.m.toLong, (mCount - 1).max(1L)).toInt
       // Level 1 holds n/M rows — at large n an exact M-NN self-join over
       // it is the one quadratic stage left in the build. Past
-      // `exactLevelCap` the level graph comes from the cell-bounded
+      // `ExactLevelCap` the level graph comes from the cell-bounded
       // AllNeighbors build instead: same (src, dst, dist, rank) shape,
       // approximate top-M per node, linear in level size at fixed cell
       // size. The cap is its OWN knob (not LocalKernel.maxVectors): the
       // kernel cap is a broadcast-capacity performance setting, and
       // re-tuning it must never silently change index CONTENTS/recall.
       val g =
-        if (mCount <= exactLevelCap(spark))
+        if (mCount <= ExactLevelCap)
           graft.graphops.AllNeighbors.exact(members, mk, params.metric, "id", "vec")
         else
           graft.graphops.AllNeighbors.build(members,
@@ -409,7 +402,7 @@ object Hnsw {
           graft.graphops.LocalKernel.maxVectors(spark))) {
       // route marker (driver-side diagnostic; lets tests and smokes assert
       // WHICH route actually ran rather than inferring it from timings)
-      markRoute(spark, "local")
+      markRoute("local")
       return searchLocal(idx, data, q, k, ef, idCol, vecCol,
         resolvedIters(distributedBase = false))
     }
@@ -426,31 +419,25 @@ object Hnsw {
       val upperIds = idx.levels.filter(col("level") >= 1).select(col("id").cast("long").as("id"))
       val upperEdges = idx.edges.filter(col("level") >= 1)
         .select(col("level").cast("int"), col("src").cast("long"), col("dst").cast("long"))
-      // The hybrid's broadcast budget is its OWN pair of knobs, not the
+      // The hybrid's broadcast budget is its OWN pair of caps, not the
       // generic LocalKernel caps: the upper layers hold n/M + n/M² + …
       // rows, so at n = 10M (M=16) they already exceed the 400k generic
       // cap while remaining comfortably collectable — keying the route on
       // the generic cap made the better plan unreachable exactly where it
-      // matters. The DEFAULT budget is derived from the driver heap and
-      // the vector dim (hybridDefaultCaps), floored at the generic caps;
-      // explicit conf overrides both. LocalKernel.enabled stays the kill
-      // switch. dim comes from one probe row of the query side — with no
-      // queries the search is empty-result and the route choice is moot.
-      // The probe is a Spark job, so it only runs when a heap-derived
-      // default is actually needed: explicitly-configured searches skip it.
-      val confIds = spark.conf.getOption("spark.graft.hnsw.hybridMaxUpperIds").map(_.toLong)
-      val confEdges = spark.conf.getOption("spark.graft.hnsw.hybridMaxUpperEdges").map(_.toLong)
-      lazy val heapCaps: (Long, Long) = {
+      // matters. The budget is derived from the driver heap and the vector
+      // dim (hybridDefaultCaps), floored at the generic caps.
+      // LocalKernel.enabled stays the kill switch. dim comes from one
+      // probe row of the query side (a Spark job) — with no queries the
+      // search is empty-result and the route choice is moot.
+      val (maxUpperIds, maxUpperEdges) = {
         val qProbe = q.take(1)
         val dim = if (qProbe.isEmpty) 1
           else qProbe(0).getAs[scala.collection.Seq[Float]]("qvec").length
         hybridDefaultCaps(spark, dim)
       }
-      val maxUpperIds = confIds.getOrElse(heapCaps._1)
-      val maxUpperEdges = confEdges.getOrElse(heapCaps._2)
       if (graft.graphops.LocalKernel.within(upperIds, maxUpperIds) &&
           graft.graphops.LocalKernel.within(upperEdges, maxUpperEdges)) {
-        markRoute(spark, "hybrid")
+        markRoute("hybrid")
         import spark.implicits._
         import graft.graphops.LocalBeam
         val vecs = new java.util.HashMap[Long, Array[Float]]()
@@ -491,7 +478,7 @@ object Hnsw {
       }
     }
 
-    markRoute(spark, "loop")
+    markRoute("loop")
     // cache the shaped dataset/query frames ONCE around the per-level
     // loop — GraphSearch detects caller-cached inputs and skips its own
     // materialize/unpersist, so the loop stops paying a full dataset

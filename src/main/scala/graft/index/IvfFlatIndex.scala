@@ -321,10 +321,10 @@ object IvfFlatIndex {
   private[graft] def curveSampleQueries(nRows: Long): Int =
     if (nRows >= graft.core.Frames.CurveScaleRows) 128 else 32
 
-  /** The one reader of `spark.graft.index.recallCurve.enabled` (default
-    * true) — every layout's save-time curve measurement consults it. */
+  /** The one reader of `spark.graft.index.recallCurve.enabled` — every
+    * layout's save-time curve measurement consults it. */
   private[graft] def recallCurveEnabled(spark: SparkSession): Boolean =
-    spark.conf.get("spark.graft.index.recallCurve.enabled", "true").toBoolean
+    graft.core.GraftConf.IndexRecallCurve.get(spark)
 
   /** IVF-Flat (and tiered-base) curve: no search at all — the hit count at
     * each probe point follows from where the true neighbours' lists rank

@@ -72,8 +72,7 @@ object BruteForceKnn {
     // many estimated (dataset x query) pairs the single-stage crossJoin
     // plan is strictly cheaper — the r2->r3 bench regression on sub-second
     // brute-force queries was exactly this fixed cost.
-    val fusedMinPairs =
-      spark.conf.get("spark.graft.bruteforce.fusedMinPairs", "4000000").toLong
+    val fusedMinPairs = graft.core.GraftConf.BruteForceFusedMinPairs.get(spark)
     val maxV = graft.graphops.LocalKernel.maxVectors(spark)
     // Attempt the fused route only when stats say the work is big enough:
     // estimated pairs over the threshold. Stats over-count a filtered

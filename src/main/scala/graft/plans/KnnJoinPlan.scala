@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.functions.{col, count, lit, pmod, sqrt, when, xxhash64}
 import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, IntegerType, LongType}
 import org.apache.spark.sql.graft.{bridge => B}
-import graft.core.Metric
+import graft.core.{GraftConf, Metric}
 import graft.ops.BruteForceKnn
 
 /** Declarative kNN join as a Catalyst node — the v2 optimizer step from
@@ -375,6 +375,10 @@ object ResolveKnnJoin {
   private[plans] val noCurveWarned =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
+  /** Most filter-relation rows a filtered route counts at plan time to
+    * size its widening; a larger filter side takes the exact brute route. */
+  val MaxFilterProbeRows = 10000000L
+
   /** One-sided Wilson lower confidence bound on a measured proportion —
     * the statistical floor under the curve sidecars' recall points.
     * z = 1.645 (95% one-sided): over n = n_queries·k held-out (query,
@@ -652,12 +656,11 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
         })
 
       /** Probe count: explicit registration wins; `nProbes = 0` derives
-        * from `spark.graft.knnJoin.targetRecall` (default 0.95) through
+        * from `spark.graft.knnJoin.targetRecall` through
         * THIS layout's measured probe/recall curve (the `recall_curve`
         * sidecar written at save time; a legacy layout without one probes
         * every list — exact, and warned once — until re-saved,
-        * docs/MIGRATION.md); a caller-set `autoProbeFraction` keeps the
-        * legacy fraction semantics for sessions that pinned it. */
+        * docs/MIGRATION.md). */
       def resolveProbes(e: GraftIndexCatalog.Entry, base: LogicalPlan,
           nLists: Int, depth: Int): Int =
         probesOf(e, base, nLists, depth)._1
@@ -667,27 +670,18 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
         if (e.nProbes > 0) (e.nProbes, "registered probes")
         else {
           val n = math.max(baseRows(e, base), 1L)
-          val coverK = math.ceil(3.0 * depth * nLists / n.toDouble).toInt
-          spark.conf.getOption("spark.graft.knnJoin.autoProbeFraction") match {
-            case Some(frac) =>
-              val fracProbes = math.max(1, math.ceil(nLists * frac.toDouble).toInt)
-              (math.min(nLists, math.max(coverK, fracProbes)), "autoProbeFraction probes")
-            case None =>
-              val target =
-                spark.conf.get("spark.graft.knnJoin.targetRecall", "0.95").toDouble
-              val curve = GraftIndexCatalog.cachedSidecarCurve(e.indexPath) {
-                graft.index.IvfFlatIndex.loadCurveWithN(spark, e.indexPath,
-                  "recall_curve")
-              }
-              if (curve.isEmpty && ResolveKnnJoin.noCurveWarned.add(e.indexPath))
-                logWarning(s"knn_join: layout at ${e.indexPath} carries no measured " +
-                  "recall_curve sidecar (pre-r13 save); auto mode probes EVERY list " +
-                  "(exact but unpruned) — re-save the index to restore calibrated " +
-                  "probe selection (docs/MIGRATION.md)")
-              (ResolveKnnJoin.autoProbes(target, nLists, n, depth,
-                curve.map(_._1).getOrElse(Seq.empty),
-                nSamples = curve.flatMap(_._2)), "recall_curve probes")
+          val curve = GraftIndexCatalog.cachedSidecarCurve(e.indexPath) {
+            graft.index.IvfFlatIndex.loadCurveWithN(spark, e.indexPath,
+              "recall_curve")
           }
+          if (curve.isEmpty && ResolveKnnJoin.noCurveWarned.add(e.indexPath))
+            logWarning(s"knn_join: layout at ${e.indexPath} carries no measured " +
+              "recall_curve sidecar (pre-r13 save); auto mode probes EVERY list " +
+              "(exact but unpruned) — re-save the index to restore calibrated " +
+              "probe selection (docs/MIGRATION.md)")
+          (ResolveKnnJoin.autoProbes(GraftConf.KnnJoinTargetRecall.get(spark), nLists, n,
+            depth, curve.map(_._1).getOrElse(Seq.empty),
+            nSamples = curve.flatMap(_._2)), "recall_curve probes")
         }
 
       // The index routes are only sound when the saved index ranks
@@ -703,9 +697,9 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
       /** A code-compressed route can miss a recall floor EVEN at full
         * probes — the reorder depth caps the candidates and the ADC
         * estimate orders them, so "probe everything" is not the exactness
-        * fallback it is on raw-vector layouts. In auto mode (nProbes = 0,
-        * no pinned fraction) the layout's own measured refine-composed
-        * curve is the floor evidence: if its BEST Wilson-bounded point
+        * fallback it is on raw-vector layouts. In auto mode (nProbes = 0)
+        * the layout's own measured refine-composed curve is the floor
+        * evidence: if its BEST Wilson-bounded point
         * cannot reach the session target, the route refuses and the exact
         * brute pipeline serves the query. Measured on a 2M uniform-random
         * 256-dim corpus (the adversarial geometry): displacement capped
@@ -713,15 +707,12 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
         * route cost 2.6× the brute scan — refusing is both honest and
         * faster there. Explicit registrations (nProbes > 0, kCoarse > 0 —
         * a pinned depth changes the recall the measured-at-calibrated-depth
-        * curve speaks for, e.g. kCoarse = n is near-exact regardless — or a
-        * pinned autoProbeFraction) keep the user's call; a legacy layout without
-        * a curve keeps the documented pre-r15 behavior (no evidence
-        * either way). */
+        * curve speaks for, e.g. kCoarse = n is near-exact regardless) keep
+        * the user's call; a legacy layout without a curve keeps the
+        * documented pre-r15 behavior (no evidence either way). */
       def compressedFloorReachable(e: GraftIndexCatalog.Entry): Boolean =
-        e.nProbes > 0 || e.kCoarse > 0 ||
-          spark.conf.getOption("spark.graft.knnJoin.autoProbeFraction").isDefined || {
-            val target =
-              spark.conf.get("spark.graft.knnJoin.targetRecall", "0.95").toDouble
+        e.nProbes > 0 || e.kCoarse > 0 || {
+            val target = GraftConf.KnnJoinTargetRecall.get(spark)
             GraftIndexCatalog.cachedSidecarCurve(e.indexPath) {
               graft.index.IvfFlatIndex.loadCurveWithN(spark, e.indexPath,
                 "recall_curve")
@@ -746,8 +737,7 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
       def hnswEf(e: GraftIndexCatalog.Entry, ef0: Int): Int =
         if (e.kCoarse > 0) ef0
         else {
-          val target = spark.conf.get(
-            "spark.graft.knnJoin.targetRecall", "0.95").toDouble
+          val target = GraftConf.KnnJoinTargetRecall.get(spark)
           GraftIndexCatalog.cachedSidecarCurve(e.indexPath + "#ef") {
             graft.index.IvfFlatIndex.loadCurveWithN(spark, e.indexPath,
               "ef_curve")
@@ -977,8 +967,7 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
             // (GraftIndexCatalog doc), but existing registrations that
             // leaned on that masking can pin the old refine behavior
             // with this conf (docs/MIGRATION.md).
-            val directEnabled =
-              spark.conf.get("spark.graft.knnJoin.directFinish.enabled", "true").toBoolean
+            val directEnabled = GraftConf.KnnJoinDirectFinish.get(spark)
             val postAllows = post match {
               case NoFilter => true
               case f: IdFilter => smallIdFilter && integral(f.key.dataType)
@@ -1019,8 +1008,8 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
             // the depth is moderate; past the per-query byte budget
             // (e.g. a displacement-capped depth 4096) leave the
             // strategy to Catalyst/AQE rather than risk the driver
-            val bcastCand = r.depth.toLong * 16L <= spark.conf.get(
-              "spark.graft.refine.maxBroadcastBytesPerQuery", "8192").toLong
+            val bcastCand =
+              r.depth.toLong * 16L <= GraftConf.RefineMaxBroadcastBytesPerQuery.get(spark)
             graft.ops.Refine.refine(cand.select(col("qid"), col("nbr_id").as("id")),
               data, queries, kj.k, metric, kj.idCol, kj.vecCol,
               broadcastCandidates = bcastCand)
@@ -1160,8 +1149,7 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
       // leave a bounded incremental probe that stops at the threshold —
       // never a full count of the data side. minIndexRows <= 0 disables
       // the gate (always trust registration).
-      val minIndexRows =
-        spark.conf.get("spark.graft.knnJoin.minIndexRows", "100000").toLong
+      val minIndexRows = GraftConf.KnnJoinMinIndexRows.get(spark)
       def bigEnoughForIndex(base: LogicalPlan,
           es: Seq[GraftIndexCatalog.Entry]): Boolean =
         minIndexRows <= 0 ||
@@ -1264,14 +1252,12 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
         }
 
       /** A registration whose search parameters the USER pinned — an
-        * explicit probe count, an explicit reorder depth, or a session
-        * autoProbeFraction. Such registrations keep the user's call in
-        * every price/floor decision (the same discipline as
-        * compressedFloorReachable); only FULLY-AUTO entries submit to the
+        * explicit probe count or an explicit reorder depth. Such
+        * registrations keep the user's call in every price/floor decision
+        * (compressedFloorReachable); only FULLY-AUTO entries submit to the
         * cost model's brute arm below. */
       def explicitRegistration(e: GraftIndexCatalog.Entry): Boolean =
-        e.nProbes > 0 || e.kCoarse > 0 ||
-          spark.conf.getOption("spark.graft.knnJoin.autoProbeFraction").isDefined
+        e.nProbes > 0 || e.kCoarse > 0
 
       /** Registered layouts on `base`, cheapest-first when there is a
         * choice, with the BRUTE ALTERNATIVE priced as a competing arm —
@@ -1331,7 +1317,7 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
             if (typed.size <= 1) typed
             else typed.sortBy { case (e, l) => (layoutCost(e, l, base), e.indexPath) }
           val bruteArm = typed.exists(t => !explicitRegistration(t._1)) &&
-            spark.conf.get("spark.graft.knnJoin.bruteArm.enabled", "true").toBoolean
+            GraftConf.KnnJoinBruteArm.get(spark)
           if (!bruteArm) ordered
           else ordered.filter { case (e, l) =>
             explicitRegistration(e) || {
@@ -1359,10 +1345,8 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
         * (exact at full probes) — the gate's shape. */
       def widenedDepth(shape: FilterShape, base: LogicalPlan,
           e: GraftIndexCatalog.Entry)(depth: Int): Option[(Int, Boolean, Double)] = {
-        val widenCap =
-          spark.conf.get("spark.graft.knnJoin.maxWidenedCoarse", "4096").toInt
-        val rateFloor =
-          spark.conf.get("spark.graft.knnJoin.minFilterRate", "0.05").toDouble
+        val widenCap = GraftConf.KnnJoinMaxWidenedCoarse.get(spark)
+        val rateFloor = GraftConf.KnnJoinMinFilterRate.get(spark)
         val nBase = math.max(baseRows(e, base), 1L)
         // rate-branch result: the filter is NOT small enough to
         // post-filter candidates directly (refine via the data child)
@@ -1395,8 +1379,7 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
             // fingerprint content-blind (it prints schema, not data), so
             // such shapes are counted fresh each optimization — bounded
             // by `within` and trivially cheap at broadcastable size.
-            val maxProbe = math.max(widenCap.toLong,
-              spark.conf.get("spark.graft.knnJoin.maxFilterProbeRows", "10000000").toLong)
+            val maxProbe = math.max(widenCap.toLong, ResolveKnnJoin.MaxFilterProbeRows)
             def countFilter(): Double = {
               val filterDf = B.ofRows(spark, filterSide)
               if (!graft.graphops.LocalKernel.within(filterDf, maxProbe)) -1.0
@@ -1458,8 +1441,7 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
         }
       }
 
-      val filteredRouteEnabled =
-        spark.conf.get("spark.graft.knnJoin.filteredRoute.enabled", "true").toBoolean
+      val filteredRouteEnabled = GraftConf.KnnJoinFilteredRoute.get(spark)
 
       // Every index route requires the node's id/vec columns to be PURE
       // renames of scan columns (scanAttr): a computed column aliased to
@@ -1530,8 +1512,7 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
                     widenedDepth(shape, shape.base, e)(d0).flatMap {
                       case (d, small, rate) =>
                         val keep = explicitRegistration(e) ||
-                          !spark.conf.get(
-                            "spark.graft.knnJoin.bruteArm.enabled", "true").toBoolean ||
+                          !GraftConf.KnnJoinBruteArm.get(spark) ||
                           layoutCost(e, layout, shape.base, Some(d)) <
                             rate * math.max(baseRows(e, shape.base), 1L)
                         if (keep) Some((d, small)) else None

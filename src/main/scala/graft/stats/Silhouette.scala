@@ -34,7 +34,7 @@ object Silhouette {
       .transform(graft.core.Frames.materialize(_))
     try {
       val spark = df.sparkSession
-      val exactMax = spark.conf.get("spark.graft.silhouette.exactMaxRows", "20000").toLong
+      val exactMax = graft.core.GraftConf.SilhouetteExactMaxRows.get(spark)
       val n = x.count()
       val res =
         if (n <= exactMax) {
@@ -56,7 +56,7 @@ object Silhouette {
             perPointLocal(x, metric)
           else scores(pairMeans(x, x.as("j"), metric))
         } else {
-          val cap = spark.conf.get("spark.graft.silhouette.samplePerCluster", "256").toInt
+          val cap = graft.core.GraftConf.SilhouetteSamplePerCluster.get(spark)
           perPointSampled(x, metric, cap)
         }
       res.localCheckpoint()

@@ -42,16 +42,10 @@ object DynamicBatcher {
     // per-query thread pools whose stop waits 500 ms each) buys nothing
     // here; same opt-out conf as StreamPipeline.drain.
     val kvs =
-      if (spark.conf.get("spark.graft.stream.transientCheckpoint", "true").toBoolean)
+      if (graft.core.GraftConf.StreamTransientCheckpoint.get(spark))
         StreamPipeline.transientCheckpointConfs
       else Seq.empty
-    val priors = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try runImpl(spark, waves, search)
-    finally priors.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
+    StreamPipeline.withConfs(spark, kvs)(runImpl(spark, waves, search))
   }
 
   private def runImpl(spark: SparkSession, waves: Seq[Seq[(Long, Array[Float])]],

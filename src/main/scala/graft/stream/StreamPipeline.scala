@@ -289,7 +289,8 @@ object StreamPipeline {
 
   /** Set `kvs` for the duration of `body`, restoring prior values after —
     * the streaming-query twin of [[withNanosAsLong]] for arbitrary pairs. */
-  private def withConfs[T](spark: SparkSession, kvs: Seq[(String, String)])(body: => T): T = {
+  private[stream] def withConfs[T](spark: SparkSession, kvs: Seq[(String, String)])(
+      body: => T): T = {
     val priors = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
     kvs.foreach { case (k, v) => spark.conf.set(k, v) }
     try body
@@ -327,39 +328,32 @@ object StreamPipeline {
     *    a resumable deployment keeps the Spark default via
     *    `spark.graft.stream.transientCheckpoint=false`.
     *  - `spark.sql.shuffle.partitions` for the stream, derived from the
-    *    INPUT SIZE (`ceil(inputBytes / targetBytesPerStatePartition)`,
+    *    INPUT SIZE (`ceil(inputBytes / TargetBytesPerStatePartition)`,
     *    capped at the session value): a stateful micro-batch commits one
     *    state-store instance per partition per batch, so a fixed
     *    core-count-sized 32 pays 32 store commits per batch on a
     *    megabyte backfill. Scale-adaptive, not a local[32] constant: a
     *    100 TB backfill saturates the cap (the session's own setting),
-    *    a small one stops paying for stores it doesn't need. Pin
-    *    explicitly with `spark.graft.stream.statePartitions`; target
-    *    bytes per partition via
-    *    `spark.graft.stream.targetBytesPerStatePartition` (default 32m,
-    *    the state-store-commit-bound analog of guide §2.2's 100MB-1GB
+    *    a small one stops paying for stores it doesn't need. The target
+    *    is `TargetBytesPerStatePartition` (32 MiB, the
+    *    state-store-commit-bound analog of guide §2.2's 100MB-1GB
     *    shuffle-partition sizing). Results are partition-count-invariant
     *    (hash by key), so the oracle rows are unchanged. */
   private def drain(df: DataFrame, tag: String, inputBytes: Long = -1L): DataFrame = {
     val spark = df.sparkSession
     val confs = scala.collection.mutable.Buffer.empty[(String, String)]
-    if (spark.conf.get("spark.graft.stream.transientCheckpoint", "true").toBoolean)
+    if (graft.core.GraftConf.StreamTransientCheckpoint.get(spark))
       confs ++= transientCheckpointConfs
-    val parts = spark.conf.getOption("spark.graft.stream.statePartitions")
-      .map(_.toInt).getOrElse {
-        if (inputBytes < 0) -1
-        else {
-          val target = spark.conf.get(
-            "spark.graft.stream.targetBytesPerStatePartition",
-            (32L * 1024 * 1024).toString).toLong
-          val cur = spark.sessionState.conf.numShufflePartitions
-          math.max(1L, math.min(cur.toLong,
-            (inputBytes + target - 1) / math.max(1L, target))).toInt
-        }
-      }
-    if (parts > 0) confs += "spark.sql.shuffle.partitions" -> parts.toString
+    if (inputBytes >= 0) {
+      val cur = spark.sessionState.conf.numShufflePartitions
+      val parts = math.max(1L, math.min(cur.toLong,
+        (inputBytes + TargetBytesPerStatePartition - 1) / TargetBytesPerStatePartition))
+      confs += "spark.sql.shuffle.partitions" -> parts.toString
+    }
     withConfs(spark, confs.toSeq)(drainImpl(df, tag))
   }
+
+  private val TargetBytesPerStatePartition = 32L * 1024 * 1024
 
   /** Conf overrides for a TRANSIENT (single-bounded-run) checkpoint, shared
     * by every local drain (here and DynamicBatcher):
@@ -383,7 +377,7 @@ object StreamPipeline {
     *    `File.renameTo`, no fork. A durable deployment on an object store
     *    keeps the Spark default via
     *    `spark.graft.stream.transientCheckpoint=false`. */
-  private[stream] val transientCheckpointConfs: Seq[(String, String)] = Seq(
+  private[graft] val transientCheckpointConfs: Seq[(String, String)] = Seq(
     "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false",
     "spark.sql.streaming.checkpointFileManagerClass" ->
       ("org.apache.spark.sql.execution.streaming.checkpointing." +

@@ -4,6 +4,7 @@ import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import graft.core.GraftConf
 import graft.index.IvfFlatIndex
 
 /** Streaming append INTO a saved tiered layout — the full streaming-ingest
@@ -65,7 +66,7 @@ import graft.index.IvfFlatIndex
   * file (`.ingest_lease` at the layout root: writer token, heartbeat =
   * the append-rate mtime refresh). A second process finds a live foreign
   * lease and fails LOUDLY instead; a lease whose heartbeat is older than
-  * `spark.graft.tiered.lease.staleMs` (default 60000) is a dead writer's
+  * `spark.graft.tiered.lease.staleMs` is a dead writer's
   * and is stolen with a warning. In-JVM concurrency stays on the
   * per-layout lock.
   *
@@ -110,8 +111,8 @@ object TieredIngest {
     * without atomic creates), which converts the UNDETECTABLE corruption
     * into a detectable, loud failure in every realistic interleaving. */
   private def acquireLease(spark: SparkSession, root: String): Unit = {
-    if (!spark.conf.get("spark.graft.tiered.lease.enabled", "true").toBoolean) return
-    val staleMs = spark.conf.get("spark.graft.tiered.lease.staleMs", "60000").toLong
+    if (!GraftConf.TieredLease.get(spark)) return
+    val staleMs = GraftConf.TieredLeaseStaleMs.get(spark)
     val p = new org.apache.hadoop.fs.Path(root, ".ingest_lease")
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     val held: Option[(String, Long)] =
@@ -137,7 +138,7 @@ object TieredIngest {
             s"TieredIngest: another process holds the ingest lease on $root " +
               s"(token $tok, heartbeat ${age}ms ago < staleMs=$staleMs). " +
               "Concurrent multi-process ingest into one layout is unsupported — " +
-              "stop the other writer, or raise spark.graft.tiered.lease.staleMs " +
+              s"stop the other writer, or raise ${GraftConf.TieredLeaseStaleMs.key} " +
               "only if it is known dead.")
         System.err.println(s"graft TieredIngest: stealing stale ingest lease on " +
           s"$root (token $tok, heartbeat ${age}ms ago >= staleMs=$staleMs)")
@@ -478,7 +479,7 @@ object TieredIngest {
   private def maybeCompact(spark: SparkSession, root: String, live: String,
       deltaRows: Long, minAnnRows: Long): Unit =
     if (deltaRows >= minAnnRows &&
-        spark.conf.get("spark.graft.tiered.autoCompact.enabled", "true").toBoolean) {
+        GraftConf.TieredAutoCompact.get(spark)) {
       val committed =
         if (exists(spark, ledgerPath(live)))
           readLedger(spark, live)

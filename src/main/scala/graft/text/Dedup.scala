@@ -210,14 +210,6 @@ object Dedup {
         (0 until numHashes).map(j => element_at(col("sig"), j + 1).as(s"mh$j")): _*)
   }
 
-  /** Band buckets larger than this many docs are dropped from the LSH
-    * candidate join (SURVEY §8's hot-bucket cap). A bucket this size is
-    * boilerplate (every member of an N-doc bucket pairs with N-1 others —
-    * the join is quadratic PER BUCKET), and true near-dups inside it still
-    * collide in their other bands. Drops are logged, never silent, and the
-    * DuckDB oracles replay the identical cap. */
-  val DefaultLshBucketCap = 100000L
-
   /** LSH band-bucket candidates + exact Jaccard verify: banding the
     * signature (numHashes/bandRows bands), pairs colliding in >= 1 band,
     * then verified against minJaccard.
@@ -231,8 +223,13 @@ object Dedup {
       n: Int = 8, numHashes: Int = 16, bandRows: Int = 4,
       minJaccard: Double = 0.5): DataFrame = {
     val spark0 = df.sparkSession
-    val bucketCap =
-      spark0.conf.get("spark.graft.lsh.bucketCap", DefaultLshBucketCap.toString).toLong
+    // Band buckets larger than this many docs are dropped from the
+    // candidate join (SURVEY §8's hot-bucket cap). A bucket this size is
+    // boilerplate (every member of an N-doc bucket pairs with N-1 others —
+    // the join is quadratic PER BUCKET), and true near-dups inside it still
+    // collide in their other bands. Drops are logged, never silent, and the
+    // DuckDB oracles replay the identical default cap.
+    val bucketCap = graft.core.GraftConf.LshBucketCap.get(spark0)
     val sigs = minhashSignatures(df, idCol, textCol, n, numHashes)
     val nBands = numHashes / bandRows
     val keyCols = (0 until nBands).map { b =>
@@ -355,10 +352,9 @@ object Dedup {
       .toDF("id", "simhash")
   }
 
-  /** Buckets of the SimHash band join larger than this recurse into a
-    * sub-band split (never dropped — unlike the LSH cap, the handling
-    * here is lossless). */
-  val DefaultSimhashBucketCap = 100000L
+  /** Recursion depth past which a SimHash group still hot joins directly
+    * (see simhashPairs). */
+  val MaxSplitDepth = 4
 
   /** SimHash near-dup pairs: hamming(simhash) <= maxHamming, a < b.
     *
@@ -394,7 +390,7 @@ object Dedup {
     *     could only rediscover the same pairs), which is what keeps a
     *     homogeneous corpus from multiplying one group into a chain per
     *     band at every level. Proper (sub-group) hot buckets branch, and
-    *     `spark.graft.simhash.maxSplitDepth` (default 4) bounds the
+    *     `MaxSplitDepth` (4) bounds the
     *     compounding: groups still hot at the depth cap — values
     *     agreeing on the full banded prefix and still concentrated —
     *     join directly within the group, which at that point is the
@@ -403,9 +399,7 @@ object Dedup {
     require(maxHamming >= 0 && maxHamming < SimhashBits,
       s"maxHamming in [0, $SimhashBits) for a $SimhashBits-bit sketch, got $maxHamming")
     val spark = sketches.sparkSession
-    val cap = spark.conf
-      .get("spark.graft.simhash.bucketCap", DefaultSimhashBucketCap.toString).toLong
-    val maxDepth = spark.conf.get("spark.graft.simhash.maxSplitDepth", "4").toInt
+    val cap = graft.core.GraftConf.SimhashBucketCap.get(spark)
     val log = org.slf4j.LoggerFactory.getLogger(getClass)
     val nBands = maxHamming + 1
     // The sketch pass feeds FIVE consumers (zero-pair self-join both sides,
@@ -432,7 +426,7 @@ object Dedup {
         s" | (rest & (shiftleft(CAST(1 AS BIGINT), $bandCol * $w) - 1))").as("rest")
     while (!done) {
       val w = restBits / nBands
-      if (w == 0 || level >= maxDepth) {
+      if (w == 0 || level >= MaxSplitDepth) {
         // remainder too narrow to split (a surviving group differs only
         // inside < nBands bits) or depth cap reached — join the groups
         cands ::= cur.as("x").join(cur.as("y"), Seq("gkey"))
@@ -530,7 +524,7 @@ object Dedup {
   /** Embedding-space near-duplicates: cosine distance < eps, a < b —
     * the eps range join specialized to dedup.
     *
-    * Scale route (past `spark.graft.nearDup.crossJoinMax` rows, eps <= 1):
+    * Scale route (past `NearDupCrossJoinMax` rows, eps <= 1):
     * cosine distance maps onto chord distance over l2-normalized vectors
     * (‖u−v‖² = 2·cosdist), so the ball-cover ε-join prunes candidates by
     * the triangle inequality — with a small relative margin on the chord
@@ -539,16 +533,16 @@ object Dedup {
     * all-pairs filter. Below the gate (or eps > 1, where zero-norm rows
     * can pair at dist exactly 1) the plain range join runs. */
   def embeddingNearDup(df: DataFrame, eps: Double,
-      idCol: String = "id", vecCol: String = "vec"): DataFrame = {
-    val spark = df.sparkSession
-    val crossMax = spark.conf.get("spark.graft.nearDup.crossJoinMax", "20000").toLong
-    if (eps <= 1.0 && df.count() > crossMax)
+      idCol: String = "id", vecCol: String = "vec"): DataFrame =
+    if (eps <= 1.0 && df.count() > NearDupCrossJoinMax)
       embeddingNearDupPruned(df, eps, idCol, vecCol)
     else
       graft.ops.PairwiseDistance.epsNeighborhood(
           df, df, eps, graft.core.Metric.Cosine, idCol, vecCol, idCol, vecCol)
         .filter(col("aid") < col("bid"))
-  }
+
+  /** Rows past which embeddingNearDup takes the ball-cover route. */
+  val NearDupCrossJoinMax = 20000L
 
   /** Ball-cover-pruned route (see embeddingNearDup doc). */
   private[graft] def embeddingNearDupPruned(df: DataFrame, eps: Double,

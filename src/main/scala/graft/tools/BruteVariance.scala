@@ -12,7 +12,7 @@ object BruteVariance {
       .config("spark.sql.shuffle.partitions", "64")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    spark.conf.set("spark.graft.localKernel.enabled", "false")
+    spark.conf.set(graft.core.GraftConf.LocalKernelEnabled.key, "false")
     val n = 1000000L
     val dim = 64
     val data = ScaleSmoke.hashVecs(spark, 0, n, dim)

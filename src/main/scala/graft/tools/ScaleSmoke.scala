@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Metric
+import graft.core.{GraftConf, Metric}
 
 /** Scale smoke test: drive the DISTRIBUTED routes (LocalKernel off) on
   * synthetic data ~100x the sf0.1 fixture, proving the at-scale plans
@@ -71,7 +71,7 @@ object ScaleSmoke {
     spark.sparkContext.setLogLevel("WARN")
     // the whole point: every operator below must survive on its
     // distributed plan alone
-    spark.conf.set("spark.graft.localKernel.enabled", "false")
+    spark.conf.set(GraftConf.LocalKernelEnabled.key, "false")
 
     def time[T](name: String)(f: => T): T = {
       val t0 = System.nanoTime()
@@ -133,7 +133,7 @@ object ScaleSmoke {
         // past the 20k exact gate the sampled route engages (r3 verdict's
         // O(n^2) flag): every point scored against per-cluster samples,
         // O(n * clusters * cap) with a broadcast sample side
-        spark.conf.set("spark.graft.silhouette.samplePerCluster", "64")
+        spark.conf.set(GraftConf.SilhouetteSamplePerCluster.key, "64")
         val (cl, _) = graft.cluster.KMeans.assignCols(km.centroids, col("vec"))
         graft.stats.Silhouette.perPoint(
           data.select(col("id"), col("vec"), cl.as("label")), Metric.L2).count()
@@ -533,37 +533,27 @@ object ScaleSmoke {
         graft.index.Hnsw.search(idx, data, q, 10, ef = 40, "id", "vec").count()
       } else println("SCALE   hnsw pure-loop search skipped at n > 2M (hybrid is the default route)")
       // the at-scale default route. Pins for an accurate label at ANY
-      // smoke N: enabled=true (the smoke globally disables the kernel),
-      // the generic maxEdges just above the upper edge count so the
-      // one-pass whole-hierarchy local route cannot fire at small N, and
-      // the hybrid's own caps just above the measured upper sizes so the
-      // gate cannot silently demote past its defaults at huge N — plus
-      // the route marker asserted afterward, so a mislabel is an error,
-      // never a wrong data point.
+      // smoke N: enabled=true (the smoke globally disables the kernel) and
+      // the generic maxEdges just above the upper edge count, so the
+      // one-pass whole-hierarchy local route cannot fire at small N while
+      // the hybrid's heap-derived caps (floored at maxEdges) still admit
+      // the upper edges — plus the route marker asserted afterward, so a
+      // mislabel is an error, never a wrong data point.
       val nUpper = idx.edges.filter(col("level") >= 1).count()
-      val nUpperIds = idx.levels.filter(col("level") >= 1).count()
       // two bounds, two legs: baseIterations = 10 is the legacy job-cap
       // the r7-r10 decade points were measured at (comparable across
       // rounds); the auto bound (max(10, ef) + frontier-empty early exit)
       // is the recall-honest default — the delta between the legs is the
       // price of un-saturating the ef knob at this scale
-      def pinnedHybridSearch(bi: Int): Unit = {
-        spark.conf.set("spark.graft.localKernel.enabled", "true")
-        spark.conf.set("spark.graft.localKernel.maxEdges", (nUpper + 1).toString)
-        spark.conf.set("spark.graft.hnsw.hybridMaxUpperIds", (nUpperIds + 1).toString)
-        spark.conf.set("spark.graft.hnsw.hybridMaxUpperEdges", (nUpper + 1).toString)
-        try {
-          graft.index.Hnsw.search(idx, data, q, 10, ef = 40, "id", "vec",
-            baseIterations = bi).count()
-          require(graft.index.Hnsw.lastSearchRoute.contains("hybrid"),
-            "hybrid label would be inaccurate: a different route ran")
-        } finally {
-          spark.conf.set("spark.graft.localKernel.enabled", "false")
-          spark.conf.unset("spark.graft.localKernel.maxEdges")
-          spark.conf.unset("spark.graft.hnsw.hybridMaxUpperIds")
-          spark.conf.unset("spark.graft.hnsw.hybridMaxUpperEdges")
+      def pinnedHybridSearch(bi: Int): Unit =
+        GraftConf.LocalKernelEnabled.withValue(spark, true) {
+          GraftConf.LocalKernelMaxEdges.withValue(spark, nUpper + 1) {
+            graft.index.Hnsw.search(idx, data, q, 10, ef = 40, "id", "vec",
+              baseIterations = bi).count()
+            require(graft.index.Hnsw.lastSearchRoute.contains("hybrid"),
+              "hybrid label would be inaccurate: a different route ran")
+          }
         }
-      }
       // throwaway warm pass (the repo's two-pass discipline): past 2M the
       // loop-route leg above is skipped, so without this the FIRST timed
       // hybrid leg would pay the phase's first-search JIT/codegen and the

@@ -122,6 +122,73 @@ class KnnJoinPlanSuite extends SparkFunSuite {
     } finally graft.plans.GraftIndexCatalog.unregister(dataPath)
   }
 
+  /** A registered IVF-Flat layout (8 lists, kCoarse 30) under a Column-API
+    * filter passing about 2/3 of the rows: `body` gets the layout path
+    * and a thunk that builds the filtered knn_join, so each call plans
+    * under the session's settings at that moment. */
+  private def withFilteredRoute(tag: String)(
+      body: (String, () => org.apache.spark.sql.DataFrame) => Unit): Unit = {
+    ensureRule()
+    val dataPath = s"${SparkTestBase.sf0001}/embeddings.parquet"
+    val idxPath = java.nio.file.Files.createTempDirectory(tag).toString
+    graft.index.IvfFlatIndex.build(emb,
+      graft.index.IvfFlatIndex.Params(nLists = 8, nIters = 5), "vec_id", "embedding")
+      .save(idxPath)
+    graft.plans.GraftIndexCatalog.register(dataPath, idxPath, nProbes = 8, kCoarse = 30)
+    try withIndexGateOff {
+      body(idxPath, () => KnnJoinPlan.knnJoin(emb.filter(col("vec_id") % 3 =!= 0),
+        queries, 10, Metric.L2Sqrt, "vec_id", "embedding"))
+    } finally graft.plans.GraftIndexCatalog.unregister(dataPath)
+  }
+
+  private def routedWith(key: String, value: String)(df: () => org.apache.spark.sql.DataFrame,
+      idxPath: String): Boolean = {
+    spark.conf.set(key, value)
+    try graft.plans.IndexRoute.routedThrough(df(), idxPath)
+    finally spark.conf.unset(key)
+  }
+
+  test("knnJoin.maxWidenedCoarse: a cap below the widened depth refuses the filtered route") {
+    withFilteredRoute("knnwidencap") { (idxPath, filtered) =>
+      // pass rate ~2/3 widens the registered depth 30 to ~45
+      assert(routedWith("spark.graft.knnJoin.maxWidenedCoarse", "64")(filtered, idxPath))
+      assert(!routedWith("spark.graft.knnJoin.maxWidenedCoarse", "30")(filtered, idxPath),
+        "a widened depth past the cap must take the exact brute route")
+    }
+  }
+
+  test("knnJoin.minFilterRate: the filtered route's choice flips at the rate floor") {
+    withFilteredRoute("knnratefloor") { (idxPath, filtered) =>
+      assert(routedWith("spark.graft.knnJoin.minFilterRate", "0.5")(filtered, idxPath))
+      assert(!routedWith("spark.graft.knnJoin.minFilterRate", "0.9")(filtered, idxPath),
+        "a pass rate below the floor must take the exact brute route")
+    }
+  }
+
+  test("refine.maxBroadcastBytesPerQuery: candidates broadcast within the budget, not past it") {
+    import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Join, ResolvedHint}
+    def broadcastHints(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.optimizedPlan.collect {
+        case j: Join => Seq(j.hint.leftHint, j.hint.rightHint).flatten
+        case h: ResolvedHint => Seq(h.hints)
+      }.flatten.count(_.strategy.contains(BROADCAST))
+    withFilteredRoute("knnrefinebcast") { (idxPath, filtered) =>
+      // the widened depth (~45) costs ~720 B of candidates per query
+      val within = filtered()
+      assert(graft.plans.IndexRoute.routedThrough(within, idxPath))
+      val past = {
+        spark.conf.set("spark.graft.refine.maxBroadcastBytesPerQuery", "16")
+        try { val df = filtered(); df.queryExecution.optimizedPlan; df }
+        finally spark.conf.unset("spark.graft.refine.maxBroadcastBytesPerQuery")
+      }
+      assert(graft.plans.IndexRoute.routedThrough(past, idxPath))
+      assert(broadcastHints(within) == broadcastHints(past) + 1,
+        s"the refine join should broadcast its candidates only within the budget:\n" +
+          s"${within.queryExecution.optimizedPlan}\n---\n${past.queryExecution.optimizedPlan}")
+      assert(within.collect().toSet == past.collect().toSet)
+    }
+  }
+
   test("a low-pass-rate filter engages the exact brute fallback, not the index") {
     // allow-mode with a tiny allow list: rate ~ 1% < minFilterRate —
     // widening can't cover it, so the route must refuse and the brute

@@ -422,6 +422,26 @@ class SparseTieredSuite extends SparkFunSuite {
     assert(TieredIndex.load(spark, dir).delta.count() == 2L)
   }
 
+  test("tiered.lease.enabled=false appends without an ingest lease file") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("tiered_nolease").toString
+    TieredIndex.build(emb.filter(col("vec_id") < 400),
+      IvfFlatIndex.Params(nLists = 8, nIters = 5),
+      idCol = "vec_id", vecCol = "embedding").save(dir)
+    val vec = emb.select(col("embedding")).head().getSeq[Float](0)
+    def append(id: Long): Unit = graft.stream.TieredIngest.append(
+      Seq((id, vec)).toDF("vec_id", "embedding")
+        .withColumn("embedding", col("embedding").cast("array<float>")),
+      dir, "vec_id", "embedding", batchId = id, scope = "nolease")
+    val lease = new java.io.File(dir, ".ingest_lease")
+    spark.conf.set("spark.graft.tiered.lease.enabled", "false")
+    try append(0L) finally spark.conf.unset("spark.graft.tiered.lease.enabled")
+    assert(!lease.exists(), "no lease is written with the lease off")
+    assert(TieredIndex.load(spark, dir).delta.count() == 1L)
+    append(1L)
+    assert(lease.exists(), "the default takes the lease")
+  }
+
   test("a crashed pre-upgrade batch directory is removed when its batch replays under a scope") {
     // pre-r16 layouts wrote scoped batches to UNSCOPED delta/batch-<id>
     // dirs: a batch that landed data but crashed before its ledger row is

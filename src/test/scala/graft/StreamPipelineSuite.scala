@@ -480,4 +480,24 @@ class StreamPipelineSuite extends SparkFunSuite {
     assert(got.distinct().count() == got.count(), "stream emitted a duplicate key")
     assert(got.except(want).isEmpty && want.except(got).isEmpty)
   }
+
+  test("stream.transientCheckpoint=false keeps Spark's checkpoint confs on the stream") {
+    // the stream runs in a clone of the session taken at start, so each
+    // micro-batch sees the checkpoint confs the drain started it under
+    val keys = graft.stream.StreamPipeline.transientCheckpointConfs.map(_._1)
+    def streamConfs(): Seq[Option[String]] = {
+      var seen = Seq.empty[Option[String]]
+      graft.stream.DynamicBatcher.run(spark, Seq(Seq(1L -> Array(1f, 2f))), { b =>
+        seen = keys.map(b.sparkSession.conf.getOption)
+        b.select(col("qid"))
+      })
+      seen
+    }
+    assert(streamConfs() == graft.stream.StreamPipeline.transientCheckpointConfs.map(kv =>
+      Some(kv._2)), "by default a one-run stream drops checksums and renames in place")
+    spark.conf.set("spark.graft.stream.transientCheckpoint", "false")
+    try assert(streamConfs() == keys.map(spark.conf.getOption),
+      "a durable stream must run under the session's own checkpoint confs")
+    finally spark.conf.unset("spark.graft.stream.transientCheckpoint")
+  }
 }
