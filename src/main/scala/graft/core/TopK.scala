@@ -22,7 +22,8 @@ case class TopKBuf(var k: Int, var minClose: Boolean,
   @inline private def worse(d1: Double, i1: Long, d2: Double, i2: Long): Boolean =
     if (d1 != d2) { if (minClose) d1 > d2 else d1 < d2 } else i1 > i2
 
-  def insert(dist: Double, id: Long): Unit = {
+  /** Offer a candidate; true when it entered the buffer. */
+  def insert(dist: Double, id: Long): Boolean = {
     if (size < k) {
       var i = size
       dists(i) = dist; ids(i) = id; size += 1
@@ -31,10 +32,12 @@ case class TopKBuf(var k: Int, var minClose: Boolean,
         val p = (i - 1) / 2
         swap(i, p); i = p
       }
+      true
     } else if (worse(dists(0), ids(0), dist, id)) {
       dists(0) = dist; ids(0) = id
       siftDown(0)
-    }
+      true
+    } else false
   }
 
   @inline private def swap(i: Int, j: Int): Unit = {

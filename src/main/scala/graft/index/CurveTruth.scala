@@ -2,8 +2,10 @@ package graft.index
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import graft.core.Metric
+import graft.core.{Metric, TopKBuf}
 import graft.expr.{CentroidOps, CentroidSet}
 
 /** The held-out exact ground truth every build-time calibration of an
@@ -16,8 +18,9 @@ import graft.expr.{CentroidOps, CentroidSet}
   * (a self-match is a guaranteed hit at any probe count and would inflate
   * every recall point by up to 1/k).
   *
-  * The lists each true neighbour lives in are what let the IVF-Flat curve
-  * skip the per-point searches altogether (`listCoverage`).
+  * The lists each true neighbour lives in, recorded by the truth pass
+  * itself, are what let the IVF-Flat curve skip the per-point searches
+  * altogether (`listCoverage`).
   *
   * Built once per (metric, sample size, k) by `IvfFlatIndex.heldOutTruth`
   * and memoized on that index object only — a loaded, extended or
@@ -28,7 +31,7 @@ private[graft] final class CurveTruth(
     val qvecs: Array[Array[Float]],
     val k: Int,
     val nbrs: Array[Array[Long]], // per query, best-first, self excluded
-    lists: DataFrame) {
+    nbrLists: Array[Array[Int]]) { // the list of each of nbrs
 
   def nQueries: Int = qids.length
 
@@ -37,16 +40,7 @@ private[graft] final class CurveTruth(
 
   /** The first `n` queries of the sample (DepthHint's 32-query sample). */
   def take(n: Int): CurveTruth =
-    new CurveTruth(qids.take(n), qvecs.take(n), k, nbrs.take(n), lists)
-
-  // list_id of every true neighbour, looked up only by the IVF-Flat curve
-  private lazy val listOf: Map[Long, Int] = {
-    val ids = nbrs.flatten.distinct.toSeq
-    if (ids.isEmpty) Map.empty
-    else lists.filter(col("id").isInCollection(ids))
-      .select(col("id").cast("long"), col("list_id").cast("int")).collect()
-      .map(r => r.getLong(0) -> r.getInt(1)).toMap
-  }
+    new CurveTruth(qids.take(n), qvecs.take(n), k, nbrs.take(n), nbrLists.take(n))
 
   /** (qid, qvec) driver-local frame of the sample. */
   def queryFrame(spark: SparkSession): DataFrame = {
@@ -77,7 +71,7 @@ private[graft] final class CurveTruth(
         rank(ranked.getStruct(r, 2).getInt(0)) = r
         r += 1
       }
-      nbrs(j).map(n => rank(listOf(n)) + 1)
+      nbrLists(j).map(l => rank(l) + 1)
     }
     points.map(p => need.count(_ <= p).toLong)
   }
@@ -118,9 +112,8 @@ private[graft] object CurveTruth {
   val Seed = 42L
 
   /** Sample `nQueries` rows of the index's corpus and take their exact
-    * top-(k+1) under `metric` from the index's own search at full probes:
-    * every list is scanned, so its (dist, id) top-k is BruteForceKnn's. One
-    * sample job plus one search pass. */
+    * top-(k+1) under `metric`, with the list of each neighbour, from one
+    * scan of every list. One sample job plus one scan job. */
   def scan(index: IvfFlatIndex, metric: Metric, nQueries: Int, k: Int): CurveTruth = {
     val spark = index.lists.sparkSession
     import spark.implicits._
@@ -131,26 +124,45 @@ private[graft] object CurveTruth {
       .orderBy(xxhash64(col("id"), lit(Seed)), col("id")).limit(nQueries)
       .as[(Long, Array[Float])].collect()
     val qids = sample.map(_._1)
-    val nbrs =
-      if (k < 1 || sample.isEmpty) qids.map(_ => Array.emptyLongArray)
-      else {
-        val byQ = exactTruth(index, sample.toSeq.toDF("qid", "qvec"), metric, k)
-        qids.map(q => byQ.getOrElse(q, Array.emptyLongArray))
-      }
-    new CurveTruth(qids, sample.map(_._2), k, nbrs, index.lists)
+    val qvecs = sample.map(_._2)
+    val truth =
+      if (k < 1 || sample.isEmpty) qids.map(_ => (Array.emptyLongArray, Array.emptyIntArray))
+      else exactTruth(index, qids, qvecs, metric, k)
+    new CurveTruth(qids, qvecs, k, truth.map(_._1), truth.map(_._2))
   }
 
-  /** Per query: the full-probe top-(k+1) under `metric`, own row dropped,
-    * k kept. A metric other than the index's ranks the same lists through
-    * a view of the index under that metric. */
-  private def exactTruth(index: IvfFlatIndex, q: DataFrame, metric: Metric,
-      k: Int): Map[Long, Array[Long]] = {
-    val view =
-      if (index.metric == metric) index else new IvfFlatIndex(index.centroids, index.lists, metric)
-    view.fullProbeSearch(q, k + 1)
-      .select(col("qid"), col("nbr_id"), col("rank")).collect()
-      .groupBy(_.getLong(0)).map { case (qid, rows) =>
-        qid -> rows.sortBy(_.getInt(2)).map(_.getLong(1)).filter(_ != qid).take(k)
-      }
+  /** Per sample query: its exact top-(k+1) under `metric` (the (dist, id)
+    * order of the searches), own row dropped, k kept, each with its list.
+    * Every partition scans all its lists into a top-(k+1) per query with
+    * the IVF-Flat list kernel, recording the list of each row that enters
+    * a buffer; the driver merges the collected buffers. */
+  private def exactTruth(index: IvfFlatIndex, qids: Array[Long], qvecs: Array[Array[Float]],
+      metric: Metric, k: Int): Array[(Array[Long], Array[Int])] = {
+    val spark = index.lists.sparkSession
+    import spark.implicits._
+    val kernel = FlatScan(metric)
+    val cs = index.centroids
+    val batch = spark.sparkContext.broadcast(kernel.batch(cs, qvecs, _ => cs.k))
+    val found = index.lists.filter(col("list_id").isNotNull)
+      .select(col("list_id").cast("int"), col("id").cast("long"),
+        col("vec").cast("array<float>"))
+      .as[(Int, Long, Array[Float])].mapPartitions { it =>
+        val listOf = new java.util.HashMap[Long, Int]()
+        val bufs = kernel.scan(it.map { case (l, id, v) =>
+          InternalRow(l, id, UnsafeArrayData.fromPrimitiveArray(v))
+        }, batch.value, k + 1, listOf)
+        bufs.iterator.zipWithIndex.filter(_._1 != null).flatMap { case (buf, qi) =>
+          (0 until buf.size).iterator.map(j => (qi, buf.ids(j), buf.dists(j), listOf.get(buf.ids(j))))
+        }
+      }.collect().groupBy(_._1)
+    qids.indices.map { qi =>
+      val cands = found.getOrElse(qi, Array.empty[(Int, Long, Double, Int)])
+      val top = TopKBuf(k + 1, Metric.isMinClose(metric), new Array[Double](k + 1),
+        new Array[Long](k + 1), 0)
+      cands.foreach(c => top.insert(c._3, c._2))
+      val listOf = cands.map(c => c._2 -> c._4).toMap
+      val ids = top.result().map(_.id).filter(_ != qids(qi)).take(k).toArray
+      (ids, ids.map(listOf))
+    }.toArray
   }
 }

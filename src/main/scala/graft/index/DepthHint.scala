@@ -70,8 +70,8 @@ private[graft] object DepthHint {
 
   def save(spark: SparkSession, path: String, hint: (Int, Int)): Unit = {
     import spark.implicits._
-    graft.sources.SidecarIO.write(Seq(hint).toDF("k", "displacement"),
-      s"$path/depth_meta")
+    graft.sources.SidecarIO.write(spark, s"$path/depth_meta",
+      graft.sources.SidecarIO.rows(Seq(hint), "k", "displacement"))
   }
 
   def load(spark: SparkSession, path: String): Option[(Int, Int)] =

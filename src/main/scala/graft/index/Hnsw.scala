@@ -304,10 +304,9 @@ object Hnsw {
     idx.levels.write.mode("overwrite").parquet(s"$path/hnsw_levels")
     idx.edges.write.mode("overwrite").partitionBy("level").parquet(s"$path/hnsw_edges")
     import spark.implicits._
-    graft.sources.SidecarIO.write(
-      Seq((idx.maxLevel, idx.entryPoint, idx.params.m, idx.params.seed, idx.params.metric.name))
-        .toDF("max_level", "entry_point", "m", "seed", "metric"),
-      s"$path/hnsw_meta")
+    graft.sources.SidecarIO.write(spark, s"$path/hnsw_meta", graft.sources.SidecarIO.rows(
+      Seq((idx.maxLevel, idx.entryPoint, idx.params.m, idx.params.seed, idx.params.metric.name)),
+      "max_level", "entry_point", "m", "seed", "metric"))
     // population sidecar (one node per level-table row): the kNN-join
     // resolver's filtered-route rate math reads it instead of counting
     // the registered relation at rewrite time
@@ -323,12 +322,11 @@ object Hnsw {
         // point-estimate after the round trip
         idx.efCurveSample match {
           case Some((k, nQ)) =>
-            graft.sources.SidecarIO.write(
-              cv.map { case (p, r) => (p, r, k, nQ) }
-                .toDF("probes", "recall", "k", "n_queries"),
-              s"$path/ef_curve")
+            graft.sources.SidecarIO.write(spark, s"$path/ef_curve", graft.sources.SidecarIO.rows(
+              cv.map { case (p, r) => (p, r, k, nQ) }, "probes", "recall", "k", "n_queries"))
           case None =>
-            graft.sources.SidecarIO.write(cv.toDF("probes", "recall"), s"$path/ef_curve")
+            graft.sources.SidecarIO.write(spark, s"$path/ef_curve",
+              graft.sources.SidecarIO.rows(cv, "probes", "recall"))
         }
       case None =>
         if (IvfFlatIndex.recallCurveEnabled(spark))
@@ -336,10 +334,8 @@ object Hnsw {
             .foreach { case (cv, k, nQ) =>
               // shared curve schema (IvfFlatIndex.loadCurve); n_queries·k
               // feeds the Wilson-bound inversion like the IVF recall_curve
-              graft.sources.SidecarIO.write(
-                cv.map { case (p, r) => (p, r, k, nQ) }
-                  .toDF("probes", "recall", "k", "n_queries"),
-                s"$path/ef_curve")
+              graft.sources.SidecarIO.write(spark, s"$path/ef_curve", graft.sources.SidecarIO.rows(
+                cv.map { case (p, r) => (p, r, k, nQ) }, "probes", "recall", "k", "n_queries"))
             }
     }
   }

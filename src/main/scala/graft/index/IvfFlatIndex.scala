@@ -67,11 +67,6 @@ class IvfFlatIndex(
     BruteForceKnn.topKPerQuery(pairs, k, metric)
   }
 
-  /** Exact top-k of (qid, qvec) queries: the fused kernel probing every
-    * list. */
-  private[index] def fullProbeSearch(q: DataFrame, k: Int): DataFrame =
-    searchLocal(q, k, centroids.k)
-
   /** The fused scan over this layout's raw vectors (FlatScan) — the
     * kernel of `searchLocal` and of the planner's IvfSearchExec. */
   private[graft] def listScan: ListScan = FlatScan(metric)
@@ -144,10 +139,12 @@ class IvfFlatIndex(
   private[graft] def save(path: String, listsDir: String): Long = {
     val nRows = IvfFlatIndex.writeLists(lists, listsDir)
     val spark = lists.sparkSession
-    IvfFlatIndex.saveCentroids(spark, path, centroids, metric)
-    IvfFlatIndex.saveMeta(spark, path, nRows)
-    if (IvfFlatIndex.recallCurveEnabled(spark))
-      IvfFlatIndex.saveRecallCurve(spark, path, this, nRows)
+    graft.sources.SidecarIO.withConf(spark) {
+      IvfFlatIndex.saveCentroids(spark, path, centroids, metric)
+      IvfFlatIndex.saveMeta(spark, path, nRows)
+      if (IvfFlatIndex.recallCurveEnabled(spark))
+        IvfFlatIndex.saveRecallCurve(spark, path, this, nRows)
+    }
     nRows
   }
 
@@ -230,11 +227,10 @@ object IvfFlatIndex {
   private[index] def saveCentroids(spark: SparkSession, path: String,
       centroids: CentroidSet, metric: Metric): Unit = {
     import spark.implicits._
-    graft.sources.SidecarIO.write(
+    graft.sources.SidecarIO.write(spark, s"$path/centroids", graft.sources.SidecarIO.rows(
       centroids.centroids.zipWithIndex.toSeq
-        .map { case (v, i) => (i, v.toSeq, metric.name, centroids.dim) }
-        .toDF("list_id", "centroid", "metric", "dim"),
-      s"$path/centroids")
+        .map { case (v, i) => (i, v.toSeq, metric.name, centroids.dim) },
+      "list_id", "centroid", "metric", "dim"))
   }
 
   def load(spark: SparkSession, path: String): IvfFlatIndex =
@@ -298,16 +294,22 @@ object IvfFlatIndex {
   /** Population sidecar: one row `(n_rows)` — the planner reads it
     * instead of counting the registered relation at rewrite time. Shared
     * by every layout whose save has the lists at hand. */
-  private[graft] def saveMeta(spark: SparkSession, path: String, nRows: Long): Unit = {
+  private[graft] def saveMeta(spark: SparkSession, path: String, nRows: Long): Unit =
+    graft.sources.SidecarIO.write(spark, s"$path/meta", metaRows(spark, nRows))
+
+  /** The `meta` row; a tiered append rewrites it by a staged swap. */
+  private[graft] def metaRows(spark: SparkSession, nRows: Long): graft.sources.SidecarIO.Rows = {
     import spark.implicits._
-    graft.sources.SidecarIO.write(Seq(nRows).toDF("n_rows"), s"$path/meta")
+    graft.sources.SidecarIO.rows(Seq(nRows), "n_rows")
   }
 
-  /** None when the layout predates the sidecar (legacy saves). */
+  /** None when the layout predates the sidecar (legacy saves). A read
+    * racing a tiered append's swap of the sidecar waits it out
+    * (`SidecarIO.readSwapped`) instead of finding it absent. */
   private[graft] def loadMeta(spark: SparkSession, path: String): Option[Long] =
     // driver-side read (r17): the planner consults this on every rewrite;
     // a one-row sidecar must not cost a Spark job (SidecarIO doc)
-    graft.sources.SidecarIO.readHead(spark, s"$path/meta")
+    graft.sources.SidecarIO.readSwapped(spark, s"$path/meta")
       .flatMap(_.get("n_rows")).map(graft.sources.SidecarIO.asLong)
 
   /** Held-out sample size for the measured curve sidecars, scaled with
@@ -380,10 +382,9 @@ object IvfFlatIndex {
     val curve = points.zip(recalls)
       .take(if (saturated < 0) points.size else saturated + 1)
     import spark.implicits._
-    graft.sources.SidecarIO.write(
-      curve.toDF("probes", "recall")
-        .withColumn("k", lit(t.k)).withColumn("n_queries", lit(t.nQueries.toLong)),
-      s"$path/recall_curve")
+    graft.sources.SidecarIO.write(spark, s"$path/recall_curve", graft.sources.SidecarIO.rows(
+      curve.map { case (p, r) => (p, r, t.k, t.nQueries.toLong) },
+      "probes", "recall", "k", "n_queries"))
   }
 
   /** The measured curve, sanitized for inversion: probe-sorted with a

@@ -132,12 +132,11 @@ class IvfPqIndex(
     val spark = lists.sparkSession
     IvfFlatIndex.saveCentroids(spark, path, centroids, metric)
     import spark.implicits._
-    graft.sources.SidecarIO.write(
-      (for (s <- 0 until codebooks.pqDim; c <- 0 until codebooks.nCenters)
+    graft.sources.SidecarIO.write(spark, s"$path/codebooks", graft.sources.SidecarIO.rows(
+      for (s <- 0 until codebooks.pqDim; c <- 0 until codebooks.nCenters)
         yield (s, c, codebooks.center(s, c).toSeq,
-          codebooks.pqDim, codebooks.nCenters, codebooks.subLen))
-        .toDF("s", "c", "center", "pq_dim", "n_centers", "sub_len"),
-      s"$path/codebooks")
+          codebooks.pqDim, codebooks.nCenters, codebooks.subLen),
+      "s", "c", "center", "pq_dim", "n_centers", "sub_len"))
     IvfFlatIndex.saveMeta(spark, path, nRows)
     depthHint.foreach(DepthHint.save(spark, path, _))
     // measured probe/recall curve of the PLANNER-SERVED composition (ADC
@@ -247,12 +246,11 @@ class IvfPqClusterIndex(
     val spark = lists.sparkSession
     IvfFlatIndex.saveCentroids(spark, path, centroids, metric)
     import spark.implicits._
-    graft.sources.SidecarIO.write(
-      (for (l <- 0 until codebooks.nLists; c <- 0 until codebooks.nCenters)
+    graft.sources.SidecarIO.write(spark, s"$path/cluster_codebooks", graft.sources.SidecarIO.rows(
+      for (l <- 0 until codebooks.nLists; c <- 0 until codebooks.nCenters)
         yield (l, c, codebooks.center(l, c).toSeq,
-          codebooks.nLists, codebooks.nCenters, codebooks.subLen, codebooks.pqDim))
-        .toDF("l", "c", "center", "n_lists", "n_centers", "sub_len", "pq_dim"),
-      s"$path/cluster_codebooks")
+          codebooks.nLists, codebooks.nCenters, codebooks.subLen, codebooks.pqDim),
+      "l", "c", "center", "n_lists", "n_centers", "sub_len", "pq_dim"))
     IvfFlatIndex.saveMeta(spark, path, nRows)
     depthHint.foreach(DepthHint.save(spark, path, _))
     if (IvfFlatIndex.recallCurveEnabled(spark))

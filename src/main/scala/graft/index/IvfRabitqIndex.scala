@@ -230,11 +230,10 @@ class IvfRabitqIndex(
     val spark = lists.sparkSession
     IvfFlatIndex.saveCentroids(spark, path, centroids, Metric.L2)
     import spark.implicits._
-    graft.sources.SidecarIO.write(
+    graft.sources.SidecarIO.write(spark, s"$path/rotation", graft.sources.SidecarIO.rows(
       rotation.flat.grouped(rotation.cols).zipWithIndex.toSeq
-        .map { case (row, i) => (i, row.toSeq, bitsPerDim) }
-        .toDF("r", "row", "bits_per_dim"),
-      s"$path/rotation")
+        .map { case (row, i) => (i, row.toSeq, bitsPerDim) },
+      "r", "row", "bits_per_dim"))
     IvfFlatIndex.saveMeta(spark, path, nRows)
     // measured probe/recall curve of the planner-served composition
     // (sign-code estimates at the heuristic depth + exact refine)

@@ -144,8 +144,8 @@ class IvfSqIndex(
     val spark = lists.sparkSession
     IvfFlatIndex.saveCentroids(spark, path, centroids, metric)
     import spark.implicits._
-    graft.sources.SidecarIO.write(Seq((sq.lo, sq.hi)).toDF("lo", "hi"),
-      s"$path/sq_model")
+    graft.sources.SidecarIO.write(spark, s"$path/sq_model",
+      graft.sources.SidecarIO.rows(Seq((sq.lo, sq.hi)), "lo", "hi"))
     IvfFlatIndex.saveMeta(spark, path, nRows)
     // measured probe/recall curve of the planner-served composition
     // (decoded-int8 candidates at the heuristic depth + exact refine)

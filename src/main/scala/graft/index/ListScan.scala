@@ -146,7 +146,15 @@ private[graft] final case class FlatScan(metric: Metric) extends ListScan {
 
   /** A row with a null vector scores nothing, as the refine scan skips
     * it; a row whose dimension is not its query's fails the scan. */
-  def scan(rows: Iterator[InternalRow], batch: ScanBatch, bufK: Int): Array[TopKBuf] = {
+  def scan(rows: Iterator[InternalRow], batch: ScanBatch, bufK: Int): Array[TopKBuf] =
+    scan(rows, batch, bufK, null)
+
+  /** `scan` that also records in `listOf` the list of every row that
+    * entered a buffer, so each candidate the buffers end with has its
+    * list there (the held-out truth of the save-time curves, CurveTruth);
+    * null records nothing. */
+  def scan(rows: Iterator[InternalRow], batch: ScanBatch, bufK: Int,
+      listOf: java.util.HashMap[Long, Int]): Array[TopKBuf] = {
     val fn = graft.core.Distance.fn(metric)
     val bufs = new Array[TopKBuf](batch.size)
     rows.foreach { row =>
@@ -161,7 +169,7 @@ private[graft] final case class FlatScan(metric: Metric) extends ListScan {
           if (q.length != nvec.length) throw new IllegalArgumentException(
             s"list row $nid has dimension ${nvec.length}, the query ${q.length}")
           if (bufs(qi) == null) bufs(qi) = newBuf(bufK)
-          bufs(qi).insert(fn(q, nvec), nid)
+          if (bufs(qi).insert(fn(q, nvec), nid) && listOf != null) listOf.put(nid, row.getInt(0))
           t += 1
         }
       }

@@ -116,12 +116,11 @@ class ScannIndex(
     val spark = lists.sparkSession
     IvfFlatIndex.saveCentroids(spark, path, centroids, metric)
     import spark.implicits._
-    graft.sources.SidecarIO.write(
-      (for (s <- 0 until codebooks.pqDim; c <- 0 until codebooks.nCenters)
+    graft.sources.SidecarIO.write(spark, s"$path/codebooks", graft.sources.SidecarIO.rows(
+      for (s <- 0 until codebooks.pqDim; c <- 0 until codebooks.nCenters)
         yield (s, c, codebooks.center(s, c).toSeq,
-          codebooks.pqDim, codebooks.nCenters, codebooks.subLen))
-        .toDF("s", "c", "center", "pq_dim", "n_centers", "sub_len"),
-      s"$path/codebooks")
+          codebooks.pqDim, codebooks.nCenters, codebooks.subLen),
+      "s", "c", "center", "pq_dim", "n_centers", "sub_len"))
     IvfFlatIndex.saveMeta(spark, path, nRows)
     depthHint.foreach(DepthHint.save(spark, path, _))
     // measured probe/recall curve of the planner-served composition

@@ -539,7 +539,7 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
     GraftIndexCatalog.cachedLayout(path) {
       def exists(child: String): Boolean = {
         val p = new org.apache.hadoop.fs.Path(path, child)
-        p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
+        graft.sources.SidecarIO.fs(spark, p.toString).exists(p)
       }
       if (exists("hnsw_meta")) Some("hnsw")
       else if (exists("tiered_meta")) Some("tiered")
@@ -1301,7 +1301,7 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
                 // version directory — one exists() per rewrite buys a
                 // re-resolve instead of planning onto deleted files
                 val p = new org.apache.hadoop.fs.Path(memo, "tiered_meta")
-                if (p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p))
+                if (graft.sources.SidecarIO.fs(spark, p.toString).exists(p))
                   memo
                 else {
                   GraftIndexCatalog.invalidateResolved(e.indexPath)

@@ -1,17 +1,25 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import scala.util.control.NonFatal
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{ChecksumFileSystem, FSDataOutputStream, FileAlreadyExistsException,
+  FileStatus, FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
 import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.parquet.io.ColumnIOFactory
+import org.apache.spark.sql.{DataFrame, Encoder, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.types._
 
 /** DRIVER-SIDE reads and writes of the engine's tiny parquet sidecars
   * (meta, recall_curve, depth_meta, ef_curve, hnsw_meta, tiered_meta,
-  * delta_commits) and of the layout state the driver holds anyway
-  * (centroids, codebooks, cluster codebooks, rotation, sq_model).
+  * delta_commits, list_dirs) and of the layout state the driver holds
+  * anyway (centroids, codebooks, cluster codebooks, rotation, sq_model),
+  * plus the small files beside them (the ingest lease, commit markers).
   *
   * Why not `spark.read.parquet(...).head()` or
   * `df.coalesce(1).write.parquet(...)`: every such call is a full Spark
@@ -19,20 +27,47 @@ import org.apache.spark.sql.types._
   * fixed cost — to move a row the driver could read or write in ~1 ms.
   * The kNN-join resolver consults up to a dozen sidecars per planning pass
   * (population, curves, depth hints, cost-model stats), and every layout
-  * save and tiered-ingest append rewrites several of them, so on the r17
-  * job-count profile the cost-choice gates ran 58-86 one-task jobs each
-  * and a 500-row tiered append ran 7 jobs, nearly all sidecar traffic.
-  * Metadata must not cost cluster jobs — the reference's plan factory
-  * reads index headers in-process for the same reason (search_plan.cuh).
-  * Reads go through parquet-mr's Group reader (shipped with Spark), writes
+  * save and tiered-ingest append rewrites several of them. Metadata must
+  * not cost cluster jobs — the reference's plan factory reads index
+  * headers in-process for the same reason (search_plan.cuh). Reads go
+  * through parquet-mr's record assembly (shipped with Spark), writes
   * through Spark's own parquet writer (`ParquetFileFormat.prepareWrite`),
   * both in-process with zero Spark jobs — so a sidecar written here has
   * the footer, schema and rows a Spark write would have produced.
   *
+  * Each call costs about what its bytes cost: on a 4-vCPU host a one-row
+  * `readHead` takes about 1 ms, a one-row `write` of `rows(...)` about
+  * 2.5 ms and a staged `swap` about 3 ms (median of 100+ calls). A `toDF`
+  * frame handed to `write` adds about 10 ms of analysis and optimization,
+  * so the engine's writers hand `Rows`. Two traps in the libraries keep a
+  * call from that cost if stepped in:
+  *   - parquet-mr's `ParquetReader.builder(...)` and one-argument
+  *     `ParquetFileReader.open(file)` each build a fresh Hadoop
+  *     `Configuration`, which parses core-default.xml and core-site.xml
+  *     again on every open — milliseconds per sidecar, a fifth of the
+  *     driver's CPU samples inside tiered appends and plans when the reads
+  *     here used them. Reads here build their options from one
+  *     already-loaded configuration per call
+  *     (`HadoopReadOptions.builder(conf)`) and assemble records row group
+  *     by row group; a Tier-1 source lint (SidecarIOSuite) keeps those
+  *     calls, `new Configuration(` and `FileUtil.copy(` out of `src/main`.
+  *   - Hadoop's local file system is a `ChecksumFileSystem`: each file it
+  *     creates gets a `.crc` companion, and without libhadoop each file
+  *     created forks `chmod` (~2.4 ms) — five forks for a one-row sidecar
+  *     written through it. Writes, copies and small files here go through
+  *     its raw file system, so no `.crc` is written, and on the local file
+  *     system through `NoChmodLocalFileSystem`, so nothing forks.
+  *     Reads keep the checksummed view, so a `.crc` a Spark writer left
+  *     beside an older sidecar is still verified. Other file systems keep
+  *     their own code path.
+  *
+  * An operation that touches many sidecars (a tiered append, a fold, a
+  * save) runs inside `withConf`, so the session's Hadoop configuration is
+  * copied once for all of them instead of once per call.
+  *
   * Scope guard: sidecars and driver-held layout state only.
-  *   - `write` accepts only a driver-held frame (`Frames.isLocal`: its
-  *     rows already sit on the driver); data keeps Spark's distributed
-  *     writer.
+  *   - `write` accepts only rows the driver holds (`Rows`, or a frame
+  *     that is a `LocalRelation`); data keeps Spark's distributed writer.
   *   - `readRows` hard-caps the rows read and is for directories KNOWN
   *     small (row counts bounded by probe-curve points / one-row metas);
   *     `readState` reads every row, for the layout state a loader holds
@@ -40,35 +75,92 @@ import org.apache.spark.sql.types._
   *     the distributed path. */
 object SidecarIO {
 
+  // ------------------------------------------------ configuration and FS
+
+  private val scopedConf = new ThreadLocal[Configuration]
+
+  /** Run `body` with one Hadoop configuration for every SidecarIO call and
+    * file-system handle it makes on this thread; nested scopes share the
+    * outermost one. */
+  def withConf[A](spark: SparkSession)(body: => A): A =
+    if (scopedConf.get != null) body
+    else {
+      scopedConf.set(spark.sessionState.newHadoopConf())
+      try body finally scopedConf.remove()
+    }
+
+  /** The scope's configuration, or the session's copied afresh. */
+  private def hadoopConf(spark: SparkSession): Configuration =
+    Option(scopedConf.get).getOrElse(spark.sessionState.newHadoopConf())
+
+  /** The file system of `path` under `hadoopConf`. */
+  def fs(spark: SparkSession, path: String): FileSystem =
+    new Path(path).getFileSystem(hadoopConf(spark))
+
+  /** What writes go through: the raw file system under a checksummed one,
+    * and for the local one a raw file system that creates without `chmod`. */
+  private def raw(fs: FileSystem): FileSystem = fs match {
+    case l: LocalFileSystem =>
+      val local = new NoChmodLocalFileSystem
+      local.initialize(l.getUri, l.getConf)
+      local
+    case c: ChecksumFileSystem => c.getRawFileSystem
+    case other => other
+  }
+
+  private def status(fs: FileSystem, p: Path): Option[FileStatus] =
+    try Some(fs.getFileStatus(p))
+    catch { case _: java.io.FileNotFoundException => None }
+
+  // --------------------------------------------------------------- reads
+
+  private def visible(s: FileStatus): Boolean =
+    !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith(".")
+
   /** The visible data files of `dir` in path order; `recursive` also
     * walks its subdirectories (the `list_id=N` partitions of a list table). */
-  private def dataFiles(spark: SparkSession, dir: String,
-      recursive: Boolean = false): Option[Seq[Path]] = {
+  private def dataFiles(conf: Configuration, dir: String,
+      recursive: Boolean = false): Option[Seq[FileStatus]] = {
     val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    def visible(s: org.apache.hadoop.fs.FileStatus) =
-      !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith(".")
-    def walk(d: Path): Iterator[Path] = fs.listStatus(d).iterator.filter(visible).flatMap { s =>
-      if (s.isFile) Iterator(s.getPath).filter(_ => s.getLen > 0)
+    val fs = p.getFileSystem(conf)
+    def walk(d: Path): Iterator[FileStatus] = fs.listStatus(d).iterator.filter(visible).flatMap { s =>
+      if (s.isFile) Iterator(s).filter(_.getLen > 0)
       else if (recursive) walk(s.getPath)
       else Iterator.empty
     }
-    if (!fs.exists(p)) None
-    else if (fs.getFileStatus(p).isFile) Some(Seq(p))
-    else Some(walk(p).toSeq.sortBy(_.toString))
+    status(fs, p).map { s =>
+      if (s.isFile) Seq(s) else walk(p).toSeq.sortBy(_.getPath.toString)
+    }
+  }
+
+  /** Open `f` with read options built from `conf` — never from a fresh
+    * configuration, which would parse the Hadoop XML resources again. */
+  private def open(conf: Configuration, f: FileStatus): ParquetFileReader =
+    ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf),
+      HadoopReadOptions.builder(conf).build())
+
+  /** The records of an open file, assembled row group by row group. */
+  private def records(r: ParquetFileReader): Iterator[Group] = {
+    val schema = r.getFooter.getFileMetaData.getSchema
+    val io = new ColumnIOFactory().getColumnIO(schema)
+    Iterator.continually(r.readNextRowGroup()).takeWhile(_ != null).flatMap { pages =>
+      val rows = io.getRecordReader(pages, new GroupRecordConverter(schema))
+      Iterator.fill(pages.getRowCount.toInt)(rows.read())
+    }
   }
 
   /** Footer-only total row count of the parquet files under `dir`,
     * partition subdirectories included — reads parquet metadata, zero
     * data pages, zero jobs. None when the path is missing. */
-  def rowCount(spark: SparkSession, dir: String): Option[Long] =
-    dataFiles(spark, dir, recursive = true).map { files =>
-      val conf = spark.sessionState.newHadoopConf()
+  def rowCount(spark: SparkSession, dir: String): Option[Long] = {
+    val conf = hadoopConf(spark)
+    dataFiles(conf, dir, recursive = true).map { files =>
       files.iterator.map { f =>
-        val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+        val r = open(conf, f)
         try r.getRecordCount finally r.close()
       }.sum
     }
+  }
 
   /** Read up to `maxRows` rows of a small parquet directory in-process.
     * Each row is fieldName -> value for the TOP-LEVEL PRIMITIVE fields
@@ -78,29 +170,25 @@ object SidecarIO {
     * directory holds more than `maxRows` rows — that is a misuse (a data
     * directory), not a bigger sidecar. None when the path is missing. */
   def readRows(spark: SparkSession, dir: String,
-      maxRows: Int = 65536): Option[Seq[Map[String, Any]]] =
-    dataFiles(spark, dir).map { files =>
-      val conf = spark.sessionState.newHadoopConf()
+      maxRows: Int = 65536): Option[Seq[Map[String, Any]]] = {
+    val conf = hadoopConf(spark)
+    dataFiles(conf, dir).map { files =>
       val out = Vector.newBuilder[Map[String, Any]]
       var n = 0
       files.foreach { f =>
-        val reader = org.apache.parquet.hadoop.ParquetReader
-          .builder(new GroupReadSupport(), f).withConf(conf).build()
-        try {
-          var g = reader.read()
-          while (g != null) {
-            if (n >= maxRows)
-              throw new IllegalStateException(
-                s"SidecarIO.readRows($dir): more than $maxRows rows — " +
-                  "this is a data directory, not a sidecar")
-            out += groupToMap(g)
-            n += 1
-            g = reader.read()
-          }
-        } finally reader.close()
+        val r = open(conf, f)
+        try records(r).foreach { g =>
+          if (n >= maxRows)
+            throw new IllegalStateException(
+              s"SidecarIO.readRows($dir): more than $maxRows rows — " +
+                "this is a data directory, not a sidecar")
+          out += groupToMap(g)
+          n += 1
+        } finally r.close()
       }
       out.result()
     }
+  }
 
   /** Every row of a directory holding a layout's DRIVER-HELD state
     * (centroids, codebooks, cluster codebooks, rotation) — `readRows`
@@ -112,19 +200,54 @@ object SidecarIO {
 
   /** First row of a sidecar (files in name order) — the `head()` analog.
     * Stops after one row; later files are never opened. */
-  def readHead(spark: SparkSession, dir: String): Option[Map[String, Any]] =
-    dataFiles(spark, dir).flatMap { files =>
-      val conf = spark.sessionState.newHadoopConf()
+  def readHead(spark: SparkSession, dir: String): Option[Map[String, Any]] = {
+    val conf = hadoopConf(spark)
+    dataFiles(conf, dir).flatMap { files =>
       files.iterator.flatMap { f =>
-        val reader = org.apache.parquet.hadoop.ParquetReader
-          .builder(new GroupReadSupport(), f).withConf(conf).build()
-        try Option(reader.read()).map(groupToMap)
-        finally reader.close()
+        val r = open(conf, f)
+        try records(r).nextOption().map(groupToMap)
+        finally r.close()
       }.nextOption()
     }
+  }
 
-  private def primValue(g: org.apache.parquet.example.data.Group, i: Int,
-      j: Int): Any = {
+  /** `readHead` of a sidecar that `swap` may be rewriting: a read landing
+    * inside the swap's two-rename window RETRIES (a live writer finishes
+    * in milliseconds — restoring eagerly would steal the `.old` directory
+    * out from under its in-flight swap), and only after the retries are
+    * exhausted is a still-absent target with `.old` present treated as a
+    * crashed writer's leftover and renamed back for one final read. None
+    * when the sidecar is genuinely missing (no target, no `.old`). */
+  def readSwapped(spark: SparkSession, dir: String): Option[Map[String, Any]] =
+    withConf(spark) {
+      val fs = this.fs(spark, dir)
+      val target = new Path(dir)
+      val old = new Path(dir + ".old")
+      // the two exists() reads are not atomic against a live writer's
+      // renames (target absent at the first, the swap completing and
+      // deleting `.old` before the second), so the verdict is confirmed
+      // once after a beat
+      def missing = !fs.exists(target) && !fs.exists(old) && {
+        Thread.sleep(25)
+        !fs.exists(target) && !fs.exists(old)
+      }
+      def attempt(n: Int): Option[Map[String, Any]] =
+        (try readHead(spark, dir) catch { case NonFatal(_) => None }) match {
+          case found @ Some(_) => found
+          case None if missing => None
+          case None if n < 4 =>
+            Thread.sleep(50L << n)
+            attempt(n + 1)
+          case None =>
+            if (!fs.exists(target) && fs.exists(old) && !raw(fs).rename(old, target))
+              throw new IllegalStateException(
+                s"sidecar at $dir is absent and restoring $dir.old failed")
+            readHead(spark, dir)
+        }
+      attempt(0)
+    }
+
+  private def primValue(g: Group, i: Int, j: Int): Any = {
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     g.getType.getType(i).asPrimitiveType().getPrimitiveTypeName match {
       case INT32 => g.getInteger(i, j)
@@ -141,8 +264,7 @@ object SidecarIO {
     * encoding `group (LIST) { repeated group list { element } }`, with the
     * 2-level legacy shape handled too); None when the field is not a
     * list-of-primitive. */
-  private def listValues(g: org.apache.parquet.example.data.Group,
-      i: Int): Option[Seq[Any]] = {
+  private def listValues(g: Group, i: Int): Option[Seq[Any]] = {
     val f = g.getType.getType(i)
     if (f.isPrimitive || g.getFieldRepetitionCount(i) == 0) return None
     Option(f.getLogicalTypeAnnotation) match {
@@ -167,7 +289,7 @@ object SidecarIO {
     }
   }
 
-  private def groupToMap(g: org.apache.parquet.example.data.Group): Map[String, Any] = {
+  private def groupToMap(g: Group): Map[String, Any] = {
     val schema = g.getType
     val b = Map.newBuilder[String, Any]
     var i = 0
@@ -185,29 +307,19 @@ object SidecarIO {
     b.result()
   }
 
-  private def footer(spark: SparkSession, f: Path) = {
-    val r = ParquetFileReader.open(
-      HadoopInputFile.fromPath(f, spark.sessionState.newHadoopConf()))
-    try r.getFooter.getFileMetaData finally r.close()
-  }
-
   /** The first data file under `dir` in name order, descending into
     * subdirectories (partition directories, batch directories) when the
     * directory itself holds none. */
-  private def firstDataFile(spark: SparkSession, dir: String): Option[Path] = {
+  private def firstDataFile(conf: Configuration, dir: String): Option[FileStatus] = {
     val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    def visible(s: org.apache.hadoop.fs.FileStatus) =
-      !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith(".")
-    def first(d: Path): Option[Path] = {
+    val fs = p.getFileSystem(conf)
+    def first(d: Path): Option[FileStatus] = {
       val (files, dirs) = fs.listStatus(d).toSeq.filter(visible).sortBy(_.getPath.getName)
         .partition(_.isFile)
-      files.find(_.getLen > 0).map(_.getPath)
+      files.find(_.getLen > 0)
         .orElse(dirs.iterator.flatMap(s => first(s.getPath)).nextOption())
     }
-    if (!fs.exists(p)) None
-    else if (fs.getFileStatus(p).isFile) Some(p)
-    else first(p)
+    status(fs, p).flatMap(s => if (s.isFile) Some(s) else first(p))
   }
 
   /** The Spark schema a Spark writer recorded in the footer of the first
@@ -215,12 +327,16 @@ object SidecarIO {
     * would return, read on the driver instead of by an inference job.
     * None when the path has no data file or the file was not written by
     * Spark. */
-  def sparkSchema(spark: SparkSession, dir: String): Option[StructType] =
-    firstDataFile(spark, dir).flatMap { f =>
-      Option(footer(spark, f).getKeyValueMetaData.get(
+  def sparkSchema(spark: SparkSession, dir: String): Option[StructType] = {
+    val conf = hadoopConf(spark)
+    firstDataFile(conf, dir).flatMap { f =>
+      val r = open(conf, f)
+      try Option(r.getFooter.getFileMetaData.getKeyValueMetaData.get(
         org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
           .SPARK_METADATA_KEY))
+      finally r.close()
     }.map(DataType.fromJson(_).asInstanceOf[StructType])
+  }
 
   /** The parquet table at `dir` read with the schema its writer recorded
     * in a footer (`sparkSchema`), plus the int column of a table
@@ -256,21 +372,41 @@ object SidecarIO {
     readRows(spark, dir).map { rows =>
       val schema = sparkSchema(spark, dir).getOrElse(throw new IllegalStateException(
         s"SidecarIO.readLocal($dir): no Spark schema in the footer"))
-      spark.createDataFrame(
-        java.util.Arrays.asList(rows.map(r => Row.fromSeq(schema.fieldNames.toSeq
-          .map(r.getOrElse(_, null)))): _*),
-        schema)
+      spark.createDataFrame(java.util.Arrays.asList(rows.map(r =>
+        Row.fromSeq(schema.fieldNames.toSeq.map(r.getOrElse(_, null)))): _*), schema)
     }
 
-  /** Overwrite `dir` with the rows of a DRIVER-HELD frame, in-process and
-    * with no Spark job: Spark's own parquet writer (`prepareWrite`, then
-    * one `OutputWriter`) writes a single part file under a `_`-prefixed
-    * name — invisible to readers — which is renamed into place before the
-    * `_SUCCESS` marker, so Spark and `SidecarIO` read back the schema,
-    * rows and footer metadata a `coalesce(1).write.parquet` would have
-    * left. An empty frame writes one file holding only the schema, as
-    * Spark does. A frame that is not driver-held is refused: its rows
-    * would have to be computed by a job, and data keeps Spark's writer. */
+  // -------------------------------------------------------------- writes
+
+  /** A sidecar's content as the driver holds it: external rows (Spark's
+    * external types: Long, String, Seq, ...) of `schema`. */
+  final case class Rows(schema: StructType, data: Seq[Row])
+
+  /** `data` with the schema `Seq(...).toDF(names: _*)` would have — the
+    * encoder's field types and nullability under `names` — without
+    * building the frame: a tuple per row, or a bare value for one column. */
+  def rows[T: Encoder](data: Seq[T], names: String*): Rows = {
+    val fields = implicitly[Encoder[T]].schema.fields
+    require(fields.length == names.length,
+      s"SidecarIO.rows: ${fields.length} fields, ${names.length} names")
+    Rows(StructType(fields.zip(names).map { case (f, n) => f.copy(name = n) }),
+      data.map {
+        case p: Product if fields.length > 1 => Row.fromTuple(p)
+        case v => Row(v)
+      })
+  }
+
+  /** Overwrite `dir` with `rows`, in-process and with no Spark job. */
+  def write(spark: SparkSession, dir: String, rows: Rows): Unit = {
+    val toInternal = CatalystTypeConverters.createToCatalystConverter(rows.schema)
+    writeInternal(spark, dir, rows.schema,
+      rows.data.iterator.map(toInternal(_).asInstanceOf[InternalRow]))
+  }
+
+  /** Overwrite `dir` with the rows of a DRIVER-HELD frame (a
+    * `LocalRelation` once optimized). A frame that is not driver-held is
+    * refused: its rows would have to be computed by a job, and data keeps
+    * Spark's writer. */
   def write(df: DataFrame, dir: String): Unit = {
     val rel = df.queryExecution.optimizedPlan match {
       case r: LocalRelation => r
@@ -278,9 +414,29 @@ object SidecarIO {
         s"SidecarIO.write($dir): not a driver-held frame (${other.nodeName}) — " +
           "write data with Spark's writer")
     }
-    val spark = df.sparkSession
-    val schema = rel.schema
-    val job = org.apache.hadoop.mapreduce.Job.getInstance(spark.sessionState.newHadoopConf())
+    writeInternal(df.sparkSession, dir, rel.schema, rel.data.iterator)
+  }
+
+  /** Spark's own parquet writer (`prepareWrite`, then one `OutputWriter`)
+    * writes a single part file under a `_`-prefixed name — invisible to
+    * readers — which is renamed into place before the `_SUCCESS` marker,
+    * so Spark and `SidecarIO` read back the schema, rows and footer
+    * metadata a `coalesce(1).write.parquet` would have left. No rows
+    * writes one file holding only the schema, as Spark does. Every file
+    * goes through the raw file system (the part file through a job
+    * configuration that maps the scheme to it), so none gets a `.crc`. */
+  private def writeInternal(spark: SparkSession, dir: String, schema: StructType,
+      data: Iterator[InternalRow]): Unit = {
+    val conf = hadoopConf(spark)
+    val out = new Path(dir)
+    val checked = out.getFileSystem(conf)
+    val fs = raw(checked)
+    val job = org.apache.hadoop.mapreduce.Job.getInstance(conf)
+    if (fs ne checked) {
+      val scheme = fs.getUri.getScheme
+      job.getConfiguration.set(s"fs.$scheme.impl", fs.getClass.getName)
+      job.getConfiguration.setBoolean(s"fs.$scheme.impl.disable.cache", true)
+    }
     val factory = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
       .prepareWrite(spark, job, Map.empty, schema)
     import org.apache.hadoop.mapreduce.{JobID, TaskAttemptID, TaskID, TaskType}
@@ -288,18 +444,98 @@ object SidecarIO {
       new TaskID(new JobID("graft-sidecar", 0), TaskType.MAP, 0), 0)
     val ctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
       job.getConfiguration, attempt)
-    val out = new Path(dir)
-    val fs = out.getFileSystem(job.getConfiguration)
     fs.delete(out, true)
     fs.mkdirs(out)
     val name = s"part-00000-${java.util.UUID.randomUUID}-c000${factory.getFileExtension(ctx)}"
     val staged = new Path(out, "_" + name)
     val writer = factory.newInstance(staged.toString, schema, ctx)
-    try rel.data.foreach(writer.write)
+    try data.foreach(writer.write)
     finally writer.close()
     if (!fs.rename(staged, new Path(out, name)))
       throw new java.io.IOException(s"SidecarIO.write($dir): rename of $staged failed")
     fs.create(new Path(out, "_SUCCESS"), true).close()
+  }
+
+  /** `write` through a staged swap: the new content is written whole
+    * beside the target (`.staged`), then the old content is renamed aside
+    * (`.old`) and the staged directory renamed in — a crash leaves old
+    * content, new content, or (inside the two-rename window) the `.old`
+    * directory that `readSwapped` restores; never a half-written target. */
+  def swap(spark: SparkSession, dir: String, rows: Rows): Unit = withConf(spark) {
+    val fs = raw(this.fs(spark, dir))
+    val target = new Path(dir)
+    val staged = new Path(dir + ".staged")
+    val old = new Path(dir + ".old")
+    write(spark, staged.toString, rows)
+    fs.delete(old, true)
+    if (fs.exists(target))
+      require(fs.rename(target, old), s"sidecar swap failed at $dir")
+    if (!fs.rename(staged, target)) {
+      // put the previous content back so readers never see an absent
+      // sidecar because of a failed swap
+      if (fs.exists(old)) fs.rename(old, target)
+      throw new IllegalStateException(s"sidecar swap failed at $dir")
+    }
+    fs.delete(old, true)
+  }
+
+  /** Copy the directory `from` to `to` file by file, when it exists (a
+    * sidecar's files never change once written, and a copy skips the
+    * decode and re-encode of a read and a write). Files are read through
+    * the path's file system — a legacy `.crc` is verified — and written
+    * through the raw one, without `.crc` companions. */
+  def copy(spark: SparkSession, from: String, to: String): Unit = withConf(spark) {
+    val src = new Path(from)
+    val srcFs = this.fs(spark, from)
+    val dst = new Path(to)
+    val dstFs = raw(this.fs(spark, to))
+    def copyDir(s: Path, d: Path): Unit = {
+      dstFs.mkdirs(d)
+      srcFs.listStatus(s).foreach { st =>
+        val name = st.getPath.getName
+        if (st.isDirectory) copyDir(st.getPath, new Path(d, name))
+        else if (!ChecksumFileSystem.isChecksumFile(st.getPath)) {
+          val in = srcFs.open(st.getPath)
+          try {
+            val out = dstFs.create(new Path(d, name), false)
+            try in.transferTo(out) finally out.close()
+          } finally in.close()
+        }
+      }
+    }
+    if (srcFs.exists(src)) {
+      dstFs.delete(dst, true) // an existing directory would receive the copy inside it
+      copyDir(src, dst)
+    }
+  }
+
+  /** Write the small file `path` holding `bytes` through the raw file
+    * system — a lease, a commit marker — replacing it unless `overwrite`
+    * is false, when an existing file fails the call. A `.crc` an older
+    * writer left beside it is deleted, so checksummed reads never see a
+    * stale one. */
+  def writeFile(spark: SparkSession, path: String, bytes: Array[Byte],
+      overwrite: Boolean = true): Unit = {
+    val p = new Path(path)
+    val checked = this.fs(spark, path)
+    val fs = raw(checked)
+    checked match {
+      case c: ChecksumFileSystem => fs.delete(c.getChecksumFile(p), false)
+      case _ => ()
+    }
+    val out = fs.create(p, overwrite)
+    try out.write(bytes) finally out.close()
+  }
+
+  /** The bytes and modification time of the small file `path`; None when
+    * it is missing. */
+  def readFile(spark: SparkSession, path: String): Option[(Array[Byte], Long)] = {
+    val p = new Path(path)
+    val fs = this.fs(spark, path)
+    status(fs, p).map { st =>
+      val in = fs.open(p)
+      try (in.readAllBytes(), st.getModificationTime) finally in.close()
+    }
   }
 
   /** A list field coerced to Array[Float] (loader convenience). */
@@ -316,4 +552,26 @@ object SidecarIO {
   def asLong(v: Any): Long = v.asInstanceOf[Number].longValue
   def asInt(v: Any): Int = v.asInstanceOf[Number].intValue
   def asDouble(v: Any): Double = v.asInstanceOf[Number].doubleValue
+}
+
+/** Hadoop's raw local file system, except that a file or directory it
+  * creates gets the mode the process umask gives it: `RawLocalFileSystem`
+  * sets the mode of each one itself, and without libhadoop that forks
+  * `chmod` (~2.4 ms) per file and per directory. With the usual umask 022
+  * the modes are the same 0644 and 0755. */
+private[sources] final class NoChmodLocalFileSystem extends RawLocalFileSystem {
+  override def mkdirs(f: Path): Boolean = {
+    java.nio.file.Files.createDirectories(pathToFile(f).toPath)
+    true
+  }
+
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
+      blockSize: Long, progress: org.apache.hadoop.util.Progressable): FSDataOutputStream = {
+    val file = pathToFile(f)
+    if (file.exists() && (!overwrite || file.isDirectory))
+      throw new FileAlreadyExistsException(s"File already exists: $f")
+    Option(f.getParent).foreach(mkdirs)
+    new FSDataOutputStream(
+      new java.io.BufferedOutputStream(new java.io.FileOutputStream(file), bufferSize), statistics)
+  }
 }

@@ -1,6 +1,6 @@
 package graft.stream
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.core.{Frames, Metric}
 import graft.sources.SidecarIO
@@ -84,7 +84,7 @@ class TieredIndex private (
     * TOTAL population (base + delta) and the base tier's measured recall
     * curve (the ANN tier governs the probe/recall relation; the delta is
     * scanned exactly regardless of probes). */
-  def save(path: String): Unit = {
+  def save(path: String): Unit = SidecarIO.withConf(delta.sparkSession) {
     val spark = delta.sparkSession
     val store = TieredIndex.storeDir(0)
     val baseRows = base.save(s"$path/tiered_base", s"$path/$store")
@@ -98,8 +98,8 @@ class TieredIndex private (
       .getOrElse(delta.count())
     if (deltaRows == 0L) TieredIndex.writeEmptyDelta(spark, path, out.schema)
     else out.write.mode("overwrite").parquet(s"$path/delta")
-    SidecarIO.write(TieredIndex.metaFrame(spark, minAnnRows, metric.name, deltaRows,
-      Some(baseRows)), s"$path/tiered_meta")
+    SidecarIO.write(spark, s"$path/tiered_meta",
+      TieredIndex.metaRows(spark, minAnnRows, metric.name, deltaRows, Some(baseRows)))
     IvfFlatIndex.saveMeta(spark, path, baseRows + deltaRows)
     TieredIndex.copyCurve(spark, s"$path/tiered_base", path)
   }
@@ -197,7 +197,7 @@ object TieredIndex {
   private def writeListDirs(spark: org.apache.spark.sql.SparkSession, live: String,
       dirs: Seq[String]): Unit = {
     import spark.implicits._
-    SidecarIO.write(dirs.toDF("dir"), s"$live/tiered_base/list_dirs")
+    SidecarIO.write(spark, s"$live/tiered_base/list_dirs", SidecarIO.rows(dirs, "dir"))
   }
 
   /** Base-tier lists live in `<root>/list_store/g_NNNNNN`, numbered by the
@@ -226,40 +226,25 @@ object TieredIndex {
 
   /** The `tiered_meta` row; `curveRows` is left out only when rewriting a
     * layout saved without it. */
-  private[graft] def metaFrame(spark: org.apache.spark.sql.SparkSession, minAnnRows: Long,
-      metric: String, deltaRows: Long, curveRows: Option[Long]): DataFrame = {
+  private[graft] def metaRows(spark: org.apache.spark.sql.SparkSession, minAnnRows: Long,
+      metric: String, deltaRows: Long, curveRows: Option[Long]): SidecarIO.Rows = {
     import spark.implicits._
-    curveRows.fold(Seq((minAnnRows, metric, deltaRows))
-      .toDF("min_ann_rows", "metric", "delta_rows")) { c =>
-      Seq((minAnnRows, metric, deltaRows, c))
-        .toDF("min_ann_rows", "metric", "delta_rows", "curve_rows")
+    curveRows.fold(SidecarIO.rows(Seq((minAnnRows, metric, deltaRows)),
+      "min_ann_rows", "metric", "delta_rows")) { c =>
+      SidecarIO.rows(Seq((minAnnRows, metric, deltaRows, c)),
+        "min_ann_rows", "metric", "delta_rows", "curve_rows")
     }
   }
 
   private def writeEmptyDelta(spark: org.apache.spark.sql.SparkSession, live: String,
       schema: org.apache.spark.sql.types.StructType): Unit =
-    SidecarIO.write(spark.createDataFrame(java.util.Collections.emptyList[Row](), schema),
-      s"$live/delta")
+    SidecarIO.write(spark, s"$live/delta", SidecarIO.Rows(schema, Nil))
 
   /** Copy a curve sidecar verbatim (all columns — the n_queries/k sample
     * size feeds the planner's Wilson-bound inversion). */
   private def copyCurve(spark: org.apache.spark.sql.SparkSession, from: String,
       to: String): Unit =
-    copySidecar(spark, s"$from/recall_curve", s"$to/recall_curve")
-
-  /** Copy a written sidecar directory file by file, when it exists: its
-    * files never change once written, and a copy skips the decode and
-    * re-encode of a read and a write. */
-  private def copySidecar(spark: org.apache.spark.sql.SparkSession, from: String,
-      to: String): Unit = {
-    val src = new org.apache.hadoop.fs.Path(from)
-    val fs = src.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(src)) {
-      val dst = new org.apache.hadoop.fs.Path(to)
-      fs.delete(dst, true) // an existing directory would receive the copy inside it
-      org.apache.hadoop.fs.FileUtil.copy(fs, src, fs, dst, false, fs.getConf)
-    }
-  }
+    SidecarIO.copy(spark, s"$from/recall_curve", s"$to/recall_curve")
 
   /** The delta tier as a frame. Streaming ingest lands each micro-batch
     * in its own `delta/batch-<id>/` subdirectory (the idempotent-replay
@@ -313,8 +298,7 @@ object TieredIndex {
     * the writers below keep it stable for at least one full compaction
     * interval after a newer version commits. */
   def resolveLive(spark: org.apache.spark.sql.SparkSession, path: String): String = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = SidecarIO.fs(spark, path)
     committedVersions(fs, path).lastOption
       .map(versionDir(path, _)).getOrElse(path)
   }
@@ -341,10 +325,9 @@ object TieredIndex {
     * crash after it is a completed compaction. Nothing is ever renamed,
     * so there is no window in which the layout is absent. */
   def compactInPlace(spark: org.apache.spark.sql.SparkSession, path: String,
-      beforeSwap: String => Unit = _ => ()): Unit = {
+      beforeSwap: String => Unit = _ => ()): Unit = SidecarIO.withConf(spark) {
     recoverSwap(spark, path)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = SidecarIO.fs(spark, path)
     val committed = committedVersions(fs, path)
     val cur = committed.lastOption.getOrElse(0)
     val live = committed.lastOption.map(versionDir(path, _)).getOrElse(path)
@@ -360,7 +343,7 @@ object TieredIndex {
       .foreach(p => fs.delete(new org.apache.hadoop.fs.Path(p), true))
     fold(spark, path, live, next, store)
     beforeSwap(next)
-    fs.create(new org.apache.hadoop.fs.Path(next, CommitMarker), false).close()
+    SidecarIO.writeFile(spark, s"$next/$CommitMarker", Array.emptyByteArray, overwrite = false)
     // retention: the version just superseded (`cur`) survives one more
     // compaction interval for in-flight readers; everything older goes,
     // and once a version PRECEDES the grace version the flat (v0) members
@@ -404,9 +387,7 @@ object TieredIndex {
           if (added > 0) (ds :+ store, baseRows + added)
           else {
             // nothing landed (an empty or all-null delta): no directory
-            new org.apache.hadoop.fs.Path(storePath)
-              .getFileSystem(spark.sessionState.newHadoopConf())
-              .delete(new org.apache.hadoop.fs.Path(storePath), true)
+            SidecarIO.fs(spark, storePath).delete(new org.apache.hadoop.fs.Path(storePath), true)
             (ds, baseRows)
           }
         case _ =>
@@ -414,7 +395,7 @@ object TieredIndex {
             prev.base.lists.unionByName(assigned).repartition(col("list_id")), storePath))
       }
     val basePath = s"$next/tiered_base"
-    copySidecar(spark, s"$live/tiered_base/centroids", s"$basePath/centroids")
+    SidecarIO.copy(spark, s"$live/tiered_base/centroids", s"$basePath/centroids")
     IvfFlatIndex.saveMeta(spark, basePath, rows)
     writeListDirs(spark, next, dirs)
     val measuredAt = prev.saved.map(_.curveRows).getOrElse(0L)
@@ -428,8 +409,8 @@ object TieredIndex {
         measuredAt
       }
     writeEmptyDelta(spark, next, prev.delta.schema)
-    SidecarIO.write(metaFrame(spark, prev.minAnnRows, prev.metric.name, 0L, Some(curveRows)),
-      s"$next/tiered_meta")
+    SidecarIO.write(spark, s"$next/tiered_meta",
+      metaRows(spark, prev.minAnnRows, prev.metric.name, 0L, Some(curveRows)))
     IvfFlatIndex.saveMeta(spark, next, rows)
     copyCurve(spark, basePath, next)
   }
@@ -474,8 +455,7 @@ object TieredIndex {
     * version. Called on every load and every ingest append. */
   private[stream] def recoverSwap(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = SidecarIO.fs(spark, path)
     def healthy(p: org.apache.hadoop.fs.Path): Boolean =
       fs.exists(new org.apache.hadoop.fs.Path(p, "tiered_meta"))
     val real = new org.apache.hadoop.fs.Path(path)

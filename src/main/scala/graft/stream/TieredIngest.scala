@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.core.GraftConf
 import graft.index.IvfFlatIndex
+import graft.sources.SidecarIO
 
 /** Streaming append INTO a saved tiered layout — the full streaming-ingest
   * story of `cuvs::neighbors::tiered_index` (tiered_index.hpp:59-67:
@@ -35,10 +36,11 @@ import graft.index.IvfFlatIndex
   * skips the data write and only re-derives the sidecars from the
   * ledger — which also covers a crash BETWEEN the ledger write and the
   * sidecar writes (the write order is data → ledger → sidecars, each
-  * step idempotent given the previous). The one-row sidecar rewrites go
-  * through a staged-rename (write aside, rename the old content ASIDE,
-  * swap in — a reader finds old or new content except inside a
-  * two-metadata-op window, which `readOneRowSidecar`'s bounded retry
+  * step idempotent given the previous). The one-row sidecar rewrites
+  * (ledger, `tiered_meta`, `meta`) go through a staged swap
+  * (`SidecarIO.swap`: write aside, rename the old content ASIDE, swap in
+  * — a reader finds old or new content except inside a
+  * two-metadata-op window, which `SidecarIO.readSwapped`'s bounded retry
   * rides out); a reader that still catches a torn ledger treats it as
   * absent and re-derives — the engine only ever redelivers the LAST
   * batch, whose rows are by construction not yet in the pre-crash
@@ -71,12 +73,18 @@ import graft.index.IvfFlatIndex
   * per-layout lock.
   *
   * 100 TB posture: each append is one partitioned parquet write of the
-  * micro-batch — its only Spark job — plus three one-row sidecar rewrites
-  * that the driver writes in-process (SidecarIO.write) — no shuffle, no
-  * index rebuild, no read of the base tier, and the delta-population
-  * refresh is INCREMENTAL (previous ledger sum + this batch's count, read
-  * from the footers of the files just written), never a re-count of the
-  * whole delta directory. The ledger itself holds one
+  * micro-batch — its only Spark job — plus three one-row sidecar swaps
+  * and the lease heartbeat, which the driver writes in-process through
+  * SidecarIO under one Hadoop configuration (`SidecarIO.withConf`) — no
+  * shuffle, no index rebuild, no read of the base tier, no optimizer
+  * pass, and the delta-population refresh is INCREMENTAL (previous
+  * ledger sum + this batch's count, read from the footers of the files
+  * just written), never a re-count of the whole delta directory. The
+  * driver-side sidecar cost is a fixed handful of small-file operations
+  * — three swaps (~3 ms each on a 4-vCPU host) and about ten one-row
+  * reads (~1 ms each), no `.crc` companions and no forked `chmod` on a
+  * local file system — beside the data write's job. The ledger itself
+  * holds one
   * row per SCOPE (not per batch), so a year-long one-batch-per-10s
   * ingest still reads and rewrites a handful of rows per micro-batch —
   * O(scopes), not O(batches-ever). Compaction bounds the delta's
@@ -113,18 +121,10 @@ object TieredIngest {
   private def acquireLease(spark: SparkSession, root: String): Unit = {
     if (!GraftConf.TieredLease.get(spark)) return
     val staleMs = GraftConf.TieredLeaseStaleMs.get(spark)
-    val p = new org.apache.hadoop.fs.Path(root, ".ingest_lease")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val p = s"$root/.ingest_lease"
     val held: Option[(String, Long)] =
-      try {
-        if (!fs.exists(p)) None
-        else {
-          val in = fs.open(p)
-          val content =
-            try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-            finally in.close()
-          Some((content, fs.getFileStatus(p).getModificationTime))
-        }
+      try SidecarIO.readFile(spark, p).map { case (bytes, mtime) =>
+        (new String(bytes, java.nio.charset.StandardCharsets.UTF_8).trim, mtime)
       } catch {
         // an unreadable lease (torn write, vanished mid-read) is treated
         // as absent — the rewrite below re-establishes it
@@ -144,9 +144,7 @@ object TieredIngest {
           s"$root (token $tok, heartbeat ${age}ms ago >= staleMs=$staleMs)")
       }
     }
-    val out = fs.create(p, true)
-    try out.write(leaseToken.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    SidecarIO.writeFile(spark, p, leaseToken.getBytes(java.nio.charset.StandardCharsets.UTF_8))
   }
 
   /** Scope of the rows that were in the delta BEFORE the first
@@ -164,10 +162,8 @@ object TieredIngest {
 
   private def ledgerPath(indexPath: String) = s"$indexPath/delta_commits"
 
-  private def exists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
-  }
+  private def exists(spark: SparkSession, path: String): Boolean =
+    SidecarIO.fs(spark, path).exists(new org.apache.hadoop.fs.Path(path))
 
   /** The committed-batch ledger, one entry per scope; initialized from
     * the CURRENT `tiered_meta.delta_rows` (authoritative as of the save /
@@ -186,7 +182,6 @@ object TieredIngest {
         // driver-side read (r17, SidecarIO doc): the ledger is O(scopes)
         // rows and was read as a Spark job PER MICRO-BATCH; the pre-r16
         // per-batch fold happens in plain Scala on the same rows
-        import graft.sources.SidecarIO
         val raw = SidecarIO.readRows(spark, ledgerPath(indexPath))
           .getOrElse(throw new java.io.FileNotFoundException(ledgerPath(indexPath)))
         if (raw.headOption.exists(_.contains("max_batch_id")))
@@ -206,89 +201,19 @@ object TieredIngest {
           Map(BaseScope -> ScopeState(-1L, metaDeltaRows(spark, indexPath)))
       }
 
-  /** Staged-rename one-row parquet write (driver-side, no job — the rows
-    * are driver-held; SidecarIO.write): the staged content is fully
-    * written first, then the OLD content is renamed aside and the staged
-    * directory renamed in — a crash leaves old content, new content, or
-    * (inside the two-rename window) the `.old` directory that
-    * `readOneRowSidecar` restores; never a half-written target. */
-  private def atomicOneRowWrite(df: DataFrame, target: String): Unit = {
-    val spark = df.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(target)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val targetP = new org.apache.hadoop.fs.Path(target)
-    val stagedP = new org.apache.hadoop.fs.Path(target + ".staged")
-    val oldP = new org.apache.hadoop.fs.Path(target + ".old")
-    graft.sources.SidecarIO.write(df, stagedP.toString)
-    fs.delete(oldP, true)
-    if (fs.exists(targetP))
-      require(fs.rename(targetP, oldP), s"sidecar swap failed at $target")
-    if (!fs.rename(stagedP, targetP)) {
-      // put the previous content back so readers never see an absent
-      // sidecar because of a failed swap
-      if (fs.exists(oldP)) fs.rename(oldP, targetP)
-      throw new IllegalStateException(s"sidecar swap failed at $target")
-    }
-    fs.delete(oldP, true)
-  }
-
-  /** One-row sidecar read that survives the swap window: a read landing
-    * between atomicOneRowWrite's two renames RETRIES first (a live writer
-    * finishes in milliseconds — restoring eagerly would steal the `.old`
-    * directory out from under its in-flight swap and fail the ingest
-    * batch), and only after the retries are exhausted treats a
-    * still-absent target with `.old` present as a crashed writer's
-    * leftover and renames it back for one final read. */
+  /** A one-row sidecar rewritten by `SidecarIO.swap`, read through the
+    * swap window (`SidecarIO.readSwapped`); absent is an error here. */
   private[stream] def readOneRowSidecar(spark: SparkSession,
-      target: String): Map[String, Any] = {
-    // driver-side read (r17, SidecarIO doc): sidecar reads ran one Spark
-    // job each, paid per micro-batch on the ingest path; the retry ladder
-    // and crash-restore semantics below are unchanged
-    def readHead(): Map[String, Any] =
-      graft.sources.SidecarIO.readHead(spark, target)
-        .getOrElse(throw new java.io.FileNotFoundException(target))
-    val fs = new org.apache.hadoop.fs.Path(target)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val targetP = new org.apache.hadoop.fs.Path(target)
-    val oldP = new org.apache.hadoop.fs.Path(target + ".old")
-    var attempt = 0
-    while (attempt < 4) {
-      try return readHead()
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          // a genuinely-missing sidecar (no target, no in-flight swap's
-          // `.old` sibling) can't appear by waiting — fail fast with the
-          // real error instead of riding the whole retry ladder. The two
-          // exists() reads are not atomic against a live writer's
-          // rename dance (target absent at the first check, the swap
-          // completing and deleting `.old` before the second), so the
-          // verdict is confirmed once after a beat before throwing.
-          def genuinelyMissing = !fs.exists(targetP) && !fs.exists(oldP)
-          if (genuinelyMissing) {
-            Thread.sleep(25)
-            if (genuinelyMissing) throw e
-          }
-          Thread.sleep(50L << attempt)
-          attempt += 1
-      }
-    }
-    try readHead()
-    catch {
-      case scala.util.control.NonFatal(e) =>
-        if (!fs.exists(targetP) && fs.exists(oldP) && !fs.rename(oldP, targetP))
-          throw new IllegalStateException(
-            s"sidecar at $target is absent and restoring $target.old failed", e)
-        readHead() // throws if genuinely unreadable
-    }
-  }
+      target: String): Map[String, Any] =
+    SidecarIO.readSwapped(spark, target)
+      .getOrElse(throw new java.io.FileNotFoundException(target))
 
   private def writeLedger(spark: SparkSession, indexPath: String,
       ledger: Map[String, ScopeState]): Unit = {
     import spark.implicits._
-    atomicOneRowWrite(
-      ledger.toSeq.map { case (sc, st) => (sc, st.maxBatchId, st.cumRows) }
-        .toDF("scope", "max_batch_id", "cum_rows"),
-      ledgerPath(indexPath))
+    SidecarIO.swap(spark, ledgerPath(indexPath), SidecarIO.rows(
+      ledger.toSeq.map { case (sc, st) => (sc, st.maxBatchId, st.cumRows) },
+      "scope", "max_batch_id", "cum_rows"))
   }
 
   /** Carry the committed batch ids through an in-place compaction as a
@@ -309,7 +234,7 @@ object TieredIngest {
   private def metaDeltaRows(spark: SparkSession, indexPath: String): Long = {
     val meta = readOneRowSidecar(spark, s"$indexPath/tiered_meta")
     if (meta.contains("delta_rows"))
-      graft.sources.SidecarIO.asLong(meta("delta_rows"))
+      SidecarIO.asLong(meta("delta_rows"))
     else {
       val total = TieredIndex.readDelta(spark, indexPath).count()
       total - batchDirRows(spark, indexPath)
@@ -318,7 +243,7 @@ object TieredIngest {
 
   private def batchDirRows(spark: SparkSession, indexPath: String): Long = {
     val delta = new org.apache.hadoop.fs.Path(s"$indexPath/delta")
-    val fs = delta.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = SidecarIO.fs(spark, delta.toString)
     if (!fs.exists(delta)) 0L
     else {
       val dirs = fs.listStatus(delta)
@@ -359,114 +284,118 @@ object TieredIngest {
       batchId: Long = -1L, scope: String = ""): Unit =
     lockFor(indexPath).synchronized {
       val spark = batch.sparkSession
-      val root = normalize(indexPath)
-      TieredIndex.recoverSwap(spark, root)
-      acquireLease(spark, root)
-      // all data/ledger/sidecar writes target the layout's LIVE version
-      // directory (the root itself until the first in-place compaction);
-      // resolved once per append, under the lock
-      val live = TieredIndex.resolveLive(spark, root)
-      val shaped = batch
-        .select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
-      val sc = normalize(scope)
-      val stats: (Long, Long) =
-        if (batchId >= 0) {
-          val ledger = readLedger(spark, live)
-          val state = ledger.getOrElse(sc, ScopeState(-1L, 0L))
-          if (batchId <= state.maxBatchId) {
-            // at-least-once redelivery of an already-committed batch
-            // (ids are monotonic per scope, so <= max means committed):
-            // the data and ledger landed last time — only the sidecars
-            // might be stale (crash between ledger and sidecar writes),
-            // so re-derive them and land nothing. Structured Streaming
-            // only ever redelivers the LAST batch (== max); a direct
-            // caller submitting a NEW id below its scope's max violates
-            // the monotonic-id contract and gets skipped as a replay —
-            // loudly, so the drop is never silent.
-            if (batchId < state.maxBatchId)
-              System.err.println(s"graft TieredIngest: batch $batchId in scope " +
-                s"'$sc' is below the scope's max committed id ${state.maxBatchId} " +
-                "— treated as an already-committed replay and SKIPPED (per-scope " +
-                "batch ids must be monotonic; use a fresh scope to restart an " +
-                "id sequence)")
-            writeSidecars(spark, live, ledger.values.map(_.cumRows).sum)
-          } else {
-            // pre-r16 upgrade hazard: a pre-r16 batch under this scope
-            // wrote its data to the UNSCOPED delta/batch-<id> dir and
-            // crashed before its ledger row, so this redelivery would land
-            // the same rows AGAIN under the scope-tagged name while the
-            // orphan still sits in the recursive delta listing. Remove the
-            // orphan first — but only when the empty scope's own ledger
-            // does not claim the id (a direct empty-scope caller that
-            // legitimately committed batch-<id> owns that directory).
-            if (sc.nonEmpty &&
-                ledger.get(BaseScope).forall(_.maxBatchId < batchId)) {
-              val legacy = new org.apache.hadoop.fs.Path(
-                s"$live/delta/batch-$batchId")
-              val lfs = legacy.getFileSystem(spark.sessionState.newHadoopConf())
-              if (lfs.exists(legacy)) {
-                System.err.println(s"graft TieredIngest: removing orphaned " +
-                  s"pre-upgrade batch directory $legacy before re-landing batch " +
-                  s"$batchId under scope '$sc' (crashed pre-r16 write, never " +
-                  "committed to the ledger)")
-                lfs.delete(legacy, true)
+      SidecarIO.withConf(spark) {
+        val root = normalize(indexPath)
+        TieredIndex.recoverSwap(spark, root)
+        acquireLease(spark, root)
+        // all data/ledger/sidecar writes target the layout's LIVE version
+        // directory (the root itself until the first in-place compaction);
+        // resolved once per append, under the lock
+        val live = TieredIndex.resolveLive(spark, root)
+        val shaped = batch
+          .select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
+        val sc = normalize(scope)
+        val stats: (Long, Long) =
+          if (batchId >= 0) {
+            val ledger = readLedger(spark, live)
+            val state = ledger.getOrElse(sc, ScopeState(-1L, 0L))
+            if (batchId <= state.maxBatchId) {
+              // at-least-once redelivery of an already-committed batch
+              // (ids are monotonic per scope, so <= max means committed):
+              // the data and ledger landed last time — only the sidecars
+              // might be stale (crash between ledger and sidecar writes),
+              // so re-derive them and land nothing. Structured Streaming
+              // only ever redelivers the LAST batch (== max); a direct
+              // caller submitting a NEW id below its scope's max violates
+              // the monotonic-id contract and gets skipped as a replay —
+              // loudly, so the drop is never silent.
+              if (batchId < state.maxBatchId)
+                System.err.println(s"graft TieredIngest: batch $batchId in scope " +
+                  s"'$sc' is below the scope's max committed id ${state.maxBatchId} " +
+                  "— treated as an already-committed replay and SKIPPED (per-scope " +
+                  "batch ids must be monotonic; use a fresh scope to restart an " +
+                  "id sequence)")
+              writeSidecars(spark, live, ledger.values.map(_.cumRows).sum)
+            } else {
+              // pre-r16 upgrade hazard: a pre-r16 batch under this scope
+              // wrote its data to the UNSCOPED delta/batch-<id> dir and
+              // crashed before its ledger row, so this redelivery would land
+              // the same rows AGAIN under the scope-tagged name while the
+              // orphan still sits in the recursive delta listing. Remove the
+              // orphan first — but only when the empty scope's own ledger
+              // does not claim the id (a direct empty-scope caller that
+              // legitimately committed batch-<id> owns that directory).
+              if (sc.nonEmpty &&
+                  ledger.get(BaseScope).forall(_.maxBatchId < batchId)) {
+                val legacy = new org.apache.hadoop.fs.Path(
+                  s"$live/delta/batch-$batchId")
+                val lfs = SidecarIO.fs(spark, legacy.toString)
+                if (lfs.exists(legacy)) {
+                  System.err.println(s"graft TieredIngest: removing orphaned " +
+                    s"pre-upgrade batch directory $legacy before re-landing batch " +
+                    s"$batchId under scope '$sc' (crashed pre-r16 write, never " +
+                    "committed to the ledger)")
+                  lfs.delete(legacy, true)
+                }
               }
+              // overwrite = idempotent under replay AND under a crashed
+              // partial write of this very directory
+              val dir = batchDir(live, sc, batchId)
+              shaped.write.mode("overwrite").parquet(dir)
+              // footer record counts of the files just written — no job
+              val n = SidecarIO.rowCount(spark, dir).getOrElse(0L)
+              val grown = ledger + (sc -> ScopeState(batchId, state.cumRows + n))
+              writeLedger(spark, live, grown)
+              writeSidecars(spark, live, grown.values.map(_.cumRows).sum)
             }
-            // overwrite = idempotent under replay AND under a crashed
-            // partial write of this very directory
-            val dir = batchDir(live, sc, batchId)
-            shaped.write.mode("overwrite").parquet(dir)
-            // footer record counts of the files just written — no job
-            val n = graft.sources.SidecarIO.rowCount(spark, dir).getOrElse(0L)
-            val grown = ledger + (sc -> ScopeState(batchId, state.cumRows + n))
-            writeLedger(spark, live, grown)
-            writeSidecars(spark, live, grown.values.map(_.cumRows).sum)
+          } else {
+            shaped.write.mode("append").parquet(s"$live/delta")
+            refreshSidecars(spark, live)
           }
-        } else {
-          shaped.write.mode("append").parquet(s"$live/delta")
-          refreshSidecars(spark, live)
-        }
-      maybeCompact(spark, root, live, stats._1, stats._2)
+        maybeCompact(spark, root, live, stats._1, stats._2)
+      }
     }
 
   /** Rewrite `tiered_meta` (delta population) and the top-level
     * combined-population `meta` — the two numbers the kNN-join planner
-    * reads at rewrite time. Returns (deltaRows, minAnnRows) so the
-    * compaction trigger needs no extra sidecar read. */
+    * reads at rewrite time — each by a staged swap, so a planner reading
+    * either mid-append finds the old or the new row, never none. Returns
+    * (deltaRows, minAnnRows) so the compaction trigger needs no extra
+    * sidecar read. */
   private def writeSidecars(spark: SparkSession, indexPath: String,
       deltaRows: Long): (Long, Long) = {
     val meta = readOneRowSidecar(spark, s"$indexPath/tiered_meta")
-    val minAnnRows = graft.sources.SidecarIO.asLong(meta("min_ann_rows"))
-    atomicOneRowWrite(
-      TieredIndex.metaFrame(spark, minAnnRows, meta("metric").asInstanceOf[String], deltaRows,
-        meta.get("curve_rows").map(graft.sources.SidecarIO.asLong)),
-      s"$indexPath/tiered_meta")
+    val minAnnRows = SidecarIO.asLong(meta("min_ann_rows"))
+    SidecarIO.swap(spark, s"$indexPath/tiered_meta",
+      TieredIndex.metaRows(spark, minAnnRows, meta("metric").asInstanceOf[String], deltaRows,
+        meta.get("curve_rows").map(SidecarIO.asLong)))
     val baseRows = IvfFlatIndex.loadMeta(spark, s"$indexPath/tiered_base").getOrElse(0L)
-    IvfFlatIndex.saveMeta(spark, indexPath, baseRows + deltaRows)
+    SidecarIO.swap(spark, s"$indexPath/meta", IvfFlatIndex.metaRows(spark, baseRows + deltaRows))
     (deltaRows, minAnnRows)
   }
 
   /** Full-recount sidecar refresh — the legacy/direct-append path and the
     * repair tool for a layout whose delta was modified out of band. Also
     * re-bases the ledger so later streaming batches stay incremental. */
-  def refreshSidecars(spark: SparkSession, indexPath: String): (Long, Long) = {
-    // callers may pass the layout ROOT — operate on the live version
-    val live = TieredIndex.resolveLive(spark, normalize(indexPath))
-    val deltaRows = TieredIndex.readDelta(spark, live).count()
-    val stats = writeSidecars(spark, live, deltaRows)
-    if (exists(spark, ledgerPath(live))) {
-      // re-base: the streaming scopes keep their committed counts, the
-      // base pseudo-scope absorbs whatever the recount says the
-      // out-of-band rows add up to
-      val ledger = readLedger(spark, live)
-      val scoped = ledger - BaseScope
-      val baseMax = ledger.get(BaseScope).map(_.maxBatchId).getOrElse(-1L)
-      writeLedger(spark, live, scoped +
-        (BaseScope -> ScopeState(baseMax,
-          deltaRows - scoped.values.map(_.cumRows).sum)))
+  def refreshSidecars(spark: SparkSession, indexPath: String): (Long, Long) =
+    SidecarIO.withConf(spark) {
+      // callers may pass the layout ROOT — operate on the live version
+      val live = TieredIndex.resolveLive(spark, normalize(indexPath))
+      val deltaRows = TieredIndex.readDelta(spark, live).count()
+      val stats = writeSidecars(spark, live, deltaRows)
+      if (exists(spark, ledgerPath(live))) {
+        // re-base: the streaming scopes keep their committed counts, the
+        // base pseudo-scope absorbs whatever the recount says the
+        // out-of-band rows add up to
+        val ledger = readLedger(spark, live)
+        val scoped = ledger - BaseScope
+        val baseMax = ledger.get(BaseScope).map(_.maxBatchId).getOrElse(-1L)
+        writeLedger(spark, live, scoped +
+          (BaseScope -> ScopeState(baseMax,
+            deltaRows - scoped.values.map(_.cumRows).sum)))
+      }
+      stats
     }
-    stats
-  }
 
   /** The reference's `create_ann_index_on_extend` trigger: once the delta
     * crosses `min_ann_rows`, fold it into the ANN tier in place (the

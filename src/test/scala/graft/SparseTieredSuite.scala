@@ -384,6 +384,47 @@ class SparseTieredSuite extends SparkFunSuite {
     assert(loaded.base.lists.count() == base.count() + nCompactions * 6L)
   }
 
+  test("a planner-side meta read racing appends never finds the population absent") {
+    // every append rewrites the layout's top-level `meta` (base + delta
+    // population) by a staged swap; a reader of it between the swap's two
+    // renames waits the window out instead of reading None (and, in the
+    // planner, memoizing a missing population)
+    val s = spark
+    import s.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("tiered_meta_race").toString
+    TieredIndex.build(emb.filter(col("vec_id") < 400), IvfFlatIndex.Params(nLists = 8, nIters = 5),
+      idCol = "vec_id", vecCol = "embedding").save(dir)
+    val vec = emb.select(col("embedding")).head().getSeq[Float](0)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Option[Long]]()
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val readers = Seq.fill(2)(new Thread(() => {
+      while (!done.get()) seen.add(IvfFlatIndex.loadMeta(spark, dir))
+    }))
+    readers.foreach(_.start())
+    val nAppends = 6
+    def batch(i: Int) =
+      (0 until 5).map(j => (3000000L + i * 10 + j, vec)).toDF("vec_id", "embedding")
+    try {
+      for (i <- 0 until nAppends)
+        graft.stream.TieredIngest.append(batch(i), dir, "vec_id", "embedding",
+          batchId = i.toLong, scope = "race")
+      // a redelivered batch lands no rows and only rewrites the sidecars:
+      // many rewrites of `meta` in a short time
+      for (_ <- 0 until 60)
+        graft.stream.TieredIngest.append(batch(nAppends - 1), dir, "vec_id", "embedding",
+          batchId = nAppends - 1L, scope = "race")
+    } finally {
+      done.set(true)
+      readers.foreach(_.join(60000))
+    }
+    val reads = scala.jdk.CollectionConverters.CollectionHasAsScala(seen).asScala.toSeq
+    val absent = reads.count(_.isEmpty)
+    assert(reads.size > 60, s"the readers should have read often, read ${reads.size} times")
+    assert(absent == 0, s"meta read absent $absent of ${reads.size} times")
+    assert(reads.flatten.toSet.subsetOf((0 to nAppends).map(400L + 5 * _).toSet))
+    assert(IvfFlatIndex.loadMeta(spark, dir).contains(400L + 5 * nAppends))
+  }
+
   test("ingest lease: a live foreign writer fails loudly; a stale lease is stolen") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("tiered_lease").toString
@@ -728,8 +769,8 @@ class SparseTieredSuite extends SparkFunSuite {
     // over the 450 rows is the pinned one
     val older = java.nio.file.Files.createTempDirectory("tiered_jobs_remeasure").toString
     built.save(older)
-    graft.sources.SidecarIO.write(TieredIndex.metaFrame(spark, 30L, "l2", 0L, Some(300L)),
-      s"$older/tiered_meta")
+    graft.sources.SidecarIO.write(spark, s"$older/tiered_meta",
+      TieredIndex.metaRows(spark, 30L, "l2", 0L, Some(300L)))
     graft.stream.TieredIngest.append(micro(400, 450), older, "vec_id", "embedding",
       batchId = 0L, scope = "jobs")
     val remeasured = TieredIndex.resolveLive(spark, older)

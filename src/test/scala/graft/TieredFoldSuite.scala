@@ -233,7 +233,7 @@ class TieredFoldSuite extends SparkFunSuite {
       new org.apache.hadoop.fs.Path(p, "tiered_base/lists")))
     fs.delete(new org.apache.hadoop.fs.Path(p, "list_store"), true)
     fs.delete(new org.apache.hadoop.fs.Path(p, "tiered_base/list_dirs"), true)
-    SidecarIO.write(TieredIndex.metaFrame(spark, 100000L, "l2", 0L, None), s"$p/tiered_meta")
+    SidecarIO.write(spark, s"$p/tiered_meta", TieredIndex.metaRows(spark, 100000L, "l2", 0L, None))
     val savedCurve = curve(p)
     var loaded: TieredIndex = null
     assert(jobsDuring { loaded = TieredIndex.load(spark, p) } == 0)
@@ -267,5 +267,34 @@ class TieredFoldSuite extends SparkFunSuite {
     append(p, rows(450, 460))
     assert(TieredIndex.resolveLive(spark, p) == f"$p/v_000001")
     assert(TieredIndex.load(spark, p).base.lists.count() == 460L)
+  }
+
+  test("after a save, appends and a fold no sidecar holds a .crc, no swap leftover remains, " +
+      "and searches stay exact") {
+    val p = saved("nocrc", 300)
+    TieredIngest.append(rows(300, 350), p, "vec_id", "embedding", batchId = 0L, scope = "crc")
+    TieredIndex.compactInPlace(spark, p)
+    TieredIngest.append(rows(350, 400), p, "vec_id", "embedding", batchId = 1L, scope = "crc")
+    append(p, rows(400, 420))
+    val v1 = TieredIndex.resolveLive(spark, p)
+    assert(v1 == f"$p/v_000001")
+    def walk(f: java.io.File): Seq[java.io.File] =
+      f +: (if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Nil)
+    val all = walk(new java.io.File(p))
+    val leftovers = all.map(_.getName).filter(n => n.endsWith(".staged") || n.endsWith(".old"))
+    assert(leftovers.isEmpty, s"swap leftovers: $leftovers")
+    // the data the distributed writer lands (lists, batch directories)
+    // keeps Spark's checksums; the sidecars and small files are the driver's
+    val sidecars = Seq("meta", "tiered_meta", "delta_commits", "recall_curve",
+      "tiered_base/centroids", "tiered_base/meta", "tiered_base/recall_curve",
+      "tiered_base/list_dirs")
+    val checked = for (live <- Seq(p, v1); sc <- sidecars
+        if new java.io.File(s"$live/$sc").isDirectory) yield s"$live/$sc"
+    assert(checked.size >= 2 * sidecars.size - 1, checked)
+    val crcs = checked.flatMap(d => new java.io.File(d).listFiles().map(_.getName)
+      .filter(_.endsWith(".crc")).map(n => s"$d/$n")) ++
+      Seq(s"$p/..ingest_lease.crc", s"$v1/._COMMITTED.crc").filter(new java.io.File(_).exists)
+    assert(crcs.isEmpty, s"checksum companions: $crcs")
+    assert(ranks(search(p, 8)) == exact(rows(0, 420)))
   }
 }
