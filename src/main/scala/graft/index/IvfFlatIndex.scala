@@ -6,7 +6,6 @@ import org.apache.spark.storage.StorageLevel
 import graft.cluster.KMeans
 import graft.core.Metric
 import graft.expr.CentroidSet
-import graft.ops.BruteForceKnn
 
 /** IVF-Flat index as a *table layout*, not an opaque blob (SURVEY.md §1.1):
   * a vectors table keyed by `list_id` (one inverted list per k-means cell,
@@ -33,52 +32,16 @@ class IvfFlatIndex(
     val metric: Metric) extends Serializable {
 
   /** (qid, nbr_id, rank, dist) for the top-k of each query, scanning only
-    * nProbes lists per query. */
+    * nProbes lists per query: the fused probe kernel when the query side
+    * fits in memory, else the partition-pruned join (IvfLists.search). */
   def search(queries: DataFrame, k: Int, nProbes: Int,
-      qidCol: String = "qid", qvecCol: String = "qvec"): DataFrame = {
-    val q = queries.select(col(qidCol).cast("long").as("qid"), col(qvecCol).as("qvec"))
-      .transform(graft.core.Frames.materialize(_))
+      qidCol: String = "qid", qvecCol: String = "qvec"): DataFrame =
+    ivfLists.search(queries, k, nProbes, qidCol, qvecCol)(
+      graft.functions.vector_distance(metric, col("_qvec"), col("vec")))
 
-    // Fused probe+select_k kernel (graft.graphops.LocalKernel): the probe
-    // set is per-query state — always the broadcast side — so when the
-    // QUERY table fits in memory the whole search is one pass over the
-    // (streaming, never collected) lists: each list row scores only the
-    // queries that probed its list (an inverted probe index), into
-    // per-query TopKBufs. Identical rows to the join plan below — same
-    // distance kernel, same (dist, id) merge order. At scale the
-    // partition-pruned join runs unchanged.
-    val spark = queries.sparkSession
-    if (graft.graphops.LocalKernel.enabled(spark) &&
-        graft.graphops.LocalKernel.within(q,
-          graft.graphops.LocalKernel.maxVectors(spark))) {
-      try return searchLocal(q, k, nProbes)
-      finally q.unpersist()
-    }
-    q.unpersist()
-
-    val probes = q
-      .select(col("qid"), col("qvec").as("_qvec"),
-        KMeans.nearestCol(centroids, col("qvec"), nProbes).as("_probes"))
-      .select(col("qid"), col("_qvec"), explode(col("_probes").getField("list_id")).as("list_id"))
-    val pairs = lists
-      .join(broadcast(probes), "list_id")
-      .select(col("qid"), col("id").as("_nid"),
-        graft.functions.vector_distance(metric, col("_qvec"), col("vec")).as("dist"))
-    BruteForceKnn.topKPerQuery(pairs, k, metric)
-  }
-
-  /** The fused scan over this layout's raw vectors (FlatScan) — the
-    * kernel of `searchLocal` and of the planner's IvfSearchExec. */
-  private[graft] def listScan: ListScan = FlatScan(metric)
-
-  /** Broadcast-queries kernel: probe selection runs driver-side over the
-    * (always in-memory) centroid set, then one pass over the probed list
-    * rows with an inverted (list_id -> probing queries) index. Static
-    * partition pruning: the probed list set is known before the scan, so
-    * unprobed list partitions of a saved index are never READ (the kernel
-    * twin of the join route's dynamic partition pruning). */
-  private def searchLocal(q: DataFrame, k: Int, nProbes: Int): DataFrame =
-    BruteForceKnn.topKPerQuery(listScan.pairs(lists, centroids, q, _ => nProbes, k), k, metric)
+  /** The lists as every search reads them, with the FlatScan kernel — also
+    * the planner's IvfSearchExec kernel. */
+  private[graft] def ivfLists: IvfLists = IvfLists(lists, centroids, FlatScan(metric))
 
   /** Pre-filtered view of the index (`cuvs::neighbors::filtering` on the
     * IVF path): the predicate applies to the list rows (id/vec), so it
@@ -337,16 +300,15 @@ object IvfFlatIndex {
       (truth, points) => truth.listCoverage(idx.centroids, points))
 
   /** Compressed-layout curve: the refine-composed search the planner
-    * serves — `kernel` candidates at `depth`, exact re-rank against the
-    * raw corpus — run once over the sample replicated per probe point
-    * (CurveTruth.candidateCoverage). */
+    * serves — the layout's kernel candidates at `depth`, exact re-rank
+    * against the raw corpus — run once over the sample replicated per
+    * probe point (CurveTruth.candidateCoverage). */
   private[index] def saveCompressedCurve(spark: SparkSession, path: String,
-      src: CurveSource, metric: Metric, nLists: Int, nRows: Long, depth: Int)(
-      kernel: (DataFrame, Int, Long => Int) => DataFrame): Unit =
-    saveMeasuredCurve(spark, path, src.coarse.heldOutTruth(metric, nRows), nLists)(
+      src: CurveSource, ivf: IvfLists, metric: Metric, nRows: Long, depth: Int): Unit =
+    saveMeasuredCurve(spark, path, src.coarse.heldOutTruth(metric, nRows), ivf.cs.k)(
       _.candidateCoverage(spark, _) { (q, k, probesOf) =>
         graft.ops.Refine.refine(
-          kernel(q, depth, probesOf).select(col("qid"), col("nbr_id").as("id")),
+          ivf.scanSearch(q, depth, probesOf).select(col("qid"), col("nbr_id").as("id")),
           src.corpus, q, k, metric, broadcastCandidates = true)
       })
 

@@ -3,11 +3,10 @@ package graft.index
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import graft.cluster.KMeans
 import graft.core.Metric
 import graft.expr.{CentroidResidual, CentroidSet, ClusterCodebooks, PqCodebooks,
   PqEncodeByList, PqLutByList}
-import graft.ops.{BruteForceKnn, Refine}
+import graft.ops.Refine
 import graft.prep.ProductQuantizer
 import org.apache.spark.sql.graft.{bridge => B}
 
@@ -43,12 +42,8 @@ class IvfPqIndex(
     // None on loaded layouts
     val measureSource: Option[CurveSource] = None) extends Serializable {
 
-  private def residualCol(vec: Column, listId: Column): Column =
-    B.column(CentroidResidual(B.expression(vec), B.expression(listId), centroids))
-
   // IP and cosine builds share the larger-is-closer IP estimator
   private def ipLike = metric == Metric.InnerProduct || metric == Metric.Cosine
-  private def scoreMetric = if (ipLike) Metric.InnerProduct else Metric.L2
 
   /** ADC search: (qid, nbr_id, rank, dist). For L2-family builds dist is
     * the ADC-approximated squared L2 over residual codes; for an
@@ -61,56 +56,16 @@ class IvfPqIndex(
     * dist is the estimated q̂·x̂, larger-is-closer. */
   def search(queries: DataFrame, k: Int, nProbes: Int,
       qidCol: String = "qid", qvecCol: String = "qvec"): DataFrame = {
-    // Fused ADC kernel (AdcScan doc): one pass over the streaming coded
-    // lists when the query side fits in memory. Identical rows to the
-    // join route.
-    val spark = queries.sparkSession
-    val qShaped = IvfPqIndex.shapeQueries(queries, metric, qidCol, qvecCol)
-    val q = qShaped.transform(graft.core.Frames.materialize(_))
-    if (graft.graphops.LocalKernel.enabled(spark) &&
-        graft.graphops.LocalKernel.within(q,
-          graft.graphops.LocalKernel.maxVectors(spark))) {
-      try return kernelSearch(q, k, _ => nProbes)
-      finally q.unpersist()
-    }
-    q.unpersist()
-    val probes = qShaped
-      .select(col("qid"), col("qvec").as("_qvec"),
-        KMeans.nearestCol(centroids, col("qvec"), nProbes).as("_probes"))
-      .select(col("qid"), col("_qvec"),
-        explode(col("_probes").getField("list_id")).as("list_id"))
-      .withColumn("_lut",
-        if (ipLike) ProductQuantizer.lutIpCol(col("_qvec"), col("list_id"),
-          codebooks, centroids)
-        else ProductQuantizer.lutCol(residualCol(col("_qvec"), col("list_id")),
-          codebooks))
-      .select(col("qid"), col("list_id"), col("_lut"))
-      // materialize: the LUT must be computed ONCE per (query, probed
-      // list). Left as a lazy projection, CollapseProject can inline the
-      // single-use _lut alias into the join's output projection in some
-      // plan shapes (measured inside a broadcast-candidates refine), and
-      // the pqDim·2^bits·subLen table gets rebuilt PER PAIR — ~80x the
-      // intended work at 1M rows. localCheckpoint (not persist): the
-      // frame is nQ·nProbes rows and there is no post-execution hook to
-      // unpersist from, so the blocks must be GC-reclaimable — a
-      // CacheManager entry would pin them for the session's life.
-      .localCheckpoint()
-    val pairs = lists
-      .join(broadcast(probes), "list_id")
-      .select(col("qid"), col("id").as("_nid"),
-        ProductQuantizer.adcCol(col("_lut"), col("pq_codes"), codebooks).as("dist"))
-    BruteForceKnn.topKPerQuery(pairs, k, scoreMetric)
+    val (dist, perProbe) = IvfPqIndex.adcJoin(centroids, codebooks, ipLike)
+    ivfLists.search(queries, k, nProbes, qidCol, qvecCol)(dist, perProbe)
   }
 
-  /** The fused scan over this layout's codes (AdcScan) — the kernel of
-    * `kernelSearch` and of the planner's IvfSearchExec. */
-  private[graft] def listScan: ListScan = AdcScan.perSubspace(centroids, codebooks, ipLike)
-
-  /** The fused-kernel search over shaped (qid, qvec) queries, each probing
-    * `probesOf(qid)` lists; bufK = k because each id lives in exactly one
-    * list. */
-  private def kernelSearch(q: DataFrame, k: Int, probesOf: Long => Int): DataFrame =
-    BruteForceKnn.topKPerQuery(listScan.pairs(lists, centroids, q, probesOf, k), k, scoreMetric)
+  /** The lists as every search reads them, with the per-subspace AdcScan
+    * (each id lives in exactly one list) — also the planner's
+    * IvfSearchExec kernel. */
+  private[graft] def ivfLists: IvfLists =
+    IvfLists(lists, centroids, AdcScan.perSubspace(centroids, codebooks, ipLike),
+      normalize = metric == Metric.Cosine)
 
   /** ADC search over `kCoarse` candidates + exact re-rank to top-k against
     * the raw dataset — the recall-recovery composition. */
@@ -143,9 +98,8 @@ class IvfPqIndex(
     // candidates at the calibrated depth + exact refine) — without it,
     // auto-probe mode over a saved PQ layout inverts the fixture curve
     if (IvfFlatIndex.recallCurveEnabled(spark))
-      measureSource.foreach(IvfFlatIndex.saveCompressedCurve(spark, path, _, metric,
-        centroids.k, nRows, graft.plans.ResolveKnnJoin.compressedDepth(10, depthHint))(
-        (q, depth, probesOf) => kernelSearch(IvfPqIndex.shapeQueries(q, metric), depth, probesOf)))
+      measureSource.foreach(IvfFlatIndex.saveCompressedCurve(spark, path, _, ivfLists, metric,
+        nRows, graft.plans.ResolveKnnJoin.compressedDepth(10, depthHint)))
   }
 }
 
@@ -174,7 +128,6 @@ class IvfPqClusterIndex(
 
   // IP and cosine builds share the larger-is-closer IP estimator
   private def ipLike = metric == Metric.InnerProduct || metric == Metric.Cosine
-  private def scoreMetric = if (ipLike) Metric.InnerProduct else Metric.L2
 
   /** Same metric contract as IvfPqIndex.search: L2-family builds rank by
     * per-list residual-L2 ADC; InnerProduct builds by the per-list IP LUT
@@ -182,53 +135,24 @@ class IvfPqClusterIndex(
     * normalized vectors and rank by the same IP LUT over the normalized
     * query. */
   def search(queries: DataFrame, k: Int, nProbes: Int,
-      qidCol: String = "qid", qvecCol: String = "qvec"): DataFrame = {
-    // Fused ADC kernel (AdcScan), per-list LUTs: same gate as the
-    // per-subspace index.
-    val spark = queries.sparkSession
-    val qShaped = IvfPqIndex.shapeQueries(queries, metric, qidCol, qvecCol)
-    val q = qShaped.transform(graft.core.Frames.materialize(_))
-    if (graft.graphops.LocalKernel.enabled(spark) &&
-        graft.graphops.LocalKernel.within(q,
-          graft.graphops.LocalKernel.maxVectors(spark))) {
-      try return kernelSearch(q, k, _ => nProbes)
-      finally q.unpersist()
-    }
-    q.unpersist()
-    val probes = qShaped
-      .select(col("qid"), col("qvec").as("_qvec"),
-        KMeans.nearestCol(centroids, col("qvec"), nProbes).as("_probes"))
-      .select(col("qid"), col("_qvec"),
-        explode(col("_probes").getField("list_id")).as("list_id"))
-      .withColumn("_lut",
+      qidCol: String = "qid", qvecCol: String = "qvec"): DataFrame =
+    ivfLists.search(queries, k, nProbes, qidCol, qvecCol)(
+      ProductQuantizer.adcCol(col("_lut"), col("pq_codes"), codebooks.nCenters),
+      _.withColumn("_lut",
         if (ipLike) B.column(graft.expr.PqLutIpByList(B.expression(col("_qvec")),
           B.expression(col("list_id").cast("int")), codebooks, centroids))
         else B.column(PqLutByList(
           B.expression(residualCol(col("_qvec"), col("list_id"))),
           B.expression(col("list_id").cast("int")), codebooks)))
-      .select(col("qid"), col("list_id"), col("_lut"))
-      // once-per-(query, list) LUT barrier — see IvfPqIndex.search
-      .localCheckpoint()
-    val pairs = lists
-      .join(broadcast(probes), "list_id")
-      .select(col("qid"), col("id").as("_nid"),
-        ProductQuantizer.adcCol(col("_lut"), col("pq_codes"),
-          codebooks.nCenters).as("dist"))
-    BruteForceKnn.topKPerQuery(pairs, k, scoreMetric)
-  }
+        .select(col("qid"), col("list_id"), col("_lut"))
+        // once-per-(query, list) LUT barrier — see IvfPqIndex.adcJoin
+        .localCheckpoint())
 
-  /** Fused-kernel search over shaped queries with per-query probe counts;
-    * bufK = k economics as the per-subspace index (each id lives in
-    * exactly one list). */
-  private def kernelSearch(q: DataFrame, k: Int, probesOf: Long => Int): DataFrame = {
-    val ccb = codebooks
-    val cs = centroids
-    val scan = AdcScan(ccb.nCenters, minClose = !ipLike,
-      if (ipLike) (lid, qv) => graft.expr.PqClusterOps.lutIpRaw(ccb, cs, lid, qv)
-      else (lid, qv) => graft.expr.PqClusterOps.lutRaw(ccb, lid,
-        graft.expr.CentroidOps.residualRaw(cs, qv, lid)))
-    BruteForceKnn.topKPerQuery(scan.pairs(lists, centroids, q, probesOf, k), k, scoreMetric)
-  }
+  /** The lists as every search reads them, with the per-list AdcScan
+    * (each id lives in exactly one list). */
+  private[graft] def ivfLists: IvfLists =
+    IvfLists(lists, centroids, AdcScan.perCluster(centroids, codebooks, ipLike),
+      normalize = metric == Metric.Cosine)
 
   def searchWithRefine(queries: DataFrame, dataset: DataFrame, k: Int, nProbes: Int,
       kCoarse: Int, idCol: String = "id", vecCol: String = "vec",
@@ -254,9 +178,8 @@ class IvfPqClusterIndex(
     IvfFlatIndex.saveMeta(spark, path, nRows)
     depthHint.foreach(DepthHint.save(spark, path, _))
     if (IvfFlatIndex.recallCurveEnabled(spark))
-      measureSource.foreach(IvfFlatIndex.saveCompressedCurve(spark, path, _, metric,
-        centroids.k, nRows, graft.plans.ResolveKnnJoin.compressedDepth(10, depthHint))(
-        (q, depth, probesOf) => kernelSearch(IvfPqIndex.shapeQueries(q, metric), depth, probesOf)))
+      measureSource.foreach(IvfFlatIndex.saveCompressedCurve(spark, path, _, ivfLists, metric,
+        nRows, graft.plans.ResolveKnnJoin.compressedDepth(10, depthHint)))
   }
 }
 
@@ -373,12 +296,28 @@ object IvfPqIndex {
       dataset.withColumn(vecCol, IvfFlatIndex.unitNormCol(col(vecCol)))
     else dataset
 
-  /** The (qid long, qvec) query side of the PQ-coded searches; a Cosine
-    * build normalizes the queries symmetrically with its stored rows. */
-  private[index] def shapeQueries(queries: DataFrame, metric: Metric,
-      qidCol: String = "qid", qvecCol: String = "qvec"): DataFrame =
-    normalizedFor(queries.select(col(qidCol).cast("long").as("qid"),
-      col(qvecCol).as("qvec")), metric, "qvec")
+  /** The probe-join half of a per-subspace PQ search (IVF-PQ, ScaNN): the
+    * ADC `dist` of a list row against its probe row's table, and the
+    * per-probe step that builds the table — residual-L2, or the IP table
+    * of an IP/cosine build. */
+  private[index] def adcJoin(cs: CentroidSet, cb: PqCodebooks,
+      ipLike: Boolean): (Column, DataFrame => DataFrame) =
+    (ProductQuantizer.adcCol(col("_lut"), col("pq_codes"), cb),
+      _.withColumn("_lut",
+        if (ipLike) ProductQuantizer.lutIpCol(col("_qvec"), col("list_id"), cb, cs)
+        else ProductQuantizer.lutCol(B.column(CentroidResidual(B.expression(col("_qvec")),
+          B.expression(col("list_id")), cs)), cb))
+        .select(col("qid"), col("list_id"), col("_lut"))
+        // materialize: the LUT must be computed ONCE per (query, probed
+        // list). Left as a lazy projection, CollapseProject can inline the
+        // single-use _lut alias into the join's output projection in some
+        // plan shapes (measured inside a broadcast-candidates refine), and
+        // the pqDim·2^bits·subLen table gets rebuilt PER PAIR — ~80x the
+        // intended work at 1M rows. localCheckpoint (not persist): the
+        // frame is nQ·nProbes rows and there is no post-execution hook to
+        // unpersist from, so the blocks must be GC-reclaimable — a
+        // CacheManager entry would pin them for the session's life.
+        .localCheckpoint())
 
   /** Coarse-clustering metric for a build metric — the reference's
     * `coarse_clustering_metric` (ivf_pq_build.cuh:70-76): InnerProduct

@@ -7,7 +7,7 @@ import graft.core.Metric
 import graft.expr.{BinaryQuantize, BitThresholds, CentroidSet, CentroidResidual,
   AffineProject, ProjectionMatrix, RabitqDot, RabitqDotEx}
 import org.apache.spark.sql.graft.{bridge => B}
-import graft.ops.{BruteForceKnn, Refine}
+import graft.ops.Refine
 
 /** IVF-RaBitQ — IVF lists carrying RaBitQ-coded residuals
   * (`cuvs::neighbors::ivf_rabitq`, ivf_rabitq.hpp:37-110: n_lists,
@@ -39,36 +39,12 @@ class IvfRabitqIndex(
 
   import IvfRabitqIndex._
 
-  /** Top-kCoarse per query by estimated L2 — the in-list ADC pass. */
+  /** Top-kCoarse per query by estimated L2 — the in-list ADC pass: the
+    * fused estimator kernel (RabitqScan) when the query side fits in
+    * memory, else the partition-pruned join (IvfLists.search) over probe
+    * rows carrying the rotated residual and its sums. */
   def search(queries: DataFrame, kCoarse: Int, nProbes: Int,
       qidCol: String = "qid", qvecCol: String = "qvec"): DataFrame = {
-    // Fused estimator kernel (AdcScan pattern): rotated residual queries
-    // + their scalar stats precomputed with the same JVM ops the codegen
-    // expressions call; the coded lists stream once. Identical rows.
-    val sparkS = queries.sparkSession
-    val q = queries.select(col(qidCol).cast("long").as("qid"), col(qvecCol).as("qvec"))
-      .transform(graft.core.Frames.materialize(_))
-    if (graft.graphops.LocalKernel.enabled(sparkS) &&
-        graft.graphops.LocalKernel.within(q,
-          graft.graphops.LocalKernel.maxVectors(sparkS))) {
-      try return searchLocal(q, kCoarse, _ => nProbes)
-      finally q.unpersist()
-    }
-    q.unpersist()
-    val probes = queries
-      .select(col(qidCol).cast("long").as("qid"),
-        graft.cluster.KMeans.nearestCol(centroids, col(qvecCol), nProbes).as("_p"),
-        col(qvecCol).as("_qv"))
-      .select(col("qid"), explode(col("_p").getField("list_id")).as("list_id"), col("_qv"))
-      .withColumn("_qr", rotate(residual(col("_qv"), col("list_id"), centroids), rotation))
-      .withColumn("_qs", aggregate(col("_qr"), lit(0.0), (s, x) => s + x.cast("double")))
-      .withColumn("_qn2", aggregate(col("_qr"), lit(0.0),
-        (s, x) => s + x.cast("double") * x.cast("double")))
-      .select(col("qid"), col("list_id"), col("_qr"), col("_qs"), col("_qn2"))
-      // once-per-(query, list) barrier for the rotated residual (dim²
-      // flops) and its interpreted aggregate sums — see IvfPqIndex.search
-      .localCheckpoint()
-
     val estIp =
       if (bitsPerDim <= 1) {
         // <r, q-c> ≈ ‖u‖²(2·S1 − S)/Σ|u| (see RabitqOps); Σ|u|=0 ⇒ r=0 ⇒ 0.
@@ -78,139 +54,21 @@ class IvfRabitqIndex(
       } else
         B.column(RabitqDotEx(Seq(B.expression(col("code")), B.expression(col("mags")),
           B.expression(col("mscale")), B.expression(col("_qr")))))
-
-    val pairs = lists
-      .join(broadcast(probes), "list_id")
-      .select(col("qid"), col("id").as("_nid"),
-        (col("_qn2") + col("norm2") - lit(2.0) * estIp).as("dist"))
-    BruteForceKnn.topKPerQuery(pairs, kCoarse, Metric.L2)
+    ivfLists.search(queries, kCoarse, nProbes, qidCol, qvecCol)(
+      col("_qn2") + col("norm2") - lit(2.0) * estIp,
+      _.withColumn("_qr", rotate(residual(col("_qvec"), col("list_id"), centroids), rotation))
+        .withColumn("_qs", aggregate(col("_qr"), lit(0.0), (s, x) => s + x.cast("double")))
+        .withColumn("_qn2", aggregate(col("_qr"), lit(0.0),
+          (s, x) => s + x.cast("double") * x.cast("double")))
+        .select(col("qid"), col("list_id"), col("_qr"), col("_qs"), col("_qn2"))
+        // once-per-(query, list) barrier for the rotated residual (dim²
+        // flops) and its interpreted aggregate sums — see IvfPqIndex.adcJoin
+        .localCheckpoint())
   }
 
-  /** The fused kernel over (qid, qvec) queries, each probing
-    * `probesOf(qid)` lists. */
-  private def searchLocal(q: DataFrame, kCoarse: Int, probesOf: Long => Int): DataFrame = {
-    val spark = q.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.catalyst.util.GenericArrayData
-    import graft.expr.{AffineOps, CentroidOps, RabitqOps}
-    val qArr = q.as[(Long, Array[Float])].collect()
-    val cs = centroids
-    // per probed list: (query slot, rotated residual, Σqr, Σqr²)
-    val byList = new java.util.HashMap[Int,
-      scala.collection.mutable.ArrayBuffer[(Int, GenericArrayData, Double, Double)]]()
-    qArr.zipWithIndex.foreach { case ((qid, qvec), qi) =>
-      val qad = new GenericArrayData(qvec)
-      val probed = CentroidOps.nearest(cs, qad, probesOf(qid))
-      var p = 0
-      while (p < probed.numElements()) {
-        val lid = probed.getStruct(p, 2).getInt(0)
-        val qr = AffineOps(rotation, CentroidOps.residual(cs, qad, lid))
-          .asInstanceOf[GenericArrayData]
-        var qs = 0.0; var qn2 = 0.0
-        var i = 0
-        val n = qr.numElements()
-        while (i < n) {
-          val x = qr.getFloat(i).toDouble
-          qs += x; qn2 += x * x
-          i += 1
-        }
-        var b = byList.get(lid)
-        if (b == null) {
-          b = new scala.collection.mutable.ArrayBuffer[(Int, GenericArrayData, Double, Double)]()
-          byList.put(lid, b)
-        }
-        b += ((qi, qr, qs, qn2))
-        p += 1
-      }
-    }
-    val probeIdx = new java.util.HashMap[Int, Array[(Int, GenericArrayData, Double, Double)]](
-      byList.size * 2)
-    byList.forEach((l, b) => probeIdx.put(l, b.toArray))
-    val probedLids = {
-      val b = scala.collection.mutable.ArrayBuffer[Int]()
-      probeIdx.forEach((l, _) => b += l)
-      b.toSeq
-    }
-    val bcQids = spark.sparkContext.broadcast(qArr.map(_._1))
-    val bcProbes = spark.sparkContext.broadcast(probeIdx)
-    val kk = kCoarse
-    val extended = bitsPerDim > 1
-
-    def emit(bufs: java.util.HashMap[Int, graft.core.TopKBuf],
-        qids: Array[Long]): Iterator[(Long, Long, Double)] = {
-      val out = new scala.collection.mutable.ArrayBuffer[(Long, Long, Double)]()
-      bufs.forEach { (qi, buf) =>
-        (0 until buf.size).foreach(j => out += ((qids(qi), buf.ids(j), buf.dists(j))))
-      }
-      out.iterator
-    }
-    def bufFor(bufs: java.util.HashMap[Int, graft.core.TopKBuf], qi: Int): graft.core.TopKBuf = {
-      var buf = bufs.get(qi)
-      if (buf == null) {
-        buf = graft.core.TopKBuf(kk, minClose = true,
-          new Array[Double](kk), new Array[Long](kk), 0)
-        bufs.put(qi, buf)
-      }
-      buf
-    }
-
-    val pruned = lists.filter(col("list_id").isInCollection(probedLids))
-    val pairs =
-      if (!extended) {
-        pruned
-          .select(col("list_id").cast("int"), col("id").cast("long"),
-            col("code"), col("norm2").cast("double"), col("sum_abs").cast("double"))
-          .as[(Int, Long, Array[Long], Double, Double)]
-          .mapPartitions { rows =>
-            val qids = bcQids.value; val pi = bcProbes.value
-            val bufs = new java.util.HashMap[Int, graft.core.TopKBuf]()
-            rows.foreach { case (lid, nid, code, norm2, sumAbs) =>
-              val probing = pi.get(lid)
-              if (probing != null) {
-                val codeAD = new GenericArrayData(code)
-                var t = 0
-                while (t < probing.length) {
-                  val (qi, qr, qs, qn2) = probing(t)
-                  val estIp =
-                    if (sumAbs > 0.0) {
-                      val s1 = RabitqOps.dotSelected(codeAD, qr)
-                      norm2 * (2.0 * s1 - qs) / sumAbs
-                    } else 0.0
-                  bufFor(bufs, qi).insert(qn2 + norm2 - 2.0 * estIp, nid)
-                  t += 1
-                }
-              }
-            }
-            emit(bufs, qids)
-          }
-      } else {
-        pruned
-          .select(col("list_id").cast("int"), col("id").cast("long"),
-            col("code"), col("norm2").cast("double"),
-            col("mags").cast("array<int>"), col("mscale").cast("double"))
-          .as[(Int, Long, Array[Long], Double, Array[Int], Double)]
-          .mapPartitions { rows =>
-            val qids = bcQids.value; val pi = bcProbes.value
-            val bufs = new java.util.HashMap[Int, graft.core.TopKBuf]()
-            rows.foreach { case (lid, nid, code, norm2, magsI, mscale) =>
-              val probing = pi.get(lid)
-              if (probing != null) {
-                val codeAD = new GenericArrayData(code)
-                val magsAD = new GenericArrayData(magsI.map(_.toByte))
-                var t = 0
-                while (t < probing.length) {
-                  val (qi, qr, _, qn2) = probing(t)
-                  val estIp = RabitqOps.dotExtended(codeAD, magsAD, mscale, qr)
-                  bufFor(bufs, qi).insert(qn2 + norm2 - 2.0 * estIp, nid)
-                  t += 1
-                }
-              }
-            }
-            emit(bufs, qids)
-          }
-      }
-    BruteForceKnn.topKPerQuery(pairs.toDF("qid", "_nid", "dist"), kCoarse, Metric.L2)
-  }
+  /** The lists as every search reads them, with the RabitqScan kernel. */
+  private[graft] def ivfLists: IvfLists =
+    IvfLists(lists, centroids, RabitqScan(centroids, rotation, bitsPerDim))
 
   /** Coarse RaBitQ estimate -> exact re-rank against the raw vectors. */
   def searchWithRefine(queries: DataFrame, dataset: DataFrame, k: Int, nProbes: Int,
@@ -238,8 +96,8 @@ class IvfRabitqIndex(
     // measured probe/recall curve of the planner-served composition
     // (sign-code estimates at the heuristic depth + exact refine)
     if (IvfFlatIndex.recallCurveEnabled(spark))
-      measureSource.foreach(IvfFlatIndex.saveCompressedCurve(spark, path, _, Metric.L2,
-        centroids.k, nRows, graft.plans.ResolveKnnJoin.compressedDepth(10, None))(searchLocal))
+      measureSource.foreach(IvfFlatIndex.saveCompressedCurve(spark, path, _, ivfLists,
+        Metric.L2, nRows, graft.plans.ResolveKnnJoin.compressedDepth(10, None)))
   }
 }
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.core.Metric
 import graft.expr.CentroidSet
-import graft.ops.{BruteForceKnn, Refine}
+import graft.ops.Refine
 import graft.prep.ScalarQuantizer
 
 /** IVF-SQ — IVF over int8 scalar-quantized lists (`cuvs::neighbors::
@@ -24,108 +24,19 @@ class IvfSqIndex(
     // save-time curve measurement source (IvfPqIndex doc)
     val measureSource: Option[CurveSource] = None) extends Serializable {
 
+  /** Each query's top-k over its nProbes lists by decoded-int8 distance:
+    * the fused decode kernel (SqScan) when the query side fits in memory,
+    * else the partition-pruned join with the codegen'd decode inline
+    * (IvfLists.search). */
   def search(queries: DataFrame, k: Int, nProbes: Int,
-      qidCol: String = "qid", qvecCol: String = "qvec"): DataFrame = {
-    // Fused decode+select_k kernel (IvfFlatIndex.searchLocal twin): decode
-    // each int8 row once, score every query probing its list. Identical
-    // rows to the join route (same linear decode, same distance kernel).
-    val sparkS = queries.sparkSession
-    val q = queries.select(col(qidCol).cast("long").as("qid"), col(qvecCol).as("qvec"))
-      .transform(graft.core.Frames.materialize(_))
-    if (graft.graphops.LocalKernel.enabled(sparkS) &&
-        graft.graphops.LocalKernel.within(q,
-          graft.graphops.LocalKernel.maxVectors(sparkS))) {
-      try return searchLocal(q, k, _ => nProbes)
-      finally q.unpersist()
-    }
-    q.unpersist()
-    val probes = queries
-      .select(col(qidCol).cast("long").as("qid"), col(qvecCol).as("_qvec"),
-        graft.cluster.KMeans.nearestCol(centroids, col(qvecCol), nProbes).as("_probes"))
-      .select(col("qid"), col("_qvec"),
-        explode(col("_probes").getField("list_id")).as("list_id"))
-    val pairs = lists
-      .join(broadcast(probes), "list_id")
-      .select(col("qid"), col("id").as("_nid"),
-        graft.functions.vector_distance(metric, col("_qvec"),
-          ScalarQuantizer.inverseCol(col("codes"), sq)).as("dist"))
-    BruteForceKnn.topKPerQuery(pairs, k, metric)
-  }
+      qidCol: String = "qid", qvecCol: String = "qvec"): DataFrame =
+    ivfLists.search(queries, k, nProbes, qidCol, qvecCol)(
+      graft.functions.vector_distance(metric, col("_qvec"),
+        ScalarQuantizer.inverseCol(col("codes"), sq)))
 
-  /** The fused kernel over (qid, qvec) queries, each probing
-    * `probesOf(qid)` lists. */
-  private def searchLocal(q: DataFrame, k: Int, probesOf: Long => Int): DataFrame = {
-    val spark = q.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.catalyst.util.GenericArrayData
-    val qArr = q.as[(Long, Array[Float])].collect()
-    val cs = centroids
-    val byList = new java.util.HashMap[Int, scala.collection.mutable.ArrayBuffer[Int]]()
-    qArr.zipWithIndex.foreach { case ((qid, qvec), qi) =>
-      val probed = graft.expr.CentroidOps.nearest(cs, new GenericArrayData(qvec), probesOf(qid))
-      var p = 0
-      while (p < probed.numElements()) {
-        val lid = probed.getStruct(p, 2).getInt(0)
-        var b = byList.get(lid)
-        if (b == null) { b = new scala.collection.mutable.ArrayBuffer[Int](); byList.put(lid, b) }
-        b += qi
-        p += 1
-      }
-    }
-    val probeIdx = new java.util.HashMap[Int, Array[Int]](byList.size * 2)
-    byList.forEach((l, b) => probeIdx.put(l, b.toArray))
-    val probedLids = {
-      val b = scala.collection.mutable.ArrayBuffer[Int]()
-      probeIdx.forEach((l, _) => b += l)
-      b.toSeq
-    }
-    val bcQ = spark.sparkContext.broadcast(qArr)
-    val bcProbes = spark.sparkContext.broadcast(probeIdx)
-    val (lo, hi) = (sq.lo, sq.hi)
-    val met = metric
-    val kk = k
-    val pairs = lists
-      .filter(col("list_id").isInCollection(probedLids))
-      .select(col("list_id").cast("int"), col("id").cast("long"),
-        col("codes").cast("array<int>"))
-      .as[(Int, Long, Array[Int])]
-      .mapPartitions { rows =>
-        val qs = bcQ.value; val pi = bcProbes.value
-        val fn = graft.core.Distance.fn(met)
-        val mc = graft.core.Metric.isMinClose(met)
-        val bufs = new java.util.HashMap[Int, graft.core.TopKBuf]()
-        rows.foreach { case (lid, nid, codes) =>
-          val probing = pi.get(lid)
-          if (probing != null) {
-            // same linear decode as ScalarQuantizer.inverseCol
-            val dec = new Array[Float](codes.length)
-            var i = 0
-            while (i < codes.length) {
-              dec(i) = ((codes(i).toDouble + 128) / 255.0 * (hi - lo) + lo).toFloat
-              i += 1
-            }
-            var t = 0
-            while (t < probing.length) {
-              val qi = probing(t)
-              var buf = bufs.get(qi)
-              if (buf == null) {
-                buf = graft.core.TopKBuf(kk, mc, new Array[Double](kk), new Array[Long](kk), 0)
-                bufs.put(qi, buf)
-              }
-              buf.insert(fn(qs(qi)._2, dec), nid)
-              t += 1
-            }
-          }
-        }
-        val out = new scala.collection.mutable.ArrayBuffer[(Long, Long, Double)]()
-        bufs.forEach { (qi, buf) =>
-          (0 until buf.size).foreach(j => out += ((qs(qi)._1, buf.ids(j), buf.dists(j))))
-        }
-        out.iterator
-      }
-      .toDF("qid", "_nid", "dist")
-    BruteForceKnn.topKPerQuery(pairs, k, metric)
-  }
+  /** The lists as every search reads them, with the SqScan kernel. */
+  private[graft] def ivfLists: IvfLists =
+    IvfLists(lists, centroids, SqScan(metric, sq.lo, sq.hi))
 
   def searchWithRefine(queries: DataFrame, dataset: DataFrame, k: Int, nProbes: Int,
       kCoarse: Int, idCol: String = "id", vecCol: String = "vec",
@@ -150,8 +61,8 @@ class IvfSqIndex(
     // measured probe/recall curve of the planner-served composition
     // (decoded-int8 candidates at the heuristic depth + exact refine)
     if (IvfFlatIndex.recallCurveEnabled(spark))
-      measureSource.foreach(IvfFlatIndex.saveCompressedCurve(spark, path, _, metric,
-        centroids.k, nRows, graft.plans.ResolveKnnJoin.compressedDepth(10, None))(searchLocal))
+      measureSource.foreach(IvfFlatIndex.saveCompressedCurve(spark, path, _, ivfLists, metric,
+        nRows, graft.plans.ResolveKnnJoin.compressedDepth(10, None)))
   }
 }
 

@@ -6,7 +6,7 @@ import org.apache.spark.storage.StorageLevel
 import graft.cluster.KMeans
 import graft.core.Metric
 import graft.expr.{CentroidResidual, CentroidSet, PqCodebooks}
-import graft.ops.{BruteForceKnn, Refine}
+import graft.ops.Refine
 import graft.prep.ProductQuantizer
 import org.apache.spark.sql.graft.{bridge => B}
 
@@ -35,17 +35,8 @@ class ScannIndex(
     // save-time curve measurement source (IvfPqIndex doc)
     val measureSource: Option[CurveSource] = None) extends Serializable {
 
-  private def residualCol(vec: Column, listId: Column): Column =
-    B.column(CentroidResidual(B.expression(vec), B.expression(listId), centroids))
-
   // IP and cosine builds share the larger-is-closer IP estimator
   private def ipLike = metric == Metric.InnerProduct || metric == Metric.Cosine
-  private def scoreMetric = if (ipLike) Metric.InnerProduct else Metric.L2
-
-  // better of the two SOAR copies' estimates: smaller L2, larger dot
-  private def dedup(pairs: DataFrame): DataFrame = pairs
-    .groupBy(col("qid"), col("_nid"))
-    .agg((if (ipLike) max(col("dist")) else min(col("dist"))).as("dist"))
 
   /** ADC search over primary+spill lists, deduped per (query, id). An
     * InnerProduct build (ScaNN's native regime — anisotropic quantization
@@ -55,46 +46,15 @@ class ScannIndex(
     * IP estimator over the normalized query. */
   def search(queries: DataFrame, k: Int, nProbes: Int,
       qidCol: String = "qid", qvecCol: String = "qvec"): DataFrame = {
-    // Fused ADC kernel (AdcScan doc) when the query side fits in memory.
-    val spark = queries.sparkSession
-    val qShaped = IvfPqIndex.shapeQueries(queries, metric, qidCol, qvecCol)
-    val q = qShaped.transform(graft.core.Frames.materialize(_))
-    if (graft.graphops.LocalKernel.enabled(spark) &&
-        graft.graphops.LocalKernel.within(q,
-          graft.graphops.LocalKernel.maxVectors(spark))) {
-      try return kernelSearch(q, k, _ => nProbes)
-      finally q.unpersist()
-    }
-    q.unpersist()
-    val probes = qShaped
-      .select(col("qid"), col("qvec").as("_qvec"),
-        KMeans.nearestCol(centroids, col("qvec"), nProbes).as("_probes"))
-      .select(col("qid"), col("_qvec"),
-        explode(col("_probes").getField("list_id")).as("list_id"))
-      .withColumn("_lut",
-        if (ipLike) ProductQuantizer.lutIpCol(col("_qvec"), col("list_id"),
-          codebooks, centroids)
-        else ProductQuantizer.lutCol(residualCol(col("_qvec"), col("list_id")),
-          codebooks))
-      .select(col("qid"), col("list_id"), col("_lut"))
-      // once-per-(query, list) LUT barrier — see IvfPqIndex.search
-      .localCheckpoint()
-    val pairs = dedup(lists
-      .join(broadcast(probes), "list_id")
-      .select(col("qid"), col("id").as("_nid"),
-        ProductQuantizer.adcCol(col("_lut"), col("pq_codes"), codebooks).as("dist")))
-    BruteForceKnn.topKPerQuery(pairs, k, scoreMetric)
+    val (dist, perProbe) = IvfPqIndex.adcJoin(centroids, codebooks, ipLike)
+    ivfLists.search(queries, k, nProbes, qidCol, qvecCol)(dist, perProbe)
   }
 
-  /** Fused-kernel search over shaped queries with per-query probe counts:
-    * bufK = 2k because SOAR stores ≤ 2 copies per id — a partition's
-    * top-2k WITH duplicates always holds the best copy of every id in its
-    * dedup-min top-k — then the same (qid, id) dedup as the join route. */
-  private def kernelSearch(q: DataFrame, k: Int, probesOf: Long => Int): DataFrame =
-    BruteForceKnn.topKPerQuery(
-      dedup(AdcScan.perSubspace(centroids, codebooks, ipLike)
-        .pairs(lists, centroids, q, probesOf, 2 * k)),
-      k, scoreMetric)
+  /** The lists as every search reads them: the per-subspace AdcScan, and
+    * SOAR stores every id twice (the searches keep each id's better copy). */
+  private[graft] def ivfLists: IvfLists =
+    IvfLists(lists, centroids, AdcScan.perSubspace(centroids, codebooks, ipLike),
+      normalize = metric == Metric.Cosine, copies = 2)
 
   /** ScaNN reordering: exact re-rank of the ADC top-kCoarse. */
   def searchWithRefine(queries: DataFrame, dataset: DataFrame, k: Int, nProbes: Int,
@@ -126,9 +86,8 @@ class ScannIndex(
     // measured probe/recall curve of the planner-served composition
     // (IvfPqIndex.save doc)
     if (IvfFlatIndex.recallCurveEnabled(spark))
-      measureSource.foreach(IvfFlatIndex.saveCompressedCurve(spark, path, _, metric,
-        centroids.k, nRows, graft.plans.ResolveKnnJoin.compressedDepth(10, depthHint))(
-        (q, depth, probesOf) => kernelSearch(IvfPqIndex.shapeQueries(q, metric), depth, probesOf)))
+      measureSource.foreach(IvfFlatIndex.saveCompressedCurve(spark, path, _, ivfLists, metric,
+        nRows, graft.plans.ResolveKnnJoin.compressedDepth(10, depthHint)))
   }
 }
 

@@ -23,14 +23,15 @@ private[graft] final case class RefineFinish(metric: Metric) extends Finish
 /** What ResolveKnnJoin decided for one index-routed kNN node: the layout
   * and its live path, the list scan, the probed batch (each query
   * position's probed lists, computed once on the driver), the probe count,
-  * the reorder depth, the finish, and why. A tiered layout also records
+  * the reorder depth, the finish, why, and how many copies of one id the
+  * lists may hold (ScaNN's SOAR spill: 2). A tiered layout also records
   * its delta tier's row count — a non-empty delta is scanned as list
   * `nLists`, which the batch has every query probe — and its base tier's
   * shape: the list-store directories it reads and the population its
   * recall curve was measured at. */
 private[graft] final case class IvfSearch(layout: String, indexPath: String,
     scan: ListScan, batch: ScanBatch, nLists: Int, probes: Int, depth: Int, k: Int,
-    finish: Finish, reason: String, deltaRows: Option[Long] = None,
+    finish: Finish, reason: String, copies: Int = 1, deltaRows: Option[Long] = None,
     baseShape: Option[graft.stream.TieredIndex.BaseShape] = None) {
   def describe: String = {
     val fin = finish match {
@@ -38,6 +39,7 @@ private[graft] final case class IvfSearch(layout: String, indexPath: String,
       case RefineFinish(m) => s"refine(${m.name})"
     }
     s"$layout $indexPath, probes=$probes/$nLists, depth=$depth, k=$k, $fin, " +
+      (if (copies > 1) s"copies=$copies, " else "") +
       s"queries=${batch.size}${deltaRows.fold("")(n => s", delta=$n rows")}" +
       s"${baseShape.fold("")(b => s", dirs=${b.dirs}, curve@${b.curveRows}")} [$reason]"
   }
@@ -45,12 +47,13 @@ private[graft] final case class IvfSearch(layout: String, indexPath: String,
 
 /** The resolved form of an index-routed KnnJoinPlan: the decision plus the
   * three inputs the search reads — the layout's list relation under a
-  * `list_id IN (probed)` filter, projected to (list_id, id, payload), and
-  * for a tiered layout with a non-empty delta, unioned with the delta
-  * projected to the same columns under list id `nLists`; the
-  * data child as (id, vec), present only for the refine finish; and the
-  * driver-held (qid, qvec) query relation. Its output is the node's
-  * declared attributes. GraftStrategy plans it as one IvfSearchExec. */
+  * `list_id IN (probed)` filter, projected to (list_id, id, the columns
+  * its ListScan scores), and for a tiered layout with a non-empty delta,
+  * unioned with the delta projected to the same columns under list id
+  * `nLists`; the data child as (id, vec), present only for the refine
+  * finish; and the driver-held (qid, qvec) query relation. Its output is
+  * the node's declared attributes. GraftStrategy plans it as one
+  * IvfSearchExec. */
 case class IndexedKnnJoin(search: IvfSearch, lists: LogicalPlan,
     data: Option[LogicalPlan], queries: LogicalPlan,
     output: Seq[Attribute]) extends LogicalPlan {
@@ -197,14 +200,21 @@ private[graft] object IvfSearchExec {
     val slotOfQid = qids.zipWithIndex.toMap
     val slot = qid.map(slotOfQid)
 
-    // job 1: the probed lists, top-`depth` per qid
-    val (scan, depth, nSlots) = (s.scan, s.depth, qids.length)
+    // job 1: the probed lists, top-`depth` per qid. Lists that hold up to
+    // `copies` copies of an id buffer copies·depth entries per query
+    // position, times the positions a qid has, so the buffer still holds
+    // the better copy of every id of the deduplicated top-depth.
+    val (scan, nSlots) = (s.scan, qids.length)
+    val width =
+      if (s.copies == 1) s.depth
+      else s.depth * s.copies * slot.groupBy(identity).valuesIterator.map(_.length).max
     val bcBatch = sc.broadcast(s.batch)
-    val cand =
+    val merged =
       try mergeJob(sc, lists.execute().mapPartitions(rows =>
-          Iterator(bySlot(scan.scan(rows, bcBatch.value, depth), slot, nSlots))),
-        nSlots, depth, scan.minClose, maxEntries)
+          Iterator(bySlot(scan.scan(rows, bcBatch.value, width), slot, nSlots))),
+        nSlots, width, scan.minClose, maxEntries)
       finally bcBatch.destroy()
+    val cand = if (s.copies == 1) merged else merged.map(bestCopies(_, s.depth))
 
     val top: Array[TopKBuf] = s.finish match {
       case DirectFinish(sqrt, minClose) => cand.map { c =>
@@ -234,6 +244,16 @@ private[graft] object IvfSearchExec {
     }
     out.result()
   }
+
+  /** The top-`k` distinct ids of `b`, each at its better copy's score. */
+  private def bestCopies(b: TopKBuf, k: Int): TopKBuf =
+    if (b == null) null
+    else {
+      val out = newBuf(k, b.minClose)
+      val seen = new java.util.HashSet[Long]()
+      b.result().foreach(n => if (out.size < k && seen.add(n.id)) out.insert(n.dist, n.id))
+      out
+    }
 
   /** Job 2: exact `metric` distances of every (qid, candidate id) pair —
     * one per candidate entry, data row with that id, and query row with

@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Alias, Cast,
-  In, Literal, NamedExpression, UnsafeProjection}
+  Expression, In, Literal, NamedExpression, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, Filter, LocalRelation, LogicalPlan,
   Project, Union}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -306,12 +306,12 @@ object GraftIndexCatalog {
 }
 
 /** Lowers KnnJoinPlan into a route chosen by the planner: a registered
-  * IVF-Flat, IVF-PQ or tiered layout on the unfiltered data relation, with a query
-  * side the LocalKernel gates admit (vectors, and queries·depth candidate
-  * entries) -> an IndexedKnnJoin node that
+  * IVF layout (any of the six) or tiered layout on the unfiltered data
+  * relation, with a query side the LocalKernel gates admit (vectors, and
+  * queries·depth candidate entries) -> an IndexedKnnJoin node that
   * GraftStrategy plans as one IvfSearchExec (probe-pruned scan + finish);
-  * the other layouts, filtered shapes and over-cap query sides -> the
-  * probe-pruned DataFrame routes + exact refine; otherwise the brute-force
+  * HNSW layouts, filtered shapes and over-cap query sides -> the
+  * DataFrame routes + exact refine; otherwise the brute-force
   * partial-top-k pipeline. */
 object ResolveKnnJoin {
   /** Install the lowering rule and the IndexedKnnJoin planning strategy on
@@ -655,16 +655,12 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
           B.ofRows(spark, base).count()
         })
 
-      /** Probe count: explicit registration wins; `nProbes = 0` derives
-        * from `spark.graft.knnJoin.targetRecall` through
-        * THIS layout's measured probe/recall curve (the `recall_curve`
-        * sidecar written at save time; a legacy layout without one probes
-        * every list — exact, and warned once — until re-saved,
-        * docs/MIGRATION.md). */
-      def resolveProbes(e: GraftIndexCatalog.Entry, base: LogicalPlan,
-          nLists: Int, depth: Int): Int =
-        probesOf(e, base, nLists, depth)._1
-      /** resolveProbes with where the count came from, for explain. */
+      /** Probe count, and where it came from (for explain): explicit
+        * registration wins; `nProbes = 0` derives from
+        * `spark.graft.knnJoin.targetRecall` through THIS layout's measured
+        * probe/recall curve (the `recall_curve` sidecar written at save
+        * time; a legacy layout without one probes every list — exact, and
+        * warned once — until re-saved, docs/MIGRATION.md). */
       def probesOf(e: GraftIndexCatalog.Entry, base: LogicalPlan,
           nLists: Int, depth: Int): (Int, String) =
         if (e.nProbes > 0) (e.nProbes, "registered probes")
@@ -774,22 +770,21 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
           Some(Metric.L2)
         else None
 
-      /** The inputs IvfSearchExec scans a layout with: its list table,
-        * centroids and list kernel, the probe count, whether queries are
-        * unit-normalized before scanning (a cosine build stored
-        * unit-normalized rows; refine ranks the raw vectors), and a tiered
-        * layout's delta tier with its row count and its base tier's shape. */
-      final case class ScanInputs(lists: DataFrame, cs: graft.expr.CentroidSet,
-          scan: graft.index.ListScan, probes: Int, probeReason: String, normalize: Boolean,
-          delta: Option[(DataFrame, Long)] = None,
+      /** The inputs IvfSearchExec scans a layout with: the layout's lists
+        * as its searches read them (list table, centroids, list kernel,
+        * query normalization, copies per id), the probe count and why, and
+        * a tiered layout's delta tier with its row count and its base
+        * tier's shape. */
+      final case class ScanInputs(ivf: graft.index.IvfLists, probes: Int,
+          probeReason: String, delta: Option[(DataFrame, Long)] = None,
           baseShape: Option[graft.stream.TieredIndex.BaseShape] = None)
 
       /** A layout's candidate generation at one reorder depth, decided:
         * the metric its `dist` column is computed in, whether those
         * distances are EXACT (raw-vector layouts) or code-space estimates
-        * (ADC / decoded int8), the DataFrame lowering, and — for the
-        * layouts IvfSearchExec runs (IVF-Flat, per-subspace IVF-PQ,
-        * tiered) — the scan inputs. */
+        * (ADC / decoded int8 / RaBitQ), the DataFrame lowering, and — for
+        * the IVF layouts, which IvfSearchExec runs — the scan inputs
+        * (a legacy tiered save without a recorded delta count has none). */
       final case class Cand(metric: Metric, exact: Boolean, frame: () => DataFrame,
           scan: Option[ScanInputs] = None)
 
@@ -801,6 +796,14 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
         def loaded[T <: AnyRef: scala.reflect.ClassTag](
             load: (SparkSession, String) => T): T =
           GraftIndexCatalog.cachedLoad(spark, e.indexPath)(load(spark, e.indexPath))
+        /** An IVF layout's candidates: its library `search` over the probe
+          * count this entry resolves to, and the same lists for the
+          * operator. */
+        def ivfCand(m: Metric, exact: Boolean, ivf: graft.index.IvfLists,
+            search: (DataFrame, Int, Int) => DataFrame): Cand = {
+          val (probes, why) = probesOf(e, base, ivf.cs.k, depth)
+          Cand(m, exact, () => search(queries, depth, probes), Some(ScanInputs(ivf, probes, why)))
+        }
         layout match {
           case "hnsw" =>
             val idx = loaded(graft.index.Hnsw.load)
@@ -822,12 +825,7 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
           case "ivf" =>
             val idx = loaded(graft.index.IvfFlatIndex.load)
             if (!rankCompatible(idx.metric, metric)) None
-            else {
-              val (probes, why) = probesOf(e, base, idx.centroids.k, depth)
-              Some(Cand(idx.metric, exact = true, () => idx.search(queries, depth, probes),
-                Some(ScanInputs(idx.lists, idx.centroids, idx.listScan, probes, why,
-                  normalize = false))))
-            }
+            else Some(ivfCand(idx.metric, exact = true, idx.ivfLists, idx.search(_, _, _)))
           case "tiered" =>
             // the streaming-ingest lifecycle layout (tiered_index.hpp:
             // 59-136): candidates = probe-pruned ANN-tier search ∪ exact
@@ -842,13 +840,11 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
                 graft.stream.TieredIndex.loadBase(spark, e.indexPath)))
             if (!rankCompatible(idx.metric, metric)) None
             else {
-              val (probes, why) = probesOf(e, base, idx.base.centroids.k, depth)
+              val c = ivfCand(idx.metric, exact = true, idx.base.ivfLists, idx.search(_, _, _))
               // a legacy save without a recorded delta count keeps the
               // DataFrame route, which probes the delta with a job
-              Some(Cand(idx.metric, exact = true, () => idx.search(queries, depth, probes),
-                idx.knownDeltaRows.map(n => ScanInputs(idx.base.lists, idx.base.centroids,
-                  idx.base.listScan, probes, why, normalize = false,
-                  delta = Some((idx.delta, n)), baseShape = idx.saved))))
+              Some(c.copy(scan = idx.knownDeltaRows.flatMap(n => c.scan.map(
+                _.copy(delta = Some((idx.delta, n)), baseShape = idx.saved)))))
             }
           case "ivf_sq" =>
             // decoded int8 scored under the index's own metric —
@@ -857,41 +853,35 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
             else {
               val idx = loaded(graft.index.IvfSqIndex.load)
               if (!rankCompatible(idx.metric, metric)) None
-              else Some(Cand(idx.metric, exact = false, () => idx.search(queries, depth,
-                resolveProbes(e, base, idx.centroids.k, depth))))
+              else Some(ivfCand(idx.metric, exact = false, idx.ivfLists, idx.search(_, _, _)))
             }
           case "ivf_pq" =>
             if (!compressedFloorReachable(e)) None
             else {
               val idx = loaded(graft.index.IvfPqIndex.load)
-              compressedScoreMetric(idx.metric).map { m =>
-                val (probes, why) = probesOf(e, base, idx.centroids.k, depth)
-                Cand(m, exact = false, () => idx.search(queries, depth, probes),
-                  Some(ScanInputs(idx.lists, idx.centroids, idx.listScan, probes, why,
-                    normalize = idx.metric == Metric.Cosine)))
-              }
+              compressedScoreMetric(idx.metric).map(
+                ivfCand(_, exact = false, idx.ivfLists, idx.search(_, _, _)))
             }
           case "ivf_pqcl" =>
             if (!compressedFloorReachable(e)) None
             else {
               val idx = loaded(graft.index.IvfPqClusterIndex.load)
-              compressedScoreMetric(idx.metric).map(m => Cand(m, exact = false, () =>
-                idx.search(queries, depth, resolveProbes(e, base, idx.centroids.k, depth))))
+              compressedScoreMetric(idx.metric).map(
+                ivfCand(_, exact = false, idx.ivfLists, idx.search(_, _, _)))
             }
           case "scann" =>
             if (!compressedFloorReachable(e)) None
             else {
               val idx = loaded(graft.index.ScannIndex.load)
-              compressedScoreMetric(idx.metric).map(m => Cand(m, exact = false, () =>
-                idx.search(queries, depth, resolveProbes(e, base, idx.centroids.k, depth))))
+              compressedScoreMetric(idx.metric).map(
+                ivfCand(_, exact = false, idx.ivfLists, idx.search(_, _, _)))
             }
           case "rabitq" =>
             // RaBitQ estimates are L2-only by construction
             if (!compressedFloorReachable(e) || !l2Family(metric)) None
             else {
               val idx = loaded(graft.index.IvfRabitqIndex.load)
-              Some(Cand(Metric.L2, exact = false, () => idx.search(queries, depth,
-                resolveProbes(e, base, idx.centroids.k, depth))))
+              Some(ivfCand(Metric.L2, exact = false, idx.ivfLists, idx.search(_, _, _)))
             }
           case _ => None
         }
@@ -1088,36 +1078,35 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
         * probes — and the data child for the refine finish. */
       def lowerIndexed(r: Route, si: ScanInputs, held: LocalRelation): LogicalPlan = {
         GraftIndexCatalog.recordRoute(nodeIds, Some((r.layout, r.e.indexPath)))
+        val ivf = si.ivf
         val vecs = held.data.map { row =>
           val v = row.getArray(1)
-          (if (si.normalize) graft.expr.VectorNormOps.unitNorm(v) else v).toFloatArray()
+          (if (ivf.normalize) graft.expr.VectorNormOps.unitNorm(v) else v).toFloatArray()
         }.toArray
-        val probed = si.scan.batch(si.cs, vecs, _ => si.probes)
+        val probed = ivf.scan.batch(ivf.cs, vecs, _ => si.probes)
         // fresh attribute ids per scan; a tiered base tier read from several
         // list-store directories is a Union of scans, whose output follows
         // its children's
-        val rel = B.planOf(si.lists).transformUp {
+        val rel = B.planOf(ivf.lists).transformUp {
           case m: org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation =>
             m.newInstance()
         }
-        def listAttr(name: String) = rel.output.find(_.name == name).getOrElse(
-          throw new IllegalStateException(s"list table at ${r.e.indexPath} has no $name"))
+        def attrOf(plan: LogicalPlan, what: String)(name: String) =
+          plan.output.find(_.name == name).getOrElse(
+            throw new IllegalStateException(s"$what at ${r.e.indexPath} has no $name"))
+        // (list_id, id, the scan's columns), each cast to what the scan reads
+        def scanned(listId: Expression, attr: String => Attribute) =
+          Alias(listId, "list_id")() +: Alias(Cast(attr("id"), LongType), "id")() +:
+            ivf.scan.columns.map { case (c, t) => Alias(Cast(attr(c), t), c)() }
+        val listAttr = attrOf(rel, "list table") _
         val lid = listAttr("list_id")
-        val listPlan = Project(Seq(
-            Alias(Cast(lid, IntegerType), "list_id")(),
-            Alias(Cast(listAttr("id"), LongType), "id")(),
-            Alias(Cast(listAttr(si.scan.payload), si.scan.payloadType), si.scan.payload)()),
+        val listPlan = Project(scanned(Cast(lid, IntegerType), listAttr),
           Filter(In(Cast(lid, IntegerType), probed.probedLists.sorted.map(Literal(_))), rel))
         val (lists, batch) = si.delta match {
           case Some((delta, n)) if n > 0 =>
             val d = B.planOf(delta)
-            def deltaAttr(name: String) = d.output.find(_.name == name).getOrElse(
-              throw new IllegalStateException(s"delta tier at ${r.e.indexPath} has no $name"))
-            (Union(listPlan, Project(Seq(
-                Alias(Literal(si.cs.k), "list_id")(),
-                Alias(Cast(deltaAttr("id"), LongType), "id")(),
-                Alias(Cast(deltaAttr("vec"), si.scan.payloadType), si.scan.payload)()), d)),
-              probed.probingAll(si.cs.k))
+            (Union(listPlan, Project(scanned(Literal(ivf.cs.k), attrOf(d, "delta tier")), d)),
+              probed.probingAll(ivf.cs.k))
           case _ => (listPlan, probed)
         }
         val (fin, dataPlan) = r.direct match {
@@ -1130,9 +1119,9 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
               Alias(Cast(dataAttr(kj.vecCol), ArrayType(FloatType)), "vec")()), kj.left)))
         }
         ResolveKnnJoin.ensureStrategy(spark)
-        IndexedKnnJoin(IvfSearch(r.layout, r.e.indexPath, si.scan, batch, si.cs.k, si.probes,
-          r.depth, kj.k, fin, s"${si.probeReason}, ${r.depthReason}", si.delta.map(_._2),
-          si.baseShape),
+        IndexedKnnJoin(IvfSearch(r.layout, r.e.indexPath, ivf.scan, batch, ivf.cs.k, si.probes,
+          r.depth, kj.k, fin, s"${si.probeReason}, ${r.depthReason}", ivf.copies,
+          si.delta.map(_._2), si.baseShape),
           lists, dataPlan, held, kj.output)
       }
 
@@ -1210,7 +1199,7 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
                 .readHead(spark, s"$statsBase/centroids").get.apply("dim"))
             }
             val n = math.max(baseRows(e, base), 1L).toDouble
-            val probes = resolveProbes(e, base, math.max(1, nLists.toInt), depth)
+            val probes = probesOf(e, base, math.max(1, nLists.toInt), depth)._1
             val pf = probes / math.max(1.0, nLists)
             val width = layout match {
               case "ivf" | "tiered" => 1.0

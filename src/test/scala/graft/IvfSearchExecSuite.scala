@@ -4,17 +4,19 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.FileSourceScanExec
 import graft.core.Metric
-import graft.index.{IvfFlatIndex, IvfPqIndex}
+import graft.index.{IvfFlatIndex, IvfPqClusterIndex, IvfPqIndex, IvfRabitqIndex, IvfSqIndex,
+  ScannIndex}
 import graft.ops.BruteForceKnn
 import graft.plans.{GraftExtensions, GraftIndexCatalog, GraftStrategy, IndexRoute, IvfSearchExec,
   KnnJoinPlan, RefineFinish}
 import graft.stream.{TieredIndex, TieredIngest}
 
-/** The IVF-Flat / IVF-PQ / tiered kNN-join route as one physical operator
-  * (IvfSearchExec): the rows it returns are those of the public search
-  * APIs run through their probe-join route (the local kernel off, so the
-  * oracle shares no scan code with the operator) and of brute force at
-  * full probes; planning runs no job and execution one job per scan. */
+/** The IVF kNN-join route as one physical operator (IvfSearchExec), for
+  * every IVF layout and the tiered one: the rows it returns are those of
+  * the public search APIs run through their probe-join route (the local
+  * kernel off, so the oracle shares no scan code with the operator) and of
+  * brute force at full probes; planning runs no job and execution one job
+  * per scan. */
 class IvfSearchExecSuite extends SparkFunSuite {
 
   private lazy val dataPath = s"${SparkTestBase.sf0001}/embeddings.parquet"
@@ -322,6 +324,89 @@ class IvfSearchExecSuite extends SparkFunSuite {
       assert(exec(df).isDefined, s"${df.queryExecution.executedPlan}")
       assert(sorted(df) == expected)
     } finally GraftIndexCatalog.unregister(dataPath)
+  }
+
+  // ----------------------------------------- SQ, RaBitQ, PER_CLUSTER, ScaNN
+
+  /** A saved layout of a kind the operator plans through a refine finish:
+    * its layout name, the node metric it routes, and its library
+    * searchWithRefine as (queries, k, nProbes, kCoarse) => rows. */
+  private case class Coded(name: String, layout: String, path: String, metric: Metric,
+      refine: (DataFrame, Int, Int, Int) => DataFrame)
+
+  private def coded(name: String, layout: String, m: Metric)(
+      build: String => (DataFrame, Int, Int, Int) => DataFrame): Coded = {
+    val p = tmp(name.replaceAll("\\W", ""))
+    Coded(name, layout, p, m, build(p))
+  }
+
+  private def refineOf(search: (DataFrame, DataFrame, Int, Int, Int, String, String) => DataFrame)
+      : (DataFrame, Int, Int, Int) => DataFrame =
+    (q, k, probes, kCoarse) => search(q, emb, k, probes, kCoarse, "vec_id", "embedding")
+
+  private def codedLayouts: Seq[Coded] = {
+    val p = IvfFlatIndex.Params(nLists = 8, nIters = 5)
+    Seq(coded("sq", "ivf_sq", Metric.L2) { path =>
+      IvfSqIndex.build(emb, p, idCol = "vec_id", vecCol = "embedding").save(path)
+      refineOf(IvfSqIndex.load(spark, path).searchWithRefine(_, _, _, _, _, _, _))
+    }) ++ Seq(1, 3).map(bits => coded(s"rabitq $bits", "rabitq", Metric.L2) { path =>
+      IvfRabitqIndex.build(emb, IvfRabitqIndex.Params(nLists = 8, nIters = 5,
+        bitsPerDim = bits), "vec_id", "embedding").save(path)
+      refineOf(IvfRabitqIndex.load(spark, path).searchWithRefine(_, _, _, _, _, _, _))
+    }) ++ Seq(Metric.L2, Metric.InnerProduct).flatMap(m => Seq(
+      coded(s"pqcl ${m.name}", "ivf_pqcl", m) { path =>
+        IvfPqIndex.buildPerCluster(emb, IvfPqIndex.Params(nLists = 8, nIters = 5, pqDim = 8,
+          pqBits = 5, metric = m), "vec_id", "embedding").save(path)
+        refineOf(IvfPqClusterIndex.load(spark, path).searchWithRefine(_, _, _, _, _, _, _))
+      },
+      coded(s"scann ${m.name}", "scann", m) { path =>
+        ScannIndex.build(emb, ScannIndex.Params(nLeaves = 8, nIters = 5, pqBits = 6, metric = m),
+          "vec_id", "embedding").save(path)
+        refineOf(ScannIndex.load(spark, path).searchWithRefine(_, _, _, _, _, _, _))
+      }))
+  }
+
+  test("SQ, RaBitQ, PER_CLUSTER and ScaNN: a SQL knn_join plans the operator with the rows " +
+      "of searchWithRefine, of brute force at full probes, and no duplicate neighbour") {
+    val q = localQ(qRows)
+    val n = emb.count().toInt
+    def sqlBatch(m: Metric): DataFrame = {
+      spark.read.parquet(dataPath).createOrReplaceTempView("ise_c_data")
+      q.createOrReplaceTempView("ise_c_q")
+      spark.sql("SELECT qid, nbr_id, rank, dist FROM knn_join('ise_c_data', 'ise_c_q', 10, " +
+        s"'${m.name}', 'vec_id', 'embedding', 'qid', 'qvec')")
+    }
+    for (c <- codedLayouts) {
+      withRegistered(dataPath, (c.path, 2, 40)) {
+        val expected = joinRoute(c.refine(q, 10, 2, 40))
+        sqlBatch(c.metric).collect()
+        val df = sqlBatch(c.metric)
+        assert(jobsDuring(df.queryExecution.executedPlan) == 0, c.name)
+        val jobs = jobsDuring(df.collect())
+        assert(jobs <= 2, s"${c.name}: the batch ran $jobs jobs")
+        val e = exec(df).getOrElse(fail(s"${c.name}: no IvfSearchExec:\n" +
+          df.queryExecution.executedPlan))
+        assert(e.search.layout == c.layout && e.search.finish == RefineFinish(c.metric), c.name)
+        assert(e.search.copies == (if (c.layout == "scann") 2 else 1), c.name)
+        for (part <- Seq(s"IvfSearchExec ${c.layout}", c.path, "probes=2/8", "depth=40"))
+          assert(explained(df).contains(part), s"${c.name}: explain lacks '$part'")
+        val got = sorted(df)
+        assert(got == expected, c.name)
+        assert(got.groupBy(_._1).values.forall(r => r.map(_._2).distinct.size == r.size),
+          s"${c.name}: a qid holds a duplicate nbr_id")
+        // one entry past the budget: the DataFrame route, the same rows
+        withConf("spark.graft.localKernel.maxEdges" -> (qRows.size.toLong * 40 - 1).toString) {
+          val f = sqlBatch(c.metric)
+          assert(exec(f).isEmpty, s"${c.name} over budget, yet:\n${f.queryExecution.executedPlan}")
+          assert(IndexRoute.routedThrough(f, c.path), c.name)
+          assert(sorted(f) == expected, c.name)
+        }
+      }
+      withRegistered(dataPath, (c.path, 8, n)) {
+        assert(sorted(sqlBatch(c.metric)) == joinRoute(BruteForceKnn.knnJoin(emb, q, 10, c.metric,
+          "vec_id", "embedding")), c.name)
+      }
+    }
   }
 
   // ------------------------------------------------------------------ tiered

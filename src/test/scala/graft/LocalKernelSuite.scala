@@ -424,6 +424,39 @@ class LocalKernelSuite extends SparkFunSuite {
     }
   }
 
+  test("every IVF layout's search drops a null qid on both routes, with the same rows") {
+    import spark.implicits._
+    val five = queries.as[(Long, Array[Float])].collect().take(5)
+    val q = five.zipWithIndex.map { case ((id, v), i) => (Option(id).filter(_ => i > 0), v) }
+      .toSeq.toDF("qid", "qvec")
+    val p = graft.index.IvfFlatIndex.Params(nLists = 8, nIters = 5)
+    val flat = graft.index.IvfFlatIndex.build(embV, p, "vec_id", "embedding")
+    val sq = graft.index.IvfSqIndex.build(embV, p, idCol = "vec_id", vecCol = "embedding",
+      base = Some(flat))
+    val rabitq = Seq(1, 3).map(bits => graft.index.IvfRabitqIndex.build(embV,
+      graft.index.IvfRabitqIndex.Params(nLists = 8, nIters = 5, bitsPerDim = bits),
+      "vec_id", "embedding", base = Some(flat)))
+    val pqP = graft.index.IvfPqIndex.Params(nLists = 8, nIters = 5, pqDim = 8, pqBits = 6)
+    val pq = graft.index.IvfPqIndex.build(embV, pqP, "vec_id", "embedding", base = Some(flat))
+    val pqcl = graft.index.IvfPqIndex.buildPerCluster(embV, pqP.copy(pqBits = 5),
+      "vec_id", "embedding", base = Some(flat))
+    val scann = graft.index.ScannIndex.build(embV,
+      graft.index.ScannIndex.Params(nLeaves = 8, nIters = 5, pqBits = 6), "vec_id", "embedding")
+    Seq[(String, DataFrame => DataFrame)](
+      "ivf" -> (flat.search(_, 10, nProbes = 3)),
+      "ivf-sq" -> (sq.search(_, 10, nProbes = 3)),
+      "rabitq 1 bit" -> (rabitq(0).search(_, 10, nProbes = 3)),
+      "rabitq 3 bits" -> (rabitq(1).search(_, 10, nProbes = 3)),
+      "ivf-pq" -> (pq.search(_, 10, nProbes = 3)),
+      "ivf-pq PER_CLUSTER" -> (pqcl.search(_, 10, nProbes = 3)),
+      "scann" -> (scann.search(_, 10, nProbes = 4))).foreach { case (kind, search) =>
+      val (local, dist) = bothRoutes(search(q))
+      assert(local.length == 40, s"$kind: ${local.length} rows")
+      assert(local.sameElements(dist), s"$kind: kernel and join routes differ")
+      assert(!local.exists(_.startsWith("[null,")), s"$kind: a row under a null qid")
+    }
+  }
+
   test("embedding near-dup: ball-cover-pruned route == all-pairs range join") {
     import graft.text.Dedup
     val corpus = emb.unionByName(
