@@ -301,6 +301,7 @@ object Hnsw {
     * export (hnsw.hpp:137-141), as Parquet instead of the binary format. */
   def save(idx: Index, path: String): Unit = {
     val spark = idx.edges.sparkSession
+    LayoutFormat.replace(path, idx.levels, idx.edges)
     idx.levels.write.mode("overwrite").parquet(s"$path/hnsw_levels")
     idx.edges.write.mode("overwrite").partitionBy("level").parquet(s"$path/hnsw_edges")
     import spark.implicits._
@@ -310,7 +311,7 @@ object Hnsw {
     // population sidecar (one node per level-table row): the kNN-join
     // resolver's filtered-route rate math reads it instead of counting
     // the registered relation at rewrite time
-    IvfFlatIndex.saveMeta(spark, path, idx.levels.count())
+    LayoutFormat.write(spark, path, idx.levels.count(), "hnsw")
     // measure the ef/recall relation NOW if the build deferred it (save is
     // the only consumer; fromGraph deliberately never pays the brute
     // ground-truth pass) — same conf gate as the IVF recall_curve sidecar
@@ -341,6 +342,7 @@ object Hnsw {
   }
 
   def load(spark: org.apache.spark.sql.SparkSession, path: String): Index = {
+    LayoutFormat.require(spark, path, "hnsw")
     // driver-side one-row meta read (r17, SidecarIO doc)
     import graft.sources.SidecarIO
     val meta = SidecarIO.readHead(spark, s"$path/hnsw_meta")
@@ -348,7 +350,7 @@ object Hnsw {
     val curveKN = IvfFlatIndex.loadCurveKN(spark, path, "ef_curve")
     Index(
       SidecarIO.readTable(spark, s"$path/hnsw_levels"),
-      SidecarIO.readTable(spark, s"$path/hnsw_edges", Some("level")),
+      SidecarIO.readTable(spark, s"$path/hnsw_edges", Seq("level")),
       SidecarIO.asInt(meta("max_level")), SidecarIO.asLong(meta("entry_point")),
       Params(SidecarIO.asInt(meta("m")), SidecarIO.asLong(meta("seed")),
         Metric.fromName(meta("metric").asInstanceOf[String])),

@@ -87,14 +87,18 @@ class IvfFlatIndex(
   }
 
   /** Persist as a partitioned table — serialize (brute_force.hpp:728-925
-    * analog; Parquet instead of a versioned binary stream). Also writes
-    * the two planner sidecars: the index POPULATION (`meta`) so the
+    * analog; Parquet instead of a binary stream), replacing whatever
+    * layout `path` held. Also writes the two planner sidecars: the
+    * population, layout and format version (`meta`, LayoutFormat) so the
     * kNN-join resolver never has to run a plan-time count job over the
     * registered relation (the build already knows n), and the MEASURED
     * probe/recall curve (`recall_curve`) so auto-probe selection inverts
     * THIS index's geometry instead of a fixture constant — the
     * per-config floor discipline of ann_ivf_flat.cuh:102. */
-  def save(path: String): Unit = save(path, s"$path/lists")
+  def save(path: String): Unit = {
+    LayoutFormat.replace(path, lists)
+    save(path, s"$path/lists")
+  }
 
   /** `save` with the list table written to `listsDir` instead of
     * `<path>/lists` (a tiered layout keeps its base tier's lists in the
@@ -104,7 +108,7 @@ class IvfFlatIndex(
     val spark = lists.sparkSession
     graft.sources.SidecarIO.withConf(spark) {
       IvfFlatIndex.saveCentroids(spark, path, centroids, metric)
-      IvfFlatIndex.saveMeta(spark, path, nRows)
+      LayoutFormat.write(spark, path, nRows, "ivf")
       if (IvfFlatIndex.recallCurveEnabled(spark))
         IvfFlatIndex.saveRecallCurve(spark, path, this, nRows)
     }
@@ -196,27 +200,28 @@ object IvfFlatIndex {
       "list_id", "centroid", "metric", "dim"))
   }
 
-  def load(spark: SparkSession, path: String): IvfFlatIndex =
-    load(spark, path, Seq(s"$path/lists"))
+  def load(spark: SparkSession, path: String): IvfFlatIndex = {
+    LayoutFormat.require(spark, path, "ivf")
+    load(spark, path, readListTable(spark, s"$path/lists"))
+  }
 
-  /** The layout at `path` with its list table read from `listDirs`, one
-    * relation over all of them (a tiered layout's base tier: the list
-    * store directories its `list_dirs` sidecar names). */
-  private[graft] def load(spark: SparkSession, path: String,
-      listDirs: Seq[String]): IvfFlatIndex = {
+  /** The layout at `path` over the list table `lists` (a tiered layout's
+    * base tier: its list store), with no format check. */
+  private[graft] def load(spark: SparkSession, path: String, lists: DataFrame): IvfFlatIndex = {
     val (centroids, metric) = loadCentroids(spark, path)
-    new IvfFlatIndex(centroids, readListTable(spark, listDirs: _*), metric)
+    new IvfFlatIndex(centroids, lists, metric)
   }
 
   /** Write a layout's list table partitioned by `list_id` (DPP / static
-    * pruning at search time) and return its row count, counted by the
-    * write's own job (an observed metric) — no count job. Should the
-    * metric not arrive, the footers of the files just written are summed
-    * instead: one footer per (writing task, list), read serially on the
-    * driver, so at a 1024-list layout that walk costs more than a count. */
+    * pruning at search time), one file per list: the rows are first
+    * clustered by `list_id`, which adds no shuffle to a frame already
+    * hash-partitioned by it (the IVF-Flat and ScaNN builds leave one).
+    * Returns the row count, counted by the write's own job (an observed
+    * metric) — no count job; should the metric not arrive, the footers of
+    * the files just written are summed instead. */
   private[graft] def writeLists(lists: DataFrame, dir: String): Long = {
     val written = org.apache.spark.sql.Observation()
-    lists.observe(written, count(lit(1)).as("rows"))
+    lists.repartition(col("list_id")).observe(written, count(lit(1)).as("rows"))
       .write.mode("overwrite").partitionBy("list_id").parquet(dir)
     scala.util.Try(scala.concurrent.Await.result(written.future,
         scala.concurrent.duration.Duration(60, "s")).getLong(0))
@@ -227,11 +232,9 @@ object IvfFlatIndex {
   /** A saved `partitionBy("list_id")` list table (lists, pq_lists,
     * pqcl_lists, sq_lists, scann_lists, rabitq_lists), read with the
     * schema its footers recorded (`SidecarIO.readTable`), not the
-    * inference job every load used to run. Several directories (a tiered
-    * base tier's list store) read as one relation, `list_id` discovered
-    * under each. */
-  private[graft] def readListTable(spark: SparkSession, dirs: String*): DataFrame =
-    graft.sources.SidecarIO.readTables(spark, dirs, Some("list_id"))
+    * inference job every load used to run. */
+  private[graft] def readListTable(spark: SparkSession, dir: String): DataFrame =
+    graft.sources.SidecarIO.readTable(spark, dir, Seq("list_id"))
 
   /** Unit-L2-normalized copy of a float-vector column (zero vectors pass
     * through unchanged). The cosine PQ builds store NORMALIZED vectors so
@@ -254,26 +257,10 @@ object IvfFlatIndex {
       graft.expr.UnitNorm(org.apache.spark.sql.graft.bridge.expression(
         vec.cast("array<float>"))))
 
-  /** Population sidecar: one row `(n_rows)` — the planner reads it
-    * instead of counting the registered relation at rewrite time. Shared
-    * by every layout whose save has the lists at hand. */
-  private[graft] def saveMeta(spark: SparkSession, path: String, nRows: Long): Unit =
-    graft.sources.SidecarIO.write(spark, s"$path/meta", metaRows(spark, nRows))
-
-  /** The `meta` row; a tiered append rewrites it by a staged swap. */
-  private[graft] def metaRows(spark: SparkSession, nRows: Long): graft.sources.SidecarIO.Rows = {
-    import spark.implicits._
-    graft.sources.SidecarIO.rows(Seq(nRows), "n_rows")
-  }
-
-  /** None when the layout predates the sidecar (legacy saves). A read
-    * racing a tiered append's swap of the sidecar waits it out
-    * (`SidecarIO.readSwapped`) instead of finding it absent. */
+  /** The population in the layout's `meta` (LayoutFormat); None when it
+    * has none. */
   private[graft] def loadMeta(spark: SparkSession, path: String): Option[Long] =
-    // driver-side read (r17): the planner consults this on every rewrite;
-    // a one-row sidecar must not cost a Spark job (SidecarIO doc)
-    graft.sources.SidecarIO.readSwapped(spark, s"$path/meta")
-      .flatMap(_.get("n_rows")).map(graft.sources.SidecarIO.asLong)
+    LayoutFormat.read(spark, path).map(_.nRows)
 
   /** Held-out sample size for the measured curve sidecars, scaled with
     * the corpus: 32 queries (±0.02-grade noise at k=10) are enough only

@@ -83,6 +83,7 @@ class IvfPqIndex(
     * the codebooks — the ivf_pq serialize surface (ivf_pq_serialize.cu
     * analog as Parquet tables). */
   def save(path: String): Unit = {
+    LayoutFormat.replace(path, lists)
     val nRows = IvfFlatIndex.writeLists(lists, s"$path/pq_lists")
     val spark = lists.sparkSession
     IvfFlatIndex.saveCentroids(spark, path, centroids, metric)
@@ -92,7 +93,7 @@ class IvfPqIndex(
         yield (s, c, codebooks.center(s, c).toSeq,
           codebooks.pqDim, codebooks.nCenters, codebooks.subLen),
       "s", "c", "center", "pq_dim", "n_centers", "sub_len"))
-    IvfFlatIndex.saveMeta(spark, path, nRows)
+    LayoutFormat.write(spark, path, nRows, "ivf_pq")
     depthHint.foreach(DepthHint.save(spark, path, _))
     // measured probe/recall curve of the PLANNER-SERVED composition (ADC
     // candidates at the calibrated depth + exact refine) — without it,
@@ -166,6 +167,7 @@ class IvfPqClusterIndex(
 
   /** Persist: coded lists + centroid sidecar + per-list codebook table. */
   def save(path: String): Unit = {
+    LayoutFormat.replace(path, lists)
     val nRows = IvfFlatIndex.writeLists(lists, s"$path/pqcl_lists")
     val spark = lists.sparkSession
     IvfFlatIndex.saveCentroids(spark, path, centroids, metric)
@@ -175,7 +177,7 @@ class IvfPqClusterIndex(
         yield (l, c, codebooks.center(l, c).toSeq,
           codebooks.nLists, codebooks.nCenters, codebooks.subLen, codebooks.pqDim),
       "l", "c", "center", "n_lists", "n_centers", "sub_len", "pq_dim"))
-    IvfFlatIndex.saveMeta(spark, path, nRows)
+    LayoutFormat.write(spark, path, nRows, "ivf_pqcl")
     depthHint.foreach(DepthHint.save(spark, path, _))
     if (IvfFlatIndex.recallCurveEnabled(spark))
       measureSource.foreach(IvfFlatIndex.saveCompressedCurve(spark, path, _, ivfLists, metric,
@@ -185,6 +187,7 @@ class IvfPqClusterIndex(
 
 object IvfPqClusterIndex {
   def load(spark: SparkSession, path: String): IvfPqClusterIndex = {
+    LayoutFormat.require(spark, path, "ivf_pqcl")
     val (centroids, metric) = IvfFlatIndex.loadCentroids(spark, path)
     // driver-side read (r17): collected to the driver anyway (SidecarIO
     // doc); (l, c) columns carry positions, file order irrelevant
@@ -263,6 +266,7 @@ object IvfPqIndex {
   }
 
   def load(spark: SparkSession, path: String): IvfPqIndex = {
+    LayoutFormat.require(spark, path, "ivf_pq")
     val (centroids, metric) = IvfFlatIndex.loadCentroids(spark, path)
     // codebooks are driver-resident by construction — read them driver-side
     // like the centroids (r17, SidecarIO doc); positions come from the

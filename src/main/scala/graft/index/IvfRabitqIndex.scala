@@ -84,6 +84,7 @@ class IvfRabitqIndex(
   /** Persist: coded lists (partitioned for DPP), centroid sidecar, and the
     * rotation matrix — the ivf_rabitq serialize surface as Parquet. */
   def save(path: String): Unit = {
+    LayoutFormat.replace(path, lists)
     val nRows = IvfFlatIndex.writeLists(lists, s"$path/rabitq_lists")
     val spark = lists.sparkSession
     IvfFlatIndex.saveCentroids(spark, path, centroids, Metric.L2)
@@ -92,7 +93,7 @@ class IvfRabitqIndex(
       rotation.flat.grouped(rotation.cols).zipWithIndex.toSeq
         .map { case (row, i) => (i, row.toSeq, bitsPerDim) },
       "r", "row", "bits_per_dim"))
-    IvfFlatIndex.saveMeta(spark, path, nRows)
+    LayoutFormat.write(spark, path, nRows, "rabitq")
     // measured probe/recall curve of the planner-served composition
     // (sign-code estimates at the heuristic depth + exact refine)
     if (IvfFlatIndex.recallCurveEnabled(spark))
@@ -139,6 +140,7 @@ object IvfRabitqIndex {
   }
 
   def load(spark: org.apache.spark.sql.SparkSession, path: String): IvfRabitqIndex = {
+    LayoutFormat.require(spark, path, "rabitq")
     val (centroids, _) = IvfFlatIndex.loadCentroids(spark, path)
     // driver-side rotation read (r17): collected to the driver anyway —
     // the Spark job bought nothing (SidecarIO doc); the `r` column carries

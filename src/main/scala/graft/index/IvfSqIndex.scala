@@ -51,13 +51,14 @@ class IvfSqIndex(
   /** Persist: int8 lists (partitioned for DPP), centroid sidecar, and the
     * (lo, hi) quantizer model — the ivf_sq serialize surface as Parquet. */
   def save(path: String): Unit = {
+    LayoutFormat.replace(path, lists)
     val nRows = IvfFlatIndex.writeLists(lists, s"$path/sq_lists")
     val spark = lists.sparkSession
     IvfFlatIndex.saveCentroids(spark, path, centroids, metric)
     import spark.implicits._
     graft.sources.SidecarIO.write(spark, s"$path/sq_model",
       graft.sources.SidecarIO.rows(Seq((sq.lo, sq.hi)), "lo", "hi"))
-    IvfFlatIndex.saveMeta(spark, path, nRows)
+    LayoutFormat.write(spark, path, nRows, "ivf_sq")
     // measured probe/recall curve of the planner-served composition
     // (decoded-int8 candidates at the heuristic depth + exact refine)
     if (IvfFlatIndex.recallCurveEnabled(spark))
@@ -68,6 +69,7 @@ class IvfSqIndex(
 
 object IvfSqIndex {
   def load(spark: SparkSession, path: String): IvfSqIndex = {
+    LayoutFormat.require(spark, path, "ivf_sq")
     val (centroids, metric) = IvfFlatIndex.loadCentroids(spark, path)
     // driver-side one-row model read (r17, SidecarIO doc)
     val m = graft.sources.SidecarIO.readHead(spark, s"$path/sq_model")

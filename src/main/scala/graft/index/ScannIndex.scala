@@ -72,6 +72,7 @@ class ScannIndex(
     * as Parquet (same codebook table shape as IvfPqIndex). */
   def save(path: String): Unit = {
     // SOAR stores every id twice
+    LayoutFormat.replace(path, lists)
     val nRows = IvfFlatIndex.writeLists(lists, s"$path/scann_lists") / 2
     val spark = lists.sparkSession
     IvfFlatIndex.saveCentroids(spark, path, centroids, metric)
@@ -81,7 +82,7 @@ class ScannIndex(
         yield (s, c, codebooks.center(s, c).toSeq,
           codebooks.pqDim, codebooks.nCenters, codebooks.subLen),
       "s", "c", "center", "pq_dim", "n_centers", "sub_len"))
-    IvfFlatIndex.saveMeta(spark, path, nRows)
+    LayoutFormat.write(spark, path, nRows, "scann")
     depthHint.foreach(DepthHint.save(spark, path, _))
     // measured probe/recall curve of the planner-served composition
     // (IvfPqIndex.save doc)
@@ -93,6 +94,7 @@ class ScannIndex(
 
 object ScannIndex {
   def load(spark: org.apache.spark.sql.SparkSession, path: String): ScannIndex = {
+    LayoutFormat.require(spark, path, "scann")
     val (centroids, metric) = IvfFlatIndex.loadCentroids(spark, path)
     // driver-side codebook read (r17): collected to the driver anyway —
     // the Spark job bought nothing (SidecarIO doc); (s, c) columns carry

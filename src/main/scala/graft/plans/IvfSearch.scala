@@ -4,8 +4,9 @@ import org.apache.spark.{HashPartitioner, SparkContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSet, UnsafeProjection}
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Statistics}
-import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Statistics, UnaryNode}
+import org.apache.spark.sql.catalyst.plans.physical.Partitioning
+import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import graft.core.{Metric, TopKBuf}
 import graft.index.{ListScan, ScanBatch}
 
@@ -41,7 +42,7 @@ private[graft] final case class IvfSearch(layout: String, indexPath: String,
     s"$layout $indexPath, probes=$probes/$nLists, depth=$depth, k=$k, $fin, " +
       (if (copies > 1) s"copies=$copies, " else "") +
       s"queries=${batch.size}${deltaRows.fold("")(n => s", delta=$n rows")}" +
-      s"${baseShape.fold("")(b => s", dirs=${b.dirs}, curve@${b.curveRows}")} [$reason]"
+      s"${baseShape.fold("")(b => s", dirs=${b.dirs.size}, curve@${b.curveRows}")} [$reason]"
   }
 }
 
@@ -75,13 +76,31 @@ case class IndexedKnnJoin(search: IvfSearch, lists: LogicalPlan,
     copy(lists = c.head, data = data.map(_ => c(1)), queries = c.last)
 }
 
-/** Plans IndexedKnnJoin — injected by GraftExtensions and installed by
-  * ResolveKnnJoin.ensureInstalled next to the rule. */
+/** The exact brute-force lowering of a kNN node that a registered layout
+  * could not serve, with the reason (a layout in an older format) for
+  * `explain` to show. Runs as its child. */
+case class ExactKnnJoin(reason: String, child: LogicalPlan) extends UnaryNode {
+  override def output: Seq[Attribute] = child.output
+  override def simpleString(maxFields: Int): String = s"ExactKnnJoin [$reason]"
+  override protected def withNewChildInternal(c: LogicalPlan): ExactKnnJoin = copy(child = c)
+}
+
+case class ExactKnnJoinExec(reason: String, child: SparkPlan) extends UnaryExecNode {
+  override def output: Seq[Attribute] = child.output
+  override def outputPartitioning: Partitioning = child.outputPartitioning
+  override def simpleString(maxFields: Int): String = s"ExactKnnJoin [$reason]"
+  override protected def doExecute(): RDD[InternalRow] = child.execute()
+  override protected def withNewChildInternal(c: SparkPlan): ExactKnnJoinExec = copy(child = c)
+}
+
+/** Plans IndexedKnnJoin and ExactKnnJoin — injected by GraftExtensions
+  * and installed by ResolveKnnJoin.ensureInstalled next to the rule. */
 object GraftStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case j: IndexedKnnJoin =>
       IvfSearchExec(j.search, planLater(j.lists), j.data.map(planLater),
         planLater(j.queries), j.output) :: Nil
+    case j: ExactKnnJoin => ExactKnnJoinExec(j.reason, planLater(j.child)) :: Nil
     case _ => Nil
   }
 }

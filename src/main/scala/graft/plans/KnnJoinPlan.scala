@@ -66,9 +66,9 @@ case class KnnJoinPlan(
   * re-register with a rebuilt index. The exact-distance routes answer
   * from the index alone (the reference's own serving semantics: a stale
   * index serves stale rows until rebuilt). The planner's memos are only
-  * dropped by register/unregister (and `invalidateStats()`): row probes
-  * and counts, filter-rate statistics, the `meta`/`recall_curve`/
-  * `depth_meta` sidecar reads, layout classification, live-version
+  * dropped by register/unregister (and `invalidateStats()`): filter-rate
+  * statistics, the `meta` (layout, format version, population),
+  * `recall_curve` and `depth_meta` sidecar reads, live-version
   * resolution, and the loaded layouts themselves (per session) — so a
   * layout re-saved over a registered index path is served only after
   * `register` is called again. */
@@ -106,51 +106,25 @@ object GraftIndexCatalog {
   private def normalize(p: String): String =
     p.stripPrefix("file:").stripSuffix("/")
 
-  /** Memoized outcomes of the bounded row-count probe, keyed by
-    * (scan paths, threshold). The `minIndexRows` gate reads the registered
-    * layouts' population sidecar (`meta`) first, so the probe runs only
-    * for legacy layouts saved without one. A registered path's population
-    * is stable for the life of the registration (new data means a stale
-    * index anyway), so the probe job runs once per path — not on every
-    * re-optimization of every query over it. Cleared when any
-    * registration changes.
-    *
-    * CONTRACT: appending files under an already-registered path without
-    * re-registering keeps the memoized small/large verdict (and, worse, a
-    * stale index) — call `register` again after appending; it drops both.
-    * The memo is bounded: past `probeCacheCap` distinct (paths, threshold)
-    * keys the whole map resets (it is a pure perf memo, so a reset only
-    * costs one re-probe per live key). */
-  private val probeOutcomes =
-    scala.collection.concurrent.TrieMap.empty[(String, Long), Boolean]
   private val probeCacheCap = 1024
-  private[plans] def cachedProbe(paths: Seq[String], threshold: Long)(
-      probe: => Boolean): Boolean = {
-    if (probeOutcomes.size >= probeCacheCap) probeOutcomes.clear()
-    probeOutcomes.getOrElseUpdate((paths.map(normalize).sorted.mkString(","), threshold), probe)
-  }
 
-  /** Memoized FULL row counts (same stability contract and registration-
-    * clear discipline as the bounded probe above) — the auto-probe and
-    * filtered-route rate math need the registered relation's population,
-    * and a registered path implies an index build already scanned it, so
-    * one metadata-weight count per registration is the honest price. */
-  private val countOutcomes = scala.collection.concurrent.TrieMap.empty[String, Long]
-  private[plans] def cachedCount(paths: Seq[String])(count: => Long): Long = {
-    if (countOutcomes.size >= probeCacheCap) countOutcomes.clear()
-    countOutcomes.getOrElseUpdate(paths.map(normalize).sorted.mkString(","), count)
-  }
-
-  /** Memoized layout-sidecar reads, keyed by index path — the population
-    * (`meta`) and measured recall curve (`recall_curve`) each cost one
-    * tiny parquet read per registration, not one per re-optimization.
-    * Same clear-on-register discipline as the statistics memos. */
-  private val sidecarRowsMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Option[Long]]
-  private[plans] def cachedSidecarRows(indexPath: String)(
-      read: => Option[Long]): Option[Long] = {
-    if (sidecarRowsMemo.size >= probeCacheCap) sidecarRowsMemo.clear()
-    sidecarRowsMemo.getOrElseUpdate(normalize(indexPath), read)
+  /** Memoized `meta` reads (LayoutFormat), keyed by index path — the
+    * layout, its format version and its population, one tiny parquet read
+    * per registration, not one per re-optimization; likewise the measured
+    * recall curve (`recall_curve`) and depth hint. A missing `meta` is NOT
+    * memoized: a save racing the first query, or a filesystem hiccup,
+    * must not pin the registration to brute until the next register
+    * call. Same clear-on-register discipline as the statistics memos. */
+  private val metaMemo =
+    scala.collection.concurrent.TrieMap.empty[String, graft.index.LayoutFormat.Meta]
+  private[plans] def cachedMeta(indexPath: String)(
+      read: => Option[graft.index.LayoutFormat.Meta]): Option[graft.index.LayoutFormat.Meta] = {
+    if (metaMemo.size >= probeCacheCap) metaMemo.clear()
+    metaMemo.get(normalize(indexPath)).orElse {
+      val m = read
+      m.foreach(metaMemo.put(normalize(indexPath), _))
+      m
+    }
   }
   private val sidecarCurveMemo = scala.collection.concurrent.TrieMap
     .empty[String, Option[(Seq[(Int, Double)], Option[Long])]]
@@ -195,19 +169,14 @@ object GraftIndexCatalog {
     }
   }
 
-  // test hooks: pin that the sidecar path leaves the count memo untouched
-  // and that filter-count memo keys carry content identity
-  private[graft] def countMemoSize: Int = countOutcomes.size
+  // test hook: pin that filter-count memo keys carry content identity
   private[graft] def statKeySnapshot: Set[String] = statOutcomes.keySet.toSet
 
   private[plans] def clearProbeCache(): Unit = {
-    probeOutcomes.clear()
-    countOutcomes.clear()
     statOutcomes.clear()
-    sidecarRowsMemo.clear()
+    metaMemo.clear()
     sidecarCurveMemo.clear()
     sidecarDepthMemo.clear()
-    layoutMemo.clear()
     resolvedMemo.clear()
     loadedMemo.clear()
   }
@@ -275,24 +244,6 @@ object GraftIndexCatalog {
   private[plans] def cachedStat(key: String)(stat: => Double): Double = {
     if (statOutcomes.size >= probeCacheCap) statOutcomes.clear()
     statOutcomes.getOrElseUpdate(key, stat)
-  }
-
-  /** Memoized layout classification (the list-table existence probes) —
-    * with multi-layout registrations the resolver classifies EVERY
-    * registered entry per rewrite, so the filesystem exists() chain runs
-    * once per registration, not once per re-optimization. */
-  private val layoutMemo = scala.collection.concurrent.TrieMap.empty[String, Option[String]]
-  private[plans] def cachedLayout(indexPath: String)(
-      classify: => Option[String]): Option[String] = {
-    if (layoutMemo.size >= probeCacheCap) layoutMemo.clear()
-    layoutMemo.get(normalize(indexPath)).getOrElse {
-      val r = classify
-      // a None (unknown/unreadable layout) is NOT memoized: a save racing
-      // the first query, or a filesystem hiccup, must not pin the
-      // registration to brute until the next register call — re-probe
-      if (r.isDefined) layoutMemo.put(normalize(indexPath), r)
-      r
-    }
   }
 
   /** Drop every memoized statistic/sidecar/layout read and loaded
@@ -529,29 +480,6 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
       }
   }.flatten
 
-  /** Classify a registered layout by the list table it wrote: `hnsw_meta`
-    * = HNSW hierarchy, `lists` = IVF-Flat, `pq_lists`/`pqcl_lists` =
-    * IVF-PQ (per-subspace / per-cluster codebooks), `sq_lists` = IVF-SQ,
-    * `scann_lists` = ScaNN, `rabitq_lists` = IVF-RaBitQ. An unknown
-    * layout returns None, so the join falls back to brute force instead
-    * of failing at plan time on a missing directory. */
-  private def layoutOf(path: String): Option[String] =
-    GraftIndexCatalog.cachedLayout(path) {
-      def exists(child: String): Boolean = {
-        val p = new org.apache.hadoop.fs.Path(path, child)
-        graft.sources.SidecarIO.fs(spark, p.toString).exists(p)
-      }
-      if (exists("hnsw_meta")) Some("hnsw")
-      else if (exists("tiered_meta")) Some("tiered")
-      else if (exists("lists")) Some("ivf")
-      else if (exists("pq_lists")) Some("ivf_pq")
-      else if (exists("pqcl_lists")) Some("ivf_pqcl")
-      else if (exists("sq_lists")) Some("ivf_sq")
-      else if (exists("scann_lists")) Some("scann")
-      else if (exists("rabitq_lists")) Some("rabitq")
-      else None
-    }
-
   /** The ADC/decoded-code layouts score candidates in (residual) L2, so
     * their routes are sound only for L2-family node metrics — except the
     * PQ-coded layouts built UNDER InnerProduct (ivf_pq.hpp:47-205: the
@@ -644,16 +572,13 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
             }), "measured depth")
         else (math.max(2 * kj.k, kj.k + 10), "2k depth")
 
-      /** Registered-population row count: the layout's `meta` sidecar by
-        * preference (the build already knew n; no plan-time job at all),
-        * falling back to a memoized zero-column count for legacy layouts
-        * saved before the sidecar existed. */
-      def baseRows(e: GraftIndexCatalog.Entry, base: LogicalPlan): Long =
-        GraftIndexCatalog.cachedSidecarRows(e.indexPath) {
-          graft.index.IvfFlatIndex.loadMeta(spark, e.indexPath)
-        }.getOrElse(GraftIndexCatalog.cachedCount(scanPaths(base)) {
-          B.ofRows(spark, base).count()
-        })
+      /** A registered layout's `meta`: its kind, format version and
+        * population (the build already knew n; no plan-time job at all). */
+      def metaOf(e: GraftIndexCatalog.Entry): Option[graft.index.LayoutFormat.Meta] =
+        GraftIndexCatalog.cachedMeta(e.indexPath)(graft.index.LayoutFormat.read(spark, e.indexPath))
+
+      /** Registered-population row count, from the layout's `meta`. */
+      def baseRows(e: GraftIndexCatalog.Entry): Long = metaOf(e).fold(0L)(_.nRows)
 
       /** Probe count, and where it came from (for explain): explicit
         * registration wins; `nProbes = 0` derives from
@@ -661,11 +586,10 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
         * probe/recall curve (the `recall_curve` sidecar written at save
         * time; a legacy layout without one probes every list — exact, and
         * warned once — until re-saved, docs/MIGRATION.md). */
-      def probesOf(e: GraftIndexCatalog.Entry, base: LogicalPlan,
-          nLists: Int, depth: Int): (Int, String) =
+      def probesOf(e: GraftIndexCatalog.Entry, nLists: Int, depth: Int): (Int, String) =
         if (e.nProbes > 0) (e.nProbes, "registered probes")
         else {
-          val n = math.max(baseRows(e, base), 1L)
+          val n = math.max(baseRows(e), 1L)
           val curve = GraftIndexCatalog.cachedSidecarCurve(e.indexPath) {
             graft.index.IvfFlatIndex.loadCurveWithN(spark, e.indexPath,
               "recall_curve")
@@ -783,8 +707,7 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
         * the metric its `dist` column is computed in, whether those
         * distances are EXACT (raw-vector layouts) or code-space estimates
         * (ADC / decoded int8 / RaBitQ), the DataFrame lowering, and — for
-        * the IVF layouts, which IvfSearchExec runs — the scan inputs
-        * (a legacy tiered save without a recorded delta count has none). */
+        * the IVF layouts, which IvfSearchExec runs — the scan inputs. */
       final case class Cand(metric: Metric, exact: Boolean, frame: () => DataFrame,
           scan: Option[ScanInputs] = None)
 
@@ -801,7 +724,7 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
           * operator. */
         def ivfCand(m: Metric, exact: Boolean, ivf: graft.index.IvfLists,
             search: (DataFrame, Int, Int) => DataFrame): Cand = {
-          val (probes, why) = probesOf(e, base, ivf.cs.k, depth)
+          val (probes, why) = probesOf(e, ivf.cs.k, depth)
           Cand(m, exact, () => search(queries, depth, probes), Some(ScanInputs(ivf, probes, why)))
         }
         layout match {
@@ -841,10 +764,8 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
             if (!rankCompatible(idx.metric, metric)) None
             else {
               val c = ivfCand(idx.metric, exact = true, idx.base.ivfLists, idx.search(_, _, _))
-              // a legacy save without a recorded delta count keeps the
-              // DataFrame route, which probes the delta with a job
-              Some(c.copy(scan = idx.knownDeltaRows.flatMap(n => c.scan.map(
-                _.copy(delta = Some((idx.delta, n)), baseShape = idx.saved)))))
+              Some(c.copy(scan = c.scan.map(_.copy(
+                delta = idx.knownDeltaRows.map((idx.delta, _)), baseShape = idx.saved))))
             }
           case "ivf_sq" =>
             // decoded int8 scored under the index's own metric —
@@ -1084,12 +1005,12 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
           (if (ivf.normalize) graft.expr.VectorNormOps.unitNorm(v) else v).toFloatArray()
         }.toArray
         val probed = ivf.scan.batch(ivf.cs, vecs, _ => si.probes)
-        // fresh attribute ids per scan; a tiered base tier read from several
-        // list-store directories is a Union of scans, whose output follows
-        // its children's
-        val rel = B.planOf(ivf.lists).transformUp {
-          case m: org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation =>
-            m.newInstance()
+        // fresh attribute ids per scan, carried up through the plan over it
+        // (a tiered base tier projects its `g` column away)
+        val rel = B.planOf(ivf.lists).transformUpWithNewOutput {
+          case m: LogicalPlan with org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation =>
+            val fresh = m.newInstance()
+            (fresh, m.output.zip(fresh.output))
         }
         def attrOf(plan: LogicalPlan, what: String)(name: String) =
           plan.output.find(_.name == name).getOrElse(
@@ -1131,27 +1052,15 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
       // pipeline (one scan stage) beats any index route (centroid join +
       // pruned list join + exact refine join), so a registered index is
       // bypassed. Row count comes from the logical plan's stats when the
-      // catalog knows it, else from the population sidecar (`meta`) of
-      // the registered (live-resolved) layouts — the same memoized read
+      // catalog knows it, else from the `meta` of the first current
+      // registered (live-resolved) layout — the same memoized read
       // `baseRows` uses; the layout's population IS the relation's by the
-      // registration contract. Only layouts without `meta` (legacy saves)
-      // leave a bounded incremental probe that stops at the threshold —
-      // never a full count of the data side. minIndexRows <= 0 disables
-      // the gate (always trust registration).
+      // registration contract. No job: never a count of the data side.
+      // minIndexRows <= 0 disables the gate (always trust registration).
       val minIndexRows = GraftConf.KnnJoinMinIndexRows.get(spark)
-      def bigEnoughForIndex(base: LogicalPlan,
-          es: Seq[GraftIndexCatalog.Entry]): Boolean =
-        minIndexRows <= 0 ||
-          base.stats.rowCount.map(_ >= BigInt(minIndexRows))
-            .orElse(es.iterator.flatMap(e =>
-              GraftIndexCatalog.cachedSidecarRows(e.indexPath) {
-                graft.index.IvfFlatIndex.loadMeta(spark, e.indexPath)
-              }).nextOption().map(_ >= minIndexRows))
-            .getOrElse(
-              GraftIndexCatalog.cachedProbe(scanPaths(base), minIndexRows) {
-                !graft.graphops.LocalKernel.within(
-                  B.ofRows(spark, base).select(col(kj.idCol)), minIndexRows - 1)
-              })
+      def bigEnoughForIndex(base: LogicalPlan, metas: Seq[graft.index.LayoutFormat.Meta]): Boolean =
+        minIndexRows <= 0 || base.stats.rowCount.map(_ >= BigInt(minIndexRows))
+          .getOrElse(metas.headOption.exists(_.nRows >= minIndexRows))
 
       /** Expected per-query read cost of routing through `e`, in RAW-ROW
         * units — the cost model behind multi-layout selection (the
@@ -1198,8 +1107,8 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
               graft.sources.SidecarIO.asDouble(graft.sources.SidecarIO
                 .readHead(spark, s"$statsBase/centroids").get.apply("dim"))
             }
-            val n = math.max(baseRows(e, base), 1L).toDouble
-            val probes = probesOf(e, base, math.max(1, nLists.toInt), depth)._1
+            val n = math.max(baseRows(e), 1L).toDouble
+            val probes = probesOf(e, math.max(1, nLists.toInt), depth)._1
             val pf = probes / math.max(1.0, nLists)
             val width = layout match {
               case "ivf" | "tiered" => 1.0
@@ -1222,10 +1131,8 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
             val deltaScan =
               if (layout == "tiered")
                 GraftIndexCatalog.cachedStat(s"cost:delta:${e.indexPath}") {
-                  val meta = graft.sources.SidecarIO
-                    .readHead(spark, s"${e.indexPath}/tiered_meta").get
-                  meta.get("delta_rows")
-                    .map(graft.sources.SidecarIO.asDouble).getOrElse(0.0)
+                  graft.sources.SidecarIO.asDouble(graft.sources.SidecarIO
+                    .readHead(spark, s"${e.indexPath}/tiered_meta").get.apply("delta_rows"))
                 }
               else 0.0
             // the tiered meta population is base + delta; only the BASE is
@@ -1264,6 +1171,7 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
         * pre-r17 index-if-routable behavior. An explicit-vs-auto mix
         * still sorts purely by cost — the arm only removes auto entries
         * that priced above brute, never reorders survivors. */
+      var refused: Option[String] = None
       def entriesFor(base: LogicalPlan): Seq[(GraftIndexCatalog.Entry, String)] = {
         val es0 = GraftIndexCatalog.lookupAll(scanPaths(base))
         if (es0.isEmpty) Seq.empty
@@ -1299,9 +1207,18 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
               }
             if (live == e.indexPath) e else e.copy(indexPath = live)
           }
+          // each layout's kind, version and population from its `meta`;
+          // one in an older format is refused and serves by exact brute
+          // force, the reason in `explain`
+          val metas = es0.zip(es).map { case (root, e) =>
+            val m = metaOf(e)
+            if (!m.exists(_.current))
+              refused = refused.orElse(Some(graft.index.LayoutFormat.refusal(root.indexPath, m)))
+            (e, m.filter(_.current))
+          }.collect { case (e, Some(m)) => (e, m) }
           val typed =
-            if (!bigEnoughForIndex(base, es)) Seq.empty
-            else es.flatMap(e => layoutOf(e.indexPath).map(l => (e, l)))
+            if (!bigEnoughForIndex(base, metas.map(_._2))) Seq.empty
+            else metas.map { case (e, m) => (e, m.layout) }
           val ordered =
             if (typed.size <= 1) typed
             else typed.sortBy { case (e, l) => (layoutCost(e, l, base), e.indexPath) }
@@ -1310,7 +1227,7 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
           if (!bruteArm) ordered
           else ordered.filter { case (e, l) =>
             explicitRegistration(e) || {
-              val brute = math.max(baseRows(e, base), 1L).toDouble
+              val brute = math.max(baseRows(e), 1L).toDouble
               layoutCost(e, l, base) < brute
             }
           }
@@ -1336,7 +1253,7 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
           e: GraftIndexCatalog.Entry)(depth: Int): Option[(Int, Boolean, Double)] = {
         val widenCap = GraftConf.KnnJoinMaxWidenedCoarse.get(spark)
         val rateFloor = GraftConf.KnnJoinMinFilterRate.get(spark)
-        val nBase = math.max(baseRows(e, base), 1L)
+        val nBase = math.max(baseRows(e), 1L)
         // rate-branch result: the filter is NOT small enough to
         // post-filter candidates directly (refine via the data child)
         def byRate(rate: Double): Option[(Int, Boolean, Double)] =
@@ -1503,7 +1420,7 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
                         val keep = explicitRegistration(e) ||
                           !GraftConf.KnnJoinBruteArm.get(spark) ||
                           layoutCost(e, layout, shape.base, Some(d)) <
-                            rate * math.max(baseRows(e, shape.base), 1L)
+                            rate * math.max(baseRows(e), 1L)
                         if (keep) Some((d, small)) else None
                     }
                   decide(e, layout, shape.base, widen, post).map(lowerFrame(_, post))
@@ -1575,7 +1492,11 @@ case class ResolveKnnJoin(spark: SparkSession) extends Rule[LogicalPlan] {
           case (produced, declared) =>
             Alias(produced, declared.name)(exprId = declared.exprId)
         }
-        Project(aliased, newPlan)
+        val exact = Project(aliased, newPlan)
+        refused.filter(_ => viaIndex.isEmpty).fold[LogicalPlan](exact) { why =>
+          ResolveKnnJoin.ensureStrategy(spark)
+          ExactKnnJoin(why, exact)
+        }
       }
   }
 }

@@ -17,7 +17,7 @@ import org.apache.spark.sql.types._
 
 /** DRIVER-SIDE reads and writes of the engine's tiny parquet sidecars
   * (meta, recall_curve, depth_meta, ef_curve, hnsw_meta, tiered_meta,
-  * delta_commits, list_dirs) and of the layout state the driver holds
+  * delta_commits) and of the layout state the driver holds
   * anyway (centroids, codebooks, cluster codebooks, rotation, sq_model),
   * plus the small files beside them (the ingest lease, commit markers).
   *
@@ -339,27 +339,22 @@ object SidecarIO {
   }
 
   /** The parquet table at `dir` read with the schema its writer recorded
-    * in a footer (`sparkSchema`), plus the int column of a table
-    * partitioned by `partition` — the schema inference would return,
+    * in a footer (`sparkSchema`), plus the int columns of a table
+    * partitioned by `partitions` — the schema inference would return,
     * without its job. By inference when no footer has it. For list
     * tables, graph tables and the tiered delta, not only sidecars: only
-    * the schema is read on the driver. */
-  def readTable(spark: SparkSession, dir: String, partition: Option[String] = None,
-      options: Map[String, String] = Map.empty): DataFrame =
-    readTables(spark, Seq(dir), partition, options)
-
-  /** `readTable` over several directories of one table: the union of one
-    * relation per directory, each read with the schema of the first
-    * footer found in `dirs` order. Spark discovers a partition column
-    * only under a common base path, and sibling directories like
-    * `g_000000/list_id=3` and `g_000001/list_id=3` have none, so one
-    * multi-path relation fails with conflicting directory structures. */
-  def readTables(spark: SparkSession, dirs: Seq[String], partition: Option[String] = None,
-      options: Map[String, String] = Map.empty): DataFrame = {
+    * the schema is read on the driver. `only` names the subdirectories
+    * of `dir` to read (a tiered base tier's `g=N` list-store
+    * directories): they are one relation under `basePath=dir`, so their
+    * partition columns are discovered as in a read of all of `dir`. */
+  def readTable(spark: SparkSession, dir: String, partitions: Seq[String] = Nil,
+      options: Map[String, String] = Map.empty, only: Seq[String] = Nil): DataFrame = {
+    val paths = if (only.isEmpty) Seq(dir) else only.map(c => s"$dir/$c")
     val reader = spark.read.options(options)
-    val schemed = dirs.iterator.flatMap(sparkSchema(spark, _)).nextOption()
-      .fold(reader)(s => reader.schema(partition.fold(s)(s.add(_, IntegerType))))
-    dirs.map(schemed.parquet).reduce(_ union _)
+      .options(if (only.isEmpty) Map.empty[String, String] else Map("basePath" -> dir))
+    paths.iterator.flatMap(sparkSchema(spark, _)).nextOption()
+      .fold(reader)(s => reader.schema(partitions.foldLeft(s)(_.add(_, IntegerType))))
+      .parquet(paths: _*)
   }
 
   /** A small sidecar as a driver-held frame: the Spark schema its writer

@@ -76,19 +76,19 @@ class TieredIndex private (
     if (deltaRows >= minAnnRows) compact() else this
 
   /** Persist as a layout the kNN-join planner can route
-    * (tiered_index.hpp:59-136 as a directory): the ANN tier is an
-    * IVF-Flat layout under `tiered_base/` (own sidecars) whose list table
-    * is the layout's first list-store directory, `list_store/g_000000`,
-    * named by the `tiered_base/list_dirs` sidecar; the delta is an
-    * (id, vec) parquet; and the planner sidecars sit at top level — the
-    * TOTAL population (base + delta) and the base tier's measured recall
-    * curve (the ANN tier governs the probe/recall relation; the delta is
-    * scanned exactly regardless of probes). */
+    * (tiered_index.hpp:59-136 as a directory), replacing whatever layout
+    * `path` held: the ANN tier is an IVF-Flat layout under `tiered_base/`
+    * (own sidecars) whose list table is the layout's first list-store
+    * directory, `list_store/g=0`; the delta is an (id, vec) parquet; and
+    * the planner sidecars sit at top level — `meta` with the TOTAL
+    * population (base + delta), `tiered_meta` with the delta's rows and
+    * the list-store directories the base reads, and the base tier's
+    * measured recall curve (the ANN tier governs the probe/recall
+    * relation; the delta is scanned exactly regardless of probes). */
   def save(path: String): Unit = SidecarIO.withConf(delta.sparkSession) {
     val spark = delta.sparkSession
-    val store = TieredIndex.storeDir(0)
-    val baseRows = base.save(s"$path/tiered_base", s"$path/$store")
-    TieredIndex.writeListDirs(spark, path, Seq(store))
+    graft.index.LayoutFormat.replace(path, base.lists, delta)
+    val baseRows = base.save(s"$path/tiered_base", TieredIndex.storeDir(path, 0))
     // the population is counted only when nothing knows it: a compacted
     // or freshly-loaded layout carries it, a driver-held delta holds its
     // rows on the driver
@@ -99,22 +99,22 @@ class TieredIndex private (
     if (deltaRows == 0L) TieredIndex.writeEmptyDelta(spark, path, out.schema)
     else out.write.mode("overwrite").parquet(s"$path/delta")
     SidecarIO.write(spark, s"$path/tiered_meta",
-      TieredIndex.metaRows(spark, minAnnRows, metric.name, deltaRows, Some(baseRows)))
-    IvfFlatIndex.saveMeta(spark, path, baseRows + deltaRows)
+      TieredIndex.metaRows(spark, minAnnRows, metric.name, deltaRows, baseRows, Seq(0)))
+    graft.index.LayoutFormat.write(spark, path, baseRows + deltaRows, "tiered")
     TieredIndex.copyCurve(spark, s"$path/tiered_base", path)
   }
 }
 
 object TieredIndex {
 
-  /** A saved base tier's shape: how many list-store directories it reads
-    * and the population its recall curve was measured at. */
-  private[graft] final case class BaseShape(dirs: Int, curveRows: Long)
+  /** A saved base tier's shape: the list-store directories (`g` values)
+    * it reads and the population its recall curve was measured at. */
+  private[graft] final case class BaseShape(dirs: Seq[Int], curveRows: Long)
 
   /** A fold that would leave the base tier reading more list-store
     * directories than this rewrites it into one instead: every directory
-    * is one more scan in each base-tier read, and the files of a list
-    * spread over one directory per fold that touched it. */
+    * holds one more file per list it touched, and a base-tier read lists
+    * them all. */
   private val MaxListDirs = 8
 
   /** The recall curve is re-measured once the rows folded since its
@@ -133,77 +133,50 @@ object TieredIndex {
     new TieredIndex(base, emptyDelta, minAnnRows, params.metric)
   }
 
+  /** The layout at `path`, in its live version; a layout in an older
+    * format is refused with an error naming `LayoutFormat.upgrade`. */
   def load(spark: org.apache.spark.sql.SparkSession, path: String): TieredIndex = {
-    recoverSwap(spark, path)
-    loadLive(spark, resolveLive(spark, path))
+    val live = resolveLive(spark, path)
+    graft.index.LayoutFormat.require(spark, live, "tiered", path)
+    loadLive(spark, live, loadBase(spark, live))
   }
 
-  /** Load from a RESOLVED live directory (the layout root for flat/legacy
-    * saves, `<root>/v_NNNNNN` after an in-place compaction) — the version
-    * indirection is resolved exactly once, here and in the planner's
-    * registration lookup, never inside the readers below. */
-  private[stream] def loadLive(spark: org.apache.spark.sql.SparkSession,
-      live: String): TieredIndex =
-    loadLive(spark, live, loadBase(spark, live))
-
-  /** `loadLive` over an already loaded ANN tier — the planner's memoized
-    * load of `<live>/tiered_base`, which never changes once committed;
-    * `tiered_meta` and the delta are read here, on every call. The number
-    * of list directories the tier reads is the number of scans its list
-    * relation unions (`loadBase`), so it costs no read. */
-
+  /** The version at `live` over an already loaded ANN tier — the
+    * planner's memoized load of `<live>/tiered_base`, which never changes
+    * once committed; `tiered_meta` and the delta are read here, on every
+    * call. */
   private[graft] def loadLive(spark: org.apache.spark.sql.SparkSession,
       live: String, base: IvfFlatIndex): TieredIndex = {
     val meta = TieredIngest.readOneRowSidecar(spark, s"$live/tiered_meta")
-    // legacy saves predate the delta_rows column — fall back to the probe
-    val deltaRows = meta.get("delta_rows").map(SidecarIO.asLong)
     new TieredIndex(base, readDelta(spark, live),
       SidecarIO.asLong(meta("min_ann_rows")),
       Metric.fromName(meta("metric").asInstanceOf[String]),
-      deltaRows,
-      Some(BaseShape(base.lists.queryExecution.logical.collectLeaves().size,
-        curveRows(spark, live, meta))))
+      Some(SidecarIO.asLong(meta("delta_rows"))),
+      Some(BaseShape(listDirs(meta), SidecarIO.asLong(meta("curve_rows")))))
   }
 
-  /** The ANN tier of the layout version at `live`, reading the list-store
-    * directories its `list_dirs` sidecar names (relative to the layout
-    * root) as one list table; a layout saved without the sidecar reads
-    * `tiered_base/lists`. No job: every schema comes from a footer. */
+  /** The ANN tier of the version at `live`: its list-store directories,
+    * which `tiered_meta.list_dirs` names, read as one relation under the
+    * store root, with `g` and `list_id` both partition columns (`g` is
+    * dropped). No job: every schema comes from a footer. */
   private[graft] def loadBase(spark: org.apache.spark.sql.SparkSession,
       live: String): IvfFlatIndex =
-    loadBase(spark, live, listDirs(spark, live))
+    IvfFlatIndex.load(spark, s"$live/tiered_base", baseLists(spark, layoutRoot(live),
+      listDirs(TieredIngest.readOneRowSidecar(spark, s"$live/tiered_meta"))))
 
-  private def loadBase(spark: org.apache.spark.sql.SparkSession, live: String,
-      dirs: Option[Seq[String]]): IvfFlatIndex = {
-    val root = layoutRoot(live)
-    IvfFlatIndex.load(spark, s"$live/tiered_base",
-      dirs.fold(Seq(s"$live/tiered_base/lists"))(_.map(d => s"$root/$d")))
-  }
+  private def baseLists(spark: org.apache.spark.sql.SparkSession, root: String,
+      dirs: Seq[Int]): DataFrame =
+    SidecarIO.readTable(spark, s"$root/$StoreRoot", Seq("g", "list_id"),
+      only = dirs.map(g => s"g=$g")).drop("g")
 
-  /** The population the version's recall curve was measured at; a
-    * layout saved without `curve_rows` measured it at its base rows. */
-  private def curveRows(spark: org.apache.spark.sql.SparkSession, live: String,
-      meta: Map[String, Any]): Long =
-    meta.get("curve_rows").map(SidecarIO.asLong)
-      .orElse(IvfFlatIndex.loadMeta(spark, s"$live/tiered_base")).getOrElse(0L)
+  /** The list-store directories (`g` values) a `tiered_meta` row names. */
+  private def listDirs(meta: Map[String, Any]): Seq[Int] =
+    meta("list_dirs").asInstanceOf[Seq[Any]].map(SidecarIO.asInt)
 
-  /** The list-store directories of the version at `live`, relative to the
-    * layout root, in write order; None for a layout saved without them. */
-  private def listDirs(spark: org.apache.spark.sql.SparkSession,
-      live: String): Option[Seq[String]] =
-    SidecarIO.readRows(spark, s"$live/tiered_base/list_dirs")
-      .map(_.map(_("dir").asInstanceOf[String]))
-
-  private def writeListDirs(spark: org.apache.spark.sql.SparkSession, live: String,
-      dirs: Seq[String]): Unit = {
-    import spark.implicits._
-    SidecarIO.write(spark, s"$live/tiered_base/list_dirs", SidecarIO.rows(dirs, "dir"))
-  }
-
-  /** Base-tier lists live in `<root>/list_store/g_NNNNNN`, numbered by the
+  /** Base-tier lists live in `<root>/list_store/g=N/list_id=L/`, N the
     * version that wrote them (0 = the flat save at the root). */
   private val StoreRoot = "list_store"
-  private def storeDir(n: Int): String = f"$StoreRoot/g_$n%06d"
+  private def storeDir(root: String, g: Int): String = s"$root/$StoreRoot/g=$g"
 
   /** The layout root of a live directory: the parent of a version
     * directory, or the directory itself for a flat save. */
@@ -224,17 +197,20 @@ object TieredIndex {
         concat(lit("delta row "), col("id").cast("string"), lit(" has dimension "),
           size(col("vec")).cast("string"), lit(s", the index $dim")))).as("vec"))
 
-  /** The `tiered_meta` row; `curveRows` is left out only when rewriting a
-    * layout saved without it. */
+  /** The `tiered_meta` row: the delta's rows, the population the recall
+    * curve was measured at, and the list-store directories of the base. */
   private[graft] def metaRows(spark: org.apache.spark.sql.SparkSession, minAnnRows: Long,
-      metric: String, deltaRows: Long, curveRows: Option[Long]): SidecarIO.Rows = {
+      metric: String, deltaRows: Long, curveRows: Long, listDirs: Seq[Int]): SidecarIO.Rows = {
     import spark.implicits._
-    curveRows.fold(SidecarIO.rows(Seq((minAnnRows, metric, deltaRows)),
-      "min_ann_rows", "metric", "delta_rows")) { c =>
-      SidecarIO.rows(Seq((minAnnRows, metric, deltaRows, c)),
-        "min_ann_rows", "metric", "delta_rows", "curve_rows")
-    }
+    SidecarIO.rows(Seq((minAnnRows, metric, deltaRows, curveRows, listDirs)),
+      "min_ann_rows", "metric", "delta_rows", "curve_rows", "list_dirs")
   }
+
+  /** `metaRows` of the `tiered_meta` row `meta` with `deltaRows` delta rows. */
+  private[stream] def metaRows(spark: org.apache.spark.sql.SparkSession,
+      meta: Map[String, Any], deltaRows: Long): SidecarIO.Rows =
+    metaRows(spark, SidecarIO.asLong(meta("min_ann_rows")), meta("metric").asInstanceOf[String],
+      deltaRows, SidecarIO.asLong(meta("curve_rows")), listDirs(meta))
 
   private def writeEmptyDelta(spark: org.apache.spark.sql.SparkSession, live: String,
       schema: org.apache.spark.sql.types.StructType): Unit =
@@ -251,7 +227,7 @@ object TieredIndex {
     * protocol, TieredIngest doc) alongside whatever flat files the save /
     * direct appends wrote at the delta root, so the read must recurse —
     * `recursiveFileLookup` picks up both shapes in one listing. */
-  private[stream] def readDelta(spark: org.apache.spark.sql.SparkSession,
+  private[graft] def readDelta(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame = {
     // the schema the writer recorded in a footer, not an inference job
     SidecarIO.readTable(spark, s"$path/delta", options = Map("recursiveFileLookup" -> "true"))
@@ -261,13 +237,13 @@ object TieredIndex {
   /** Version-directory layout of an in-place-compacted tiered index: the
     * root holds `v_NNNNNN` subdirectories, each a COMPLETE layout, and
     * the highest one carrying the `_COMMITTED` marker file is live. A
-    * flat save (TieredIndex.save writes the layout members at the root —
-    * unchanged on-disk format) is version 0 of this scheme. Readers
-    * resolve the live directory with one listing and never observe a
-    * partial layout: the marker CREATE is the atomic commit point, and
-    * the previous version survives one full compaction interval before
-    * retention deletes it, so a query planned on it finishes undisturbed
-    * — there is no swap window, no reader retry, and no grace sleep. */
+    * flat save (TieredIndex.save writes the layout members at the root)
+    * is version 0 of this scheme. Readers resolve the live directory with
+    * one listing and never observe a partial layout: the marker CREATE is
+    * the atomic commit point, and the previous version survives one full
+    * compaction interval before retention deletes it, so a query planned
+    * on it finishes undisturbed — there is no swap window, no reader
+    * retry, and no grace sleep. */
   private val VersionRe = "^v_(\\d{6,})$".r
   private val CommitMarker = "_COMMITTED"
 
@@ -292,10 +268,10 @@ object TieredIndex {
   private def versionDir(path: String, n: Int): String = f"$path/v_$n%06d"
 
   /** The directory the layout's CURRENT content lives in: the highest
-    * committed version, or the root itself for flat/legacy saves (and for
-    * every non-tiered layout, where no version directories exist). Every
-    * reader and the planner's registration lookup resolve through this;
-    * the writers below keep it stable for at least one full compaction
+    * committed version, or the root itself for flat saves (and for every
+    * non-tiered layout, where no version directories exist). Every reader
+    * and the planner's registration lookup resolve through this; the
+    * writers below keep it stable for at least one full compaction
     * interval after a newer version commits. */
   def resolveLive(spark: org.apache.spark.sql.SparkSession, path: String): String = {
     val fs = SidecarIO.fs(spark, path)
@@ -308,7 +284,7 @@ object TieredIndex {
     * `create_ann_index_on_extend`, :105, :136), with the reference's IVF
     * `extend` semantics (ivf_flat.hpp:60-67): the delta rows are assigned
     * under the version's fixed centroids and written, one file per list
-    * they land in, as the next list-store directory `list_store/g_<next>`;
+    * they land in, as the next list-store directory `list_store/g=<next>`;
     * the next version's base tier reads the previous version's list
     * directories plus that one, so a compaction writes the delta, not the
     * base (`fold`). The result is committed reader-safe: the next version
@@ -323,86 +299,100 @@ object TieredIndex {
     * retained version names. A crash anywhere before the marker leaves an
     * uncommitted version and store directory the next attempt deletes; a
     * crash after it is a completed compaction. Nothing is ever renamed,
-    * so there is no window in which the layout is absent. */
+    * so there is no window in which the layout is absent. A layout in an
+    * older format is refused (`LayoutFormat.upgrade`). */
   def compactInPlace(spark: org.apache.spark.sql.SparkSession, path: String,
-      beforeSwap: String => Unit = _ => ()): Unit = SidecarIO.withConf(spark) {
-    recoverSwap(spark, path)
-    val fs = SidecarIO.fs(spark, path)
-    val committed = committedVersions(fs, path)
-    val cur = committed.lastOption.getOrElse(0)
-    val live = committed.lastOption.map(versionDir(path, _)).getOrElse(path)
-    val next = versionDir(path, cur + 1)
-    val store = storeDir(cur + 1)
-    // a compaction attempt that crashed before its commit marker left an
-    // uncommitted version and store directory under the next number —
-    // safe to clear (no committed version names them; the per-layout
-    // ingest lock serializes in-process compactions, and cross-process
-    // writers hold the ingest lease); a pre-versioning crash's sibling tmp
-    // directory is junk under the new scheme
-    Seq(next, s"$path/$store", path + ".compact_tmp")
-      .foreach(p => fs.delete(new org.apache.hadoop.fs.Path(p), true))
-    fold(spark, path, live, next, store)
-    beforeSwap(next)
-    SidecarIO.writeFile(spark, s"$next/$CommitMarker", Array.emptyByteArray, overwrite = false)
-    // retention: the version just superseded (`cur`) survives one more
-    // compaction interval for in-flight readers; everything older goes,
-    // and once a version PRECEDES the grace version the flat (v0) members
-    // at the root go with it; then every store directory no remaining
-    // version names
-    committed.dropRight(1).foreach { n =>
-      fs.delete(new org.apache.hadoop.fs.Path(versionDir(path, n)), true)
+      beforeSwap: String => Unit = _ => ()): Unit =
+    commit(spark, path, beforeSwap) { live =>
+      graft.index.LayoutFormat.require(spark, live, "tiered", path)
+      loadLive(spark, live, loadBase(spark, live))
     }
-    if (cur >= 1) deleteFlatMembers(fs, path)
-    sweepStore(spark, fs, path)
-    // the layout's live version just moved: drop the planner's memoized
-    // resolution/statistics HERE, at the mutation site — a direct
-    // compactInPlace call (the repair path) must refresh registrations
-    // exactly like the ingest-triggered one
-    graft.plans.GraftIndexCatalog.invalidateStats()
-  }
 
-  /** Write version `next` from the live version: the delta's rows go to
-    * the store directory `store` and the base tier reads the live list
-    * directories plus it. When that would exceed `MaxListDirs`, or the
-    * live version records no list directories (saved before the list
-    * store), `store` instead holds every row and is the only directory.
-    * The small sidecars are written on the driver: centroids, populations,
-    * the list directories, an empty delta, and the recall curve —
-    * re-measured over the new population once the rows folded since its
-    * measurement reach `CurveRemeasureShare` of the population it was
-    * measured on, copied otherwise; `tiered_meta.curve_rows` records which
-    * population that is. A delta row of another dimension than the index
+  /** Commit the next version of the layout at `root` from `base` and
+    * `delta`, the whole base rewritten into one list-store directory —
+    * the full-rewrite fold, for `LayoutFormat.upgrade`, whose `base` is
+    * read from an older shape (no `g` directories). */
+  private[graft] def rewrite(spark: org.apache.spark.sql.SparkSession, root: String,
+      base: IvfFlatIndex, delta: DataFrame, minAnnRows: Long, metric: String,
+      curveRows: Long, beforeSwap: String => Unit): Unit =
+    commit(spark, root, beforeSwap)(_ => new TieredIndex(base, delta, minAnnRows,
+      Metric.fromName(metric), saved = Some(BaseShape(Nil, curveRows))))
+
+  /** The commit protocol of `compactInPlace` over the version `prev`
+    * loads from the live directory. */
+  private def commit(spark: org.apache.spark.sql.SparkSession, path: String,
+      beforeSwap: String => Unit)(prev: String => TieredIndex): Unit =
+    SidecarIO.withConf(spark) {
+      val fs = SidecarIO.fs(spark, path)
+      val committed = committedVersions(fs, path)
+      val cur = committed.lastOption.getOrElse(0)
+      val live = committed.lastOption.map(versionDir(path, _)).getOrElse(path)
+      val next = versionDir(path, cur + 1)
+      // a compaction attempt that crashed before its commit marker left an
+      // uncommitted version and store directory under the next number —
+      // safe to clear (no committed version names them; the per-layout
+      // ingest lock serializes in-process compactions, and cross-process
+      // writers hold the ingest lease)
+      Seq(next, storeDir(path, cur + 1))
+        .foreach(p => fs.delete(new org.apache.hadoop.fs.Path(p), true))
+      fold(spark, path, live, next, cur + 1, prev(live))
+      beforeSwap(next)
+      SidecarIO.writeFile(spark, s"$next/$CommitMarker", Array.emptyByteArray, overwrite = false)
+      // retention: the version just superseded (`cur`) survives one more
+      // compaction interval for in-flight readers; everything older goes,
+      // and once a version PRECEDES the grace version the flat (v0) members
+      // at the root go with it; then every store directory no remaining
+      // version names
+      committed.dropRight(1).foreach { n =>
+        fs.delete(new org.apache.hadoop.fs.Path(versionDir(path, n)), true)
+      }
+      if (cur >= 1) deleteFlatMembers(fs, path)
+      sweepStore(spark, fs, path)
+      // the layout's live version just moved: drop the planner's memoized
+      // resolution/statistics HERE, at the mutation site — a direct
+      // compactInPlace call (the repair path) must refresh registrations
+      // exactly like the ingest-triggered one
+      graft.plans.GraftIndexCatalog.invalidateStats()
+    }
+
+  /** Write version `next` from `prev`, the live version: the delta's
+    * rows go to the store directory `g` and the base tier reads the live
+    * list directories plus it. When that would exceed `MaxListDirs`, or
+    * `prev` reads no `g` directory (an older shape), `g` instead holds
+    * every row and is the only directory. The small
+    * sidecars are written on the driver: centroids, populations, an
+    * empty delta, and the recall curve — re-measured over the new
+    * population once the rows folded since its measurement reach
+    * `CurveRemeasureShare` of the population it was measured on, copied
+    * otherwise; `tiered_meta` records which population that is and the
+    * list directories. A delta row of another dimension than the index
     * fails the write job before anything of `next` is committed. */
   private def fold(spark: org.apache.spark.sql.SparkSession, root: String, live: String,
-      next: String, store: String): Unit = {
-    val liveDirs = listDirs(spark, live)
-    val prev = loadLive(spark, live, loadBase(spark, live, liveDirs))
+      next: String, g: Int, prev: TieredIndex): Unit = {
+    val ds = prev.saved.fold(Seq.empty[Int])(_.dirs)
     val cs = prev.base.centroids
     val assigned = IvfFlatIndex.assign(checkedDelta(prev.delta, cs.dim), cs, "id", "vec")
-    val storePath = s"$root/$store"
+    val storePath = storeDir(root, g)
     val (dirs, rows) =
-      (liveDirs, IvfFlatIndex.loadMeta(spark, s"$live/tiered_base")) match {
-        case (Some(ds), Some(baseRows)) if ds.size < MaxListDirs =>
-          val added = IvfFlatIndex.writeLists(assigned.repartition(col("list_id")), storePath)
-          if (added > 0) (ds :+ store, baseRows + added)
-          else {
-            // nothing landed (an empty or all-null delta): no directory
-            SidecarIO.fs(spark, storePath).delete(new org.apache.hadoop.fs.Path(storePath), true)
-            (ds, baseRows)
-          }
-        case _ =>
-          (Seq(store), IvfFlatIndex.writeLists(
-            prev.base.lists.unionByName(assigned).repartition(col("list_id")), storePath))
-      }
+      if (ds.nonEmpty && ds.size < MaxListDirs) {
+        val baseRows = IvfFlatIndex.loadMeta(spark, s"$live/tiered_base").get
+        val added = IvfFlatIndex.writeLists(assigned, storePath)
+        if (added > 0) (ds :+ g, baseRows + added)
+        else {
+          // nothing landed (an empty or all-null delta): no directory
+          SidecarIO.fs(spark, storePath).delete(new org.apache.hadoop.fs.Path(storePath), true)
+          (ds, baseRows)
+        }
+      } else (Seq(g), IvfFlatIndex.writeLists(prev.base.lists.unionByName(assigned), storePath))
     val basePath = s"$next/tiered_base"
     SidecarIO.copy(spark, s"$live/tiered_base/centroids", s"$basePath/centroids")
-    IvfFlatIndex.saveMeta(spark, basePath, rows)
-    writeListDirs(spark, next, dirs)
-    val measuredAt = prev.saved.map(_.curveRows).getOrElse(0L)
+    graft.index.LayoutFormat.write(spark, basePath, rows, "ivf")
+    val measuredAt = prev.saved.fold(0L)(_.curveRows)
     val curveRows =
       if (rows - measuredAt >= CurveRemeasureShare * measuredAt) {
         if (IvfFlatIndex.recallCurveEnabled(spark))
-          IvfFlatIndex.saveRecallCurve(spark, basePath, loadBase(spark, next), rows)
+          IvfFlatIndex.saveRecallCurve(spark, basePath,
+            IvfFlatIndex.load(spark, basePath, baseLists(spark, root, dirs)), rows)
         rows
       } else {
         copyCurve(spark, s"$live/tiered_base", basePath)
@@ -410,32 +400,30 @@ object TieredIndex {
       }
     writeEmptyDelta(spark, next, prev.delta.schema)
     SidecarIO.write(spark, s"$next/tiered_meta",
-      metaRows(spark, prev.minAnnRows, prev.metric.name, 0L, Some(curveRows)))
-    IvfFlatIndex.saveMeta(spark, next, rows)
+      metaRows(spark, prev.minAnnRows, prev.metric.name, 0L, curveRows, dirs))
+    graft.index.LayoutFormat.write(spark, next, rows, "tiered")
     copyCurve(spark, basePath, next)
   }
 
   /** Delete every list-store directory that no committed version, and no
-    * flat layout at the root, names in its `list_dirs`. */
+    * flat layout at the root, names in its `tiered_meta`. */
   private def sweepStore(spark: org.apache.spark.sql.SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, root: String): Unit = {
     val storeRoot = new org.apache.hadoop.fs.Path(root, StoreRoot)
     if (fs.exists(storeRoot)) {
-      val flat = if (fs.exists(new org.apache.hadoop.fs.Path(root, "tiered_meta"))) Seq(root)
-        else Nil
-      val named = (committedVersions(fs, root).map(versionDir(root, _)) ++ flat)
-        .flatMap(listDirs(spark, _).getOrElse(Nil)).toSet
+      val named = (root +: committedVersions(fs, root).map(versionDir(root, _)))
+        .flatMap(v => SidecarIO.readHead(spark, s"$v/tiered_meta"))
+        .filter(_.contains("list_dirs")).flatMap(listDirs).map(g => s"g=$g").toSet
       fs.listStatus(storeRoot)
-        .filter(st => !named(s"$StoreRoot/${st.getPath.getName}"))
+        .filter(st => !named(st.getPath.getName))
         .foreach(st => fs.delete(st.getPath, true))
     }
   }
 
-  /** The flat layout members a pre-versioning save wrote at the root —
-    * deleted only once a version directory has itself been superseded
-    * (the flat content then had a full compaction interval of grace).
-    * Named members only: version directories and the ingest lease are
-    * never touched. */
+  /** The flat layout members a save wrote at the root — deleted only once
+    * a version directory has itself been superseded (the flat content then
+    * had a full compaction interval of grace). Named members only:
+    * version directories and the ingest lease are never touched. */
   private def deleteFlatMembers(fs: org.apache.hadoop.fs.FileSystem,
       path: String): Unit =
     Seq("tiered_base", "delta", "tiered_meta", "meta", "recall_curve",
@@ -444,43 +432,4 @@ object TieredIndex {
       .foreach { m =>
         fs.delete(new org.apache.hadoop.fs.Path(path, m), true)
       }
-
-  /** Crash recovery for the PRE-VERSIONING compactInPlace's two-rename
-    * swap window (r16 and earlier): such a crash left NO layout at `path`
-    * but an intact one at `<path>.compact_old` — restore it (losing only
-    * the compaction, never data: the delta rows are still in the restored
-    * delta tier). The versioned scheme above never creates this state, so
-    * the restore runs eagerly (no in-flight-swap grace sleep to ride out)
-    * and only when the root carries neither flat members nor a committed
-    * version. Called on every load and every ingest append. */
-  private[stream] def recoverSwap(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
-    val fs = SidecarIO.fs(spark, path)
-    def healthy(p: org.apache.hadoop.fs.Path): Boolean =
-      fs.exists(new org.apache.hadoop.fs.Path(p, "tiered_meta"))
-    val real = new org.apache.hadoop.fs.Path(path)
-    val old = new org.apache.hadoop.fs.Path(path + ".compact_old")
-    if (healthy(real) || committedVersions(fs, path).nonEmpty ||
-        !fs.exists(old) || !healthy(old)) return
-    // grace recheck: a PRE-VERSIONING writer (rolling upgrade) could be
-    // inside its two-rename swap right now — showing the same transient
-    // state — and restoring under it would make its second rename NEST
-    // the compacted layout inside the restored one (Hadoop local-FS
-    // rename-into-dir semantics). An in-flight swap finishes within the
-    // sleep; only then is the state a crash leftover.
-    Thread.sleep(200)
-    if (healthy(real)) return
-    // the rename is only sound while the root is ABSENT (the pre-versioning
-    // crash state): renaming onto an existing directory would NEST the
-    // restored layout inside it under Hadoop local-FS semantics
-    if (!fs.exists(real) && fs.rename(old, real)) {
-      System.err.println(s"graft TieredIndex: restored $path from an " +
-        "interrupted pre-versioning compaction swap (the compaction will " +
-        "re-run at the next threshold crossing)")
-      return
-    }
-    require(healthy(real),
-      s"compactInPlace recovery: no layout at $path and could not restore " +
-        s"from $path.compact_old")
-  }
 }

@@ -148,7 +148,7 @@ object TieredIngest {
   }
 
   /** Scope of the rows that were in the delta BEFORE the first
-    * ledger-tracked batch (the save-time delta + any legacy direct
+    * ledger-tracked batch (the save-time delta + any direct
     * appends) — kept as a pseudo-scope so delta_rows is always the plain
     * sum of the ledger's cum_rows column. Direct callers passing
     * `batchId >= 0` with an empty scope share this namespace (their ids
@@ -158,7 +158,7 @@ object TieredIngest {
   /** Per-scope ledger state: highest committed batch id (ids are
     * monotonic per scope, so `batchId <= maxBatchId` IS the replay test)
     * and the cumulative rows this scope has landed in the delta. */
-  private[stream] case class ScopeState(maxBatchId: Long, cumRows: Long)
+  private[graft] case class ScopeState(maxBatchId: Long, cumRows: Long)
 
   private def ledgerPath(indexPath: String) = s"$indexPath/delta_commits"
 
@@ -167,43 +167,31 @@ object TieredIngest {
 
   /** The committed-batch ledger, one entry per scope; initialized from
     * the CURRENT `tiered_meta.delta_rows` (authoritative as of the save /
-    * the last legacy append) when no ledger exists. A pre-r16 ledger
-    * (one row per batch) folds into the per-scope form on read — its
-    * per-batch ids collapse to the max, its counts to the sum. An
-    * unreadable ledger (a crash caught the staged-rename window) is
-    * treated as absent — see the class doc for why the re-derived counts
-    * stay exact on the engine's only real redelivery (the last batch). */
+    * the last direct append) when no ledger exists. An unreadable ledger
+    * (a crash caught the staged-rename window) is treated as absent — see
+    * the class doc for why the re-derived counts stay exact on the
+    * engine's only real redelivery (the last batch). */
   private def readLedger(spark: SparkSession,
-      indexPath: String): Map[String, ScopeState] =
-    if (!exists(spark, ledgerPath(indexPath)))
-      Map(BaseScope -> ScopeState(-1L, metaDeltaRows(spark, indexPath)))
+      indexPath: String): Map[String, ScopeState] = {
+    def fromMeta = Map(BaseScope -> ScopeState(-1L, SidecarIO.asLong(
+      readOneRowSidecar(spark, s"$indexPath/tiered_meta")("delta_rows"))))
+    if (!exists(spark, ledgerPath(indexPath))) fromMeta
     else
-      try {
-        // driver-side read (r17, SidecarIO doc): the ledger is O(scopes)
-        // rows and was read as a Spark job PER MICRO-BATCH; the pre-r16
-        // per-batch fold happens in plain Scala on the same rows
-        val raw = SidecarIO.readRows(spark, ledgerPath(indexPath))
-          .getOrElse(throw new java.io.FileNotFoundException(ledgerPath(indexPath)))
-        if (raw.headOption.exists(_.contains("max_batch_id")))
-          raw.map(r => r("scope").asInstanceOf[String] ->
-            ScopeState(SidecarIO.asLong(r("max_batch_id")),
-              SidecarIO.asLong(r("cum_rows")))).toMap
-        else // pre-r16 per-batch rows: fold to per-scope max/sum
-          raw.groupBy(r => r.get("scope").map(_.asInstanceOf[String]).getOrElse(""))
-            .map { case (scope, rs) =>
-              scope -> ScopeState(rs.map(r => SidecarIO.asLong(r("batch_id"))).max,
-                rs.map(r => SidecarIO.asLong(r("n_rows"))).sum)
-            }
-      } catch {
+      try SidecarIO.readRows(spark, ledgerPath(indexPath))
+        .getOrElse(throw new java.io.FileNotFoundException(ledgerPath(indexPath)))
+        .map(r => r("scope").asInstanceOf[String] -> ScopeState(
+          SidecarIO.asLong(r("max_batch_id")), SidecarIO.asLong(r("cum_rows")))).toMap
+      catch {
         case scala.util.control.NonFatal(e) =>
           System.err.println(s"graft TieredIngest: unreadable delta_commits at " +
             s"$indexPath (${e.getClass.getSimpleName}) — re-deriving from tiered_meta")
-          Map(BaseScope -> ScopeState(-1L, metaDeltaRows(spark, indexPath)))
+          fromMeta
       }
+  }
 
   /** A one-row sidecar rewritten by `SidecarIO.swap`, read through the
     * swap window (`SidecarIO.readSwapped`); absent is an error here. */
-  private[stream] def readOneRowSidecar(spark: SparkSession,
+  private[graft] def readOneRowSidecar(spark: SparkSession,
       target: String): Map[String, Any] =
     SidecarIO.readSwapped(spark, target)
       .getOrElse(throw new java.io.FileNotFoundException(target))
@@ -221,38 +209,11 @@ object TieredIngest {
     * redelivery must still be recognized). Written into the compacted
     * layout BEFORE the directory swap (TieredIndex.compactInPlace's
     * beforeSwap hook). */
-  private def writeZeroedLedger(spark: SparkSession, intoPath: String,
+  private[graft] def writeZeroedLedger(spark: SparkSession, intoPath: String,
       committed: Map[String, ScopeState]): Unit =
     if (committed.nonEmpty)
       writeLedger(spark, intoPath,
         committed.map { case (sc, st) => sc -> ScopeState(st.maxBatchId, 0L) })
-
-  /** Current delta population per the sidecar; a legacy layout without
-    * the delta_rows column counts the delta's ROOT files only (batch
-    * directories are excluded: a crash-orphaned batch dir must not be
-    * folded into the base entry AND re-added when its batch replays). */
-  private def metaDeltaRows(spark: SparkSession, indexPath: String): Long = {
-    val meta = readOneRowSidecar(spark, s"$indexPath/tiered_meta")
-    if (meta.contains("delta_rows"))
-      SidecarIO.asLong(meta("delta_rows"))
-    else {
-      val total = TieredIndex.readDelta(spark, indexPath).count()
-      total - batchDirRows(spark, indexPath)
-    }
-  }
-
-  private def batchDirRows(spark: SparkSession, indexPath: String): Long = {
-    val delta = new org.apache.hadoop.fs.Path(s"$indexPath/delta")
-    val fs = SidecarIO.fs(spark, delta.toString)
-    if (!fs.exists(delta)) 0L
-    else {
-      val dirs = fs.listStatus(delta)
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch-"))
-        .map(_.getPath.toString)
-      if (dirs.isEmpty) 0L
-      else spark.read.parquet(dirs.toIndexedSeq: _*).count()
-    }
-  }
 
   /** Batch data directory, namespaced by BOTH the scope and the batch id
     * to match the ledger key: two checkpoint scopes reusing an id (the
@@ -261,7 +222,7 @@ object TieredIngest {
     * destroy the first's committed rows while the ledger still counted
     * them. The scope is folded to a fixed-width SHA-1 tag (paths make bad
     * directory names, and the tag must be stable across JVMs); the empty
-    * scope keeps the bare pre-r16 name so existing layouts stay readable. */
+    * scope keeps the bare `batch-<id>` name. */
   private def batchDir(indexPath: String, scope: String, batchId: Long): String =
     if (scope.isEmpty) s"$indexPath/delta/batch-$batchId"
     else {
@@ -286,12 +247,13 @@ object TieredIngest {
       val spark = batch.sparkSession
       SidecarIO.withConf(spark) {
         val root = normalize(indexPath)
-        TieredIndex.recoverSwap(spark, root)
         acquireLease(spark, root)
         // all data/ledger/sidecar writes target the layout's LIVE version
         // directory (the root itself until the first in-place compaction);
-        // resolved once per append, under the lock
+        // resolved once per append, under the lock; an older format is
+        // refused before anything lands
         val live = TieredIndex.resolveLive(spark, root)
+        graft.index.LayoutFormat.require(spark, live, "tiered", root)
         val shaped = batch
           .select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
         val sc = normalize(scope)
@@ -317,27 +279,6 @@ object TieredIngest {
                   "id sequence)")
               writeSidecars(spark, live, ledger.values.map(_.cumRows).sum)
             } else {
-              // pre-r16 upgrade hazard: a pre-r16 batch under this scope
-              // wrote its data to the UNSCOPED delta/batch-<id> dir and
-              // crashed before its ledger row, so this redelivery would land
-              // the same rows AGAIN under the scope-tagged name while the
-              // orphan still sits in the recursive delta listing. Remove the
-              // orphan first — but only when the empty scope's own ledger
-              // does not claim the id (a direct empty-scope caller that
-              // legitimately committed batch-<id> owns that directory).
-              if (sc.nonEmpty &&
-                  ledger.get(BaseScope).forall(_.maxBatchId < batchId)) {
-                val legacy = new org.apache.hadoop.fs.Path(
-                  s"$live/delta/batch-$batchId")
-                val lfs = SidecarIO.fs(spark, legacy.toString)
-                if (lfs.exists(legacy)) {
-                  System.err.println(s"graft TieredIngest: removing orphaned " +
-                    s"pre-upgrade batch directory $legacy before re-landing batch " +
-                    s"$batchId under scope '$sc' (crashed pre-r16 write, never " +
-                    "committed to the ledger)")
-                  lfs.delete(legacy, true)
-                }
-              }
               // overwrite = idempotent under replay AND under a crashed
               // partial write of this very directory
               val dir = batchDir(live, sc, batchId)
@@ -365,16 +306,14 @@ object TieredIngest {
   private def writeSidecars(spark: SparkSession, indexPath: String,
       deltaRows: Long): (Long, Long) = {
     val meta = readOneRowSidecar(spark, s"$indexPath/tiered_meta")
-    val minAnnRows = SidecarIO.asLong(meta("min_ann_rows"))
-    SidecarIO.swap(spark, s"$indexPath/tiered_meta",
-      TieredIndex.metaRows(spark, minAnnRows, meta("metric").asInstanceOf[String], deltaRows,
-        meta.get("curve_rows").map(SidecarIO.asLong)))
-    val baseRows = IvfFlatIndex.loadMeta(spark, s"$indexPath/tiered_base").getOrElse(0L)
-    SidecarIO.swap(spark, s"$indexPath/meta", IvfFlatIndex.metaRows(spark, baseRows + deltaRows))
-    (deltaRows, minAnnRows)
+    SidecarIO.swap(spark, s"$indexPath/tiered_meta", TieredIndex.metaRows(spark, meta, deltaRows))
+    val baseRows = IvfFlatIndex.loadMeta(spark, s"$indexPath/tiered_base").get
+    SidecarIO.swap(spark, s"$indexPath/meta",
+      graft.index.LayoutFormat.rows(spark, baseRows + deltaRows, "tiered"))
+    (deltaRows, SidecarIO.asLong(meta("min_ann_rows")))
   }
 
-  /** Full-recount sidecar refresh — the legacy/direct-append path and the
+  /** Full-recount sidecar refresh — the direct-append path and the
     * repair tool for a layout whose delta was modified out of band. Also
     * re-bases the ledger so later streaming batches stay incremental. */
   def refreshSidecars(spark: SparkSession, indexPath: String): (Long, Long) =

@@ -846,10 +846,16 @@ class KnnJoinPlanSuite extends SparkFunSuite {
       val routed = KnnJoinPlan.knnJoin(emb, queries, 10, Metric.L2Sqrt,
         "vec_id", "embedding")
       assert(routed.count() == queries.count() * 10)
-      assert(graft.plans.GraftIndexCatalog.countMemoSize == 0,
-        "planner fell back to the count job despite a meta sidecar")
+      // planned afresh over a driver-held query side: not one job
+      val held = spark.createDataFrame(java.util.Arrays.asList(queries.collect(): _*),
+        queries.schema)
+      graft.plans.GraftIndexCatalog.register(dataPath, idxPath) // clears the memos
+      assert(jobsDuring(KnnJoinPlan.knnJoin(emb, held, 10, Metric.L2Sqrt, "vec_id",
+        "embedding").queryExecution.optimizedPlan) == 0,
+        "planning with a meta sidecar must run no job")
     } finally graft.plans.GraftIndexCatalog.unregister(dataPath)
-    // legacy layout (no sidecar): the memoized count fallback still works
+    // a layout saved before its sidecar (no meta): refused by the loader,
+    // served by the exact route until one upgrade counts its rows
     val legacy = java.nio.file.Files.createTempDirectory("knnmeta_legacy").toString
     spark.conf.set("spark.graft.index.recallCurve.enabled", "false")
     try {
@@ -858,13 +864,24 @@ class KnnJoinPlanSuite extends SparkFunSuite {
         .save(legacy)
       val metaDir = new java.io.File(legacy, "meta")
       metaDir.listFiles().foreach(_.delete()); metaDir.delete()
-      graft.plans.GraftIndexCatalog.register(dataPath, legacy)
+      OlderShapes.refused(graft.index.IvfFlatIndex.load(spark, legacy))
+      val exact = BruteForceKnn.knnJoin(emb, queries, 10, Metric.L2Sqrt, "vec_id", "embedding")
+        .select(col("qid").cast("long"), col("nbr_id").cast("long"), col("rank"), col("dist"))
+      def plan() = KnnJoinPlan.knnJoin(emb, queries, 10, Metric.L2Sqrt, "vec_id", "embedding")
+      graft.plans.GraftIndexCatalog.register(dataPath, legacy, nProbes = 8, kCoarse = 30)
       try withIndexGateOff {
-        val routed = KnnJoinPlan.knnJoin(emb, queries, 10, Metric.L2Sqrt,
-          "vec_id", "embedding")
-        assert(routed.count() == queries.count() * 10)
-        assert(graft.plans.GraftIndexCatalog.countMemoSize == 1,
-          "legacy layout should take the memoized count fallback")
+        val routed = plan()
+        OlderShapes.exactFallback(routed)
+        assert(routed.exceptAll(exact).count() == 0 && exact.exceptAll(routed).count() == 0)
+        graft.index.LayoutFormat.upgrade(spark, legacy)
+        assert(graft.index.IvfFlatIndex.loadMeta(spark, legacy).contains(emb.count()))
+        val stamped = OlderShapes.mtimes(legacy)
+        graft.index.LayoutFormat.upgrade(spark, legacy)
+        assert(OlderShapes.mtimes(legacy) == stamped, "a second upgrade must write nothing")
+        graft.plans.GraftIndexCatalog.register(dataPath, legacy, nProbes = 8, kCoarse = 30)
+        val upgraded = plan()
+        assert(OlderShapes.explained(upgraded).contains(s"IvfSearchExec ivf $legacy"))
+        assert(upgraded.exceptAll(exact).count() == 0 && exact.exceptAll(upgraded).count() == 0)
       } finally graft.plans.GraftIndexCatalog.unregister(dataPath)
     } finally spark.conf.unset("spark.graft.index.recallCurve.enabled")
   }

@@ -11,6 +11,12 @@ import graft.stream.TieredIndex
 class SparseTieredSuite extends SparkFunSuite {
 
   private lazy val emb = spark.read.parquet(s"${SparkTestBase.sf0001}/embeddings.parquet")
+  private lazy val q = emb.filter(col("vec_id") % 50 === 0)
+    .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
+  private def exactOf(data: org.apache.spark.sql.DataFrame) =
+    graft.ops.BruteForceKnn.knnJoin(data, q, 5, Metric.L2, "vec_id", "embedding")
+  private def key(df: org.apache.spark.sql.DataFrame) = df.select("qid", "nbr_id", "rank")
+    .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq.sorted
 
   // --- sparse -----------------------------------------------------------
 
@@ -218,6 +224,7 @@ class SparseTieredSuite extends SparkFunSuite {
     graft.stream.TieredIngest.append(b1, dir, "vec_id", "embedding",
       batchId = 1L, scope = "ck")
     val landed = b0.count() + b1.count()
+    val before = key(TieredIndex.load(spark, dir).search(q, 5, nProbes = 8))
     // rewrite the ledger in the retired one-row-per-batch schema, as a
     // layout created by an older build would carry
     val fs = new org.apache.hadoop.fs.Path(dir)
@@ -226,22 +233,34 @@ class SparseTieredSuite extends SparkFunSuite {
     Seq(("", -1L, 0L), ("ck", 0L, b0.count()), ("ck", 1L, b1.count()))
       .toDF("scope", "batch_id", "n_rows")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/delta_commits")
+    OlderShapes.storeDirShape(spark, dir, dir)
+    OlderShapes.refused(TieredIndex.load(spark, dir))
+    OlderShapes.refused(graft.stream.TieredIngest.append(b1, dir, "vec_id", "embedding",
+      batchId = 1L, scope = "ck"))
+    graft.index.LayoutFormat.upgrade(spark, dir)
+    val live = TieredIndex.resolveLive(spark, dir)
+    assert(key(TieredIndex.load(spark, dir).search(q, 5, nProbes = 8)) == before)
+    assert(before == key(exactOf(emb.filter(col("vec_id") < 450))))
+    val stamped = OlderShapes.mtimes(dir)
+    graft.index.LayoutFormat.upgrade(spark, dir)
+    assert(OlderShapes.mtimes(dir) == stamped, "a second upgrade must write nothing")
     // replay of the last committed batch: recognized through the folded form
     graft.stream.TieredIngest.append(b1, dir, "vec_id", "embedding",
       batchId = 1L, scope = "ck")
-    assert(spark.read.parquet(s"$dir/tiered_meta").head().getAs[Long]("delta_rows") ==
-      landed, "replay must be recognized through a folded pre-r16 ledger")
+    assert(spark.read.parquet(s"$live/tiered_meta").head().getAs[Long]("delta_rows") == 0L,
+      "replay must be recognized through a folded pre-r16 ledger")
+    assert(TieredIndex.load(spark, dir).base.lists.count() == base.count() + landed)
     // and the next REAL batch both lands and rewrites the compact form
     val b2 = emb.filter(col("vec_id") >= 450 && col("vec_id") < 460)
     graft.stream.TieredIngest.append(b2, dir, "vec_id", "embedding",
       batchId = 2L, scope = "ck")
-    assert(spark.read.parquet(s"$dir/tiered_meta").head().getAs[Long]("delta_rows") ==
-      landed + b2.count())
-    val ledger = spark.read.parquet(s"$dir/delta_commits")
+    assert(spark.read.parquet(s"$live/tiered_meta").head().getAs[Long]("delta_rows") ==
+      b2.count())
+    val ledger = spark.read.parquet(s"$live/delta_commits")
     assert(ledger.schema.fieldNames.contains("max_batch_id") && ledger.count() <= 2)
   }
 
-  test("compactInPlace swap crash: load() restores the layout from .compact_old") {
+  test("compactInPlace swap crash: upgrade restores the layout from .compact_old") {
     val dir0 = java.nio.file.Files.createTempDirectory("tiered_crash").toString
     val dir = s"$dir0/layout"
     val base = emb.filter(col("vec_id") < 400)
@@ -249,30 +268,28 @@ class SparseTieredSuite extends SparkFunSuite {
       idCol = "vec_id", vecCol = "embedding").save(dir)
     graft.stream.TieredIngest.append(emb.filter(col("vec_id") >= 400), dir,
       "vec_id", "embedding", batchId = 0L, scope = "ck")
-    // simulate a crash INSIDE the swap window: the live layout was renamed
-    // aside and the process died before the compacted tmp renamed in
+    OlderShapes.storeDirShape(spark, dir, dir)
+    // simulate a crash INSIDE a pre-versioning swap window: the live
+    // layout was renamed aside and the process died before the compacted
+    // tmp renamed in
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sessionState.newHadoopConf())
     assert(fs.rename(new org.apache.hadoop.fs.Path(dir),
       new org.apache.hadoop.fs.Path(dir + ".compact_old")))
     fs.mkdirs(new org.apache.hadoop.fs.Path(dir + ".compact_tmp")) // dead half-save
-    val loaded = TieredIndex.load(spark, dir) // must restore, not throw
-    assert(loaded.delta.count() == emb.filter(col("vec_id") >= 400).count())
-    val q = emb.filter(col("vec_id") % 50 === 0)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val exact = graft.ops.BruteForceKnn.knnJoin(emb, q, 5, Metric.L2,
-      "vec_id", "embedding")
-    def key(df: org.apache.spark.sql.DataFrame) = df.select("qid", "nbr_id", "rank")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq.sorted
-    assert(key(loaded.search(q, 5, nProbes = 8)) == key(exact))
-    // an ingest append right after the restore works too (recoverSwap
-    // runs on the append path as well)
+    OlderShapes.refused(TieredIndex.load(spark, dir))
+    graft.index.LayoutFormat.upgrade(spark, dir) // must restore, not throw
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(dir + ".compact_old")) &&
+      !fs.exists(new org.apache.hadoop.fs.Path(dir + ".compact_tmp")))
+    val loaded = TieredIndex.load(spark, dir)
+    assert(loaded.base.lists.count() == emb.count() && loaded.delta.count() == 0L)
+    assert(key(loaded.search(q, 5, nProbes = 8)) == key(exactOf(emb)))
+    // an ingest append right after the restore works too
     graft.stream.TieredIngest.append(
       emb.filter(col("vec_id") < 5)
         .select((col("vec_id") + 3000000L).as("vec_id"), col("embedding")),
       dir, "vec_id", "embedding", batchId = 1L, scope = "ck")
-    assert(TieredIndex.load(spark, dir).delta.count() ==
-      emb.filter(col("vec_id") >= 400).count() + 5)
+    assert(TieredIndex.load(spark, dir).delta.count() == 5L)
   }
 
   test("streaming ingest auto-compacts once the delta crosses min_ann_rows") {
@@ -483,14 +500,13 @@ class SparseTieredSuite extends SparkFunSuite {
     assert(lease.exists(), "the default takes the lease")
   }
 
-  test("a crashed pre-upgrade batch directory is removed when its batch replays under a scope") {
+  test("upgrade removes a crashed unscoped batch directory that no ledger claims") {
     // pre-r16 layouts wrote scoped batches to UNSCOPED delta/batch-<id>
     // dirs: a batch that landed data but crashed before its ledger row is
-    // redelivered post-upgrade with batchId > max — without cleanup its
-    // rows would land AGAIN under the scope-tagged name while the orphan
-    // still sits in the recursive delta listing (counted twice, made
-    // permanent by compaction)
-    import spark.implicits._
+    // redelivered after the upgrade with batchId > max — without cleanup
+    // its rows would land AGAIN under the scope-tagged name while the
+    // orphan still sits in the recursive delta listing (counted twice,
+    // made permanent by compaction)
     val dir = java.nio.file.Files.createTempDirectory("tiered_orphan").toString
     TieredIndex.build(emb.filter(col("vec_id") < 400),
       IvfFlatIndex.Params(nLists = 8, nIters = 5),
@@ -499,31 +515,31 @@ class SparseTieredSuite extends SparkFunSuite {
     val b1 = emb.filter(col("vec_id") >= 430 && col("vec_id") < 450)
     graft.stream.TieredIngest.append(b0, dir, "vec_id", "embedding",
       batchId = 0L, scope = "ck")
-    // simulate the pre-upgrade crash: batch 1's DATA landed at the legacy
-    // unscoped path, the ledger row never did
-    b1.select(col("vec_id").cast("long").as("id"), col("embedding").as("vec"))
-      .write.mode("overwrite").parquet(s"$dir/delta/batch-1")
-    // post-upgrade redelivery of batch 1 under the same scope
-    graft.stream.TieredIngest.append(b1, dir, "vec_id", "embedding",
-      batchId = 1L, scope = "ck")
-    assert(TieredIndex.load(spark, dir).delta.count() == b0.count() + b1.count(),
-      "the orphaned legacy batch dir must not double-count the replayed rows")
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/delta/batch-1")),
-      "the orphaned legacy directory must be removed")
-    // guard direction: an EMPTY-scope direct caller legitimately owns the
-    // legacy-named directory for ids it has committed — a scoped append on
-    // the same id must NOT delete it
+    // an EMPTY-scope direct caller owns the unscoped directory of an id it
+    // committed: batch-0 must survive the upgrade
     val direct = emb.filter(col("vec_id") >= 450 && col("vec_id") < 460)
     graft.stream.TieredIngest.append(direct, dir, "vec_id", "embedding",
-      batchId = 5L, scope = "")
-    val other = emb.filter(col("vec_id") >= 460 && col("vec_id") < 470)
-    graft.stream.TieredIngest.append(other, dir, "vec_id", "embedding",
-      batchId = 5L, scope = "ck2")
-    assert(TieredIndex.load(spark, dir).delta.count() ==
-      b0.count() + b1.count() + direct.count() + other.count(),
-      "a committed empty-scope batch must survive a scoped append on the same id")
+      batchId = 0L, scope = "")
+    val before = key(TieredIndex.load(spark, dir).search(q, 5, nProbes = 8))
+    // the crash: batch 1's DATA landed at the unscoped path, its ledger
+    // row never did
+    b1.select(col("vec_id").cast("long").as("id"), col("embedding").as("vec"))
+      .write.mode("overwrite").parquet(s"$dir/delta/batch-1")
+    OlderShapes.storeDirShape(spark, dir, dir)
+    OlderShapes.refused(TieredIndex.load(spark, dir))
+    graft.index.LayoutFormat.upgrade(spark, dir)
+    val kept = emb.filter(col("vec_id") < 430 || (col("vec_id") >= 450 && col("vec_id") < 460))
+    val upgraded = TieredIndex.load(spark, dir)
+    assert(upgraded.base.lists.count() == kept.count(),
+      "the orphaned batch must be gone and the committed empty-scope batch kept")
+    assert(key(upgraded.search(q, 5, nProbes = 8)) == before)
+    assert(before == key(exactOf(kept)))
+    // the redelivery of batch 1 under its scope lands its rows once
+    graft.stream.TieredIngest.append(b1, dir, "vec_id", "embedding",
+      batchId = 1L, scope = "ck")
+    assert(TieredIndex.load(spark, dir).delta.count() == b1.count())
+    assert(key(TieredIndex.load(spark, dir).search(q, 5, nProbes = 8)) ==
+      key(exactOf(emb.filter(col("vec_id") < 460))))
   }
 
   test("TieredIngest restart-recovery: a second query on the same checkpoint resumes cleanly") {
@@ -746,8 +762,9 @@ class SparseTieredSuite extends SparkFunSuite {
     // the fold's 50 rows are 12.5% of the 400 the curve was measured on:
     // the curve is copied, and curve_rows keeps the population it measured
     assert(rows("tiered_meta") == Set(Map("min_ann_rows" -> 30L, "metric" -> "l2",
-      "delta_rows" -> 0L, "curve_rows" -> 400L)))
-    assert(rows("meta") == Set(Map("n_rows" -> 450L)))
+      "delta_rows" -> 0L, "curve_rows" -> 400L, "list_dirs" -> Seq(0, 1))))
+    assert(rows("meta") == Set(Map("n_rows" -> 450L, "layout" -> "tiered",
+      "format_version" -> graft.index.LayoutFormat.Current)))
     assert(rows("delta_commits") == Set(
       Map("scope" -> "", "max_batch_id" -> -1L, "cum_rows" -> 0L),
       Map("scope" -> "jobs", "max_batch_id" -> 1L, "cum_rows" -> 0L)))
@@ -756,7 +773,8 @@ class SparseTieredSuite extends SparkFunSuite {
     def schema(child: String) = spark.read.parquet(s"$live/$child").schema.simpleString
     assert(schema("delta") == "struct<id:bigint,vec:array<float>>")
     assert(schema("tiered_meta") ==
-      "struct<min_ann_rows:bigint,metric:string,delta_rows:bigint,curve_rows:bigint>")
+      "struct<min_ann_rows:bigint,metric:string,delta_rows:bigint,curve_rows:bigint," +
+        "list_dirs:array<int>>")
     assert(schema("recall_curve") == "struct<probes:int,recall:double,k:int,n_queries:bigint>")
     assert(appendJobs == 1, s"append ran $appendJobs jobs")
     assert(compactJobs <= 3, s"compacting append ran $compactJobs jobs")
@@ -770,7 +788,7 @@ class SparseTieredSuite extends SparkFunSuite {
     val older = java.nio.file.Files.createTempDirectory("tiered_jobs_remeasure").toString
     built.save(older)
     graft.sources.SidecarIO.write(spark, s"$older/tiered_meta",
-      TieredIndex.metaRows(spark, 30L, "l2", 0L, Some(300L)))
+      TieredIndex.metaRows(spark, 30L, "l2", 0L, 300L, Seq(0)))
     graft.stream.TieredIngest.append(micro(400, 450), older, "vec_id", "embedding",
       batchId = 0L, scope = "jobs")
     val remeasured = TieredIndex.resolveLive(spark, older)

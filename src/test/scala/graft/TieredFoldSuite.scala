@@ -64,7 +64,8 @@ class TieredFoldSuite extends SparkFunSuite {
     ranks(sorted(BruteForceKnn.knnJoin(data, q, 10, m, "vec_id", "embedding")))
 
   private def listDirs(live: String): Seq[String] =
-    SidecarIO.readRows(spark, s"$live/tiered_base/list_dirs").get.map(_("dir").asInstanceOf[String])
+    SidecarIO.readHead(spark, s"$live/tiered_meta").get("list_dirs").asInstanceOf[Seq[Any]]
+      .map(g => s"list_store/g=$g")
 
   private def storeDirs(p: String): Set[String] = {
     val root = new org.apache.hadoop.fs.Path(p, "list_store")
@@ -163,17 +164,22 @@ class TieredFoldSuite extends SparkFunSuite {
     // each append crosses min_ann_rows and folds: directories 2..8
     for (i <- 0 until 7) append(p, rows(400 + i * 10, 410 + i * 10))
     val v7 = TieredIndex.resolveLive(spark, p)
-    assert(listDirs(v7) == (0 to 7).map(n => f"list_store/g_$n%06d"))
+    assert(listDirs(v7) == (0 to 7).map(n => s"list_store/g=$n"))
+    // eight directories read as one relation, `g` and `list_id` its
+    // partition columns
+    val eight = TieredIndex.load(spark, p).base.lists
+    assert(eight.queryExecution.logical.collectLeaves().size == 1)
+    assert(eight.count() == 470L && ranks(search(p, 8)) == exact(rows(0, 470)))
     append(p, rows(470, 480))
     val v8 = TieredIndex.resolveLive(spark, p)
-    assert(v8 != v7 && listDirs(v8) == Seq("list_store/g_000008"))
+    assert(v8 != v7 && listDirs(v8) == Seq("list_store/g=8"))
     assert(TieredIndex.load(spark, p).base.lists.count() == 480L)
-    // the superseded version still names g_0..g_7: kept for its readers
-    assert(storeDirs(p) == (0 to 8).map(n => f"list_store/g_$n%06d").toSet)
+    // the superseded version still names g=0..g=7: kept for its readers
+    assert(storeDirs(p) == (0 to 8).map(n => s"list_store/g=$n").toSet)
     append(p, rows(480, 490))
     val v9 = TieredIndex.resolveLive(spark, p)
-    assert(listDirs(v9) == Seq("list_store/g_000008", "list_store/g_000009"))
-    assert(storeDirs(p) == Set("list_store/g_000008", "list_store/g_000009"))
+    assert(listDirs(v9) == Seq("list_store/g=8", "list_store/g=9"))
+    assert(storeDirs(p) == Set("list_store/g=8", "list_store/g=9"))
     assert(ranks(search(p, 8)) == exact(rows(0, 490)))
   }
 
@@ -185,17 +191,17 @@ class TieredFoldSuite extends SparkFunSuite {
       _ => throw new IllegalStateException("injected crash before the commit")))
       .contains("injected crash"))
     assert(TieredIndex.resolveLive(spark, p) == p, "an uncommitted fold must not go live")
-    assert(listDirs(p) == Seq("list_store/g_000000"))
-    assert(storeDirs(p) == Set("list_store/g_000000", "list_store/g_000001"))
+    assert(listDirs(p) == Seq("list_store/g=0"))
+    assert(storeDirs(p) == Set("list_store/g=0", "list_store/g=1"))
     assert(ranks(search(p, 8)) == exact(rows(0, 450)))
     // a directory nothing names, as a crashed writer elsewhere would leave
-    val junk = new org.apache.hadoop.fs.Path(p, "list_store/g_000777/list_id=0")
+    val junk = new org.apache.hadoop.fs.Path(p, "list_store/g=777/list_id=0")
     val fs = junk.getFileSystem(spark.sessionState.newHadoopConf())
     fs.mkdirs(junk)
     TieredIndex.compactInPlace(spark, p)
     val v1 = TieredIndex.resolveLive(spark, p)
     assert(v1 == f"$p/v_000001")
-    assert(listDirs(v1) == Seq("list_store/g_000000", "list_store/g_000001"))
+    assert(listDirs(v1) == Seq("list_store/g=0", "list_store/g=1"))
     assert(storeDirs(p) == listDirs(v1).toSet)
     assert(TieredIndex.load(spark, p).base.lists.count() == 450L)
     assert(ranks(search(p, 8)) == exact(rows(0, 450)))
@@ -223,32 +229,46 @@ class TieredFoldSuite extends SparkFunSuite {
     assert(listDirs(v1).size == 2)
   }
 
-  test("a layout saved before the list store loads with no job and takes the rewrite " +
-      "on its first compaction") {
+  test("a layout saved before the list store is refused, then upgraded once") {
     val p = saved("legacy", 400)
-    // the earlier shape: the base's lists under tiered_base/lists, no
-    // list_dirs, no curve_rows
-    val fs = new org.apache.hadoop.fs.Path(p).getFileSystem(spark.sessionState.newHadoopConf())
-    assert(fs.rename(new org.apache.hadoop.fs.Path(p, "list_store/g_000000"),
-      new org.apache.hadoop.fs.Path(p, "tiered_base/lists")))
-    fs.delete(new org.apache.hadoop.fs.Path(p, "list_store"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(p, "tiered_base/list_dirs"), true)
-    SidecarIO.write(spark, s"$p/tiered_meta", TieredIndex.metaRows(spark, 100000L, "l2", 0L, None))
-    val savedCurve = curve(p)
-    var loaded: TieredIndex = null
-    assert(jobsDuring { loaded = TieredIndex.load(spark, p) } == 0)
-    assert(loaded.base.lists.count() == 400L)
-    assert(loaded.saved.contains(TieredIndex.BaseShape(1, 400L)))
     append(p, rows(400, 450))
-    TieredIndex.compactInPlace(spark, p)
+    val before = search(p, 8)
+    // the earlier shape: the base's lists under tiered_base/lists, a
+    // tiered_meta with neither delta_rows, curve_rows nor list_dirs, and
+    // a meta without a format version
+    val fs = new org.apache.hadoop.fs.Path(p).getFileSystem(spark.sessionState.newHadoopConf())
+    OlderShapes.rename(spark, s"$p/list_store/g=0", s"$p/tiered_base/lists")
+    fs.delete(new org.apache.hadoop.fs.Path(p, "list_store"), true)
+    val s = spark
+    import s.implicits._
+    SidecarIO.write(spark, s"$p/tiered_meta",
+      SidecarIO.rows(Seq((100000L, "l2")), "min_ann_rows", "metric"))
+    OlderShapes.unversioned(spark, p)
+    val savedCurve = curve(p)
+    OlderShapes.refused(TieredIndex.load(spark, p))
+    OlderShapes.refused(TieredIndex.compactInPlace(spark, p))
+    val data = tmp("legacy_data")
+    rows(0, 450).write.mode("overwrite").parquet(data)
+    GraftIndexCatalog.register(data, p, nProbes = 8, kCoarse = 30)
+    try withConf("spark.graft.knnJoin.minIndexRows" -> "0") {
+      val df = KnnJoinPlan.knnJoin(spark.read.parquet(data), q, 10, Metric.L2,
+        "vec_id", "embedding")
+      OlderShapes.exactFallback(df)
+      assert(ranks(sorted(df)) == exact(rows(0, 450)))
+    } finally GraftIndexCatalog.unregister(data)
+    graft.index.LayoutFormat.upgrade(spark, p)
     val v1 = TieredIndex.resolveLive(spark, p)
-    assert(listDirs(v1) == Seq("list_store/g_000001"))
+    assert(v1 == s"$p/v_000001" && listDirs(v1) == Seq("list_store/g=1"))
+    // the 50 folded rows are an eighth of the 400 the curve was measured on
     assert(curveRows(v1) == 400L && curve(v1) == savedCurve)
-    assert(ranks(search(p, 8)) == exact(rows(0, 450)))
+    assert(ranks(search(p, 8)) == ranks(before) && ranks(before) == exact(rows(0, 450)))
+    val stamped = OlderShapes.mtimes(p)
+    graft.index.LayoutFormat.upgrade(spark, p)
+    assert(OlderShapes.mtimes(p) == stamped, "a second upgrade must write nothing")
     append(p, rows(450, 500))
     TieredIndex.compactInPlace(spark, p)
     val v2 = TieredIndex.resolveLive(spark, p)
-    assert(listDirs(v2) == Seq("list_store/g_000001", "list_store/g_000002"))
+    assert(listDirs(v2) == Seq("list_store/g=1", "list_store/g=2"))
     assert(!fs.exists(new org.apache.hadoop.fs.Path(p, "tiered_base")))
     assert(ranks(search(p, 8)) == exact(emb))
   }
@@ -286,8 +306,7 @@ class TieredFoldSuite extends SparkFunSuite {
     // the data the distributed writer lands (lists, batch directories)
     // keeps Spark's checksums; the sidecars and small files are the driver's
     val sidecars = Seq("meta", "tiered_meta", "delta_commits", "recall_curve",
-      "tiered_base/centroids", "tiered_base/meta", "tiered_base/recall_curve",
-      "tiered_base/list_dirs")
+      "tiered_base/centroids", "tiered_base/meta", "tiered_base/recall_curve")
     val checked = for (live <- Seq(p, v1); sc <- sidecars
         if new java.io.File(s"$live/$sc").isDirectory) yield s"$live/$sc"
     assert(checked.size >= 2 * sidecars.size - 1, checked)
